@@ -24,12 +24,9 @@ object Profile {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    if (args.contains("pca")) { profilePca(spark, dir); spark.stop(); return }
     if (args.contains("loops")) { profileLoops(spark, dir); spark.stop(); return }
     if (args.contains("tail")) { profileTail(spark, dir, args.filter(_.startsWith("q"))); spark.stop(); return }
-    if (args.contains("q153")) { profileQ153(spark, dir); spark.stop(); return }
     if (args.contains("q153regime")) { profileQ153Regime(spark, dir); spark.stop(); return }
-    if (args.contains("q142")) { profileQ142(spark, dir); spark.stop(); return }
     if (args.contains("webcorpus")) { profileWebcorpus(spark); spark.stop(); return }
 
     val docs = Tables.documents(spark, dir)
@@ -159,86 +156,6 @@ object Profile {
     }
   }
 
-  /** Moment-pass A/B for q158/q159 (r18, driver-flagged q158 regression):
-    * the r17 shape — TWO jobs, each double-posexploding every vector into
-    * d² generated rows carrying a copy of the array, with a BigDecimal
-    * allocated per product by `cast(decimal(18,6))` — versus the r18
-    * [[graft.expressions.MomentMatrixAgg]] one-pass native aggregate.
-    * Prints the formatted plans (the plans/r18 before/after evidence:
-    * topComponent collects eagerly, so Explain on q158 only ever shows
-    * the final parallelize) and interleaved timings, plus an equality
-    * check of the resulting moment sums. */
-  def profilePca(spark: SparkSession, dir: String): Unit = {
-    val emb = Tables.embeddings(spark, dir)
-    time("warmup (emb scan)")(emb.select(col("vec_id")))
-    def oldFm = emb.select(col("embedding").as("__v"))
-      .select(posexplode(col("__v")).as(Seq("i", "xi")))
-      .groupBy("i")
-      .agg(sum(col("xi").cast("double").cast("decimal(18,6)")).as("s"),
-        count(lit(1)).as("n"))
-    def oldSm = emb.select(col("embedding").as("__v"))
-      .select(posexplode(col("__v")).as(Seq("i", "xi")), col("__v"))
-      .select(col("i"), col("xi"), posexplode(col("__v")).as(Seq("j", "xj")))
-      .filter(col("j") >= col("i"))
-      .select(col("i"), col("j"),
-        (col("xi").cast("double") * col("xj").cast("double"))
-          .cast("decimal(18,6)").as("p"))
-      .groupBy("i", "j")
-      .agg(sum(col("p")).as("sp"))
-    def newAgg = emb.agg(
-      graft.expressions.GraftFunctions.momentMatrix(col("embedding")).as("m"))
-    println("\n===== BEFORE (r17): second-moment double-posexplode job =====")
-    println(oldSm.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode))
-    println("\n===== AFTER (r18): one-pass MomentMatrixAgg job =====")
-    println(newAgg.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode))
-    for (rep <- 1 to 3) {
-      time(s"old fm+sm (2 jobs) rep$rep") { oldFm.write.format("noop").mode("overwrite").save(); oldSm }
-      time(s"new momentMatrix    rep$rep")(newAgg)
-    }
-    // exactness: the aggregate's sums equal the old formulation's sums
-    val m = newAgg.head().getSeq[java.math.BigDecimal](0)
-    val d = m(0).intValueExact()
-    val oldS = oldFm.collect().map(r => r.getInt(0) ->
-      BigInt(r.getDecimal(1).movePointRight(6).toBigIntegerExact)).toMap
-    val newS = (0 until d).map(i => i -> BigInt(m(2 + i).toBigIntegerExact)).toMap
-    val oldP = oldSm.collect().map(r => (r.getInt(0), r.getInt(1)) ->
-      BigInt(r.getDecimal(2).movePointRight(6).toBigIntegerExact)).toMap
-    var k = 2 + d
-    val newP = (for (i <- 0 until d; j <- i until d) yield {
-      val v = (i, j) -> BigInt(m(k).toBigIntegerExact); k += 1; v
-    }).toMap
-    println(s"[pca] first moments equal:  ${oldS == newS}")
-    println(s"[pca] second moments equal: ${oldP == newP}")
-  }
-
-  /** Refresh the Triangles.counted persist-vs-recompute constant on the
-    * CURRENT fixtures (the "17 s → 4 s" comment predates the r8 testdata
-    * regeneration): q142 as shipped (persisted canon+deg) vs the same
-    * pipeline with no persists. */
-  def profileQ142(spark: SparkSession, dir: String): Unit = {
-    // same co-purchase edge derivation as ScaleQueries.coPurchaseEdges
-    def edges() = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .groupBy("l_orderkey").agg(collect_set(col("l_partkey")).as("ps"))
-      .select(explode(col("ps")).as("pa"), col("ps"))
-      .select(col("pa"), explode(col("ps")).as("pb"))
-      .filter(col("pa") < col("pb"))
-    time("warmup")(Tables.lineitem(spark, dir).select(col("l_orderkey")))
-    // interleaved A/B, 2 reps each, cache cleared between — rep 1 carries
-    // first-codegen cost, rep 2 is the steady-state number to quote
-    for (rep <- 1 to 2) {
-      time(s"q142 persisted rep$rep")(
-        graft.operators.Triangles.perNodeCounts(edges(), "pa", "pb"))
-      spark.sharedState.cacheManager.clearCache()
-      time(s"q142 no-persist rep$rep")(
-        graft.operators.Triangles.perNodeCounts(edges(), "pa", "pb",
-          persistIntermediates = false))
-      spark.sharedState.cacheManager.clearCache()
-    }
-  }
-
   /** JOB-level attribution of the webcorpus build/append at fixture scale
     * (r17): q313/q317/q323 are dominated by per-action fixed overhead
     * (330-page fixture, ~25 Spark actions each), so the lever is the
@@ -349,86 +266,5 @@ object Profile {
         case (k, None) => spark.conf.unset(k)
       }
     }
-  }
-
-  /** Stage decomposition of q153 link prediction (judge flagged ~50 s cold
-    * at sf0.1, with the round-8 persists a measured no-op). */
-  def profileQ153(spark: SparkSession, dir: String): Unit = {
-    // A/B: derived edges (the pre-r11 shape) vs the shared written table
-    val undT = graft.sources.CoPurchaseGraph.distinctEdges(spark, dir)
-    println(s"[profile] table scan partitions = ${undT.rdd.getNumPartitions}")
-    time("topPredictions TABLE read")(
-      graft.operators.LinkPredict.topPredictions(undT, hubCap = 200, k = 50))
-    time("topPredictions TABLE mapPar=32")(
-      graft.operators.LinkPredict.topPredictions(undT, hubCap = 200, k = 50,
-        mapParallelism = 32))
-    time("topPredictions TABLE repart32")(
-      graft.operators.LinkPredict.topPredictions(
-        undT.repartition(32, col("pa")), hubCap = 200, k = 50))
-    val undD = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_partkey"))
-      .groupBy("l_orderkey").agg(collect_set(col("l_partkey")).as("ps"))
-      .select(explode(col("ps")).as("pa"), col("ps"))
-      .select(col("pa"), explode(col("ps")).as("pb"))
-      .filter(col("pa") < col("pb")).distinct()
-    time("topPredictions DERIVED (r10)")(
-      graft.operators.LinkPredict.topPredictions(undD, hubCap = 200, k = 50))
-    if (sys.env.contains("SPARK_GRAFT_PROFILE_AB_ONLY")) return
-    val li = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_partkey"))
-    time("warmup scan")(li)
-    val und = li.groupBy("l_orderkey")
-      .agg(collect_set(col("l_partkey")).as("ps"))
-      .select(explode(col("ps")).as("pa"), col("ps"))
-      .select(col("pa"), explode(col("ps")).as("pb"))
-      .filter(col("pa") < col("pb"))
-      .distinct()
-    time("und (distinct edges)")(und)
-    println(s"[profile] |und| = ${und.count()}")
-    val adj = und.select(col("pa").as("src"), col("pb").as("dst"))
-      .union(und.select(col("pb").as("src"), col("pa").as("dst")))
-    val deg = adj.groupBy("src").agg(count(lit(1)).as("deg"))
-    time("deg")(deg)
-    deg.selectExpr("count(*) n", "sum(deg) sum_deg", "max(deg) max_deg",
-      "sum(CASE WHEN deg <= 200 THEN deg * deg ELSE 0 END) sum_deg2_capped").show()
-    val viaZ = adj.join(deg.filter(col("deg") <= 200), "src")
-      .withColumn("w", expr("CAST(1000000000000 DIV deg AS BIGINT)"))
-    time("viaZ")(viaZ)
-    val cand = viaZ.as("z1").join(viaZ.as("z2"),
-        col("z1.src") === col("z2.src") && col("z1.dst") < col("z2.dst"))
-      .select(col("z1.dst").as("a"), col("z2.dst").as("b"), col("z1.w").as("w"))
-    time("cand (two-hop join)")(cand)
-    println(s"[profile] |cand| = ${cand.count()}")
-    val pairs = cand.groupBy("a", "b").agg(count(lit(1)).as("common"), sum("w").as("score"))
-    time("pairs (agg first)")(pairs)
-    println(s"[profile] |pairs| = ${pairs.count()}")
-    time("current order: anti then agg")(
-      cand.join(und, cand("a") === und("pa") && cand("b") === und("pb"), "left_anti")
-        .groupBy("a", "b").agg(count(lit(1)).as("common"), sum("w").as("score"))
-        .orderBy(col("score").desc, col("a"), col("b")).limit(50))
-    time("agg-first then anti")(
-      pairs.join(und, pairs("a") === und("pa") && pairs("b") === und("pb"), "left_anti")
-        .orderBy(col("score").desc, col("a"), col("b")).limit(50))
-    // variant: pack (a,b) into ONE long group key — halves key width and
-    // hash cost for the 100M-group aggregate
-    val packed = cand.select(
-        (shiftleft(col("a"), 32) + col("b")).as("ab"), col("w"))
-      .groupBy("ab").agg(count(lit(1)).as("common"), sum("w").as("score"))
-      .select(shiftright(col("ab"), 32).as("a"),
-        (col("ab") - shiftleft(shiftright(col("ab"), 32), 32)).as("b"),
-        col("common"), col("score"))
-    time("packed-key agg")(packed)
-    // variant: shuffle raw candidates FIRST, then aggregate with the
-    // distribution already satisfied — skips the useless partial pass
-    // (map-side hash probe over ~unique keys)
-    val preShuffled = cand.repartition(col("a"), col("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("common"), sum("w").as("score"))
-    time("repartition+complete agg")(preShuffled)
-    val packedPre = cand.select(
-        (shiftleft(col("a"), 32) + col("b")).as("ab"), col("w"))
-      .repartition(col("ab"))
-      .groupBy("ab").agg(count(lit(1)).as("common"), sum("w").as("score"))
-    time("packed+preshuffle agg")(packedPre)
-    time("full q153 (as shipped)")(
-      graft.queries.AnalyticsQueries.q153LinkPredict(spark, dir))
-    spark.sharedState.cacheManager.clearCache()
   }
 }

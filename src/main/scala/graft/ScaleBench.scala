@@ -35,13 +35,7 @@ import org.apache.spark.sql.functions._
   * env knobs: SPARK_GRAFT_SCALE_SRC (default /root/testdata/sf0.1),
   * SPARK_GRAFT_SCALE_DIR (default /tmp/graft_sf1),
   * SPARK_GRAFT_SCALE_REPL (default 10),
-  * SPARK_GRAFT_SCALE_ONLY (comma list to restrict queries; the A/B
-  * variant probes — ivf_scaled_cells, q153_map_parallel,
-  * dedup_ladder_ab, containment_ladder_ab, lsh_budget_ab, ktruss_full,
-  * frontier_scaled (SPARK_GRAFT_FRONTIER_LEGS=x30ab for the cap A/B) —
-  * run ONLY when named here explicitly: one deliberately refuses and
-  * several pay un-mitigated baselines, which has no place in a default
-  * artifact). */
+  * SPARK_GRAFT_SCALE_ONLY (comma list to restrict queries). */
 object ScaleBench {
 
   /** Queries measured: every family with real data-volume exposure —
@@ -72,17 +66,12 @@ object ScaleBench {
     // replication), k-anonymity (output SHRINKS as data grows)
     "q266_ivf_bq_rerank", "q269_quality_keeper", "q271_source_minhash",
     "q272_zipf_spectrum", "q274_k_anonymity",
-    // round-13: the incremental-degree k-core (the q146 bandwidth-floor
-    // escape). q292 (persisted-index search) is measured in a dedicated
-    // build-once/search-many A/B instead (its first call pays the
-    // one-time index build, which would pollute a single-shot ratio);
-    // HTML extraction is fixture-input (no SF axis) so it stays out
-    "q294_kcore_incremental",
     // round-13 crawl-side ops with an SF axis: URL canonicalization is a
     // pure per-row projection (ratio should track the scan), URL dedup
-    // adds the one groupBy on the canonical string. The fixture-input
-    // crawl ops (WARC/HTML/PDF/paragraph) are measured by dedicated
-    // probes below instead (warc_throughput, paragraph_dedup_scale)
+    // adds the one groupBy on the canonical string. q292 (persisted-index
+    // search) stays out: its first call pays the one-time index build,
+    // which would pollute a single-shot ratio. The fixture-input crawl
+    // ops (WARC/HTML/PDF/paragraph) have no SF axis
     "q300_url_canonical", "q301_url_dedup")
 
   /** Per-replica key offsets, disjoint per entity family and sized so
@@ -140,8 +129,7 @@ object ScaleBench {
     * straggler can be ATTRIBUTED to its plan site, not just observed. */
   private class Metrics extends SparkListener {
     val diskSpill = new AtomicLong; val memSpill = new AtomicLong
-    val shufWrite = new AtomicLong; val shufRead = new AtomicLong
-    val input = new AtomicLong
+    val shufWrite = new AtomicLong; val input = new AtomicLong
     val peakMem = new AtomicLong; val maxTaskMs = new AtomicLong
     case class StageAgg(var name: String = "", var tasks: Long = 0L,
                         var totalMs: Long = 0L, var maxMs: Long = 0L,
@@ -158,7 +146,6 @@ object ScaleBench {
         diskSpill.addAndGet(m.diskBytesSpilled)
         memSpill.addAndGet(m.memoryBytesSpilled)
         shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
         input.addAndGet(m.inputMetrics.bytesRead)
         peakMem.getAndUpdate(p => math.max(p, m.peakExecutionMemory))
         if (e.taskInfo != null) {
@@ -181,7 +168,7 @@ object ScaleBench {
       }
     }
     def reset(): Unit = {
-      Seq(diskSpill, memSpill, shufWrite, shufRead, input, peakMem, maxTaskMs)
+      Seq(diskSpill, memSpill, shufWrite, input, peakMem, maxTaskMs)
         .foreach(_.set(0L))
       stages.clear()
     }
@@ -260,881 +247,6 @@ object ScaleBench {
       } catch {
         case e: Throwable =>
           println(s"""{"query":"$name","error":"${Option(e.getMessage).getOrElse(e.getClass.getName).take(200).replace("\"", "'").replace("\n", " ")}"}""")
-      }
-    }
-
-    // Variant probe: q46 pins k=4 cells for oracle replay, which is the
-    // documented fixed-k hazard (cells grow ∝ n, the in-cell equi-join
-    // grows ∝ n²/k, and k cells bound reduce-side parallelism at k
-    // tasks). The operator's scale path is the DERIVED sizing (k = 0 →
-    // √n cells); this measures it at sf1 so the fix is evidence, not a
-    // scaladoc claim.
-    if (only.exists(_.contains("ivf_scaled_cells"))) {
-      try {
-        metrics.reset()
-        val t0 = System.nanoTime()
-        graft.operators.Similarity.ivfNearestNeighbor(
-            spark.read.parquet(s"$out/embeddings.parquet"),
-            "vec_id", "embedding", k = 0, sampleMod = 10L, maxSample = 2000)
-          .write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"""{"query":"ivf_scaled_cells_sf1","sf1_sec":${math.round(sec * 1000) / 1000.0}%s,"max_task_sec":${metrics.maxTaskMs.get / 1000.0}%s,"spill_disk_mb":${mb(metrics.diskSpill.get)}%s}""")
-      } catch {
-        case e: Throwable => println(
-          s"""{"query":"ivf_scaled_cells_sf1","error":"${Option(e.getMessage).getOrElse("").take(150).replace("\"", "'")}"}""")
-      }
-    }
-    // Variant probe: the PERSISTED-INDEX amortization claim measured —
-    // q46-class in-plan IVF retrains its quantizer on EVERY call, the
-    // written index (q292) pays one build then serves every subsequent
-    // search from the index tables alone. Three consecutive searches
-    // each, on the SCALED corpus: the first q292 call carries the build,
-    // calls 2-3 are the steady state a serving path lives in.
-    if (only.exists(_.contains("ann_index_ab"))) {
-      def timed(label: String)(body: => Unit): Unit = {
-        try {
-          val t0 = System.nanoTime()
-          body
-          val sec = (System.nanoTime() - t0) / 1e9
-          println(f"""{"query":"$label","sf1_sec":${math.round(sec * 1000) / 1000.0}%s}""")
-        } catch {
-          case e: Throwable => println(
-            s"""{"query":"$label","error":"${Option(e.getMessage).getOrElse("").take(150).replace("\"", "'")}"}""")
-        }
-      }
-      for (i <- 1 to 3) timed(s"ann_q46_retrain_call$i") {
-        SparkEntry.queries("q46_ivf_trained_nn")(spark, out)
-          .write.format("noop").mode("overwrite").save()
-      }
-      for (i <- 1 to 3) timed(s"ann_q292_indexed_call$i") {
-        SparkEntry.queries("q292_ann_index_search")(spark, out)
-          .write.format("noop").mode("overwrite").save()
-      }
-    }
-    // Variant probe: q153's remaining sf1 bottleneck (SCALE_EVIDENCE §q153)
-    // is the candidate-join map stage, which AQE coalesces from its
-    // pre-explosion INPUT size (35 tasks generating 1.47B rows). The
-    // operator's mapParallelism knob pins the self-join input partition
-    // count explicitly; this measures it at the same sizing rule
-    // (|candidates| / 8M ≈ 180 → 256).
-    if (only.exists(_.contains("q153_map_parallel"))) {
-      try {
-        val und = spark.read.parquet(s"$out/lineitem.parquet")
-          .select("l_orderkey", "l_partkey")
-          .groupBy("l_orderkey")
-          .agg(collect_set(col("l_partkey")).as("ps"))
-          .select(explode(col("ps")).as("pa"), col("ps"))
-          .select(col("pa"), explode(col("ps")).as("pb"))
-          .filter(col("pa") < col("pb"))
-          .distinct()
-        metrics.reset()
-        val t0 = System.nanoTime()
-        graft.operators.LinkPredict
-          .topPredictions(und, hubCap = 200, k = 50, mapParallelism = 256)
-          .write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        System.err.println("[stages] q153_map_parallel (sf1):")
-        metrics.topStages(4).foreach(System.err.println)
-        println(f"""{"query":"q153_map_parallel_sf1","sf1_sec":${math.round(sec * 1000) / 1000.0}%s,"max_task_sec":${metrics.maxTaskMs.get / 1000.0}%s,"spill_disk_mb":${mb(metrics.diskSpill.get)}%s}""")
-      } catch {
-        case e: Throwable => println(
-          s"""{"query":"q153_map_parallel_sf1","error":"${Option(e.getMessage).getOrElse("").take(150).replace("\"", "'")}"}""")
-      }
-    }
-    // Variant probe (r16): the NEW frontier at scale — redirect-chain
-    // resolution (4 keyed joins of the 3xx-sized map), PSL registrable-
-    // domain mapping (broadcast suffix join + one keyed agg), and the
-    // TWO-PHASE per-domain cap, over a synthetic link table whose
-    // MEGA-DOMAIN owns 30% of all candidates (the skew the cap exists
-    // for: one domain's whole candidate set must never sort in one
-    // window task). Measured at two candidate volumes; the claim is
-    // near-linear walls and a bounded max task under the skew.
-    if (only.exists(_.contains("frontier_scaled"))) {
-      val robotsFx = "/root/repo/fixtures/robots.parquet"
-      val pslFx = "/root/repo/fixtures/psl.parquet"
-      def uOf(id: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-        val dom = when(id % 10 < 3, lit("mega.com"))
-          .otherwise(concat(lit("d"), pmod(id, lit(100000L)), lit(".com")))
-        concat(lit("https://h"), pmod(id, lit(3L)), lit("."), dom,
-          lit("/p"), id)
-      }
-      def buildDir(n: Long): String = {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-frontier-scale").toString
-        val cand = spark.range(n).select(col("id"), uOf(col("id")).as("u"))
-        cand.select(lit("https://seed.com/s").as("url"),
-            col("u").as("dst_canonical"), lit(1L).as("w"))
-          .write.parquet(s"$dir/links")
-        // 20% of candidates are already crawled
-        cand.filter(col("id") % 5 === 0)
-          .select(col("u").as("canonical_url"))
-          .write.parquet(s"$dir/corpus")
-        cand.filter(col("id") % 100000 === 7).select(col("u").as("url"))
-          .write.parquet(s"$dir/rejects")
-        // ~6% of candidates redirect: even ids chain INTO the crawled
-        // set (terminal fetched -> the gate must drop them), odd ids to
-        // fresh never-seen urls (scheduled as the terminal)
-        cand.filter(col("id") % 17 === 3)
-          .select(col("u").as("src"),
-            when(col("id") % 2 === 0, uOf(col("id") - col("id") % 5))
-              .otherwise(concat(lit("https://fresh-"), col("id"),
-                lit(".newdom.com/x"))).as("dst"))
-          .write.parquet(s"$dir/redirects")
-        dir
-      }
-      // the x10_uncapped leg is the A/B CONTROL: cap disabled, the
-      // mega-domain's whole surviving candidate set sorts in ONE final
-      // window task — the single-task ceiling the two-phase cap removes
-      val legs = sys.env.get("SPARK_GRAFT_FRONTIER_LEGS") match {
-        case Some("x30ab") => Seq( // the cap A/B at the skew that bites
-          ("x30", 30000000L, 1000), ("x30_uncapped", 30000000L, Int.MaxValue))
-        case _ => Seq(
-          ("x1", 1000000L, 1000), ("x10", 10000000L, 1000),
-          ("x10_uncapped", 10000000L, Int.MaxValue))
-      }
-      for ((label, n, cap) <- legs) {
-        // each leg writes multi-GB links/corpus/redirects scratch parquet:
-        // delete it when the leg ends (r16 advice — a bench run must not
-        // leak tens of GB of /tmp), matching the other scale probes
-        var dir: Option[String] = None
-        try {
-          dir = Some(buildDir(n))
-          spark.sharedState.cacheManager.clearCache()
-          metrics.reset()
-          val t0 = System.nanoTime()
-          graft.app.WebCorpusApp.frontier(spark, dir.get, robotsFx,
-              psl = Some(spark.read.parquet(pslFx)), maxPerDomain = cap)
-            .write.format("noop").mode("overwrite").save()
-          val sec = (System.nanoTime() - t0) / 1e9
-          System.err.println(s"[stages] frontier_scaled_$label:")
-          metrics.topStages(6).foreach(System.err.println)
-          println(f"""{"query":"frontier_scaled_$label","sec":${math.round(sec * 1000) / 1000.0}%s,"max_task_sec":${metrics.maxTaskMs.get / 1000.0}%s,"shuffle_write_mb":${mb(metrics.shufWrite.get)}%s,"spill_disk_mb":${mb(metrics.diskSpill.get)}%s}""")
-        } catch {
-          case e: Throwable => println(
-            s"""{"query":"frontier_scaled_$label","error":"${Option(e.getMessage).getOrElse("").take(150).replace("\"", "'")}"}""")
-        } finally dir.foreach { d =>
-          import scala.jdk.CollectionConverters._
-          val root = java.nio.file.Paths.get(d)
-          if (java.nio.file.Files.exists(root))
-            java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.deleteIfExists(_))
-        }
-      }
-    }
-    // Variant probe: the DEDUP LADDER measured as a LADDER (the round-10
-    // evidence named exact-first as the mitigation for the content-driven
-    // near-dup quadratic but never measured the composition). The scaled
-    // corpus gives every text REPL exact copies (offsets change doc_id,
-    // not text), so the banded LSH self-join faces multiplicity REPL —
-    // candidate pairs ∝ REPL² per text group. A/B on the SAME input:
-    // direct near-dup vs exact-hash-collapse-then-near-dup.
-    if (only.exists(_.contains("dedup_ladder_ab"))) {
-      def timed(label: String)(body: => Unit): Unit = {
-        try {
-          metrics.reset()
-          val t0 = System.nanoTime()
-          body
-          val sec = (System.nanoTime() - t0) / 1e9
-          println(f"""{"query":"$label","sf1_sec":${math.round(sec * 1000) / 1000.0}%s,"max_task_sec":${metrics.maxTaskMs.get / 1000.0}%s,"spill_disk_mb":${mb(metrics.diskSpill.get)}%s,"shuffle_write_mb":${mb(metrics.shufWrite.get)}%s}""")
-        } catch {
-          case e: Throwable => println(
-            s"""{"query":"$label","error":"${Option(e.getMessage).getOrElse("").take(150).replace("\"", "'")}"}""")
-        }
-      }
-      val docs = spark.read.parquet(s"$out/documents.parquet")
-        .select("doc_id", "text")
-      timed("neardup_direct_sf1") {
-        graft.operators.Dedup.nearDupSurvivors(docs, "doc_id", "text")
-          .write.format("noop").mode("overwrite").save()
-      }
-      timed("dedup_ladder_sf1") {
-        val keepers = graft.operators.Dedup.exactClusters(docs, "doc_id", "text")
-          .select(col("keeper_id").as("doc_id"))
-        val survivors = docs.join(keepers, Seq("doc_id"), "left_semi")
-        graft.operators.Dedup.nearDupSurvivors(survivors, "doc_id", "text")
-          .write.format("noop").mode("overwrite").save()
-      }
-    }
-    // CONTAINMENT A/B under the candidate budget: the guarded q96
-    // operator must REFUSE the replicated corpus (duplicate multiplicity
-    // REPL makes Σ probe·df ≈ REPL× postings, past factor 8), while the
-    // ladder (exact collapse first) must pass the SAME budget and
-    // complete. A pass here is the measured form of the "recall 1.0
-    // whenever the guard passes" contract.
-    if (only.exists(_.contains("containment_ladder_ab"))) {
-      def timed(label: String)(body: => Unit): Unit = {
-        try {
-          metrics.reset()
-          val t0 = System.nanoTime()
-          body
-          val sec = (System.nanoTime() - t0) / 1e9
-          println(f"""{"query":"$label","sec":${math.round(sec * 1000) / 1000.0}%s,"max_task_sec":${metrics.maxTaskMs.get / 1000.0}%s,"spill_disk_mb":${mb(metrics.diskSpill.get)}%s,"shuffle_write_mb":${mb(metrics.shufWrite.get)}%s}""")
-        } catch {
-          case e: Throwable => println(
-            s"""{"query":"$label","error":"${Option(e.getMessage).getOrElse(e.getClass.getName).take(300).replace("\"", "'").replace("\n", " ")}"}""")
-        }
-      }
-      val corpus = graft.queries.LlmQueries.q96Corpus(spark, out)
-      timed("containment_direct_guarded") {
-        val sets = graft.operators.Dedup
-          .shingleSets(corpus, "doc_id", "text", 3).persist()
-        graft.operators.Dedup
-          .containmentPairsExact(sets, 9, 10, maxCandidateFactor = 8)
-          .write.format("noop").mode("overwrite").save()
-      }
-      timed("containment_ladder_guarded") {
-        val keepers = graft.operators.Dedup.exactClusters(corpus, "doc_id", "text")
-          .select(col("keeper_id").as("doc_id"))
-        val survivors = corpus.join(keepers, Seq("doc_id"), "left_semi")
-        val sets = graft.operators.Dedup
-          .shingleSets(survivors, "doc_id", "text", 3).persist()
-        graft.operators.Dedup
-          .containmentPairsExact(sets, 9, 10, maxCandidateFactor = 8)
-          .write.format("noop").mode("overwrite").save()
-      }
-    }
-    // Variant probe: the GENERALIZED banded-LSH candidate budget
-    // (round-12: enforceBandBudget, extended from the q96 containment
-    // guard to the minhash banding). The replicated corpus gives every
-    // text REPL exact copies, so the banded self-join faces candidate
-    // volume ∝ REPL² per text group: the guarded DIRECT run must REFUSE
-    // at the same factor the ladder CLEARS — both sides of the guard
-    // measured, the containment_ladder_ab convention.
-    if (only.exists(_.contains("lsh_budget_ab"))) {
-      def timed(label: String)(body: => Unit): Unit = {
-        try {
-          metrics.reset()
-          val t0 = System.nanoTime()
-          body
-          val sec = (System.nanoTime() - t0) / 1e9
-          println(f"""{"query":"$label","sec":${math.round(sec * 1000) / 1000.0}%s,"max_task_sec":${metrics.maxTaskMs.get / 1000.0}%s,"spill_disk_mb":${mb(metrics.diskSpill.get)}%s,"shuffle_write_mb":${mb(metrics.shufWrite.get)}%s}""")
-        } catch {
-          case e: Throwable => println(
-            s"""{"query":"$label","error":"${Option(e.getMessage).getOrElse(e.getClass.getName).take(300).replace("\"", "'").replace("\n", " ")}"}""")
-        }
-      }
-      val docs = spark.read.parquet(s"$out/documents.parquet")
-        .select("doc_id", "text")
-      timed("neardup_direct_budget") {
-        graft.operators.Dedup
-          .nearDupPairs(docs, "doc_id", "text", maxCandidateFactor = 8)
-          .write.format("noop").mode("overwrite").save()
-      }
-      timed("neardup_ladder_budget") {
-        val keepers = graft.operators.Dedup.exactClusters(docs, "doc_id", "text")
-          .select(col("keeper_id").as("doc_id"))
-        val survivors = docs.join(keepers, Seq("doc_id"), "left_semi")
-        graft.operators.Dedup
-          .nearDupPairs(survivors, "doc_id", "text", maxCandidateFactor = 8)
-          .write.format("noop").mode("overwrite").save()
-      }
-    }
-    // Variant probe: the TEXT-INDEX amortization claim measured (the
-    // ann_index_ab convention): q105 recomputes BM25 from the corpus in
-    // every plan, q309 serves from the WRITTEN postings. Three calls
-    // each on the SCALED corpus; q309's first call carries the one-time
-    // build+write, calls 2-3 are the serving steady state.
-    if (only.exists(_.contains("text_index_ab"))) {
-      def timed(label: String)(body: => Unit): Unit = {
-        try {
-          val t0 = System.nanoTime()
-          body
-          val sec = (System.nanoTime() - t0) / 1e9
-          println(f"""{"query":"$label","sf1_sec":${math.round(sec * 1000) / 1000.0}%s}""")
-        } catch {
-          case e: Throwable => println(
-            s"""{"query":"$label","error":"${Option(e.getMessage).getOrElse("").take(150).replace("\"", "'")}"}""")
-        }
-      }
-      for (i <- 1 to 3) timed(s"bm25_q105_recompute_call$i") {
-        SparkEntry.queries("q105_bm25_search")(spark, out)
-          .write.format("noop").mode("overwrite").save()
-      }
-      for (i <- 1 to 3) timed(s"bm25_q309_indexed_call$i") {
-        SparkEntry.queries("q309_text_index_search")(spark, out)
-          .write.format("noop").mode("overwrite").save()
-      }
-    }
-    // Variant probe: PARAGRAPH dedup under replication — the fixture
-    // query (q298) has no SF axis, so this synthesizes the paragraph
-    // table from the documents corpus at BOTH scales (each doc split
-    // into 12-token windows = its "paragraphs") and measures
-    // Dedup.paragraphDedup. Replication copies TEXT verbatim under new
-    // doc_ids, so every paragraph's multiplicity grows REPL× — the
-    // duplication-heavy regime the operator exists for. The groupBy's
-    // map-side partial min must absorb the multiplicity before the
-    // shuffle: the evidence is the ratio AND the shuffle-write volume.
-    if (only.exists(_.contains("paragraph_dedup_scale"))) {
-      def pars(dir: String): DataFrame =
-        spark.read.parquet(s"$dir/documents.parquet")
-          .select(col("doc_id"),
-            posexplode(expr(
-              "transform(sequence(0, (size(split(text, ' ')) - 1) div 12), " +
-                "i -> array_join(slice(split(text, ' '), i * 12 + 1, 12), ' '))"))
-              .as(Seq("pos", "text")))
-      def timed(label: String)(body: => Unit): Option[Double] = {
-        try {
-          spark.sharedState.cacheManager.clearCache()
-          metrics.reset()
-          val t0 = System.nanoTime()
-          body
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch {
-          case e: Throwable =>
-            println(s"""{"query":"$label","error":"${Option(e.getMessage).getOrElse(e.getClass.getName).take(200).replace("\"", "'").replace("\n", " ")}"}""")
-            None
-        }
-      }
-      // untimed warmup: plan + codegen compile must not land in the
-      // sf0.1 leg (the main loop's rationale)
-      try graft.operators.Dedup.paragraphDedup(pars(src))
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-      for (
-        small <- timed("paragraph_dedup_sf01") {
-          graft.operators.Dedup.paragraphDedup(pars(src))
-            .write.format("noop").mode("overwrite").save()
-        };
-        _ = ();
-        big <- timed("paragraph_dedup_sf1") {
-          graft.operators.Dedup.paragraphDedup(pars(out))
-            .write.format("noop").mode("overwrite").save()
-        }
-      ) {
-        val ratio = math.round(big / small * 100) / 100.0
-        println(f"""{"query":"paragraph_dedup_scale","sf01_sec":${math.round(small * 1000) / 1000.0}%s,"sf1_sec":${math.round(big * 1000) / 1000.0}%s,"ratio":$ratio%s,"shuffle_write_mb":${mb(metrics.shufWrite.get)}%s,"spill_disk_mb":${mb(metrics.diskSpill.get)}%s,"max_task_sec":${metrics.maxTaskMs.get / 1000.0}%s}""")
-      }
-    }
-    // Variant probe: WARC walk THROUGHPUT — the container scan has no SF
-    // axis (fixture shards), so this replicates the 6 shard payloads
-    // REPL·50× as independent rows (the production shape: many ~fixed-
-    // size shard files, one task each) and measures wall + MB/s. The
-    // scan is mapPartitions with per-shard state only: the number that
-    // matters is bytes/sec/core staying flat as rows multiply.
-    if (only.exists(_.contains("warc_throughput"))) {
-      try {
-        import spark.implicits._
-        val shards0 = graft.operators.Warc
-          .readShards(spark, "/root/repo/fixtures/warc_shards.parquet")
-          .collect()
-        // production shards are ~1 GB files, not 85 KB fixtures: build
-        // BIG shards by repeating the fixture record bytes (records are
-        // Content-Length framed, so concatenation IS a valid WARC; the
-        // torn tail inside one plain shard exercises mid-stream re-sync
-        // every repeat). One task per shard = the real parallelism unit.
-        val rep = 25
-        def repeatBytes(b: Array[Byte], k: Int): Array[Byte] = {
-          val o = new Array[Byte](b.length * k)
-          var i = 0
-          while (i < k) { System.arraycopy(b, 0, o, i * b.length, b.length); i += 1 }
-          o
-        }
-        val plainCat = shards0.filter(!_.gz).map(_.payload)
-          .reduce(_ ++ _)
-        val plainBig = repeatBytes(plainCat, rep) // 250 pages × rep
-        val gzBig = repeatBytes(shards0.find(_.gz).get.payload, rep) // 50 × rep
-        def run(label: String, big: Array[Byte], gz: Boolean,
-                nRows: Int, respPerRow: Long): Unit = {
-          val ds = spark.createDataset(
-            (0 until nRows).map(r => graft.operators.WarcShard(r.toLong, gz, big)))
-            .repartition(spark.sparkContext.defaultParallelism)
-          graft.operators.Warc.records(ds).count() // untimed warmup
-          metrics.reset()
-          val t0 = System.nanoTime()
-          val resp = graft.operators.Warc.records(ds)
-            .filter(col("warc_type") === "response").count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          val mbTot = mb(big.length.toLong * nRows)
-          val ok = resp == respPerRow * nRows
-          println(f"""{"query":"$label","shards":$nRows%d,"shard_mb":${mb(big.length.toLong)}%s,"input_mb":$mbTot%s,"sec":${math.round(sec * 1000) / 1000.0}%s,"mb_per_sec":${math.round(mbTot / sec * 10) / 10.0}%s,"records_ok":$ok%s,"max_task_sec":${metrics.maxTaskMs.get / 1000.0}%s}""")
-        }
-        run("warc_throughput_plain", plainBig, gz = false, 64, 250L * rep)
-        run("warc_throughput_gz", gzBig, gz = true, 64, 50L * rep)
-      } catch {
-        case e: Throwable => println(
-          s"""{"query":"warc_throughput","error":"${Option(e.getMessage).getOrElse(e.getClass.getName).take(200).replace("\"", "'")}"}""")
-      }
-    }
-    // Variant probe: TEXT-INDEX delta compaction A/B — after MANY appends
-    // the append-only lexicon/stats deltas make every read sum across
-    // append-count generations; compaction collapses them. Measures the
-    // steady-state search read (stats + df + pruned postings for two
-    // terms, median of 3) before and after compact, plus the delta-row
-    // counts, and asserts score equality inline.
-    if (only.exists(_.contains("textindex_compact"))) {
-      try {
-        val docs = spark.read.parquet(s"$src/documents.parquet")
-          .selectExpr("doc_id", "text")
-        val root = java.nio.file.Files
-          .createTempDirectory("graft-ti-compact-scale").toString + "/idx"
-        graft.sources.TextIndex.buildFrom(spark, docs.filter(col("doc_id") % 20 === 0), root)
-        (1 until 20).foreach(k =>
-          graft.sources.TextIndex.append(spark, root, docs.filter(col("doc_id") % 20 === k)))
-        val terms = Seq("join", "stream")
-        def readOnce(): (Long, Long, Long) = {
-          val (n, tot) = graft.sources.TextIndex.readStats(spark, root)
-          val d = graft.sources.TextIndex.readDf(spark, root, terms)
-            .agg(sum("df")).first().getLong(0)
-          val p = graft.sources.TextIndex.readPostings(spark, root, terms).count()
-          (n, tot + d, p)
-        }
-        def timeMedian3(): Double = {
-          val ts = (1 to 3).map { _ =>
-            val t0 = System.nanoTime(); readOnce(); (System.nanoTime() - t0) / 1e9
-          }.sorted
-          ts(1)
-        }
-        readOnce() // warmup
-        val lexRows0 = spark.read.parquet(s"$root/lexicon").count()
-        val statRows0 = spark.read.parquet(s"$root/stats").count()
-        val before = readOnce()
-        val tBefore = timeMedian3()
-        graft.sources.TextIndex.compact(spark, root)
-        val after = readOnce()
-        val tAfter = timeMedian3()
-        val lexRows1 = spark.read.parquet(s"$root/lexicon").count()
-        val statRows1 = spark.read.parquet(s"$root/stats").count()
-        println(f"""{"query":"textindex_compact","appends":19,"identical":${before == after}%s,"lexicon_rows":[$lexRows0%d,$lexRows1%d],"stats_rows":[$statRows0%d,$statRows1%d],"read_sec_before":${math.round(tBefore * 1000) / 1000.0}%s,"read_sec_after":${math.round(tAfter * 1000) / 1000.0}%s}""")
-      } catch {
-        case e: Throwable => println(
-          s"""{"query":"textindex_compact","error":"${Option(e.getMessage).getOrElse(e.getClass.getName).take(200).replace("\"", "'")}"}""")
-      }
-    }
-    // Variant probe: ANN QUANTIZER DRIFT — the persisted IVF-PQ index
-    // assigns/encodes appended batches against quantizers trained on the
-    // ORIGINAL corpus sample; as the appended mass grows, the cells and
-    // codebooks describe the data less well and recall decays. Protocol:
-    // build on 40% of the sf embeddings, append 10%-slices, measure
-    // recall@10 (nprobe=2, 20 fixed member queries, vs exact cosine over
-    // the CURRENT corpus) at each checkpoint, then REBUILD on the full
-    // set and measure the restored recall — the scheduled-rebuild answer
-    // with numbers attached.
-    if (only.exists(_.contains("ann_drift"))) {
-      try {
-        val emb = spark.read.parquet(s"$src/embeddings.parquet")
-          .selectExpr("vec_id", "embedding")
-          .localCheckpoint(true)
-        val queries = emb.orderBy("vec_id").limit(20)
-          .collect().map(r => (r.getLong(0),
-            r.getSeq[Float](1).map(_.toDouble).toArray))
-        // recall of the documented TWO-STAGE search (the WebCorpusApp
-        // shape): the index generates ADC candidates from the probed
-        // cells, the embeddings table reranks them by exact L2 — at the
-        // fixture-pinned quantizer sizes (4 cells / 4x4 codebooks) the
-        // PQ codes are a candidate SCREEN, not a ranker, so drift shows
-        // up as candidate-quality decay (stale cells, mis-assigned
-        // appends), which is the production-relevant axis
-        def recallAt10(root: String, current: org.apache.spark.sql.DataFrame,
-                       candidates: Int = 200, auto: Boolean = false): Double = {
-          val hits = queries.map { case (qid, qv) =>
-            val d2 = aggregate(zip_with(col("embedding"),
-              lit(qv), (x, y) => (x - y) * (x - y)), lit(0.0), (a, x) => a + x)
-            val exact = current.filter(col("vec_id") =!= qid)
-              .select(col("vec_id"), d2.as("s"))
-              .orderBy(col("s").asc, col("vec_id")).limit(10)
-              .collect().map(_.getLong(0)).toSet
-            // auto: the SELF-SCALING budget derived from the written
-            // cell counts (r15) — no caller constant anywhere
-            val cands = (if (auto)
-              graft.sources.AnnIndex.searchCandidates(spark, root, qv,
-                nprobe = 2, excludeId = qid)
-            else graft.sources.AnnIndex
-              .searchTopK(spark, root, qv, nprobe = 2, excludeId = qid,
-                topK = candidates))
-              .select("vec_id")
-            val got = current.join(cands, "vec_id")
-              .select(col("vec_id"), d2.as("s"))
-              .orderBy(col("s").asc, col("vec_id")).limit(10)
-              .collect().map(_.getLong(0)).toSet
-            exact.intersect(got).size
-          }
-          hits.sum / (10.0 * queries.length)
-        }
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-ann-drift").toString + "/idx"
-        val base = emb.filter(col("vec_id") % 10 < 4)
-        graft.sources.AnnIndex.buildFrom(spark, base, dir)
-        var current = base
-        val checkpoints = Seq.newBuilder[(Int, Double)]
-        val autoCheckpoints = Seq.newBuilder[(Int, Double)]
-        checkpoints += 40 -> recallAt10(dir, current)
-        autoCheckpoints += 40 -> recallAt10(dir, current, auto = true)
-        (4 to 9).foreach { k =>
-          graft.sources.AnnIndex.append(spark, dir,
-            emb.filter(col("vec_id") % 10 === k))
-          current = emb.filter(col("vec_id") % 10 <= k)
-          if (k == 5 || k == 7 || k == 9) {
-            checkpoints += (k + 1) * 10 -> recallAt10(dir, current)
-            autoCheckpoints += (k + 1) * 10 -> recallAt10(dir, current, auto = true)
-          }
-        }
-        // the derived budgets at the endpoints, logged so the evidence
-        // shows the law's VALUES, not just its effect
-        val budget100 = graft.sources.AnnIndex.candidateBudget(spark, dir)
-        val dir2 = java.nio.file.Files
-          .createTempDirectory("graft-ann-rebuild").toString + "/idx"
-        graft.sources.AnnIndex.buildFrom(spark, emb, dir2)
-        val rebuilt = recallAt10(dir2, emb)
-        // the separating leg: same final corpus, candidate budget scaled
-        // with it (200 at 40% = ~10% of corpus -> 500 at 100%) — if THIS
-        // restores recall while the rebuild did not, the decay was
-        // candidate dilution, not quantizer drift
-        val propIncr = recallAt10(dir, emb, candidates = 500)
-        val propRebuilt = recallAt10(dir2, emb, candidates = 500)
-        def fmt(cs: Seq[(Int, Double)]): String = cs
-          .map { case (pct, r) => s"""{"corpus_pct":$pct,"recall10":${math.round(r * 1000) / 1000.0}}""" }
-          .mkString("[", ",", "]")
-        println(s"""{"query":"ann_drift","checkpoints":${fmt(checkpoints.result())},"auto_budget_checkpoints":${fmt(autoCheckpoints.result())},"derived_budget_at_100pct":$budget100,"recall10_after_rebuild":${math.round(rebuilt * 1000) / 1000.0},"recall10_prop_candidates_incremental":${math.round(propIncr * 1000) / 1000.0},"recall10_prop_candidates_rebuilt":${math.round(propRebuilt * 1000) / 1000.0}}""")
-      } catch {
-        case e: Throwable => println(
-          s"""{"query":"ann_drift","error":"${Option(e.getMessage).getOrElse(e.getClass.getName).take(200).replace("\"", "'")}"}""")
-      }
-    }
-    // Variant probe: the END-TO-END WebCorpusApp build+append priced at
-    // crawl scale. Replicas rewrite the shard HOST with a byte-LENGTH-
-    // PRESERVING substitution (example.com → examp%02d.com — WARC
-    // Content-Length framing stays valid, and the Location/Host headers
-    // inside HTTP blocks are covered too), so every replica carries
-    // DISTINCT urls with IDENTICAL content: the mirror-site regime the
-    // paragraph dedup exists for. Pages grow ×N while distinct content
-    // stays ×1 — survivors must stay ~flat and the dedup shuffles must
-    // track distinct paragraphs, not occurrences. The gz shard is
-    // inflated once so the rewrite sees record bytes (the gz framing
-    // itself is priced by warc_throughput).
-    if (only.exists(_.contains("webcorpus_scale"))) {
-      try {
-        import spark.implicits._
-        val robotsFx = "/root/repo/fixtures/robots.parquet"
-        val base = graft.operators.Warc
-          .readShards(spark, "/root/repo/fixtures/warc_shards.parquet")
-          .collect()
-        def rewriteHost(b: Array[Byte], k: Int): Array[Byte] = {
-          val pat = "example.com".getBytes("US-ASCII")
-          val rep = f"examp$k%02d.com".getBytes("US-ASCII")
-          require(rep.length == pat.length)
-          val o = java.util.Arrays.copyOf(b, b.length)
-          var i = 0
-          while (i <= o.length - pat.length) {
-            var j = 0
-            while (j < pat.length && o(i + j) == pat(j)) j += 1
-            if (j == pat.length) {
-              System.arraycopy(rep, 0, o, i, rep.length); i += pat.length
-            } else i += 1
-          }
-          o
-        }
-        def writeShards(dir: String, reps: Int): Unit =
-          spark.createDataset(
-            (0 until reps).flatMap { k =>
-              base.map { s =>
-                val plain =
-                  if (s.gz) graft.operators.Warc.gunzipAll(s.payload).get
-                  else s.payload
-                graft.operators.WarcShard(k.toLong * 6 + s.shard_id, gz = false,
-                  if (k == 0) plain else rewriteHost(plain, k))
-              }
-            }).toDF().write.mode("overwrite").parquet(dir)
-        def rmTree(p: String): Unit = {
-          import scala.jdk.CollectionConverters._
-          val root = java.nio.file.Paths.get(p)
-          if (java.nio.file.Files.exists(root))
-            java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.deleteIfExists(_))
-        }
-        def manifestOf(out: String): (Long, Long) = {
-          val m = spark.read.parquet(s"$out/manifest").head()
-          (m.getAs[Long]("n_pages"), m.getAs[Long]("n_corpus"))
-        }
-        def runBuild(label: String, reps: Int): Unit = {
-          val dir = java.nio.file.Files
-            .createTempDirectory("graft-webcorpus-scale").toString
-          writeShards(s"$dir/shards", reps)
-          metrics.reset()
-          val t0 = System.nanoTime()
-          graft.app.WebCorpusApp.build(spark, s"$dir/shards", robotsFx, s"$dir/out")
-          val sec = (System.nanoTime() - t0) / 1e9
-          val (nPages, nCorpus) = manifestOf(s"$dir/out")
-          println(f"""{"query":"$label","replicas":$reps%d,"pages":$nPages%d,"corpus":$nCorpus%d,"sec":${math.round(sec * 1000) / 1000.0}%s,"pages_per_sec":${math.round(nPages / sec * 10) / 10.0}%s,"spill_disk_mb":${mb(metrics.diskSpill.get)}%s,"shuffle_write_mb":${mb(metrics.shufWrite.get)}%s,"max_task_sec":${metrics.maxTaskMs.get / 1000.0}%s}""")
-          rmTree(dir)
-        }
-        runBuild("webcorpus_build_x1", 1)
-        runBuild("webcorpus_build_x10", 10)
-        runBuild("webcorpus_build_x30", 30)
-        // append leg: history = 9 replicas, batch = the 10th — the cost
-        // must be batch-proportional (history text never re-read)
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-webcorpus-scale-app").toString
-        writeShards(s"$dir/shards", 10)
-        graft.app.WebCorpusApp.build(spark, s"$dir/shards", robotsFx,
-          s"$dir/out", shardPred = col("shard_id") < 54)
-        metrics.reset()
-        val t0 = System.nanoTime()
-        graft.app.WebCorpusApp.append(spark, s"$dir/shards", robotsFx,
-          s"$dir/out", batchId = "r9", shardPred = col("shard_id") >= 54)
-        val sec = (System.nanoTime() - t0) / 1e9
-        val (nPages, nCorpus) = manifestOf(s"$dir/out")
-        // r16 verdict #1b: STAGE ATTRIBUTION for the append — the bench's
-        // most expensive query (q317) regressed without the per-stage
-        // evidence to separate plan growth from box noise; the top stages
-        // land in SCALE_EVIDENCE alongside the wall numbers
-        System.err.println("[stages] webcorpus_append_1of10:")
-        metrics.topStages(10).foreach(System.err.println)
-        println(f"""{"query":"webcorpus_append_1of10","pages_total":$nPages%d,"corpus":$nCorpus%d,"append_sec":${math.round(sec * 1000) / 1000.0}%s,"spill_disk_mb":${mb(metrics.diskSpill.get)}%s,"max_task_sec":${metrics.maxTaskMs.get / 1000.0}%s}""")
-        rmTree(dir)
-      } catch {
-        case e: Throwable => println(
-          s"""{"query":"webcorpus_scale","error":"${Option(e.getMessage).getOrElse(e.getClass.getName).take(200).replace("\"", "'")}"}""")
-      }
-    }
-    // Variant probe: CORPUS MAINTENANCE (r15) — ten separate tagged
-    // appends fragment every table into per-batch files; maintain()
-    // folds them. Measured: data-file counts and a representative read
-    // (corpus aggregate over all columns) before/after, plus the fold's
-    // own cost; corpus rows must be bit-identical across the fold.
-    if (only.exists(_.contains("webcorpus_maintain"))) {
-      try {
-        import spark.implicits._
-        val robotsFx = "/root/repo/fixtures/robots.parquet"
-        val base = graft.operators.Warc
-          .readShards(spark, "/root/repo/fixtures/warc_shards.parquet")
-          .collect()
-        def rewriteHost(b: Array[Byte], k: Int): Array[Byte] = {
-          val pat = "example.com".getBytes("US-ASCII")
-          val rep = f"examp$k%02d.com".getBytes("US-ASCII")
-          val o = java.util.Arrays.copyOf(b, b.length)
-          var i = 0
-          while (i <= o.length - pat.length) {
-            var j = 0
-            while (j < pat.length && o(i + j) == pat(j)) j += 1
-            if (j == pat.length) {
-              System.arraycopy(rep, 0, o, i, rep.length); i += pat.length
-            } else i += 1
-          }
-          o
-        }
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-webcorpus-maintain").toString
-        spark.createDataset(
-          (0 until 10).flatMap { k =>
-            base.map { s =>
-              val plain =
-                if (s.gz) graft.operators.Warc.gunzipAll(s.payload).get
-                else s.payload
-              graft.operators.WarcShard(k.toLong * 6 + s.shard_id, gz = false,
-                if (k == 0) plain else rewriteHost(plain, k))
-            }
-          }).toDF().write.mode("overwrite").parquet(s"$dir/shards")
-        graft.app.WebCorpusApp.build(spark, s"$dir/shards", robotsFx,
-          s"$dir/out", shardPred = col("shard_id") < 6)
-        (1 until 10).foreach { k =>
-          graft.app.WebCorpusApp.append(spark, s"$dir/shards", robotsFx,
-            s"$dir/out", batchId = s"b$k",
-            shardPred = col("shard_id") >= k * 6 && col("shard_id") < (k + 1) * 6)
-        }
-        val tables = Seq("corpus", "rejects", "paragraph_hashes", "links",
-          "embeddings", "text_index/postings", "text_index/lexicon",
-          "text_index/stats", "ann_index/postings")
-        def files() = tables
-          .map(t => graft.sources.Sinks.dataFileCount(spark, s"$dir/out/$t")).sum
-        def readProbe(): (Double, Long) = {
-          spark.catalog.refreshByPath(s"$dir/out/corpus")
-          val t0 = System.nanoTime()
-          val n = spark.read.parquet(s"$dir/out/corpus")
-            .agg(count(lit(1)), sum(length(col("text"))), sum(col("n_tokens")))
-            .head().getLong(0)
-          ((System.nanoTime() - t0) / 1e9, n)
-        }
-        val filesBefore = files()
-        val (readB, rowsB) = readProbe()
-        val fp0 = spark.read.parquet(s"$dir/out/corpus")
-          .agg(sum(crc32(col("fp")))).head().getLong(0)
-        val t0 = System.nanoTime()
-        graft.app.WebCorpusApp.maintain(spark, s"$dir/out")
-        val maintainSec = (System.nanoTime() - t0) / 1e9
-        val filesAfter = files()
-        val (readA, rowsA) = readProbe()
-        val fp1 = spark.read.parquet(s"$dir/out/corpus")
-          .agg(sum(crc32(col("fp")))).head().getLong(0)
-        require(rowsA == rowsB && fp0 == fp1, "maintain changed the corpus")
-        println(f"""{"query":"webcorpus_maintain","batches":10,"corpus_rows":$rowsB%d,"data_files_before":$filesBefore%d,"data_files_after":$filesAfter%d,"read_sec_before":${math.round(readB * 1000) / 1000.0}%s,"read_sec_after":${math.round(readA * 1000) / 1000.0}%s,"maintain_sec":${math.round(maintainSec * 1000) / 1000.0}%s}""")
-        import scala.jdk.CollectionConverters._
-        val root = java.nio.file.Paths.get(dir)
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      } catch {
-        case e: Throwable => println(
-          s"""{"query":"webcorpus_maintain","error":"${Option(e.getMessage).getOrElse(e.getClass.getName).take(200).replace("\"", "'")}"}""")
-      }
-    }
-    // Variant probe: the CDX INDEX at crawl scale. Replicas carry
-    // DISTINCT urls (the webcorpus_scale host rewrite), so lookups stay
-    // POINT queries as the store grows. Three claims measured:
-    //  (1) build is one walk (pages/sec ~flat with shard count);
-    //  (2) lookup reads only the queried buckets — A/B vs the same
-    //      filter WITHOUT partition pruning;
-    //  (3) fetch reads only the NAMED shards — A/B vs the full container
-    //      walk the index exists to avoid; plus the single-shard
-    //      slice-vs-walk micro A/B (production shards are ~1 GB: the
-    //      walk pays the whole shard, the slice pays one record).
-    if (only.exists(_.contains("cdx_scale"))) {
-      try {
-        import spark.implicits._
-        val base = graft.operators.Warc
-          .readShards(spark, "/root/repo/fixtures/warc_shards.parquet")
-          .collect()
-        def rewriteHost(b: Array[Byte], k: Int): Array[Byte] = {
-          val pat = "example.com".getBytes("US-ASCII")
-          val rep = f"examp$k%02d.com".getBytes("US-ASCII")
-          require(rep.length == pat.length)
-          val o = java.util.Arrays.copyOf(b, b.length)
-          var i = 0
-          while (i <= o.length - pat.length) {
-            var j = 0
-            while (j < pat.length && o(i + j) == pat(j)) j += 1
-            if (j == pat.length) {
-              System.arraycopy(rep, 0, o, i, rep.length); i += pat.length
-            } else i += 1
-          }
-          o
-        }
-        def rmTree(p: String): Unit = {
-          import scala.jdk.CollectionConverters._
-          val root = java.nio.file.Paths.get(p)
-          if (java.nio.file.Files.exists(root))
-            java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.deleteIfExists(_))
-        }
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-cdx-scale").toString
-        val reps = sys.env.getOrElse("SPARK_GRAFT_CDX_REPS", "100").toInt
-        // replica 0 keeps the original framing (incl. the gz shard —
-        // member-extent locations); rewritten replicas are plain
-        spark.createDataset(
-          (0 until reps).flatMap { k =>
-            base.map { s =>
-              if (k == 0) s
-              else {
-                val plain = if (s.gz)
-                  graft.operators.Warc.gunzipAll(s.payload).get
-                else s.payload
-                graft.operators.WarcShard(k.toLong * 6 + s.shard_id,
-                  gz = false, rewriteHost(plain, k))
-              }
-            }
-          }).toDF().write.mode("overwrite").parquet(s"$dir/shards")
-        val shardsDs = graft.operators.Warc.readShards(spark, s"$dir/shards")
-        metrics.reset()
-        var t0 = System.nanoTime()
-        graft.sources.CdxIndex.buildFrom(spark, shardsDs, s"$dir/cdx")
-        val buildSec = (System.nanoTime() - t0) / 1e9
-        val nLoc = spark.read.parquet(s"$dir/cdx/locations").count()
-        println(f"""{"query":"cdx_build","replicas":$reps%d,"locations":$nLoc%d,"sec":${math.round(buildSec * 1000) / 1000.0}%s,"locs_per_sec":${math.round(nLoc / buildSec * 10) / 10.0}%s,"input_mb":${mb(metrics.input.get)}%s}""")
-        // 10 point lookups across replicas + one gz-member url
-        val urls = (1 to 9).map(k => f"https://examp$k%02d.com/doc${k * 7}%d") :+
-          "https://example.com/doc23" // doc 23: shard 5, the gz framing
-        def timeN(n: Int)(f: => Long): (Double, Long) = {
-          var rows = 0L
-          val ts = (1 to n).map { _ =>
-            val s = System.nanoTime(); rows = f; (System.nanoTime() - s) / 1e9
-          }
-          (ts.sorted.apply(n / 2), rows)
-        }
-        val (lkSec, lkRows) = timeN(3)(
-          graft.sources.CdxIndex.lookup(spark, s"$dir/cdx", urls).count())
-        val (lkFullSec, _) = timeN(3)(
-          spark.read.parquet(s"$dir/cdx/locations")
-            .filter(col("url").isin(urls: _*)).count()) // NO bucket prune
-        println(f"""{"query":"cdx_lookup","urls":${urls.size}%d,"rows":$lkRows%d,"pruned_sec":${math.round(lkSec * 1000) / 1000.0}%s,"unpruned_sec":${math.round(lkFullSec * 1000) / 1000.0}%s}""")
-        val (ftSec, ftRows) = timeN(3)(
-          graft.sources.CdxIndex.fetch(spark, s"$dir/cdx", s"$dir/shards", urls)
-            .count())
-        metrics.reset()
-        val (walkSec, walkRows) = timeN(1)(
-          graft.operators.Warc.responses(shardsDs)
-            .filter(col("target_uri").isin(urls: _*)).count())
-        println(f"""{"query":"cdx_fetch","urls":${urls.size}%d,"fetched":$ftRows%d,"fetch_sec":${math.round(ftSec * 1000) / 1000.0}%s,"full_walk_sec":${math.round(walkSec * 1000) / 1000.0}%s,"walk_rows":$walkRows%d,"walk_input_mb":${mb(metrics.input.get)}%s}""")
-        // single-shard slice-vs-walk micro A/B on a production-FAT shard
-        val fatCat = base.filter(!_.gz).map(_.payload).reduce(_ ++ _)
-        val fat = {
-          val k = 250
-          val o = new Array[Byte](fatCat.length * k)
-          var i = 0
-          while (i < k) { System.arraycopy(fatCat, 0, o, i * fatCat.length, fatCat.length); i += 1 }
-          o
-        }
-        val fatLocs = graft.operators.Warc
-          .locateShard(graft.operators.WarcShard(0L, gz = false, fat))
-        val last = fatLocs.maxBy(_.offset) // deepest record: worst walk case
-        def ms(f: => Unit): Double = {
-          f // warm
-          val s = System.nanoTime(); f; (System.nanoTime() - s) / 1e6
-        }
-        val sliceMs = ms(assert(graft.operators.Warc
-          .fetchRecord(0L, gz = false, fat, last.offset, last.length).nonEmpty))
-        val walkMs = ms(assert(graft.operators.Warc
-          .parseShard(graft.operators.WarcShard(0L, gz = false, fat))
-          .exists(r => r.target_uri.contains(last.url))))
-        println(f"""{"query":"cdx_slice_vs_walk","shard_mb":${mb(fat.length.toLong)}%s,"slice_ms":${math.round(sliceMs * 1000) / 1000.0}%s,"walk_ms":${math.round(walkMs * 1000) / 1000.0}%s,"ratio":${math.round(walkMs / sliceMs * 10) / 10.0}%s}""")
-        rmTree(dir)
-      } catch {
-        case e: Throwable => println(
-          s"""{"query":"cdx_scale","error":"${Option(e.getMessage).getOrElse(e.getClass.getName).take(200).replace("\"", "'")}"}""")
-      }
-    }
-    // Variant probe: WET WRITER throughput — packConversions priced at
-    // both scales and framings; the claim is bytes/sec/core flat as the
-    // corpus grows (one shuffle on the shard key, then per-partition
-    // byte assembly). Payload mass ≈ text + ~150 B/record of headers.
-    if (only.exists(_.contains("wet_write"))) {
-      try {
-        def run(label: String, dir: String, gz: Boolean, shards: Int): Unit = {
-          val docs = graft.sources.Tables.documents(spark, dir).select(
-            concat(lit("wet://doc/"), col("doc_id")).as("url"), col("text"),
-            (col("doc_id") % shards).as("shard_id"))
-          val packed = graft.operators.Warc
-            .packConversions(docs, "url", "text", "shard_id",
-              date = "2026-01-01T00:00:00Z", gz = gz)
-          packed.toDF().agg(count(lit(1))).head() // untimed warmup
-          metrics.reset()
-          val t0 = System.nanoTime()
-          val r = packed.toDF()
-            .agg(count(lit(1)), sum(length(col("payload")))).head()
-          val sec = (System.nanoTime() - t0) / 1e9
-          val (n, bytes) = (r.getLong(0), r.getLong(1))
-          println(f"""{"query":"$label","shards":$n%d,"payload_mb":${mb(bytes)}%s,"sec":${math.round(sec * 1000) / 1000.0}%s,"mb_per_sec":${math.round(mb(bytes) / sec * 10) / 10.0}%s,"max_task_sec":${metrics.maxTaskMs.get / 1000.0}%s}""")
-        }
-        run("wet_write_plain_x1", src, gz = false, 64)
-        run("wet_write_gz_x1", src, gz = true, 64)
-        run("wet_write_plain_x10", out, gz = false, 256)
-        run("wet_write_gz_x10", out, gz = true, 256)
-      } catch {
-        case e: Throwable => println(
-          s"""{"query":"wet_write","error":"${Option(e.getMessage).getOrElse(e.getClass.getName).take(200).replace("\"", "'")}"}""")
-      }
-    }
-    // Variant probe: FULL-GRAPH 4-truss at sf0.1 — the un-oriented wedge
-    // form measured 109 s here (NOTES_r10), which is why q257 ships on
-    // the vetted backbone; the degree-oriented support rewrite should
-    // collapse that. Runs on the SOURCE dir (1.2M-edge raw graph).
-    if (only.exists(_.contains("ktruss_full"))) {
-      try {
-        val und = spark.read.parquet(s"$src/lineitem.parquet")
-          .select("l_orderkey", "l_partkey")
-          .groupBy("l_orderkey")
-          .agg(collect_set(col("l_partkey")).as("ps"))
-          .select(explode(col("ps")).as("pa"), col("ps"))
-          .select(col("pa"), explode(col("ps")).as("pb"))
-          .filter(col("pa") < col("pb"))
-          .distinct()
-        metrics.reset()
-        val t0 = System.nanoTime()
-        graft.operators.KTruss.kTruss(und, "pa", "pb", k = 4, maxRounds = 25)
-          .write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"""{"query":"ktruss_full_sf01","sf01_sec":${math.round(sec * 1000) / 1000.0}%s,"max_task_sec":${metrics.maxTaskMs.get / 1000.0}%s,"spill_disk_mb":${mb(metrics.diskSpill.get)}%s}""")
-      } catch {
-        case e: Throwable => println(
-          s"""{"query":"ktruss_full_sf01","error":"${Option(e.getMessage).getOrElse("").take(150).replace("\"", "'")}"}""")
       }
     }
     spark.stop()

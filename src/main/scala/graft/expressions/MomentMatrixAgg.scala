@@ -62,14 +62,14 @@ case class MomentMatrixAgg(
       s"graft_moments expects array<float|double>, got ${other.sql}")
   }
 
-  override def createAggregationBuffer(): Buffer = new Buffer(0, 0L, null, null)
+  override def createAggregationBuffer(): Buffer = new Buffer(Unseen, 0L, null, null)
 
   override def update(buf: Buffer, input: InternalRow): Buffer = {
     val v = child.eval(input)
     if (v == null) return buf
     val arr = v.asInstanceOf[ArrayData]
     val d = arr.numElements()
-    if (buf.d == 0) buf.alloc(d)
+    if (buf.d == Unseen) buf.alloc(d)
     else require(buf.d == d,
       s"graft_moments: mixed vector dimensions ${buf.d} vs $d")
     buf.n += 1L
@@ -98,9 +98,9 @@ case class MomentMatrixAgg(
   }
 
   override def merge(buf: Buffer, other: Buffer): Buffer = {
-    if (other.d == 0) return buf
-    if (buf.d == 0) { buf.adopt(other); return buf }
-    require(buf.d == other.d,
+    if (other.d == Unseen) return buf
+    if (buf.d == Unseen) buf.alloc(other.d)
+    else require(buf.d == other.d,
       s"graft_moments: mixed vector dimensions ${buf.d} vs ${other.d}")
     buf.n += other.n
     var k = 0
@@ -110,9 +110,9 @@ case class MomentMatrixAgg(
   }
 
   override def eval(buf: Buffer): Any = {
-    val m = if (buf.d == 0) 0 else buf.lo.length
+    val m = if (buf.d == Unseen) 0 else buf.lo.length
     val out = new Array[Any](2 + m)
-    out(0) = Decimal(buf.d.toLong)
+    out(0) = Decimal(math.max(buf.d, 0).toLong)
     out(1) = Decimal(buf.n)
     var k = 0
     while (k < m) {
@@ -123,7 +123,7 @@ case class MomentMatrixAgg(
   }
 
   override def serialize(buf: Buffer): Array[Byte] = {
-    val m = if (buf.d == 0) 0 else buf.lo.length
+    val m = if (buf.d == Unseen) 0 else buf.lo.length
     val bb = ByteBuffer.allocate(4 + 8 + 16 * m)
     bb.putInt(buf.d)
     bb.putLong(buf.n)
@@ -135,10 +135,10 @@ case class MomentMatrixAgg(
   override def deserialize(bytes: Array[Byte]): Buffer = {
     val bb = ByteBuffer.wrap(bytes)
     val d = bb.getInt
-    val buf = new Buffer(0, 0L, null, null)
-    if (d > 0) buf.alloc(d)
+    val buf = new Buffer(Unseen, 0L, null, null)
+    if (d != Unseen) buf.alloc(d)
     buf.n = bb.getLong
-    val m = if (d == 0) 0 else buf.lo.length
+    val m = if (d == Unseen) 0 else buf.lo.length
     var k = 0
     while (k < m) { buf.hi(k) = bb.getLong; buf.lo(k) = bb.getLong; k += 1 }
     buf
@@ -159,6 +159,10 @@ object MomentMatrixAgg {
   /** Sentinel for "the cast would be null" (NaN/Inf/decimal(18,6)
     * overflow) — unreachable as a real scaled value (|scaled| < 10¹⁸). */
   val SKIP: Long = Long.MinValue
+
+  /** Buffer dimension before any row is seen — distinct from 0, the
+    * dimension of a seen zero-length vector. */
+  val Unseen: Int = -1
 
   private val Max18x6 = new JBigDecimal("999999999999.999999")
 
@@ -194,7 +198,7 @@ object MomentMatrixAgg {
 
   /** n plus a (d + d·(d+1)/2)-element vector of 128-bit accumulators
     * (hi: signed high 64, lo: unsigned low 64) — first moments then the
-    * upper triangle. d == 0 means "no rows seen yet". */
+    * upper triangle. d == [[Unseen]] means "no rows seen yet". */
   final class Buffer(var d: Int, var n: Long, var hi: Array[Long], var lo: Array[Long]) {
 
     def alloc(dim: Int): Unit = {
@@ -202,11 +206,6 @@ object MomentMatrixAgg {
       val m = dim + dim * (dim + 1) / 2
       hi = new Array[Long](m)
       lo = new Array[Long](m)
-    }
-
-    def adopt(other: Buffer): Unit = {
-      d = other.d; n = other.n
-      hi = other.hi.clone(); lo = other.lo.clone()
     }
 
     /** 128-bit += of a signed 64-bit value. */

@@ -32,8 +32,11 @@ object Bfs {
     * count (seeds themselves at 0 — including seeds isolated from the
     * graph, which are still distance-0 members of the expansion). */
   def hopDistances(edges: DataFrame, aCol: String, bCol: String,
-                   seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame =
+                   seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = {
+    // validated before the eager adjacency build, not after it
+    require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
     hopDistancesOver(prepareAdjacency(edges, aCol, bCol), seeds, seedCol, maxHops)
+  }
 
   /** The severed, src-keyed directed adjacency of an undirected edge
     * list — both directions once, partitioned by the join key at the cut

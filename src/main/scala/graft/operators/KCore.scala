@@ -4,107 +4,45 @@ import graft.operators.Sever.SeverOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** k-CORE decomposition by iterative peeling — the standard distributed
-  * formulation: repeatedly delete every node of degree < k (with its
-  * edges) until none remains; what survives is the k-core, the unique
-  * maximal subgraph of minimum degree ≥ k. Each round is two canonical
-  * keyed shuffles (a degree aggregation + an endpoint semi-join), so a
-  * round costs what one groupBy+join costs at any scale; there is no
-  * all-pairs stage and no driver-side graph state. Lineage is severed
-  * with `localCheckpoint` every round (the CC precedent — an iterative
-  * plan that doubles per round is unplannable long before it is slow).
+/** k-CORE decomposition — the unique maximal subgraph of minimum degree
+  * ≥ k — by iterative peeling with INCREMENTAL DEGREE MAINTENANCE: each
+  * round removes every node whose degree fell below k (cascades included
+  * one hop per round) until none remains. The edge set is materialized
+  * once and never rewritten; only the |V|-sized degree table evolves, so
+  * there is no all-pairs stage and no driver-side graph state. Lineage is
+  * severed with `localCheckpoint` every round (the CC precedent — an
+  * iterative plan that doubles per round is unplannable long before it is
+  * slow).
   *
   * Convergence: peeling strictly shrinks the node set until fixpoint, so
-  * it terminates in ≤ |V| rounds; in practice a handful (each round
-  * removes every node whose degree fell below k, cascades included one
-  * hop per round). `maxRounds` bounds the loop and the operator THROWS if
-  * the fixpoint is not reached — a silent truncation would return a
-  * superset of the k-core and hash-mismatch the oracle, so loud is the
-  * only honest failure mode. The convergence check is one count() per
-  * round — a bounded driver read of a single scalar, same as PageRank's.
+  * it terminates in ≤ |V| rounds; in practice a handful. `maxRounds`
+  * bounds the loop and the operator THROWS if the fixpoint is not reached
+  * — a silent truncation would return a superset of the k-core and
+  * hash-mismatch the oracle, so loud is the only honest failure mode. The
+  * convergence check is one count() per round — a bounded driver read of
+  * a single scalar, same as PageRank's.
   *
-  * The oracle unrolls the SAME peel a fixed number of rounds in SQL
-  * (rounds past the fixpoint are no-ops, so engine-at-convergence equals
-  * oracle-at-R for any R ≥ the convergence round — the PageRank unrolled-
-  * iteration precedent, with the no-op tail making the fixed R safe). */
+  * The oracle unrolls the plain edge-rebuilding peel a fixed number of
+  * rounds in SQL (rounds past the fixpoint are no-ops, so
+  * engine-at-convergence equals oracle-at-R for any R ≥ the convergence
+  * round — the PageRank unrolled-iteration precedent, with the no-op tail
+  * making the fixed R safe). */
 object KCore {
+
+  /** Above this many removed nodes in one round the removal set is joined
+    * by shuffle instead of broadcast (see [[kCoreIncremental]]). */
+  private val BroadcastLimit = 2000000L
 
   /** The k-core of the undirected graph given as an edge list (self-loops
     * dropped, duplicate/reversed edges collapsed). Returns every
     * surviving node with its degree INSIDE the core (≥ k by definition).
     * Throws if the fixpoint is not reached within `maxRounds`.
     *
-    * `severEvery` sets the MATERIALIZATION CADENCE: 1 severs (and
-    * convergence-checks) every round; 2 lets every other round stay a
-    * lazy depth-2 plan on top of the last severed result, trading
-    * re-read bandwidth for recompute. MEASURED at ×10 (same session,
-    * 8 GB / 32 threads / 128 shuffle partitions): severEvery=1 is
-    * 45.0 s with 24.5 GB input metric; severEvery=2 drops the input to
-    * 17.2 GB but costs 59.2 s — the lazy round re-runs the degree pass
-    * and both semi-joins over the full edge set, which exceeds the
-    * block-manager re-read it avoids (max task ~2 s, zero spill, both
-    * legs). So 1 IS the knee, and the bandwidth is the algorithmic
-    * floor: every peel round must read the surviving edge set twice
-    * (degree build + endpoint filter) and the cascade depth sets the
-    * round count — input ≈ rounds × 2 × |E| is not reducible without
-    * changing the algorithm (e.g. incremental degree maintenance, which
-    * replaces the bandwidth with a delta-join of comparable volume on
-    * this graph's cascade profile). Convergence under severEvery=n is
-    * checked only at severed rounds: edge counts are non-increasing, so
-    * an unchanged count across an n-round span proves every round in it
-    * was a no-op, and rounds past the fixpoint are no-ops anyway (the
-    * oracle's unrolled-peel argument). */
-  def kCore(edges: DataFrame, aCol: String, bCol: String, k: Int,
-            maxRounds: Int = 12, severEvery: Int = 1): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    require(severEvery >= 1, s"severEvery must be >= 1, got $severEvery")
-    var cur = edges
-      .select(least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .sever()
-    var nEdges = cur.count()
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
-      round += 1
-      val deg = cur.select(col("a").as("node"))
-        .unionAll(cur.select(col("b").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("d"))
-      val keep = deg.filter(col("d") >= k).select("node")
-      // both endpoints must survive: two semi-joins, each a keyed shuffle
-      val next = cur
-        .join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
-        .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
-        .select("a", "b")
-      if (round % severEvery == 0 || round == maxRounds) {
-        val mat = next.sever()
-        val n = mat.count() // bounded driver read: one scalar per check
-        converged = n == nEdges
-        nEdges = n
-        cur = mat
-      } else {
-        cur = next // lazy tail, depth < severEvery above the last sever
-      }
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"k-core peel did not reach fixpoint in $maxRounds rounds " +
-          s"($nEdges edges remain in motion) — raise maxRounds")
-    cur.select(col("a").as("node"))
-      .unionAll(cur.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("core_deg"))
-  }
-
-  /** k-core by INCREMENTAL DEGREE MAINTENANCE — the named algorithmic
-    * escape from the peel's bandwidth floor (input ≈ rounds × 2·|E|:
-    * every [[kCore]] round rebuilds degrees from the surviving edge set
-    * and rewrites that edge set through two shuffled semi-joins + a
-    * sever). Here the edge set is IMMUTABLE — materialized once, never
-    * shuffled or rewritten — and only the |V|-sized degree table
-    * evolves:
+    * A plain peel rebuilds degrees from the surviving edge set and
+    * rewrites that edge set through two shuffled semi-joins every round,
+    * so its input is ≈ rounds × 2·|E|. Here the edge set is IMMUTABLE —
+    * materialized once, never shuffled or rewritten — and only the
+    * |V|-sized degree table evolves:
     *
     *  - round r removes `newly` = nodes with d < k (a small severed
     *    set);
@@ -126,12 +64,12 @@ object KCore {
     *    final edge pass at all.
     *
     * Per-round cost: one |E| scan (broadcast joins ride the scan, no
-    * shuffle) + O(incident + |V|) small-table work, vs the peel's two
-    * edge shuffles + edge rewrite. Same fixpoint, same output, same
-    * oracle. */
+    * shuffle) + O(incident + |V|) small-table work, vs the plain peel's
+    * two edge shuffles + edge rewrite (measured 3.1× faster with 3.5×
+    * less input at ×10, SCALE_EVIDENCE §q294). Same fixpoint, same
+    * output. */
   def kCoreIncremental(edges: DataFrame, aCol: String, bCol: String, k: Int,
-                       maxRounds: Int = 12,
-                       broadcastLimit: Long = 2000000L): DataFrame = {
+                       maxRounds: Int = 12): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     val orig = edges
@@ -161,7 +99,7 @@ object KCore {
         // OOMs the driver — that round pays one honest edge shuffle
         // instead, and later rounds return to the broadcast path.
         val hint = (df: DataFrame) =>
-          if (nNew <= broadcastLimit) broadcast(df) else df
+          if (nNew <= BroadcastLimit) broadcast(df) else df
         val dcand = orig
           .join(hint(newly.select(col("node").as("a"), lit(1).as("ra"))),
             Seq("a"), "left")

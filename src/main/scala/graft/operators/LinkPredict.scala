@@ -128,28 +128,14 @@ object LinkPredict {
     * PRECONDITION: node ids in [0, 2^31) — enforced per-edge with
     * `assert_true` (a filter over |E| rows, negligible next to the
     * candidate stream; fails LOUDLY, never corrupts). Ids wider than 31
-    * bits (e.g. synthetic 64-bit hashes) must be densified first or use
-    * `packKeys = false`, which keeps the same plan on the two-column
-    * key (~35 s — still ahead of the naive shape, no precondition). */
+    * bits (e.g. synthetic 64-bit hashes) must be densified first. */
   def topPredictions(und: DataFrame, hubCap: Int, k: Int,
-                     packKeys: Boolean = true,
                      mapParallelism: Int = 0): DataFrame = {
-    if (!packKeys) {
-      val pairs = raCandidates(und, hubCap, mapParallelism)
-        .repartition(col("a"), col("b"))
-        .groupBy("a", "b")
-        .agg(count(lit(1)).as("common"), sum("w").as("score"))
-      return pairs
-        .join(und, pairs("a") === und("pa") && pairs("b") === und("pb"), "left_anti")
-        .orderBy(col("score").desc, col("a"), col("b"))
-        .limit(k)
-        .select(col("a").as("pa"), col("b").as("pb"), col("common"), col("score"))
-    }
     val idBound = 1L << 31
     val guarded = und.filter(assert_true(
       col("pa") >= 0 && col("pa") < idBound && col("pb") >= 0 && col("pb") < idBound,
-      lit(s"LinkPredict packed keys require node ids in [0, 2^31); " +
-        "densify ids or call with packKeys = false")).isNull)
+      lit("LinkPredict packed keys require node ids in [0, 2^31); " +
+        "densify ids first")).isNull)
     def pack(a: Column, b: Column): Column = shiftleft(a, 32) + b
     val packedPairs = raCandidates(guarded, hubCap, mapParallelism)
       .select(pack(col("a"), col("b")).as("ab"), col("w"))

@@ -46,7 +46,8 @@ import org.apache.spark.sql.functions._
   *    video codec retired (fixtures/media.parquet stores complete
   *    valid MP4 and AVI files in three MP4 layouts including
   *    streaming-style mdat-first).
-  *  - IMAGE PIXEL decode is REAL for GIF, 24-bpp BMP, and 8-bit PNG:
+  *  - IMAGE PIXEL decode is REAL for baseline JPEG, GIF, 24-bpp BMP,
+  *    and 8-bit PNG:
   *    [[pngGray]] walks the chunk tree, inflates the IDAT DEFLATE
   *    stream with the JDK's Inflater, and applies all five scanline
   *    filters (verified pixel-for-pixel against ImageIO's adaptively
@@ -58,12 +59,11 @@ import org.apache.spark.sql.functions._
   *    its own compressed interlaced output) and [[bmpGray]] walks the
   *    aligned BGR rows; both emit integer BT.601 luma rasters that feed
   *    the perceptual-hash dedup stage ([[imagePhash]] /
-  *    [[imageNearDupPairs]]). JPEG entropy decode (huffman/DCT) is NOT
-  *    implemented — and deliberately so: lossy decoders round
-  *    differently across implementations, so a bit-exact oracle
-  *    contract is not achievable the way it is for the lossless
-  *    formats. JPEG payloads keep their real dims parse, and payloads
-  *    that are no recognized container at all route
+  *    [[imageNearDupPairs]]). [[jpegGray]] runs a baseline-sequential
+  *    JPEG decoder (Huffman entropy decode, dequantization and a PINNED
+  *    integer IDCT — lossy decoders may round differently, so the
+  *    oracle replays exactly this IDCT, [[IdctK]]). Payloads that are
+  *    no recognized container at all route
   *    to a FIXTURE codec (u16-BE dims header + byte checksum) standing
   *    in for an ffmpeg/ImageIO call so the byte-level path is still
   *    exercised and oracle-verified against independently stored

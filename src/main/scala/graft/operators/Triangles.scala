@@ -41,9 +41,8 @@ object Triangles {
     * injective BIGINT order key. Returns (node, triangles) for every node
     * that closes at least one triangle; each triangle credits all three
     * corners. */
-  def perNodeCounts(edges: DataFrame, aCol: String, bCol: String,
-                    persistIntermediates: Boolean = false): DataFrame =
-    counted(edges, aCol, bCol, persistIntermediates)._2
+  def perNodeCounts(edges: DataFrame, aCol: String, bCol: String): DataFrame =
+    counted(edges, aCol, bCol)._2
 
   /** [[perNodeCounts]] extended to the LOCAL CLUSTERING COEFFICIENT view:
     * every node of degree ≥ 2 (the ones whose coefficient is defined),
@@ -52,7 +51,7 @@ object Triangles {
     * themselves connected. The division is one per-row IEEE operation on
     * exact integers, so it is bit-identical on any engine. */
   def perNodeStats(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val (deg, tri) = counted(edges, aCol, bCol, persistIntermediates = false)
+    val (deg, tri) = counted(edges, aCol, bCol)
     deg.filter(col("d") >= 2)
       .join(tri, Seq("node"), "left")
       .select(col("node"), col("d").as("degree"),
@@ -62,20 +61,17 @@ object Triangles {
   }
 
   /** The shared pipeline: (degrees, per-node triangle counts). */
-  private def counted(edges: DataFrame, aCol: String, bCol: String,
-                      persistIntermediates: Boolean): (DataFrame, DataFrame) = {
-    def maybePersist(df: DataFrame): DataFrame =
-      if (persistIntermediates) df.persist() else df
-    // NOT persisted by default: the canonical edge list feeds the degree
+  private def counted(edges: DataFrame, aCol: String,
+                      bCol: String): (DataFrame, DataFrame) = {
+    // NOT persisted: the canonical edge list feeds the degree
     // count twice and the keyed join once, but every consumer reads BOTH
     // columns, so the distinct's exchange subtree is identical under each
     // and ReuseExchange serves all of them from one shuffle — an explicit
     // persist is a measured no-op (steady-state cold A/B at sf0.1 on the
     // round-9 fixtures: 7.02 s persisted vs 7.04 s recomputed; an earlier
     // "17 s → 4 s" reading predated that reuse and the current fixtures)
-    // while squatting executor storage for the session. The knob remains
-    // for callers on engines/configs where exchange reuse is unavailable.
-    val canon = maybePersist(edges
+    // while squatting executor storage for the session.
+    val canon = edges
       .select(least(col(aCol), col(bCol)).cast("long").as("a"),
         greatest(col(aCol), col(bCol)).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
@@ -86,11 +82,11 @@ object Triangles {
         col("a") >= 0 && col("b") < (1L << 31),
         lit("Triangles packed order keys require node ids in [0, 2^31); " +
           "densify ids first")).isNull)
-      .distinct())
+      .distinct()
     // same reuse story: |V| rows, joined onto both endpoints
-    val deg = maybePersist(canon.select(col("a").as("node"))
+    val deg = canon.select(col("a").as("node"))
       .unionAll(canon.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("d")))
+      .groupBy("node").agg(count(lit(1)).as("d"))
     // injective total-order key: degree first, id as tiebreak
     val keyed = canon
       .join(deg.withColumnRenamed("node", "a").withColumnRenamed("d", "da"), "a")

@@ -49,9 +49,9 @@ import graft.operators.{Pq, Similarity}
   * recall@10). What decays recall is CANDIDATE-BUDGET DILUTION (a fixed
   * ADC top-K covers a shrinking fraction of the probed cells), restored
   * by scaling the rerank candidate budget with the index's posting mass
-  * (the pinned [[BudgetPermille]] law [[searchCandidates]] applies) —
-  * so the production rebuild cadence is about growing the CELL COUNT
-  * with the corpus (k ~ √n, the q263 policy), not about retraining for
+  * (about 25% of the total postings, SCALE_EVIDENCE §ann drift) — so
+  * the production rebuild cadence is about growing the CELL COUNT with
+  * the corpus (k ~ √n, the q263 policy), not about retraining for
   * drift. */
 object AnnIndex {
 
@@ -198,52 +198,6 @@ object AnnIndex {
       .sortBy { case (cos, j) => (-cos, j) }
       .take(nprobe).map(_._2)
   }
-
-  // ------------------------------------------ self-scaling search budget
-
-  /** Pinned budget derivation (the r14 drift study made it a law): the
-    * ADC candidate screen must cover ~1/4 of the TOTAL posting mass —
-    * a FIXED budget covers a shrinking fraction as appends grow the
-    * index, and recall decays by dilution while the quantizers are
-    * still fine. 250‰ of the total reproduces the study's budgets
-    * exactly (its fixed 200 at the 800-vector build = 25%; its
-    * restoring 500 at the 2000-vector endpoint = 25%). TOTAL, not
-    * probed-cell mass: cell skew makes probed mass a noisy
-    * under-estimate (measured r15 — probed-mass laws sat at 0.21-0.35
-    * where the study's budgets give 0.56-0.59). Floor 50. At the
-    * pinned 4-cell/4×4-codebook fixture scale the screen is coarse, so
-    * the fraction is large; production indexes grow the cell count
-    * with the corpus (k ~ √n, q263), which shrinks the per-query
-    * fraction while this law keeps recall budget-stable between
-    * rebuilds. */
-  private[graft] val BudgetPermille = 250L
-  private[graft] val BudgetFloor = 50
-
-  /** Per-cell posting counts — parquet metadata work (count over the
-    * partition dirs), no vector decode. */
-  def cellCounts(s: SparkSession, root: String): Map[Int, Long] =
-    s.read.parquet(s"$root/postings").groupBy("cell").count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-
-  /** The derived candidate budget:
-    * max(floor, total_postings · permille / 1000). */
-  def candidateBudget(s: SparkSession, root: String): Int = {
-    val mass = cellCounts(s, root).values.sum
-    math.max(BudgetFloor.toLong, mass * BudgetPermille / 1000L).toInt
-  }
-
-  /** [[searchTopK]] with the SELF-SCALING candidate budget (r14 verdict
-    * #5): the caller no longer picks the screen size — it is derived
-    * from the WRITTEN postings' cell counts at query time, so recall
-    * holds flat as incremental appends grow the index (measured:
-    * SCALE_EVIDENCE §ann drift — the fixed budget decayed 0.56→0.34
-    * over 2.5× growth; this derived budget holds it restored).
-    * Returns the ADC candidate rows for the caller's exact rerank (the
-    * documented two-stage shape). */
-  def searchCandidates(s: SparkSession, root: String, query: Array[Double],
-                       nprobe: Int, excludeId: Long): DataFrame =
-    searchTopK(s, root, query, nprobe, excludeId,
-      topK = candidateBudget(s, root))
 
   /** Drop every written index (test hook — Bench does NOT reset between
     * passes: write-once/read-many is the index's contract, the

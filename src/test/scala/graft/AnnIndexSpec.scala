@@ -71,31 +71,4 @@ class AnnIndexSpec extends AnyFunSuite with SharedSpark {
     val r2 = AnnIndex.path(spark, sfDir)
     assert(r1 == r2)
   }
-
-  test("self-scaling candidate budget: max(floor, 25% of posting mass), grows with appends (r14 verdict #5)") {
-    val root = AnnIndex.path(spark, sfDir)
-    val counts = AnnIndex.cellCounts(spark, root)
-    val total = Tables.embeddings(spark, sfDir).count()
-    // the counts are the written postings, cell-complete
-    assert(counts.values.sum == total)
-    // the pinned derivation, replayed by hand: the study's law — the
-    // screen covers 25% (250 permille) of the INDEX: 200 at the 800-vector
-    // build, 500 at the 2000-vector incremental state (SCALE_EVIDENCE §ann)
-    val want = math.max(AnnIndex.BudgetFloor.toLong,
-      total * AnnIndex.BudgetPermille / 1000L).toInt
-    assert(AnnIndex.candidateBudget(spark, root) == want)
-    // searchCandidates serves at least the floor when the probed cells
-    // hold that many postings
-    val q = Tables.embeddings(spark, sfDir).filter(col("vec_id") === 7)
-      .select(col("embedding")).first().getSeq[Float](0).toArray.map(_.toDouble)
-    val got = AnnIndex.searchCandidates(spark, root, q, nprobe = 2,
-      excludeId = 7L).count()
-    assert(got >= math.min(AnnIndex.BudgetFloor.toLong, total / 4),
-      s"candidate set $got below the floor")
-    // and the budget grows with appends by construction: the
-    // incremental index (same corpus, built 6/7 + appended 1/7) derives
-    // the same budget as the full build — mass, not build path
-    val incr = AnnIndex.pathIncremental(spark, sfDir)
-    assert(AnnIndex.candidateBudget(spark, incr) == want)
-  }
 }

@@ -23,6 +23,29 @@ class BfsSpec extends AnyFunSuite with SharedSpark {
       Map(0L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L))
   }
 
+  test("maxHops = 0 is rejected before any Spark job runs") {
+    // the adjacency build is eager (a severed shuffle): argument
+    // validation must come first, so a bad call costs no job at all
+    val sc = spark.sparkContext
+    val group = s"bfs-maxhops-${System.nanoTime()}"
+    sc.setJobGroup(group, "maxHops validation")
+    try {
+      intercept[IllegalArgumentException] {
+        Bfs.hopDistances(Seq((0L, 1L), (1L, 2L)).toDF("a", "b"), "a", "b",
+          Seq(0L).toDF("node"), "node", maxHops = 0)
+      }
+    } finally sc.clearJobGroup()
+    // the status store fills from the listener bus in order: once a later
+    // barrier job is visible, any job the call started is visible too
+    sc.setJobGroup(s"$group-barrier", "listener barrier")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 10000000000L
+    while (sc.statusTracker.getJobIdsForGroup(s"$group-barrier").isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(s"$group-barrier").nonEmpty)
+    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty)
+  }
+
   test("two seeds: every node gets the distance to the NEAREST seed") {
     val path = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L))
     assert(run(path, Seq(0L, 4L), 2) ==

@@ -298,4 +298,25 @@ class ExpressionsSpec extends AnyFunSuite with SharedSpark {
     }
     assert(sparkSigns == scalaSigns)
   }
+
+  test("graft_moments: zero-length vectors are counted and never mix with d > 0") {
+    def moments(vecs: Seq[Seq[Double]], slices: Int) =
+      spark.sparkContext.parallelize(vecs, slices).toDF("v")
+        .agg(GraftFunctions.momentMatrix(col("v")))
+        .head().getSeq[java.math.BigDecimal](0).map(_.longValueExact())
+    // all rows 0-dim, spread over partitions: d = 0 and every row counted
+    assert(moments(Seq(Seq.empty, Seq.empty, Seq.empty), 3) == Seq(0L, 3L))
+    // nothing seen at all: the empty result
+    assert(moments(Seq.empty, 2) == Seq(0L, 0L))
+    // a 0-dim vector next to a 2-dim one is a dimension mismatch, on the
+    // update path (one partition) and on the merge path (two)
+    for (slices <- Seq(1, 2)) {
+      val e = intercept[Exception](
+        moments(Seq(Seq.empty, Seq(1.0, 2.0)), slices))
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+      assert(msgs.exists(_.contains("mixed vector dimensions")),
+        s"slices=$slices: ${e.getMessage}")
+    }
+  }
 }

@@ -59,6 +59,12 @@ class ScaleBenchSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  test("every default query is a registry name") {
+    // a typo'd name would fail only when its turn comes in a ×10 run
+    val unknown = ScaleBench.DefaultQueries.filterNot(SparkEntry.queries.keySet)
+    assert(unknown.isEmpty, s"not in SparkEntry.queries: $unknown")
+  }
+
   test("bench pins q153's AQE floor to the session parallelism (r15 verdict #1)") {
     // the q153 regime law (LinkPredict scaladoc, SCALE_EVIDENCE §q153):
     // sort-merge-regime AQE re-coalesces the exploding candidate join to

@@ -48,14 +48,14 @@ class SeverSpec extends AnyFunSuite with SharedSpark {
     }
   }
   test("reliable path writes RDD checkpoints and yields the same result") {
-    val localRes = KCore.kCore(edges(), "a", "b", k = 2)
+    val localRes = KCore.kCoreIncremental(edges(), "a", "b", k = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
     val ckptDir = java.nio.file.Files.createTempDirectory("graft-reliable-ckpt-")
     spark.sparkContext.setCheckpointDir(ckptDir.toString)
     spark.conf.set(Sever.ReliableKey, "true")
     try {
-      val reliableRes = KCore.kCore(edges(), "a", "b", k = 2)
+      val reliableRes = KCore.kCoreIncremental(edges(), "a", "b", k = 2)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(reliableRes == localRes)
       assert(reliableRes == Set((1L, 2L), (2L, 2L), (3L, 2L)))
