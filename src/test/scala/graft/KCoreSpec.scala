@@ -82,12 +82,30 @@ class KCoreSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("property: peel equals the naive sequential k-core on random graphs") {
-    for (seed <- Seq(7, 13); rnd = new scala.util.Random(seed); trial <- 1 to 5) {
+    val rnd = new scala.util.Random(7)
+    for (trial <- 1 to 5) {
       val n = 8 + trial
       val m = 10 + trial * 4
       val edges = Seq.fill(m)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
       val k = 2 + trial % 2
       checked(edges, k)
+    }
+  }
+
+  test("incremental-degree k-core equals the peel on every stress graph") {
+    // "the peel" is the naive sequential reference: each graph that
+    // stresses the cascade, the same-round double casualty or an empty
+    // result must come out of kCoreIncremental exactly as the peel has it
+    val k4 = for { i <- 0L to 3L; j <- 0L to 3L if i < j } yield (i, j)
+    val chain = k4 ++ Seq((3L, 4L), (4L, 5L), (5L, 6L))
+    checked(chain, 2)
+    val path = Seq((0L, 1L), (1L, 2L), (2L, 3L))
+    assert(checked(path, 2).isEmpty)
+    val rnd = new scala.util.Random(13)
+    for (trial <- 1 to 5) {
+      val n = 8 + trial
+      val edges = Seq.fill(12 + trial * 4)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      checked(edges, 2 + trial % 2)
     }
   }
 }
