@@ -3,6 +3,7 @@ package graft.app
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 import graft.pipeline.{JourneyJob, StationsJob, WeatherJob}
 import graft.sources.Sinks
 
@@ -23,6 +24,12 @@ import graft.sources.Sinks
   * `weather_date` and merged with [[Sinks.upsertPartitioned]] — a weekly
   * batch rewrites only the ~7 date partitions it touches, never the
   * accumulated table.
+  *
+  * A weekly increment reads its raw week once: the transformed journey is
+  * cached and materialised before its three keyed merges (dim_station,
+  * dim_datetime, fact_journey) run side by side through
+  * [[Sinks.inParallel]]; they share nothing but that input. The catchup
+  * ledger is still appended last, after all three have returned.
   */
 object StarSchema {
 
@@ -33,29 +40,43 @@ object StarSchema {
 
   /** One-time init: stations CSV → dim_station, weather JSON → dim_weather
     * (init-data-transformation.py:23-43,48-92). Keyed upserts, so re-running
-    * init (the reference reruns it on catchup) is a no-op. */
+    * init (the reference reruns it on catchup) is a no-op. The two dims are
+    * independent and are written side by side. */
   def init(spark: SparkSession, warehouse: String,
-           stationsCsv: String, weatherJson: String, weatherRoot: StructType): Unit = {
-    Sinks.upsert(spark, dimStation(warehouse),
-      StationsJob.run(spark, stationsCsv), Seq("station_id"))
-    Sinks.upsert(spark, dimWeather(warehouse),
-      WeatherJob.run(spark, weatherJson, weatherRoot), Seq("weather_date"))
-  }
+           stationsCsv: String, weatherJson: String, weatherRoot: StructType): Unit =
+    Sinks.inParallel(spark)(
+      () => Sinks.upsert(spark, dimStation(warehouse),
+        StationsJob.run(spark, stationsCsv), Seq("station_id")),
+      () => Sinks.upsert(spark, dimWeather(warehouse),
+        WeatherJob.run(spark, weatherJson, weatherRoot), Seq("weather_date")))
 
   /** One weekly increment from an already-transformed journey batch
     * (journey-data-transformation.py:28-160 + the proc_2 UPSERT loads):
     * late-registered stations merge into dim_station, the batch's
     * datetime parts merge into dim_datetime, and the fact rows merge into
     * the date-partitioned fact_journey. Each merge is keyed, so re-running
-    * a week converges to the same warehouse. */
+    * a week converges to the same warehouse.
+    *
+    * The batch is read once: it is cached (`MEMORY_AND_DISK`) and
+    * materialised before the three merges start, and the merges, which
+    * share nothing but the batch, run side by side. The cache is released
+    * on return only if this call created it; a batch the caller already
+    * persisted stays persisted. If a merge fails, the others are cancelled
+    * and its exception is rethrown (see [[Sinks.inParallel]]). */
   def weekly(spark: SparkSession, warehouse: String, journey: DataFrame): Unit = {
-    val stations = spark.read.parquet(dimStation(warehouse))
-    Sinks.upsert(spark, dimStation(warehouse),
-      JourneyJob.newStations(spark, journey, stations), Seq("station_id"))
-    Sinks.upsert(spark, dimDatetime(warehouse),
-      JourneyJob.datetimeDim(journey), Seq("datetime_id"))
-    Sinks.upsertPartitioned(spark, factJourney(warehouse),
-      JourneyJob.fact(journey), Seq("rental_id"), "weather_date")
+    val owned = journey.storageLevel == StorageLevel.NONE
+    if (owned) journey.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      journey.count()
+      val stations = spark.read.parquet(dimStation(warehouse))
+      val newStations = JourneyJob.newStations(spark, journey, stations)
+      Sinks.inParallel(spark)(
+        () => Sinks.upsert(spark, dimStation(warehouse), newStations, Seq("station_id")),
+        () => Sinks.upsert(spark, dimDatetime(warehouse),
+          JourneyJob.datetimeDim(journey), Seq("datetime_id")),
+        () => Sinks.upsertPartitioned(spark, factJourney(warehouse),
+          JourneyJob.fact(journey), Seq("rental_id"), "weather_date"))
+    } finally if (owned) journey.unpersist(blocking = true)
   }
 
   /** Convenience: weekly increment straight from a journey CSV path. */
@@ -78,7 +99,10 @@ object StarSchema {
     * engine-side: the raw zone holds one `<rawDir>/<logical_date>/journey.csv`
     * folder per week; the warehouse keeps a LEDGER of ingested logical dates;
     * catchup ingests every not-yet-ingested week in ascending date order and
-    * appends each to the ledger after its merge completes.
+    * appends each to the ledger after its merges complete. Each week's CSV
+    * is parsed once and its three merges run side by side ([[weekly]]);
+    * the ledger append waits for all three, and a failed merge throws
+    * before it, so a failed week is never recorded as ingested.
     *
     * Idempotence is two-layer: the ledger skips completed weeks wholesale
     * (cheap — no re-read of their raw files), and if a run crashes between a

@@ -107,29 +107,6 @@ object WebCorpusApp {
     try body finally s.sparkContext.setJobDescription(null)
   }
 
-  /** Run INDEPENDENT write actions concurrently (r18 — guide §2.6
-    * "overlap independent jobs": actions are only sequential because the
-    * driver calls them sequentially; a small pool lets the next write's
-    * tasks back-fill the executor tail of the current one, and overlaps
-    * the driver-side planning + tagged-file commit time that a
-    * fixture-scale append otherwise pays strictly serially, ~60% of its
-    * wall). Each task is label-wrapped on its own thread (descriptions
-    * are thread-local). Failures propagate: `get` rethrows, so a crashed
-    * write still aborts the batch BEFORE its ledger commit — the
-    * exactly-once contract is untouched, every write lands in its own
-    * directory, and the single sequential commit point stays last.
-    * 3 wide: enough to fill tails, not enough to fight for cores. */
-  private def inParallel(s: SparkSession, tasks: (String, () => Unit)*): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(3, math.max(1, tasks.size)))
-    try tasks.map { case (l, f) =>
-      pool.submit(new java.util.concurrent.Callable[Unit] {
-        override def call(): Unit = labeled(s, l)(f())
-      })
-    }.foreach(_.get())
-    finally pool.shutdown()
-  }
-
   // ---------------------------------------------------------------- build
 
   def build(spark: SparkSession, shardsPath: String, robotsPath: String,
@@ -151,15 +128,15 @@ object WebCorpusApp {
         "n_tokens", "n_pars", "n_kept", "text", "pos", "shard")
     // the six output tables derive from already-severed frames and land
     // in six distinct directories — independent writes, overlapped (§2.6)
-    inParallel(spark,
-      "corpus rank+write" -> (() => Sinks.overwriteSwap(corpus, s"$outDir/corpus")),
-      "rejects write" -> (() => Sinks.overwriteSwap(staged.rejects, s"$outDir/rejects")),
-      "paragraph state write" -> (() =>
+    Sinks.inParallel(spark)(
+      () => labeled(spark, "corpus rank+write")(Sinks.overwriteSwap(corpus, s"$outDir/corpus")),
+      () => labeled(spark, "rejects write")(Sinks.overwriteSwap(staged.rejects, s"$outDir/rejects")),
+      () => labeled(spark, "paragraph state write")(
         Sinks.overwriteSwap(staged.parHashes, s"$outDir/paragraph_hashes")),
-      "links write" -> (() => Sinks.overwriteSwap(linksOf(pages), s"$outDir/links")),
-      "redirects write" -> (() =>
+      () => labeled(spark, "links write")(Sinks.overwriteSwap(linksOf(pages), s"$outDir/links")),
+      () => labeled(spark, "redirects write")(
         Sinks.overwriteSwap(redirectsOf(recs), s"$outDir/redirects")),
-      "canonicals write" -> (() =>
+      () => labeled(spark, "canonicals write")(
         Sinks.overwriteSwap(canonicalsOf(pages), s"$outDir/canonicals")))
     refresh(spark, outDir)
     labeled(spark, "ledger")(writeLedger(spark, outDir, Map("__init" -> nPages)))
@@ -286,18 +263,18 @@ object WebCorpusApp {
     // and a failure in any aborts the batch uncommitted (linksOf reads
     // only the severed decode cut and the tagged append is its single
     // consumer — unsevered on purpose, r17, same as newRedirects)
-    inParallel(spark,
-      "corpus append" -> (() =>
+    Sinks.inParallel(spark)(
+      () => labeled(spark, "corpus append")(
         Sinks.appendTagged(ranked, s"$outDir/corpus", batchId)),
-      "rejects append" -> (() =>
+      () => labeled(spark, "rejects append")(
         Sinks.appendTagged(rejects, s"$outDir/rejects", batchId)),
-      "paragraph state append" -> (() =>
+      () => labeled(spark, "paragraph state append")(
         Sinks.appendTagged(newHashes, s"$outDir/paragraph_hashes", batchId)),
-      "links append" -> (() =>
+      () => labeled(spark, "links append")(
         Sinks.appendTagged(linksOf(pages), s"$outDir/links", batchId)),
-      "redirects append" -> (() =>
+      () => labeled(spark, "redirects append")(
         Sinks.appendTagged(newRedirects, s"$outDir/redirects", batchId)),
-      "canonicals append" -> (() => Sinks.appendTagged(
+      () => labeled(spark, "canonicals append")(Sinks.appendTagged(
         canonicalsOf(pages)
           .join(committedCanonicals.select(col("src")), Seq("src"), "left_anti"),
         s"$outDir/canonicals", batchId)))
@@ -310,11 +287,11 @@ object WebCorpusApp {
     // re-read (q293/q310 convention)
     // the text-index append and the embeddings→ANN chain both read only
     // the severed `ranked` cut — two independent branches, overlapped
-    inParallel(spark,
-      "text index append" -> (() =>
+    Sinks.inParallel(spark)(
+      () => labeled(spark, "text index append")(
         TextIndex.append(spark, s"$outDir/text_index",
           ranked.select(col("pos").as("doc_id"), col("text")), Some(batchId))),
-      "embeddings + ann append" -> { () =>
+      () => labeled(spark, "embeddings + ann append") {
         val emb = embeddingsOf(ranked).sever()
         Sinks.appendTagged(emb, s"$outDir/embeddings", batchId)
         spark.catalog.refreshByPath(s"$outDir/embeddings")
@@ -742,18 +719,18 @@ object WebCorpusApp {
     val flat = Seq("corpus", "rejects", "paragraph_hashes", "links",
         "redirects", "canonicals", "embeddings")
       .filter(t => Sinks.exists(spark, s"$outDir/$t"))
-      .map(t => s"compact $t" -> { () =>
+      .map(t => () => labeled(spark, s"compact $t") {
         Sinks.compact(spark, s"$outDir/$t", targetRowsPerFile)
         spark.catalog.refreshByPath(s"$outDir/$t")
       })
     val idx =
       (if (Sinks.exists(spark, s"$outDir/text_index"))
-        Seq("text index compact" -> (() => TextIndex.compact(spark, s"$outDir/text_index")))
+        Seq(() => labeled(spark, "text index compact")(TextIndex.compact(spark, s"$outDir/text_index")))
       else Nil) ++
       Seq(s"$outDir/text_index/postings", s"$outDir/ann_index/postings")
         .filter(p => Sinks.exists(spark, p))
-        .map(p => s"compact $p" -> (() => Sinks.compactPartitioned(spark, p, targetRowsPerFile)))
-    inParallel(spark, (flat ++ idx): _*)
+        .map(p => () => labeled(spark, s"compact $p")(Sinks.compactPartitioned(spark, p, targetRowsPerFile)))
+    Sinks.inParallel(spark)(flat ++ idx: _*)
     auditDerived(spark, outDir)
   }
 
@@ -973,10 +950,10 @@ object WebCorpusApp {
     val written = spark.read.parquet(s"$outDir/corpus")
     // the text index and the embeddings→ANN chain both read only the
     // written corpus — two independent branches, overlapped (§2.6)
-    inParallel(spark,
-      "text index build" -> (() => TextIndex.buildFrom(spark,
+    Sinks.inParallel(spark)(
+      () => labeled(spark, "text index build")(TextIndex.buildFrom(spark,
         written.select(col("pos").as("doc_id"), col("text")), s"$outDir/text_index")),
-      "embeddings + ann build" -> { () =>
+      () => labeled(spark, "embeddings + ann build") {
         Sinks.overwriteSwap(embeddingsOf(written), s"$outDir/embeddings")
         spark.catalog.refreshByPath(s"$outDir/embeddings")
         AnnIndex.buildFrom(spark,

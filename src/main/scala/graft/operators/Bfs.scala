@@ -132,18 +132,19 @@ object Bfs {
     var exhausted = false
     while (r < maxHops && !exhausted) {
       r += 1
-      // shuffled-hash pinned, frontier as build; dedup exchange pinned
-      // by node and declared — see [[hopDistances]] (hash by node alone
-      // still clusters (lm, node) for the dedup and the anti join)
+      // shuffled-hash pinned, frontier as build — see [[hopDistances]].
+      // The anti join on (lm, node) re-shuffles by both keys, and AQE may
+      // coalesce that exchange, so a hash-by-node layout cannot be
+      // declared on the round's output: it is re-cut by node at the
+      // sever, and the next round's frontier join reads it in place
       val next = adj
         .join(frontier.withColumnRenamed("node", "src").hint("shuffle_hash"),
           Seq("src"))
         .select(col("lm"), col("dst").as("node"))
-        .repartition(parts, col("node"))
         .distinct()
         .join(visited.select("lm", "node"), Seq("lm", "node"), "left_anti")
         .select(col("lm"), col("node"), lit(r.toLong).as("dist"))
-        .severDeclared(Seq("node"), parts)
+        .severKeyed(Seq("node"), parts)
       visited = visited.unionAll(next) // severed rounds; no re-cut (see above)
       frontier = next.select("lm", "node")
       exhausted = next.isEmpty

@@ -103,7 +103,9 @@ object JourneyJob {
   def fact(journey: DataFrame): DataFrame =
     journey.drop("StartStation Name", "EndStation Name", "Duration")
 
-  /** read → rename → parse → weather_date: the trunk every leg branches from. */
+  /** read → rename → parse → weather_date: the transformed week. The
+    * three legs branch from it; [[graft.app.StarSchema.weekly]] caches it
+    * so the CSV is parsed once for all of them. */
   def transform(spark: SparkSession, path: String): DataFrame =
     withWeatherDate(parseTimestamps(rename(read(spark, path))))
 }

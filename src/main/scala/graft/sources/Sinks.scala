@@ -50,6 +50,60 @@ object Sinks {
     swapCommit(f, tmp, new Path(path))
   }
 
+  /** How many writes [[inParallel]] runs at once: enough for the next
+    * write's tasks to back-fill the executor tail of the current one, not
+    * enough to fight for cores. */
+  val ParallelWrites = 3
+
+  /** Run INDEPENDENT write actions side by side, [[ParallelWrites]] at a
+    * time, and return once all of them have finished. Independent actions
+    * are only sequential because the driver calls them one by one;
+    * overlapping them lets one write's tasks fill another's executor tail
+    * and overlaps their driver-side planning and commit time. Each action
+    * runs on its own thread, which inherits the caller's job description;
+    * an action that wants its own label sets it itself.
+    *
+    * Failure contract: after the first failure no further action starts,
+    * the Spark jobs of the running actions are cancelled (they carry a
+    * job tag unique to this call) and their threads interrupted, and the
+    * call returns only once every action thread has stopped — then it
+    * rethrows the failed action's own exception. No write of an aborted
+    * batch outlives the exception, so a caller that commits after this
+    * call (a ledger append) never commits a batch with a failed write. */
+  def inParallel(spark: SparkSession)(actions: (() => Unit)*): Unit = {
+    import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
+    val sc = spark.sparkContext
+    val tag = s"graft-parallel-${java.util.UUID.randomUUID()}"
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val threads = new ConcurrentLinkedQueue[Thread]()
+    val pool = Executors.newFixedThreadPool(ParallelWrites, (r: Runnable) => {
+      val t = new Thread(r, s"$tag-${threads.size}")
+      threads.add(t)
+      t
+    })
+    val done = new ExecutorCompletionService[Unit](pool)
+    // the failure is recorded on the failing thread before that thread can
+    // pick up a queued action, so no action starts after a failure
+    val futures = actions.map(a => done.submit(() => if (failure.get == null) {
+      sc.addJobTag(tag)
+      try a() catch { case e: Throwable => failure.compareAndSet(null, e); throw e }
+    }))
+    try futures.foreach { _ =>
+      try done.take().get()
+      catch { case e: ExecutionException => throw e.getCause }
+    } catch {
+      case e: Throwable =>
+        sc.cancelJobsWithTag(tag)
+        throw Option(failure.get).getOrElse(e)
+    } finally {
+      futures.foreach(_.cancel(true))
+      pool.shutdownNow()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      // a terminated pool can still have a worker thread on its way out
+      threads.forEach(_.join())
+    }
+  }
+
   /** S6: incremental append (the fact-table write). */
   def append(df: DataFrame, path: String): Unit =
     df.write.mode("append").parquet(path)

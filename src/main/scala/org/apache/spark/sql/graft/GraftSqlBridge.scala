@@ -43,11 +43,14 @@ object GraftSqlBridge {
     * KNOWS the materialization produced. The caller must guarantee the
     * checkpointed plan ended in `repartition(numPartitions, partCols)`
     * (an exact, AQE-uncoalescible REPARTITION_BY_NUM exchange) followed
-    * only by partitioning-preserving operators — a wrong declaration
-    * silently mis-joins. Origin stats are dropped (the frame reads as
-    * big): right for the corpus-scale sides this is used on, whose
-    * broadcast would be the q153-class pathology. Non-checkpoint plans
-    * pass through unchanged. */
+    * only by partitioning-preserving operators — a wrong key declaration
+    * silently mis-joins. A wrong partition count (AQE coalescing, a stale
+    * `numPartitions`) is checked against the checkpoint RDD and throws;
+    * an empty checkpoint, which AQE may plan with fewer partitions,
+    * passes through undeclared. Origin stats are dropped (the frame
+    * reads as big): right for the corpus-scale sides this is used on,
+    * whose broadcast would be the q153-class pathology. Non-checkpoint
+    * plans pass through unchanged. */
   def declareCheckpointLayout(df: org.apache.spark.sql.DataFrame,
                               partCols: Seq[String],
                               numPartitions: Int): org.apache.spark.sql.DataFrame = {
@@ -59,10 +62,19 @@ object GraftSqlBridge {
         val byName = lr.output.map(a => a.name -> a).toMap
         require(partCols.forall(byName.contains),
           s"declareCheckpointLayout: $partCols not all in ${lr.output.map(_.name)}")
-        val part = HashPartitioning(partCols.map(byName(_)), numPartitions)
-        org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
-          new LogicalRDD(lr.output, lr.rdd, part, Nil, lr.isStreaming,
-            lr.stream)(ds.sparkSession, None, None))
+        val n = lr.rdd.getNumPartitions
+        if (n != numPartitions) {
+          // AQE plans an empty input with fewer partitions (0 or 1): an
+          // empty frame has no layout to declare
+          require(lr.rdd.isEmpty(),
+            s"declareCheckpointLayout: declared $numPartitions partitions, the checkpoint has $n")
+          df
+        } else {
+          val part = HashPartitioning(partCols.map(byName(_)), numPartitions)
+          org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
+            new LogicalRDD(lr.output, lr.rdd, part, Nil, lr.isStreaming,
+              lr.stream)(ds.sparkSession, None, None))
+        }
       case _ => df
     }
   }

@@ -69,4 +69,13 @@ class SeverSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+
+  test("declareCheckpointLayout rejects a partition count the checkpoint does not have") {
+    import org.apache.spark.sql.graft.GraftSqlBridge
+    val cut = spark.range(100).toDF().repartition(4, col("id")).localCheckpoint()
+    assert(GraftSqlBridge.declareCheckpointLayout(cut, Seq("id"), 4).count() == 100)
+    val e = intercept[IllegalArgumentException](
+      GraftSqlBridge.declareCheckpointLayout(cut, Seq("id"), 8))
+    assert(e.getMessage.contains("declared 8 partitions"))
+  }
 }

@@ -371,4 +371,32 @@ class SinksSpec extends AnyFunSuite with SharedSpark {
     val none = Sinks.readCommitted(spark, path, Set.empty)
     assert(none.count() == 2) // untagged build rows are always committed
   }
+
+  test("inParallel: the first failure stops queued actions, interrupts and awaits running ones, and rethrows its own exception") {
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val interrupted = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val threads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
+    val blocking = new java.util.concurrent.CountDownLatch(2)
+    def action(i: Int)(body: => Unit): () => Unit = () => {
+      started.add(i)
+      threads.add(Thread.currentThread())
+      body
+    }
+    def blockUntilInterrupted(i: Int): Unit = {
+      blocking.countDown()
+      try Thread.sleep(Long.MaxValue)
+      catch { case e: InterruptedException => interrupted.add(i); throw e }
+    }
+    val e = intercept[IllegalStateException](Sinks.inParallel(spark)(
+      // throws as soon as actions 2 and 3 are running
+      action(1) { blocking.await(); throw new IllegalStateException("action 1") },
+      action(2)(blockUntilInterrupted(2)),
+      action(3)(blockUntilInterrupted(3)),
+      action(4)(()),
+      action(5)(())))
+    assert(e.getMessage == "action 1")
+    assert(started.asScala.toSet == Set(1, 2, 3))
+    assert(interrupted.asScala.toSet == Set(2, 3))
+    assert(threads.asScala.forall(!_.isAlive))
+  }
 }

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import graft.app.StarSchema
 import graft.pipeline.{JourneyJob, Schemas}
 
@@ -13,10 +14,15 @@ class StarSchemaSpec extends AnyFunSuite with SharedSpark {
 
   private val fx = "/root/repo/fixtures"
 
-  private def buildWarehouse(): String = {
+  private def initWarehouse(): String = {
     val w = Files.createTempDirectory("graft-star").toString
     StarSchema.init(spark, w, s"$fx/stations.csv", s"$fx/weather_v1.json",
       Schemas.weatherRoot(withSevererisk = true))
+    w
+  }
+
+  private def buildWarehouse(): String = {
+    val w = initWarehouse()
     val journey = JourneyJob.transform(spark, s"$fx/journey.csv")
     val cut = to_date(lit("2021-01-25"))
     StarSchema.weekly(spark, w, journey.filter(col("weather_date") < cut))
@@ -31,6 +37,67 @@ class StarSchemaSpec extends AnyFunSuite with SharedSpark {
       p -> df.select(df.columns.sorted.map(col): _*)
         .collect().map(_.toString).toSet
     }.toMap
+
+  /** A date-keyed raw zone: one `<date>/journey.csv` per week, each
+    * holding the fixture header and the given fixture rows. */
+  private def rawZone(weeks: (String, Seq[String])*): String = {
+    val raw = Files.createTempDirectory("graft-raw").toString
+    weeks.foreach { case (date, rows) => writeWeek(raw, date, rows) }
+    raw
+  }
+
+  private def writeWeek(raw: String, date: String, rows: Seq[String]): Unit = {
+    val d = new java.io.File(s"$raw/$date"); d.mkdirs()
+    Files.write(java.nio.file.Paths.get(s"$raw/$date/journey.csv"),
+      (fixtureLines.head +: rows).mkString("\n").getBytes)
+  }
+
+  private lazy val fixtureLines =
+    scala.io.Source.fromFile(s"$fx/journey.csv").getLines().toVector
+
+  private def cacheManager =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+
+  /** How many times the actions `body` runs parse CSV: the CSV file scans
+    * in their executed plans, where a scan that builds a cached relation
+    * counts once, however many plans read that relation. Execution events
+    * arrive asynchronously: a marker action after `body` is the last event
+    * to wait for. */
+  private def csvParsesIn(body: => Unit): Int = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+    import org.apache.spark.sql.catalyst.plans.logical.Range
+    object Plans extends AdaptiveSparkPlanHelper
+    def csvScans(p: SparkPlan): Int = Plans.collectWithSubqueries(p) {
+      case f: FileSourceScanExec if f.relation.fileFormat.isInstanceOf[CSVFileFormat] => f
+    }.size
+    val marker = 7919L
+    val scans = new java.util.concurrent.atomic.AtomicInteger()
+    val caches = java.util.Collections.synchronizedSet(
+      java.util.Collections.newSetFromMap(new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]()))
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.logical.exists { case r: Range => r.end == marker; case _ => false })
+          markerSeen.countDown()
+        else {
+          scans.addAndGet(csvScans(qe.executedPlan))
+          Plans.collectWithSubqueries(qe.executedPlan) {
+            case m: InMemoryTableScanExec => m.relation.cachedPlan
+          }.foreach(caches.add)
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(marker).count()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+    scans.get + caches.asScala.toSeq.map(csvScans).sum
+  }
 
   test("init + 2 weekly runs materialize the full star schema; rerunning a week changes nothing") {
     val w = buildWarehouse()
@@ -70,20 +137,10 @@ class StarSchemaSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("catchup ingests only not-yet-ingested logical weeks, in order, idempotently") {
-    val w = Files.createTempDirectory("graft-star").toString
-    StarSchema.init(spark, w, s"$fx/stations.csv", s"$fx/weather_v1.json",
-      Schemas.weatherRoot(withSevererisk = true))
+    val w = initWarehouse()
     // date-keyed raw zone: split the fixture into two weekly files
-    val raw = Files.createTempDirectory("graft-raw").toString
-    val lines = scala.io.Source.fromFile(s"$fx/journey.csv").getLines().toVector
-    val (header, body) = (lines.head, lines.tail)
-    def writeWeek(date: String, rows: Seq[String]): Unit = {
-      val d = new java.io.File(s"$raw/$date"); d.mkdirs()
-      Files.write(java.nio.file.Paths.get(s"$raw/$date/journey.csv"),
-        (header +: rows).mkString("\n").getBytes)
-    }
-    writeWeek("2021-01-18", body.take(12))
-    writeWeek("2021-01-25", body.slice(12, 20))
+    val body = fixtureLines.tail
+    val raw = rawZone("2021-01-18" -> body.take(12), "2021-01-25" -> body.slice(12, 20))
 
     assert(StarSchema.catchup(spark, w, raw) == Seq("2021-01-18", "2021-01-25"))
     assert(spark.read.parquet(StarSchema.factJourney(w)).count() == 20)
@@ -91,7 +148,7 @@ class StarSchemaSpec extends AnyFunSuite with SharedSpark {
     assert(StarSchema.catchup(spark, w, raw).isEmpty)
     assert(spark.read.parquet(StarSchema.factJourney(w)).count() == 20)
     // a new week arrives: only it is ingested
-    writeWeek("2021-02-01", body.drop(20))
+    writeWeek(raw, "2021-02-01", body.drop(20))
     assert(StarSchema.catchup(spark, w, raw) == Seq("2021-02-01"))
     assert(spark.read.parquet(StarSchema.factJourney(w)).count() == 24)
     assert(StarSchema.ingestedDates(spark, w) ==
@@ -115,5 +172,47 @@ class StarSchemaSpec extends AnyFunSuite with SharedSpark {
     (0 until r.length).foreach { i =>
       assert(r.getLong(i) == 0L, s"violation count ${r.schema.fieldNames(i)} nonzero")
     }
+  }
+
+  test("weekly parses the week's CSV once") {
+    val w = initWarehouse()
+    val n = csvParsesIn(StarSchema.weekly(spark, w, JourneyJob.transform(spark, s"$fx/journey.csv")))
+    assert(n == 1, s"the week was parsed $n times")
+  }
+
+  test("weekly releases the cache it created and keeps a caller's") {
+    val w = initWarehouse()
+    spark.catalog.clearCache() // the session is shared with earlier suites
+    StarSchema.weekly(spark, w, JourneyJob.transform(spark, s"$fx/journey.csv"))
+    assert(cacheManager.isEmpty)
+    val mine = JourneyJob.transform(spark, s"$fx/journey.csv")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    try {
+      StarSchema.weekly(spark, w, mine)
+      assert(mine.storageLevel == org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    } finally mine.unpersist(blocking = true)
+    assert(cacheManager.isEmpty)
+  }
+
+  test("a failed merge leg fails the week: no ledger entry, no cache, and a re-run converges") {
+    val raw = rawZone("2021-01-18" -> fixtureLines.tail)
+    val clean = initWarehouse()
+    assert(StarSchema.catchup(spark, clean, raw) == Seq("2021-01-18"))
+
+    val w = initWarehouse()
+    spark.catalog.clearCache() // the session is shared with earlier suites
+    // a dim_datetime whose columns do not match the week's: Upsert.merge's
+    // schema check throws inside that leg
+    import spark.implicits._
+    Seq((1L, "x")).toDF("datetime_id", "junk").write.parquet(StarSchema.dimDatetime(w))
+    val e = intercept[IllegalArgumentException](StarSchema.catchup(spark, w, raw))
+    assert(e.getMessage.contains("upsert requires matching schemas"))
+    assert(StarSchema.ingestedDates(spark, w).isEmpty)
+    assert(cacheManager.isEmpty)
+
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(StarSchema.dimDatetime(w)))
+    assert(StarSchema.catchup(spark, w, raw) == Seq("2021-01-18"))
+    def byTable(wh: String) = tableRows(wh).map { case (p, rows) => p.stripPrefix(wh) -> rows }
+    assert(byTable(w) == byTable(clean))
   }
 }
