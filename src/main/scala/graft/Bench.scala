@@ -43,35 +43,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // catalog-managed tables (bucketed joins) go to a throwaway dir
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-bench-wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // Untimed JVM/codegen warmup: a scan, a shuffle agg, a broadcast join,
-    // PLUS one dedup and one ANN query (they compile the WordShingles /
+    val spark = Harness.session()
+    // Untimed warmup: a scan, a shuffle agg, a broadcast join, PLUS one
+    // dedup and one ANN query (they compile the WordShingles /
     // MinHashSignature / ArrayDotProduct codegen paths the LLM suite runs
-    // on) — all over the smallest SF, so first-measured-query timings
-    // reflect steady state, not classloading + first codegen compile
-    // (~4-7s of JVM startup was previously attributed to whichever query
-    // sorted first).
-    val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).isDirectory) {
-      Seq("q01_groupby_agg", "q03_join_broadcast", "q02_filter_project",
-        "q28_neardup_pairs", "q39_lsh_ann")
-        .foreach { q =>
-          try SparkEntry.queries(q)(spark, warmDir)
-            .write.format("noop").mode("overwrite").save()
-          catch { case _: Throwable => () }
-        }
-    }
+    // on), so first-measured-query timings reflect steady state (~4-7s of
+    // JVM startup was previously attributed to whichever query sorted
+    // first).
+    Harness.warmUp(spark, Seq("q01_groupby_agg", "q03_join_broadcast", "q02_filter_project",
+      "q28_neardup_pairs", "q39_lsh_ann"))
     // dev loop: SPARK_GRAFT_BENCH_ONLY=q96_containment,q42_jaccard_exact
     // benches just those queries (driver never sets it — full suite there)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -84,24 +65,16 @@ object Bench {
     for (pass <- 1 to reps) {
       for ((name, fn) <- names) {
         // per-query session-conf pins (q153's AQE floor): set around the
-        // timed run only, previous values restored after — a pin must
-        // never leak into the next query's plan
-        val pins = pinnedConfs.getOrElse(name, Map.empty[String, String])
-        val saved = pins.keys.map(k => k -> spark.conf.getOption(k)).toMap
-        pins.foreach { case (k, v) => spark.conf.set(k, v) }
-        val t0 = System.nanoTime()
+        // timed run only
         try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          times(name) = ((System.nanoTime() - t0) / 1e9) :: times(name)
+          val sec = Harness.withConfs(spark, pinnedConfs.getOrElse(name, Map.empty))(
+            Harness.timedNoop(fn(spark, sfDir)))
+          times(name) = sec :: times(name)
         } catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
             failedSet += name
         } finally {
-          saved.foreach {
-            case (k, Some(v)) => spark.conf.set(k, v)
-            case (k, None) => spark.conf.unset(k)
-          }
           // Drop the query's lineage-sever checkpoint blocks NOW (r17 —
           // the in-suite inflation diagnosis behind the r16 verdict's
           // q281/q317 items): localCheckpoint blocks are freed only when
@@ -142,29 +115,11 @@ object Bench {
       // pass retrains (storage-layout memos stay amortized by contract)
       graft.queries.ScaleQueries.resetTrainedMerges()
     }
-    def median(xs: List[Double]): Double = {
-      val s = xs.sorted
-      if (s.length % 2 == 1) s(s.length / 2) else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
-    }
-    // interquartile range via linear-interpolated quartiles — the per-query
-    // dispersion a regression gate can trust (min-vs-min hides noise; IQR
-    // says how much the median itself wobbles)
-    def iqr(xs: List[Double]): Double = {
-      val s = xs.sorted.toIndexedSeq
-      if (s.length < 2) return 0.0
-      def q(p: Double): Double = {
-        val pos = p * (s.length - 1)
-        val lo = pos.toInt
-        val hi = math.min(lo + 1, s.length - 1)
-        s(lo) + (pos - lo) * (s(hi) - s(lo))
-      }
-      q(0.75) - q(0.25)
-    }
     val results = names.map { case (name, _) =>
       val ok = !failedSet(name) && times(name).nonEmpty
-      (name, if (ok) median(times(name)) else -1.0,
+      (name, if (ok) Harness.median(times(name)) else -1.0,
         if (ok) times(name).min else -1.0, ok,
-        if (ok) iqr(times(name)) else -1.0)
+        if (ok) Harness.iqr(times(name)) else -1.0)
     }
     def obj(f: ((String, Double, Double, Boolean, Double)) => Double) =
       results.map(r => s""""${r._1}":${f(r)}""").mkString("{", ",", "}")

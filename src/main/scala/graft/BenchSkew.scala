@@ -1,18 +1,10 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicReference
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
 /** Skew stress bench: runs the dedup/join/window suite over the
   * [[SkewFixture]] (one hot source / hot user / hot shingle at ~50% mass)
   * and records the work DISTRIBUTION, not just wall time — per query:
   * the worst stage's max-task/median-task ratio, max task ms, and shuffle
-  * read/write volume, via a SparkListener over task-end events.
+  * read/write volume, via [[Harness.TaskStats]].
   *
   * What the ratios mean: a skew-resilient plan (salted join, PrefixSum
   * mixing, df-ordered prefix index) keeps max/median low — the hot key's
@@ -63,78 +55,28 @@ object BenchSkew {
     // language is partial-agg-combined — both observed for evidence
     "q248_decontamination", "q254_fertility")
 
-  private case class TaskObs(query: String, stageId: Int, durMs: Long,
-                             shufReadB: Long, shufWriteB: Long)
-
   def main(args: Array[String]): Unit = {
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SKEW_SRC", "/root/testdata/sf0.1")
     val skewDir = sys.env.getOrElse("SPARK_GRAFT_SKEW_DIR", "fixtures/skew")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
     if (!graft.sources.Sinks.exists(spark, s"$skewDir/documents.parquet") ||
         !graft.sources.Sinks.exists(spark, s"$skewDir/embeddings.parquet"))
       SkewFixture.generate(spark, srcDir, skewDir)
 
-    val current = new AtomicReference[String](null)
-    val obs = new ConcurrentLinkedQueue[TaskObs]()
-    val listener = new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val q = current.get()
-        if (q != null && te.taskInfo != null && te.taskMetrics != null) {
-          val sr = te.taskMetrics.shuffleReadMetrics
-          obs.add(TaskObs(q, te.stageId, te.taskInfo.duration,
-            sr.localBytesRead + sr.remoteBytesRead,
-            te.taskMetrics.shuffleWriteMetrics.bytesWritten))
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val taskStats = Harness.TaskStats.attach(spark)
+    Harness.warmUp(spark, Seq("q27_exact_dedup", "q28_neardup_pairs", "q54_sessionize"))
 
-    // untimed warmup on the small uniform dir: classloading + codegen
-    val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).isDirectory)
-      Seq("q27_exact_dedup", "q28_neardup_pairs", "q54_sessionize").foreach { q =>
-        try SparkEntry.queries(q)(spark, warmDir)
-          .write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-      }
-
-    /** Wait until the listener queue stops growing (task events drain
-      * asynchronously; attribution needs them all before switching query). */
-    def drain(): Unit = {
-      var last = -1
-      var same = 0
-      val deadline = System.nanoTime() + 10e9.toLong
-      while (same < 3 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val n = obs.size
-        if (n == last) same += 1 else { same = 0; last = n }
-      }
-    }
-
-    val secs = scala.collection.mutable.LinkedHashMap[String, Double]()
+    val measured = scala.collection.mutable.LinkedHashMap[String, (Double, Harness.Snapshot)]()
     val failed = scala.collection.mutable.ArrayBuffer[String]()
     for (name <- Suite) {
-      current.set(name)
-      val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(spark, skewDir)
-          .write.format("noop").mode("overwrite").save()
-        secs(name) = (System.nanoTime() - t0) / 1e9
-      } catch {
+      try measured(name) =
+        taskStats.measure(Harness.timedNoop(SparkEntry.queries(name)(spark, skewDir)))
+      catch {
         case e: Throwable =>
           System.err.println(s"[bench-skew] $name FAILED: ${e.getMessage}")
           failed += name
       }
-      drain()
-      current.set(null)
       spark.sharedState.cacheManager.clearCache() // q42 persists its shingle sets
     }
 
@@ -158,10 +100,8 @@ object BenchSkew {
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val saved = aqeConfs.map { case (k, _) => k -> spark.conf.getOption(k) }
     val aqeFired =
-      try {
-        aqeConfs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try Harness.withConfs(spark, aqeConfs) {
         val docs = graft.sources.Tables.documents(spark, skewDir)
           .filter(col("doc_id") % 100 === 0).select("doc_id", "text")
         val sets = graft.operators.Dedup.shingleSets(docs, "doc_id", "text", 3)
@@ -172,13 +112,7 @@ object BenchSkew {
         joined.collect()
         joined.queryExecution.executedPlan.toString.contains("skew=true")
       } catch { case _: Throwable => false }
-      finally {
-        saved.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
-        }
-        spark.sharedState.cacheManager.clearCache()
-      }
+      finally spark.sharedState.cacheManager.clearCache()
 
     // ------------------- candidate-volume gates (structural) -------------------
     // Wall time on a fixture tracks the box; CANDIDATE volume is a pure
@@ -262,34 +196,18 @@ object BenchSkew {
       q153Cands <= q153Budget && q153Uncapped > q153Budget
     spark.sharedState.cacheManager.clearCache()
 
-    val byQuery = obs.asScala.toSeq.groupBy(_.query)
-    def med(xs: Seq[Long]): Double = {
-      val s = xs.sorted
-      if (s.isEmpty) 0.0
-      else if (s.length % 2 == 1) s(s.length / 2).toDouble
-      else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-    }
     case class QStat(sec: Double, ratio: Double, maxTaskMs: Long, medTaskMs: Double,
                      nTasks: Int, shufReadMb: Double, shufWriteMb: Double)
-    val stats = Suite.filterNot(failed.contains).map { name =>
-      val ts = byQuery.getOrElse(name, Seq.empty)
-      // ratio per STAGE (a stage is one parallelism domain), worst stage
-      // wins; stages whose max task is < 250 ms are noise, not skew
-      val stageRatios = ts.groupBy(_.stageId).values.toSeq
-        .filter(st => st.map(_.durMs).max >= 250 && st.length >= 4)
-        .map { st =>
-          val durs = st.map(_.durMs)
-          durs.max / math.max(med(durs), 1.0)
-        }
-      val durs = ts.map(_.durMs)
+    val stats = measured.toSeq.map { case (name, (sec, snap)) =>
+      val durs = snap.tasks.map(_.durMs)
       name -> QStat(
-        secs(name),
-        if (stageRatios.isEmpty) 1.0 else stageRatios.max,
+        sec,
+        Harness.worstStageRatio(snap.tasks),
         if (durs.isEmpty) 0L else durs.max,
-        med(durs),
-        ts.length,
-        ts.map(_.shufReadB).sum / 1048576.0,
-        ts.map(_.shufWriteB).sum / 1048576.0)
+        Harness.median(durs.map(_.toDouble)),
+        durs.length,
+        snap.tasks.map(_.shuffleReadB).sum / 1048576.0,
+        snap.tasks.map(_.shuffleWriteB).sum / 1048576.0)
     }
     val saltedOk = stats.filter(s => SaltedPaths.contains(s._1))
       .forall(_._2.ratio < SaltedRatioBound)

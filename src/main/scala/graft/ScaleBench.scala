@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,7 +26,9 @@ import org.apache.spark.sql.functions._
   * scales, the ratio, disk/memory spill, shuffle write volume, peak
   * single-task execution memory, and the longest single task — the
   * numbers that expose a memory cliff, an accidental O(n²), or a
-  * single-task serialization point before a cluster does.
+  * single-task serialization point before a cluster does. The top-6
+  * stages of the ×N leg by Σtask time go to stderr, so a straggler can
+  * be attributed to its plan site.
   *
   * Usage: `SPARK_GRAFT_CPUS=32 sbt "runMain graft.ScaleBench"` —
   * env knobs: SPARK_GRAFT_SCALE_SRC (default /root/testdata/sf0.1),
@@ -124,126 +123,64 @@ object ScaleBench {
     java.nio.file.Files.writeString(marker.toPath, want)
   }
 
-  /** Whole-run task-metrics sink; reset per measured query. Also keeps a
-    * per-stage breakdown (task count, total/max task time, spill) so a
-    * straggler can be ATTRIBUTED to its plan site, not just observed. */
-  private class Metrics extends SparkListener {
-    val diskSpill = new AtomicLong; val memSpill = new AtomicLong
-    val shufWrite = new AtomicLong; val input = new AtomicLong
-    val peakMem = new AtomicLong; val maxTaskMs = new AtomicLong
-    case class StageAgg(var name: String = "", var tasks: Long = 0L,
-                        var totalMs: Long = 0L, var maxMs: Long = 0L,
-                        var spill: Long = 0L)
-    val stages = new java.util.concurrent.ConcurrentHashMap[Int, StageAgg]()
-    override def onStageSubmitted(
-        e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit = {
-      val agg = stages.computeIfAbsent(e.stageInfo.stageId, _ => StageAgg())
-      agg.name = e.stageInfo.name.linesIterator.nextOption().getOrElse("")
-    }
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        diskSpill.addAndGet(m.diskBytesSpilled)
-        memSpill.addAndGet(m.memoryBytesSpilled)
-        shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        input.addAndGet(m.inputMetrics.bytesRead)
-        peakMem.getAndUpdate(p => math.max(p, m.peakExecutionMemory))
-        if (e.taskInfo != null) {
-          maxTaskMs.getAndUpdate(p => math.max(p, e.taskInfo.duration))
-          val agg = stages.computeIfAbsent(e.stageId, _ => StageAgg())
-          agg.synchronized {
-            agg.tasks += 1
-            agg.totalMs += e.taskInfo.duration
-            agg.maxMs = math.max(agg.maxMs, e.taskInfo.duration)
-            agg.spill += m.diskBytesSpilled
-          }
-        }
-      }
-    }
-    def topStages(n: Int): Seq[String] = {
-      import scala.jdk.CollectionConverters._
-      stages.asScala.toSeq.sortBy(-_._2.totalMs).take(n).map { case (id, a) =>
-        f"    stage $id%5d tasks=${a.tasks}%3d total=${a.totalMs / 1000.0}%.1fs " +
-          f"max=${a.maxMs / 1000.0}%.1fs spill=${a.spill / 1048576}%dMB  ${a.name.take(90)}"
-      }
-    }
-    def reset(): Unit = {
-      Seq(diskSpill, memSpill, shufWrite, input, peakMem, maxTaskMs)
-        .foreach(_.set(0L))
-      stages.clear()
-    }
+  private def mb(l: Long): Double = math.round(l / 1048.576) / 1000.0
+
+  /** The per-query scale numbers: spill, shuffle write and input volume,
+    * the peak single-task execution memory and the longest single task. */
+  private def scaleMetrics(snap: Harness.Snapshot): Map[String, Double] = {
+    val ts = snap.tasks
+    def maxOf(f: Harness.TaskRow => Long): Long = if (ts.isEmpty) 0L else ts.map(f).max
+    Map(
+      "spill_disk_mb" -> mb(ts.map(_.diskSpillB).sum),
+      "spill_mem_mb" -> mb(ts.map(_.memSpillB).sum),
+      "shuffle_write_mb" -> mb(ts.map(_.shuffleWriteB).sum),
+      "input_mb" -> mb(ts.map(_.inputB).sum),
+      "peak_task_mem_mb" -> mb(maxOf(_.peakMemB)),
+      "max_task_sec" -> maxOf(_.durMs) / 1000.0)
   }
 
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_sf1")
     val repl = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPL", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     // Shuffle-partition count is THE deployment knob this harness exists
     // to measure: local[32] with 32 partitions puts 46M candidate rows in
     // one q153 aggregate task at sf1 (past the sort-agg spill knee); a
     // real cluster sizes partitions at 64-128MB of shuffle data.
-    val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
     // SPARK_GRAFT_EXTRA_CONF="k=v;k=v" — arbitrary session confs for
     // A/B runs (e.g. adaptive.coalescePartitions.minPartitionNum, which
     // stops AQE from merging the reads of a stage whose JOIN output
     // explodes far past its input — AQE sizes reads from input bytes)
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts)
-    val spark = sys.env.get("SPARK_GRAFT_EXTRA_CONF")
-      .map(_.split(";").filter(_.contains("=")))
-      .getOrElse(Array.empty[String])
-      .foldLeft(builder0) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-scale-wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val metrics = new Metrics
-    spark.sparkContext.addSparkListener(metrics)
+    val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+      .flatMap(_.split(";").filter(_.contains("=")))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+    val spark = Harness.session(confs =
+      sys.env.get("SPARK_GRAFT_SHUFFLE_PARTS").map("spark.sql.shuffle.partitions" -> _).toSeq ++ extra)
+    val stats = Harness.TaskStats.attach(spark)
 
     buildScaled(spark, src, out, repl)
 
-    def mb(l: Long): Double = math.round(l / 1048.576) / 1000.0
     val names = DefaultQueries.filter(n => only.forall(_.contains(n)))
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
-      def run(dir: String): (Double, Map[String, Double]) = {
+      def run(dir: String): (Double, Harness.Snapshot) = {
         spark.sharedState.cacheManager.clearCache()
-        metrics.reset()
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        (sec, Map(
-          "spill_disk_mb" -> mb(metrics.diskSpill.get),
-          "spill_mem_mb" -> mb(metrics.memSpill.get),
-          "shuffle_write_mb" -> mb(metrics.shufWrite.get),
-          "input_mb" -> mb(metrics.input.get),
-          "peak_task_mem_mb" -> mb(metrics.peakMem.get),
-          "max_task_sec" -> metrics.maxTaskMs.get / 1000.0))
+        stats.measure(Harness.timedNoop(fn(spark, dir)))
       }
       try {
         // untimed warmup at the smallest SF: plan + codegen compile
         // must not be attributed to the sf0.1 leg (Bench's rationale)
-        try fn(spark, "/root/testdata/sf0.001")
-          .write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
+        Harness.warmUp(spark, Seq(name))
         val (small, _) = run(src)
-        val (big, m) = run(out)
-        if (sys.env.contains("SPARK_GRAFT_SCALE_STAGES")) {
-          System.err.println(s"[stages] $name (sf1 leg):")
-          metrics.topStages(6).foreach(System.err.println)
-        }
+        val (big, snap) = run(out)
+        System.err.println(s"[stages] $name (x$repl leg):")
+        snap.topStages(6).foreach(System.err.println)
         val ratio = math.round(big / small * 100) / 100.0
-        val extra = m.toSeq.sortBy(_._1)
+        val metrics = scaleMetrics(snap).toSeq.sortBy(_._1)
           .map { case (k, v) => s""""$k":$v""" }.mkString(",")
-        println(f"""{"query":"$name","sf01_sec":${math.round(small * 1000) / 1000.0}%s,"sf1_sec":${math.round(big * 1000) / 1000.0}%s,"ratio":$ratio%s,$extra}""")
+        println(f"""{"query":"$name","sf01_sec":${math.round(small * 1000) / 1000.0}%s,"sf1_sec":${math.round(big * 1000) / 1000.0}%s,"ratio":$ratio%s,$metrics}""")
       } catch {
         case e: Throwable =>
           println(s"""{"query":"$name","error":"${Option(e.getMessage).getOrElse(e.getClass.getName).take(200).replace("\"", "'").replace("\n", " ")}"}""")

@@ -87,8 +87,9 @@ object LinkPredict {
     // near Spark's 10 MB broadcast threshold, so AQE flipped this join
     // between regimes run to run — the bimodality BENCH_r16/r17 recorded
     // (sf0.1, local[32]: SMJ 13-24 s, BHJ 73-90 s over 3×3 reps,
-    // Profile.profileQ153Regime). Broadcasting is catastrophic here
-    // even though the build side fits: the join EXPLODES ~100-fold, and
+    // OPTIMIZATION_r17.md q153; the sf1 shape is SCALE_EVIDENCE §q153).
+    // Broadcasting is catastrophic here even though the build side
+    // fits: the join EXPLODES ~100-fold, and
     // a broadcast join runs inside the probe side's SCAN stage, whose
     // task count is the written graph table's file count — candidate
     // generation (and the map side of the aggregate exchange) loses the

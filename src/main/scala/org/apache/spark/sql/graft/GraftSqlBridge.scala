@@ -27,6 +27,13 @@ object GraftSqlBridge {
     if (!registry.functionExists(ident)) registry.registerFunction(ident, info, builder)
   }
 
+  /** Blocks until every event posted so far (task/stage/job ends, SQL
+    * execution ends and the query-execution listeners fed by them) has
+    * been delivered to every listener. The listener bus is
+    * `private[spark]`. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
+
   /** Re-declare the physical layout of a CHECKPOINTED frame (r18).
     *
     * `Dataset.localCheckpoint`/`checkpoint` capture the executed plan's

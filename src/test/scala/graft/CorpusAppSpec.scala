@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.app.CorpusApp
@@ -107,18 +108,18 @@ class CorpusAppSpec extends AnyFunSuite with SharedSpark {
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              exception: Exception): Unit = ()
     }
+    // the build's own scans must not land in `scans`
+    GraftSqlBridge.drainListenerBus(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
       CorpusApp.append(spark, sf, out, batchId = "b1", pred = col("doc_id") % 2 === 1)
-      // the execution listener drains asynchronously; wait for the corpus
-      // scans (gate + max-pos) to land before asserting on them
-      val deadline = System.nanoTime() + 30e9.toLong
-      def corpusScans = scans.asScala
+      // the execution listener is fed from the listener bus: drain it so
+      // every scan of the append has landed before asserting on them
+      GraftSqlBridge.drainListenerBus(spark.sparkContext)
+      val corpusScans = scans.asScala
         .filter(_._1.startsWith(s"file:$out/corpus"))
         .filterNot(_._1.contains("corpus_stats")).toSeq
-      while (corpusScans.isEmpty && System.nanoTime() < deadline) Thread.sleep(100)
       assert(corpusScans.nonEmpty, s"no corpus scans observed; saw ${scans.asScala.toSeq}")
-      Thread.sleep(500) // let any straggler scan events land
       val colsRead = corpusScans.flatMap(_._2).toSet
       assert(colsRead.subsetOf(Set("fp", "pos")),
         s"append scanned written-corpus columns beyond the gate: $colsRead")
