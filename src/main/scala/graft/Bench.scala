@@ -95,25 +95,7 @@ object Bench {
             .foreach(_.unpersist(blocking = false))
         }
       }
-      // queries that persist() intermediates (q42/q64/q74/q96/...) would
-      // otherwise serve passes 2+ from the session cache and read as
-      // near-free; every pass must pay the query's real cost
-      spark.sharedState.cacheManager.clearCache()
-      // MEASUREMENT POLICY for state-writing queries (q81/q82/q89 class):
-      // the materialized corpus is dropped between passes so every rep
-      // pays the true build/append cost — otherwise reps 2+ hit the
-      // ledger/memo no-op and the reported median times the no-op while
-      // the real cost (the slowest work in the suite) hides in the IQR.
-      // Within a pass the attribution is stable: q81 pays the full build,
-      // q82 reads the built corpus, q89 pays the incremental build+append.
-      // (q102's bucketed tables stay amortized BY DESIGN: write-once,
-      // join-many is the operator's contract, so its measured cost is the
-      // join. CorpusAppSpec pins this reset's rebuild behavior.)
-      graft.queries.CorpusQueries.resetMaterializedState()
-      graft.queries.WebCorpusQueries.resetMaterializedState()
-      // q133 measures TRAINING — drop the learned-merges memo so every
-      // pass retrains (storage-layout memos stay amortized by contract)
-      graft.queries.ScaleQueries.resetTrainedMerges()
+      Harness.betweenPasses(spark)
     }
     val results = names.map { case (name, _) =>
       val ok = !failedSet(name) && times(name).nonEmpty

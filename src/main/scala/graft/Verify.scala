@@ -61,7 +61,7 @@ object Verify {
       .config("spark.ui.enabled", "false")
       // catalog-managed tables (bucketed joins) go to a throwaway dir
       .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft-verify-wh").toString)
+        graft.sources.Materialized.tempRoot("graft-verify-wh"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

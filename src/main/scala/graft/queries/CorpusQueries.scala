@@ -1,11 +1,10 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.app.CorpusApp
+import graft.sources.Materialized
 
 /** End-to-end corpus-app queries: the training corpus is BUILT (full clean
   * + shard assignment + real `Sinks` writes to a temp dir) and the queries
@@ -15,54 +14,20 @@ import graft.app.CorpusApp
   * pipeline or the write path breaks the hash match. */
 object CorpusQueries {
 
-  /** Build once per (JVM, sf dir) — queries at different scales build
+  /** Build once per (pass, sf dir) — queries at different scales build
     * their own corpus. */
-  @volatile private var cached = Map.empty[String, String]
-  private def built(spark: SparkSession, dir: String): String = synchronized {
-    cached.getOrElse(dir, {
-      val out = Files.createTempDirectory("graft-corpus").toString
-      CorpusApp.build(spark, dir, out)
-      cached += dir -> out
-      out
-    })
-  }
+  private def built(spark: SparkSession, dir: String): String =
+    Materialized.dir(s"corpus:$dir", perPass = true)(CorpusApp.build(spark, dir, _))
 
   /** The INCREMENTAL materialization: init from the even-id half of the
     * raw table, then [[CorpusApp.append]] the odd-id half as an ingest
     * batch. Memoized separately from [[built]]. */
-  @volatile private var cachedInc = Map.empty[String, String]
-  private def builtIncremental(spark: SparkSession, dir: String): String = synchronized {
-    cachedInc.getOrElse(dir, {
-      val out = Files.createTempDirectory("graft-corpus-inc").toString
+  private def builtIncremental(spark: SparkSession, dir: String): String =
+    Materialized.dir(s"corpus:inc:$dir", perPass = true) { out =>
       CorpusApp.build(spark, dir, out, pred = col("doc_id") % 2 === 0)
       CorpusApp.append(spark, dir, out, batchId = "odd-half",
         pred = col("doc_id") % 2 === 1)
-      cachedInc += dir -> out
-      out
-    })
-  }
-
-  /** Drop every materialized corpus (and the memo pointing at it) so the
-    * next query call rebuilds from scratch. This is the BENCH HONESTY
-    * hook: without it, rep 1 of q81/q89 pays the real build/append and
-    * later reps hit the ledger/memo no-op, so the reported median times
-    * the no-op and a regression in build cost is invisible. Bench calls
-    * this between passes; Verify (one pass) and interactive use keep the
-    * amortized memo. */
-  def resetMaterializedState(): Unit = synchronized {
-    for (dir <- cached.values ++ cachedInc.values) {
-      try {
-        val root = java.nio.file.Paths.get(dir)
-        if (java.nio.file.Files.exists(root)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-        }
-      } catch { case _: java.io.IOException => () } // best-effort tmp cleanup
     }
-    cached = Map.empty
-    cachedInc = Map.empty
-  }
 
   /** Per-source doc/token totals read from the WRITTEN corpus_stats table. */
   def q81CorpusStats(s: SparkSession, dir: String): DataFrame =

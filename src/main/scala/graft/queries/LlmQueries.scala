@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 import graft.operators.{Chunker, Dedup, Html, Multimodal, Pdf, Pq, Robots, Similarity, Sitemap, Upsert, Url, Warc}
 import graft.operators.Sever.SeverOps
-import graft.sources.{CdxIndex, Tables}
+import graft.sources.{CdxIndex, Materialized, Tables}
 
 /** The LLM-training-data-pipeline operator suite (dedup, similarity search,
   * multimodal, text analysis) over the harness `documents` / `embeddings`
@@ -342,19 +342,17 @@ object LlmQueries {
   // q219: image payloads are extracted to one FILE per media row once per
   // JVM (bounded: the fixture media table) — the query under test is the
   // binaryFile read-back, not the extraction.
-  private val binFilesFor = scala.collection.concurrent.TrieMap[String, String]()
   private def imageFilesDir(s: SparkSession): String =
-    binFilesFor.getOrElseUpdate("media", {
+    Materialized.dir("binfiles", perPass = false) { tmp =>
       import java.nio.file.{Files, Paths}
-      val tmp = Files.createTempDirectory("graft-binfiles").toString
+      Files.createDirectories(Paths.get(tmp))
       s.read.parquet(media).select("media_id", "mime", "payload")
         .filter(col("mime").startsWith("image/")).collect()
         .foreach { r =>
           Files.write(Paths.get(tmp, s"img_${r.getLong(0)}.bin"),
             r.getAs[Array[Byte]]("payload"))
         }
-      tmp
-    })
+    }
 
   /** q219: `binaryFile` DataSource ingest — the standard shape an image
     * corpus actually lands in (a directory of opaque files), vs q33's

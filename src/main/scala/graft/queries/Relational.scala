@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.sources.{Materialized, Tables}
 import graft.operators.Upsert
 
 /** The relational operator inventory of SURVEY.md §2, re-hosted on the harness
@@ -584,20 +584,15 @@ object Relational {
     * over everything — two real [[graft.sources.Sinks.writeSnapshot]]
     * commits to a temp table, so version isolation, the `_latest` marker,
     * and the read-back path are all under oracle test. */
-  @volatile private var snapCache: Map[String, String] = Map.empty
-  private def snapshotTable(s: SparkSession, dir: String): String = synchronized {
-    snapCache.getOrElse(dir, {
-      val p = java.nio.file.Files.createTempDirectory("graft-snap").toString + "/user_counts"
+  private def snapshotTable(s: SparkSession, dir: String): String =
+    Materialized.dir(s"snap:$dir", perPass = false) { p =>
       val ev = events(s, dir).select(col("user_id"), col("event_id"))
       graft.sources.Sinks.writeSnapshot(
         ev.filter(col("event_id") % 3 =!= 0).groupBy("user_id")
           .agg(count(lit(1)).as("n")), p)
       graft.sources.Sinks.writeSnapshot(
         ev.groupBy("user_id").agg(count(lit(1)).as("n")), p)
-      snapCache += dir -> p
-      p
-    })
-  }
+    }
 
   /** Snapshot time-travel diff — the audit query a versioned warehouse
     * exists for: "what changed for each user between snapshot v1 and
@@ -620,18 +615,13 @@ object Relational {
 
   /** Z-ordered events table, written once per (JVM, sf dir) via
     * [[graft.operators.ZOrder.writeZOrdered]] on (user_id, day). */
-  @volatile private var zCache: Map[String, String] = Map.empty
-  private def zTable(s: SparkSession, dir: String): String = synchronized {
-    zCache.getOrElse(dir, {
-      val p = java.nio.file.Files.createTempDirectory("graft-z").toString + "/events_z"
+  private def zTable(s: SparkSession, dir: String): String =
+    Materialized.dir(s"z:$dir", perPass = false) { p =>
       val ev = events(s, dir).select(col("user_id"),
         datediff(to_date(col("ts")), lit("1970-01-01").cast("date")).cast("long").as("day"),
         col("event_type"), col("value"))
       graft.operators.ZOrder.writeZOrdered(ev, p, "user_id", "day", numFiles = 16)
-      zCache += dir -> p
-      p
-    })
-  }
+    }
 
   /** Rectangle scan over the WRITTEN z-ordered table — the query shape
     * z-ordering exists for: a predicate on BOTH clustering dimensions

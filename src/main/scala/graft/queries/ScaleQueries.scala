@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Sampling
-import graft.sources.{Sinks, Tables}
+import graft.sources.{Materialized, Sinks, Tables}
 
 /** Round-6 scale-operator suite: bounded-state heavy hitters and
   * deterministic hash-threshold sampling. Oracle-parity ground rules are
@@ -334,13 +334,9 @@ object ScaleQueries {
 
   // q107: the ORC copy is written once per (JVM, sf-dir); the query reads
   // it back — the round-trip is the operator under test.
-  private val orcFor = scala.collection.concurrent.TrieMap[String, String]()
   private def orcLineitem(s: SparkSession, dir: String): String =
-    orcFor.getOrElseUpdate(dir, {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-orc").toString + "/lineitem"
-      Tables.lineitem(s, dir).write.mode("overwrite").orc(tmp)
-      tmp
-    })
+    Materialized.dir(s"orc:$dir", perPass = false)(
+      Tables.lineitem(s, dir).write.mode("overwrite").orc(_))
 
   /** q107: ORC source/sink round-trip — lineitem written as ORC, read
     * back, filtered and aggregated. ORC is Spark-native (columnar,
@@ -592,14 +588,9 @@ object ScaleQueries {
   }
 
   // q120: the bloom-filtered copy is written once per (JVM, sf-dir)
-  private val bloomFor = scala.collection.concurrent.TrieMap[String, String]()
   private def bloomLineitem(s: SparkSession, dir: String): String =
-    bloomFor.getOrElseUpdate(dir, {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-pqbloom").toString + "/lineitem"
-      Sinks.writeParquetBloom(Tables.lineitem(s, dir), tmp,
-        Seq("l_orderkey" -> 20000L))
-      tmp
-    })
+    Materialized.dir(s"pqbloom:$dir", perPass = false)(
+      Sinks.writeParquetBloom(Tables.lineitem(s, dir), _, Seq("l_orderkey" -> 20000L)))
 
   /** Test hook: the bloom-filtered table's path (builds it if needed). */
   private[graft] def bloomLineitemPathForTest(s: SparkSession, dir: String): String =
@@ -731,9 +722,8 @@ object ScaleQueries {
   }
 
   // q126: CTAS target, created once per (JVM, sf-dir)
-  private val ctasFor = scala.collection.concurrent.TrieMap[String, String]()
   private def ctasTable(s: SparkSession, dir: String): String =
-    ctasFor.getOrElseUpdate(dir, {
+    Materialized.value(s"ctas:$dir", perPass = false) {
       val tag = java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL)
       val t = s"graft_ctas_pri_$tag"
       Tables.orders(s, dir).createOrReplaceTempView(s"orders_ctas_src_$tag")
@@ -746,7 +736,7 @@ object ScaleQueries {
            |FROM orders_ctas_src_$tag
            |GROUP BY o_orderpriority, o_orderstatus""".stripMargin)
       t
-    })
+    }
 
   /** q126: SQL DDL surface — CREATE TABLE AS SELECT into the catalog
     * (managed parquet), then query the WRITTEN table. The oracle recomputes
@@ -804,13 +794,9 @@ object ScaleQueries {
   // q132: the manifest table is written once per (JVM, sf-dir) — data
   // skipping amortizes the clustering write across every later range read,
   // exactly like q102's bucketed tables amortize their shuffle.
-  private val manifestFor = scala.collection.concurrent.TrieMap[String, String]()
   private def manifestOrders(s: SparkSession, dir: String): String =
-    manifestFor.getOrElseUpdate(dir, {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-skip").toString + "/orders"
-      Sinks.writeWithManifest(Tables.orders(s, dir), tmp, "o_orderkey", numFiles = 16)
-      tmp
-    })
+    Materialized.dir(s"skip:$dir", perPass = false)(
+      Sinks.writeWithManifest(Tables.orders(s, dir), _, "o_orderkey", numFiles = 16))
 
   /** q132: manifest-driven data skipping ([[Sinks.writeWithManifest]] /
     * [[Sinks.readSkipping]]): orders range-clustered on o_orderkey into 16
@@ -827,16 +813,12 @@ object ScaleQueries {
 
   // q136: one z-ordered write per (JVM, sf-dir), amortized like q132's
   // range-clustered table.
-  private val zorderFor = scala.collection.concurrent.TrieMap[String, String]()
   private def zorderOrders(s: SparkSession, dir: String): String =
-    zorderFor.getOrElseUpdate(dir, {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-zskip").toString + "/orders"
+    Materialized.dir(s"zskip:$dir", perPass = false)(
       Sinks.writeClusteredWithManifest(
         graft.operators.ZOrder.zOrdered(Tables.orders(s, dir),
           "o_custkey", "o_orderkey", numFiles = 16),
-        tmp, Seq("o_custkey", "o_orderkey"))
-      tmp
-    })
+        _, Seq("o_custkey", "o_orderkey")))
 
   /** q136: MULTI-DIMENSIONAL data skipping — [[q132SkippingScan]]'s
     * manifest generalized to several stats columns over a Z-ORDER
@@ -857,17 +839,14 @@ object ScaleQueries {
         min(col("o_orderkey")).as("min_key"), max(col("o_orderkey")).as("max_key"))
 
   // q138: base write + manifest append, once per (JVM, sf-dir).
-  private val manifestAppendFor = scala.collection.concurrent.TrieMap[String, String]()
   private def appendedOrders(s: SparkSession, dir: String): String =
-    manifestAppendFor.getOrElseUpdate(dir, {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-mappend").toString + "/orders"
+    Materialized.dir(s"mappend:$dir", perPass = false) { tmp =>
       val orders = Tables.orders(s, dir)
       Sinks.writeWithManifest(orders.filter(col("o_orderkey") % 10 =!= 0),
         tmp, "o_orderkey", numFiles = 12)
       Sinks.appendWithManifest(orders.filter(col("o_orderkey") % 10 === 0)
         .repartition(2), tmp, Seq("o_orderkey"))
-      tmp
-    })
+    }
 
   /** q138: MANIFEST MAINTENANCE UNDER APPEND — the week-2 story of q132.
     * The table is initialized with 90% of orders (range-clustered +
@@ -947,23 +926,11 @@ object ScaleQueries {
     * `replace`, so every learned rule (choice AND count) is independently
     * reproduced by a second engine. */
   // Trained merges are deterministic per corpus, so q133/q134 share one
-  // training run per (JVM, sf-dir) — the same amortization pattern as
-  // manifestOrders above. Plain data (not catalog state), so session
-  // turnover can't invalidate it.
-  private val bpeMergesFor =
-    scala.collection.concurrent.TrieMap[String, Seq[graft.operators.BpeTrain.Merge]]()
+  // training run per (pass, sf-dir). Plain data (not catalog state), so
+  // session turnover can't invalidate it.
   private def trainedMerges(s: SparkSession, dir: String): Seq[graft.operators.BpeTrain.Merge] =
-    bpeMergesFor.getOrElseUpdate(dir, graft.operators.BpeTrain.train(
+    Materialized.value(s"bpe:$dir", perPass = true)(graft.operators.BpeTrain.train(
       graft.operators.BpeTrain.wordFreq(Tables.documents(s, dir), "text"), numMerges = 8))
-
-  /** BENCH HONESTY hook (same policy as
-    * [[CorpusQueries.resetMaterializedState]]): q133 IS the training run,
-    * so the bench drops the merge memo between passes — otherwise pass-2+
-    * medians time an 8-row createDataFrame instead of training. The
-    * STORAGE-LAYOUT memos (q132/q136/q138 manifest tables, q102 buckets)
-    * intentionally stay amortized: write-once/read-many is those
-    * operators' contract and the measured cost is the read path. */
-  def resetTrainedMerges(): Unit = bpeMergesFor.clear()
 
   def q133BpeTrain(s: SparkSession, dir: String): DataFrame = {
     val merges = trainedMerges(s, dir)
@@ -1324,9 +1291,6 @@ object ScaleQueries {
   // q255 bootstrap: the two schema vintages are written ONCE per
   // (JVM, sf-dir) — the query under test is the mergeSchema READ, not
   // the bootstrap write
-  private val evolveDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** q255: schema-evolution read — a corpus whose early files lack a
     * later-added column (the standard lake drift: v1 order files carry
     * (key, cust, cents), v2 adds o_orderpriority). One
@@ -1338,9 +1302,7 @@ object ScaleQueries {
     * one footer read per file — the same cost profile the manifest
     * skipping in Sinks already budgets for. */
   def q255MergeSchema(s: SparkSession, dir: String): DataFrame = {
-    val tmp = evolveDirs.computeIfAbsent(dir, { _ =>
-      val t = java.nio.file.Files
-        .createTempDirectory("graft-evolve").toString
+    val tmp = Materialized.dir(s"evolve:$dir", perPass = false) { t =>
       val o = Tables.orders(s, dir).select(col("o_orderkey"),
         col("o_custkey"),
         expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
@@ -1351,8 +1313,7 @@ object ScaleQueries {
       o.filter(col("m") > 6)
         .select("o_orderkey", "o_custkey", "cents", "o_orderpriority")
         .write.mode("overwrite").parquet(s"$t/v2")
-      t
-    })
+    }
     s.read.option("mergeSchema", "true").parquet(s"$tmp/v1", s"$tmp/v2")
       .select(coalesce(col("o_orderpriority"), lit("LEGACY")).as("priority"),
         col("cents"))

@@ -1,10 +1,10 @@
 package graft.queries
 
-import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.app.StarSchema
 import graft.pipeline.{JourneyJob, Schemas}
+import graft.sources.Materialized
 
 /** End-to-end star-schema queries: the warehouse is BUILT (init + two
   * weekly increments, real `Sinks` writes to a temp dir) and the queries
@@ -22,20 +22,15 @@ object StarQueries {
     * vintage A), then the journey fixture as TWO weekly batches split at
     * 2021-01-25 — multi-batch incremental merge is the semantics under
     * test (a single batch would never exercise merge-into-existing). */
-  @volatile private var cached: String = _
-  private def warehouse(spark: SparkSession): String = synchronized {
-    if (cached == null) {
-      val w = Files.createTempDirectory("graft-warehouse").toString
+  private def warehouse(spark: SparkSession): String =
+    Materialized.dir("star", perPass = false) { w =>
       StarSchema.init(spark, w, s"$fx/stations.csv", s"$fx/weather_v1.json",
         Schemas.weatherRoot(withSevererisk = true))
       val journey = JourneyJob.transform(spark, s"$fx/journey.csv")
       val cut = to_date(lit("2021-01-25"))
       StarSchema.weekly(spark, w, journey.filter(col("weather_date") < cut))
       StarSchema.weekly(spark, w, journey.filter(col("weather_date") >= cut))
-      cached = w
     }
-    cached
-  }
 
   /** Top-10 stations by NAME over the written star schema (the dashboard's
     * headline chart), dim_station role-played for both endpoints. */

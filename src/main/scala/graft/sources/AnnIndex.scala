@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -61,11 +59,10 @@ object AnnIndex {
   private val SampleMod = 10L
   private val MaxSample = 1000
 
-  @volatile private var cached = Map.empty[String, String]
-
   /** Root of the FULL-corpus index for `dir`, building on first use. */
   def path(s: SparkSession, dir: String): String =
-    memo("full:" + dir) { out => build(s, Tables.embeddings(s, dir), out) }
+    Materialized.dir(s"annindex:full:$dir", perPass = false)(
+      build(s, Tables.embeddings(s, dir), _))
 
   /** Root of the INCREMENTALLY-built index for `dir`: trained + built on
     * the history (vec_id % 7 ≠ 3), then the batch (vec_id % 7 = 3)
@@ -73,22 +70,11 @@ object AnnIndex {
     * never retrained. First use pays both steps; reads serve from the
     * union postings. */
   def pathIncremental(s: SparkSession, dir: String): String =
-    memo("incr:" + dir) { out =>
+    Materialized.dir(s"annindex:incr:$dir", perPass = false) { out =>
       val emb = Tables.embeddings(s, dir)
       build(s, emb.filter(col("vec_id") % 7 =!= 3), out)
       append(s, out, emb.filter(col("vec_id") % 7 === 3))
     }
-
-  private def memo(key: String)(f: String => Unit): String = synchronized {
-    cached.getOrElse(key, {
-      val root = Files.createTempDirectory("graft-annindex").toString
-      TempRoots.register(root) // deleted at JVM exit (r13 advice: /tmp accumulation)
-      val out = root + "/index"
-      f(out)
-      cached += key -> out
-      out
-    })
-  }
 
   private def build(s: SparkSession, emb: DataFrame, out: String): Unit = {
     import s.implicits._
@@ -197,24 +183,5 @@ object AnnIndex {
       }
       .sortBy { case (cos, j) => (-cos, j) }
       .take(nprobe).map(_._2)
-  }
-
-  /** Drop every written index (test hook — Bench does NOT reset between
-    * passes: write-once/read-many is the index's contract, the
-    * [[CoPurchaseGraph]] precedent). */
-  def reset(): Unit = synchronized {
-    for (dir <- cached.values) {
-      try {
-        val root = java.nio.file.Paths.get(dir).getParent
-        if (root != null && Files.exists(root)) {
-          import scala.jdk.CollectionConverters._
-          Files.walk(root).iterator().asScala.toSeq.reverse
-            .foreach(Files.deleteIfExists(_))
-        }
-      } catch {
-        case _: java.io.IOException | _: java.io.UncheckedIOException => ()
-      }
-    }
-    cached = Map.empty
   }
 }

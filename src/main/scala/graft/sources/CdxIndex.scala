@@ -121,41 +121,21 @@ object CdxIndex {
 
   // ------------------------------------------------- fixture memoization
 
-  private val cached = scala.collection.mutable.Map.empty[String, String]
-
-  /** Build once per (JVM, shard store) — the [[TextIndex.path]] memo
-    * convention; bench honesty via [[reset]]. */
-  def path(s: SparkSession, shardsPath: String): String = synchronized {
-    cached.getOrElse(shardsPath, {
-      val root = java.nio.file.Files.createTempDirectory("graft-cdx").toString
-      TempRoots.register(root)
-      val out = root + "/index"
-      buildFrom(s, Warc.readShards(s, shardsPath), out)
-      cached += shardsPath -> out
-      out
-    })
-  }
+  /** Built once per (JVM, shard store) — the [[TextIndex.path]] memo
+    * convention. */
+  def path(s: SparkSession, shardsPath: String): String =
+    Materialized.dir(s"cdx:full:$shardsPath", perPass = false)(
+      buildFrom(s, Warc.readShards(s, shardsPath), _))
 
   /** The INCREMENTAL memo: built over all shards but the last, then the
     * last appended as a batch — the q293/q310 maintenance convention.
     * Same lookup truth as [[path]]: the oracle cannot tell them apart,
     * which is the point. */
-  def pathIncremental(s: SparkSession, shardsPath: String): String = synchronized {
-    val key = shardsPath + "#inc"
-    cached.getOrElse(key, {
-      val root = java.nio.file.Files.createTempDirectory("graft-cdx-inc").toString
-      TempRoots.register(root)
-      val out = root + "/index"
+  def pathIncremental(s: SparkSession, shardsPath: String): String =
+    Materialized.dir(s"cdx:incr:$shardsPath", perPass = false) { out =>
       val all = Warc.readShards(s, shardsPath)
       val last = all.agg(max(col("shard_id"))).head().getLong(0)
       buildFrom(s, all.filter(col("shard_id") =!= last), out)
       append(s, out, all.filter(col("shard_id") === last))
-      cached += key -> out
-      out
-    })
-  }
-
-  /** Bench-honesty hook: forget memoized builds so a bench pass pays the
-    * real build cost. */
-  def reset(): Unit = synchronized { cached.clear() }
+    }
 }

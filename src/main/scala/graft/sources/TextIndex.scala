@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -42,31 +40,19 @@ object TextIndex {
     * the count the index was WRITTEN with. */
   private[graft] val Buckets = 16
 
-  @volatile private var cached = Map.empty[String, String]
-
   /** Root of the FULL-corpus index for `dir`, building on first use. */
   def path(s: SparkSession, dir: String): String =
-    memo("full:" + dir) { out => build(s, Tables.documents(s, dir), out) }
+    Materialized.dir(s"textindex:full:$dir", perPass = false)(
+      build(s, Tables.documents(s, dir), _))
 
   /** Root of the INCREMENTALLY-built index: built on the history
     * (doc_id % 5 ≠ 2), then the batch (doc_id % 5 = 2) APPENDED. */
   def pathIncremental(s: SparkSession, dir: String): String =
-    memo("incr:" + dir) { out =>
+    Materialized.dir(s"textindex:incr:$dir", perPass = false) { out =>
       val docs = Tables.documents(s, dir)
       build(s, docs.filter(col("doc_id") % 5 =!= 2), out)
       append(s, out, docs.filter(col("doc_id") % 5 === 2))
     }
-
-  private def memo(key: String)(f: String => Unit): String = synchronized {
-    cached.getOrElse(key, {
-      val root = Files.createTempDirectory("graft-textindex").toString
-      TempRoots.register(root) // deleted at JVM exit (r13 advice: /tmp accumulation)
-      val out = root + "/index"
-      f(out)
-      cached += key -> out
-      out
-    })
-  }
 
   /** The term's partition bucket — first 8 md5 hex chars as a long,
     * mod the index's bucket count; [[bucketOf]] is the identical

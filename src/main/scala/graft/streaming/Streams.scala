@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
+import graft.sources.Materialized
 
 /** Structured Streaming re-hosting of the reference's incremental batch
   * semantics (SURVEY.md §2.11): the Airflow weekly catchup run becomes a
@@ -160,7 +161,7 @@ object Streams {
     * loader does (graft.sources.Tables.load). */
   def hourlyCountsOnce(spark: SparkSession, dir: String): DataFrame = {
     val stream = graft.sources.Tables.loadStream(spark, dir, "events")
-    val checkpoint = Files.createTempDirectory("graft-ckpt-").toString
+    val checkpoint = Materialized.tempRoot("graft-ckpt-")
     val q = hourlyCounts(stream, "ts")
       .writeStream
       .format("memory")
@@ -184,7 +185,7 @@ object Streams {
     * close-at-exactly-gap rule) verifies the unification. */
   def sessionCountsOnce(spark: SparkSession, dir: String): DataFrame = {
     val stream = graft.sources.Tables.loadStream(spark, dir, "events")
-    val checkpoint = Files.createTempDirectory("graft-ckpt-").toString
+    val checkpoint = Materialized.tempRoot("graft-ckpt-")
     val q = stream
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
       .agg(count(lit(1)).as("n_events"))
@@ -225,7 +226,7 @@ object Streams {
     * not change a single parsed byte. */
   def warcStreamOnce(spark: SparkSession, fixturePath: String): DataFrame = {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-warc-stream-").toString
+    val tmp = Materialized.tempRoot("graft-warc-stream-")
     val src = s"$tmp/shards"
     // land each shard in its OWN file: the unit of arrival. An explicit
     // per-shard write (not repartition(6, shard_id), which hash-partitions
@@ -286,7 +287,7 @@ object Streams {
       .queryName("graft_stream_distinct")
       .outputMode(OutputMode.Complete)
       .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-ckpt-").toString)
+      .option("checkpointLocation", Materialized.tempRoot("graft-ckpt-"))
       .start()
     q.awaitTermination()
     recordMicroBatchPlan("graft_stream_distinct", q)
@@ -319,7 +320,7 @@ object Streams {
       .queryName("graft_stream_topk")
       .outputMode(OutputMode.Complete)
       .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-ckpt-").toString)
+      .option("checkpointLocation", Materialized.tempRoot("graft-ckpt-"))
       .start()
     q.awaitTermination()
     recordMicroBatchPlan("graft_stream_topk", q)
@@ -355,7 +356,7 @@ object Streams {
       .queryName("graft_stream_join")
       .outputMode(OutputMode.Append)
       .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-ckpt-").toString)
+      .option("checkpointLocation", Materialized.tempRoot("graft-ckpt-"))
       .start()
     q.awaitTermination()
     recordMicroBatchPlan("graft_stream_join", q)
@@ -388,7 +389,7 @@ object Streams {
       .queryName("graft_stream_enrich")
       .outputMode(OutputMode.Complete)
       .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-ckpt-").toString)
+      .option("checkpointLocation", Materialized.tempRoot("graft-ckpt-"))
       .start()
     q.awaitTermination()
     recordMicroBatchPlan("graft_stream_enrich", q)
@@ -414,7 +415,7 @@ object Streams {
       .queryName("graft_stream_hopping")
       .outputMode(OutputMode.Complete)
       .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-ckpt-").toString)
+      .option("checkpointLocation", Materialized.tempRoot("graft-ckpt-"))
       .start()
     q.awaitTermination()
     recordMicroBatchPlan("graft_stream_hopping", q)

@@ -151,17 +151,18 @@ class CorpusAppSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
-  test("CorpusQueries.resetMaterializedState forces a full rebuild (bench honesty hook)") {
+  test("Materialized.resetPerPass forces a full corpus rebuild (bench honesty hook)") {
     // the bench drops corpus state between passes so every rep pays the
     // real build/append cost; this pins that the hook actually discards
     // the memoized materialization (a fresh temp dir on the next call)
     // and removes the old one from disk
     import graft.queries.CorpusQueries
-    CorpusQueries.resetMaterializedState()
+    import graft.sources.Materialized
+    Materialized.resetPerPass()
     val first = CorpusQueries.q81CorpusStats(spark, sf).inputFiles.toSet
     assert(CorpusQueries.q81CorpusStats(spark, sf).inputFiles.toSet == first,
       "memo must be stable between calls within a pass")
-    CorpusQueries.resetMaterializedState()
+    Materialized.resetPerPass()
     val second = CorpusQueries.q81CorpusStats(spark, sf).inputFiles.toSet
     assert(second.nonEmpty && second != first,
       "reset did not force a rebuild into a fresh materialization")
@@ -169,6 +170,6 @@ class CorpusAppSpec extends AnyFunSuite with SharedSpark {
       new java.net.URI(first.head)).getParent.getParent
     assert(!java.nio.file.Files.exists(oldDir),
       s"reset left the previous materialization on disk: $oldDir")
-    CorpusQueries.resetMaterializedState()
+    Materialized.resetPerPass()
   }
 }
