@@ -73,9 +73,16 @@ object Materialized {
     memo(key, perPass)(_ => build)
 
   /** Deletes and forgets every per-pass entry; amortized ones stay. */
-  def resetPerPass(): Unit = {
+  def resetPerPass(): Unit = dropWhere((_, e) => e.perPass)
+
+  /** Deletes and forgets every entry of `owner` (keys `owner:…`),
+    * amortized ones too, so the next call rebuilds — e.g. a new vintage
+    * of a write-once table. The bench never calls this. */
+  def forget(owner: String): Unit = dropWhere((key, _) => key.startsWith(owner + ":"))
+
+  private def dropWhere(p: (String, Entry) => Boolean): Unit = {
     val gone = synchronized {
-      entries.filter(_._2.perPass).keys.toList.flatMap(entries.remove)
+      entries.filter { case (k, e) => p(k, e) }.keys.toList.flatMap(entries.remove)
     }
     gone.foreach(drop)
   }

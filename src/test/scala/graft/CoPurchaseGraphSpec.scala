@@ -6,7 +6,8 @@ import graft.sources.{CoPurchaseGraph, Materialized, Tables}
 
 /** The shared written co-purchase edge table: contents equal the direct
   * derivation, and the memo serves one build per (JVM, dir) that the
-  * bench's per-pass reset leaves in place. */
+  * bench's per-pass reset leaves in place and `Materialized.forget`
+  * rebuilds. */
 class CoPurchaseGraphSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
@@ -25,6 +26,16 @@ class CoPurchaseGraphSpec extends AnyFunSuite with SharedSpark {
     val direct = derived()
     assert(table.count() == direct.count())
     assert(table.except(direct).count() == 0 && direct.except(table).count() == 0)
+  }
+
+  test("memo: second read serves the same written path; reset forces a new one") {
+    val p1 = CoPurchaseGraph.path(spark, dir)
+    val p2 = CoPurchaseGraph.path(spark, dir)
+    assert(p1 == p2)
+    Materialized.forget("copurchase")
+    assert(!new java.io.File(p1).exists, "reset must drop the written table")
+    val p3 = CoPurchaseGraph.path(spark, dir)
+    assert(p3 != p1 && new java.io.File(p3).exists)
   }
 
   test("memo: second read serves the same written path; the per-pass reset keeps it") {
