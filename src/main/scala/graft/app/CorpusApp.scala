@@ -25,6 +25,10 @@ import graft.sources.{Sinks, Tables}
   *  - `manifest`     — one row: raw/clean counts and shard count, the
   *                     handshake a downstream trainer validates before
   *                     reading a single shard
+  *  - `ledger`       — applied batches with their raw doc counts
+  *                     ([[Sinks.commitLedger]]): what makes [[append]]
+  *                     idempotent END TO END (data AND manifest counters)
+  *                     under at-least-once batch delivery
   *
   * Deterministic end to end: same input -> byte-identical corpus, every
   * run, every partitioning (hash-derived order, no RNG, no timestamps) —
@@ -47,25 +51,6 @@ object CorpusApp {
         size(tokens(col("text"))).cast("long").as("n_tokens"),
         md5Long(col("doc_id").cast("string")).as("__h"))
 
-  /** Applied-batch ledger (batch_id, n_raw) — the corpus counterpart of
-    * the star schema's catchup ledger: what makes [[append]] idempotent
-    * END TO END (data AND manifest counters) under at-least-once batch
-    * delivery. Bounded by the number of ingest batches, read driver-side. */
-  private def ledger(spark: SparkSession, outDir: String): Map[String, Long] = {
-    val p = s"$outDir/ledger"
-    if (!Sinks.exists(spark, p)) Map.empty
-    else spark.read.parquet(p).collect()
-      .map(r => r.getAs[String]("batch_id") -> r.getAs[Long]("n_raw")).toMap
-  }
-
-  private def writeLedger(spark: SparkSession, outDir: String,
-                          entries: Map[String, Long]): Unit = {
-    import spark.implicits._
-    Sinks.overwriteSwap(
-      entries.toSeq.sortBy(_._1).toDF("batch_id", "n_raw"), s"$outDir/ledger")
-    spark.catalog.refreshByPath(s"$outDir/ledger")
-  }
-
   /** Recompute the derived tables from the WRITTEN corpus — the AUDIT
     * path (any write damage surfaces against the oracle) and the [[build]]
     * init path, where the corpus IS the batch so full-scan cost is batch
@@ -75,7 +60,7 @@ object CorpusApp {
     * append sequence reproduces exactly what the increments maintained —
     * CorpusAppSpec asserts that equality. */
   def auditDerived(spark: SparkSession, outDir: String): Unit = {
-    val nRaw = ledger(spark, outDir).values.sum
+    val nRaw = Sinks.ledger(spark, s"$outDir/ledger").values.sum
     val written = spark.read.parquet(s"$outDir/corpus")
     Sinks.overwriteSwap(
       written.groupBy("source")
@@ -138,7 +123,7 @@ object CorpusApp {
     } finally survivors.unpersist()
     spark.catalog.refreshByPath(s"$outDir/corpus")
     val nRaw = batch.count()
-    writeLedger(spark, outDir, Map("__init" -> nRaw))
+    Sinks.commitLedger(spark, s"$outDir/ledger", Map("__init" -> nRaw))
     auditDerived(spark, outDir)
   }
 
@@ -177,7 +162,7 @@ object CorpusApp {
     * growth. The first batch creates the corpus (positions from 1). */
   def appendBatch(spark: SparkSession, outDir: String, batchId: String,
                   batch: DataFrame): Unit = {
-    val applied = ledger(spark, outDir)
+    val applied = Sinks.ledger(spark, s"$outDir/ledger")
     if (applied.contains(batchId)) return
     val hasCorpus = Sinks.exists(spark, s"$outDir/corpus")
     // bounded driver read: current max position
@@ -206,7 +191,7 @@ object CorpusApp {
     Sinks.append(ranked, s"$outDir/corpus")
     spark.catalog.refreshByPath(s"$outDir/corpus")
     val entries = applied + (batchId -> batch.count())
-    writeLedger(spark, outDir, entries)
+    Sinks.commitLedger(spark, s"$outDir/ledger", entries)
     mergeDerived(spark, outDir, delta = ranked,
       nRaw = entries.values.sum, nClean = maxPos + ranked.count())
   }

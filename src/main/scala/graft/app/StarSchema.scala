@@ -29,7 +29,7 @@ import graft.sources.Sinks
   * cached and materialised before its three keyed merges (dim_station,
   * dim_datetime, fact_journey) run side by side through
   * [[Sinks.inParallel]]; they share nothing but that input. The catchup
-  * ledger is still appended last, after all three have returned.
+  * ledger is committed last, after all three have returned.
   */
 object StarSchema {
 
@@ -62,12 +62,15 @@ object StarSchema {
     * share nothing but the batch, run side by side. The cache is released
     * on return only if this call created it; a batch the caller already
     * persisted stays persisted. If a merge fails, the others are cancelled
-    * and its exception is rethrown (see [[Sinks.inParallel]]). */
-  def weekly(spark: SparkSession, warehouse: String, journey: DataFrame): Unit = {
+    * and its exception is rethrown (see [[Sinks.inParallel]]). Returns the
+    * batch's row count. */
+  def weekly(spark: SparkSession, warehouse: String, journey: DataFrame): Long = {
     val owned = journey.storageLevel == StorageLevel.NONE
     if (owned) journey.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      journey.count()
+      val n = journey.count()
+      // read directly below, so roll back a swap a crash cut short first
+      Sinks.recover(spark, dimStation(warehouse))
       val stations = spark.read.parquet(dimStation(warehouse))
       val newStations = JourneyJob.newStations(spark, journey, stations)
       Sinks.inParallel(spark)(
@@ -76,39 +79,41 @@ object StarSchema {
           JourneyJob.datetimeDim(journey), Seq("datetime_id")),
         () => Sinks.upsertPartitioned(spark, factJourney(warehouse),
           JourneyJob.fact(journey), Seq("rental_id"), "weather_date"))
+      n
     } finally if (owned) journey.unpersist(blocking = true)
   }
 
   /** Convenience: weekly increment straight from a journey CSV path. */
-  def weeklyFromCsv(spark: SparkSession, warehouse: String, journeyCsv: String): Unit =
+  def weeklyFromCsv(spark: SparkSession, warehouse: String, journeyCsv: String): Long =
     weekly(spark, warehouse, JourneyJob.transform(spark, journeyCsv))
 
-  private def ledgerPath(warehouse: String): String = s"$warehouse/_meta/ingested"
+  /** The catchup ledger: (logical date, journey rows) per ingested week. */
+  private def catchupLedger(warehouse: String): String = s"$warehouse/_meta/ingested"
 
   /** Logical dates already ingested into this warehouse, per the ledger. */
-  def ingestedDates(spark: SparkSession, warehouse: String): Set[String] = {
-    val p = new org.apache.hadoop.fs.Path(ledgerPath(warehouse))
-    val f = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!f.exists(p)) Set.empty
-    else spark.read.parquet(ledgerPath(warehouse))
-      .select("logical_date").collect().map(_.getString(0)).toSet
-  }
+  def ingestedDates(spark: SparkSession, warehouse: String): Set[String] =
+    Sinks.ledger(spark, catchupLedger(warehouse)).keySet
 
   /** The reference's weekly CATCHUP semantics (proc_0_ingestion_to_s3_dag.py:42-52:
     * `catchup=True` + a logical-date-keyed file per weekly DAG run), re-hosted
     * engine-side: the raw zone holds one `<rawDir>/<logical_date>/journey.csv`
     * folder per week; the warehouse keeps a LEDGER of ingested logical dates;
     * catchup ingests every not-yet-ingested week in ascending date order and
-    * appends each to the ledger after its merges complete. Each week's CSV
-    * is parsed once and its three merges run side by side ([[weekly]]);
-    * the ledger append waits for all three, and a failed merge throws
-    * before it, so a failed week is never recorded as ingested.
+    * commits each to the ledger after its merges complete. The ledger
+    * commit is a whole-table swap ([[Sinks.commitLedger]]) of the full
+    * ledger, read once per call. Each week's CSV is parsed once and its
+    * three merges run side by side ([[weekly]]); the ledger commit waits
+    * for all three, and a failed merge throws before it, so a failed week
+    * is never recorded as ingested.
     *
     * Idempotence is two-layer: the ledger skips completed weeks wholesale
     * (cheap — no re-read of their raw files), and if a run crashes between a
-    * week's merge and its ledger append, the re-run re-merges that week
+    * week's merge and its ledger commit, the re-run re-merges that week
     * through the KEYED upserts, which converge — so at-least-once ledger
-    * bookkeeping still yields exactly-once warehouse contents.
+    * bookkeeping still yields exactly-once warehouse contents. A crash
+    * inside any of the week's swaps (a dim, a fact partition, the ledger)
+    * is rolled back by the re-run's first touch of that table
+    * ([[Sinks.recover]]).
     *
     * The listing is driver-side and bounded by weeks-per-history (~52/year),
     * not data size. Returns the logical dates ingested by THIS call. */
@@ -118,12 +123,11 @@ object StarSchema {
     val f = raw.getFileSystem(spark.sessionState.newHadoopConf())
     if (!f.exists(raw)) return Seq.empty // nothing delivered yet: a no-op run, not an error
     val weeks = f.listStatus(raw).filter(_.isDirectory).map(_.getPath.getName).sorted
-    val done = ingestedDates(spark, warehouse)
-    val todo = weeks.filterNot(done)
+    var ledger = Sinks.ledger(spark, catchupLedger(warehouse))
+    val todo = weeks.filterNot(ledger.contains)
     todo.foreach { d =>
-      weeklyFromCsv(spark, warehouse, s"$rawDir/$d/$file")
-      import spark.implicits._
-      Sinks.append(Seq(d).toDF("logical_date"), ledgerPath(warehouse))
+      ledger += d -> weeklyFromCsv(spark, warehouse, s"$rawDir/$d/$file")
+      Sinks.commitLedger(spark, catchupLedger(warehouse), ledger)
     }
     todo.toSeq
   }

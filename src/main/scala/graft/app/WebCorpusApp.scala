@@ -139,7 +139,8 @@ object WebCorpusApp {
       () => labeled(spark, "canonicals write")(
         Sinks.overwriteSwap(canonicalsOf(pages), s"$outDir/canonicals")))
     refresh(spark, outDir)
-    labeled(spark, "ledger")(writeLedger(spark, outDir, Map("__init" -> nPages)))
+    labeled(spark, "ledger")(
+      Sinks.commitLedger(spark, s"$outDir/ledger", Map("__init" -> nPages)))
     labeled(spark, "manifest audit")(auditDerived(spark, outDir))
     buildIndexes(spark, outDir)
   }
@@ -176,7 +177,7 @@ object WebCorpusApp {
     * attempt's and would be purged; serialize appends per corpus. */
   def appendBatch(spark: SparkSession, shards: DataFrame, robotsPath: String,
                   outDir: String, batchId: String): Unit = {
-    val applied = ledger(spark, outDir)
+    val applied = Sinks.ledger(spark, s"$outDir/ledger")
     if (applied.contains(batchId)) return
     // recovery: revoke every uncommitted tag before touching state —
     // the build's overwriteSwap tables carry no tags, so the committed
@@ -227,7 +228,7 @@ object WebCorpusApp {
       if (nr.isEmpty) return
       Sinks.appendTagged(nr, s"$outDir/redirects", batchId)
       spark.catalog.refreshByPath(s"$outDir/redirects")
-      writeLedger(spark, outDir, applied + (batchId -> 0L))
+      Sinks.commitLedger(spark, s"$outDir/ledger", applied + (batchId -> 0L))
       return
     }
     val written = spark.read.parquet(s"$outDir/corpus")
@@ -308,7 +309,7 @@ object WebCorpusApp {
       auditDerived(spark, outDir, nPagesOverride = Some(entries.values.sum)))
     // THE commit point (atomic swap): before this line the batch never
     // happened (next call purges its files); after it, replay is a no-op
-    labeled(spark, "ledger")(writeLedger(spark, outDir, entries))
+    labeled(spark, "ledger")(Sinks.commitLedger(spark, s"$outDir/ledger", entries))
   }
 
   /** The crawl's LINK TABLE from one decoded page set — the artifact a
@@ -696,7 +697,8 @@ object WebCorpusApp {
     *     sizing, round-robin rewrite, swap-commit — rows unchanged);
     *  3. fold the text index's df/stat DELTA rows
     *     ([[TextIndex.compact]]) and compact both partitioned postings
-    *     tables per partition DIRECTORY (bucket/cell structure — and
+    *     tables in one partitioned rewrite each
+    *     ([[Sinks.compactPartitioned]]: bucket/cell structure — and
     *     therefore partition pruning — preserved);
     *  4. recompute the manifest from the rewritten tables (damage in
     *     the fold would surface against the oracle here).
@@ -709,13 +711,13 @@ object WebCorpusApp {
     * append converges. Single writer, as always. */
   def maintain(spark: SparkSession, outDir: String,
                targetRowsPerFile: Long = 1L << 20): Unit = {
-    val committed = ledger(spark, outDir).keySet.map(Sinks.tagOf)
+    val committed = Sinks.ledger(spark, s"$outDir/ledger").keySet.map(Sinks.tagOf)
     appendedTables.foreach(t => Sinks.purgeTagged(spark, s"$outDir/$t", committed))
     refresh(spark, outDir)
     // every compaction rewrites its own table directory (atomic swap of
     // content-identical rows) — independent maintenance units, overlapped
-    // 3-wide (§2.6); the one partitioned rewrite per postings table is
-    // r17's fold (see Sinks.compactPartitioned for the fallback)
+    // 3-wide (§2.6); each postings table is one partitioned rewrite
+    // (Sinks.compactPartitioned)
     val flat = Seq("corpus", "rejects", "paragraph_hashes", "links",
         "redirects", "canonicals", "embeddings")
       .filter(t => Sinks.exists(spark, s"$outDir/$t"))
@@ -895,22 +897,7 @@ object WebCorpusApp {
   def readCommitted(spark: SparkSession, outDir: String,
                     table: String): DataFrame =
     Sinks.readCommitted(spark, s"$outDir/$table",
-      ledger(spark, outDir).keySet.map(Sinks.tagOf))
-
-  private def ledger(spark: SparkSession, outDir: String): Map[String, Long] = {
-    val p = s"$outDir/ledger"
-    if (!Sinks.exists(spark, p)) Map.empty
-    else spark.read.parquet(p).collect()
-      .map(r => r.getAs[String]("batch_id") -> r.getAs[Long]("n_pages")).toMap
-  }
-
-  private def writeLedger(spark: SparkSession, outDir: String,
-                          entries: Map[String, Long]): Unit = {
-    import spark.implicits._
-    Sinks.overwriteSwap(
-      entries.toSeq.sortBy(_._1).toDF("batch_id", "n_pages"), s"$outDir/ledger")
-    spark.catalog.refreshByPath(s"$outDir/ledger")
-  }
+      Sinks.ledger(spark, s"$outDir/ledger").keySet.map(Sinks.tagOf))
 
   private def refresh(spark: SparkSession, outDir: String): Unit =
     Seq("corpus", "rejects", "paragraph_hashes", "links", "redirects",
@@ -923,7 +910,7 @@ object WebCorpusApp {
     * is rejects+corpus metadata, not raw crawl bytes. */
   def auditDerived(spark: SparkSession, outDir: String,
                    nPagesOverride: Option[Long] = None): Unit = {
-    val nPages = nPagesOverride.getOrElse(ledger(spark, outDir).values.sum)
+    val nPages = nPagesOverride.getOrElse(Sinks.ledger(spark, s"$outDir/ledger").values.sum)
     val corpus = spark.read.parquet(s"$outDir/corpus")
     val rejects = spark.read.parquet(s"$outDir/rejects")
     val parHashes = spark.read.parquet(s"$outDir/paragraph_hashes")

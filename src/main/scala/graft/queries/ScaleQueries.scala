@@ -806,7 +806,7 @@ object ScaleQueries {
     * The oracle runs the same range over the ORIGINAL parquet, so the
     * result also proves the clustered rewrite is lossless. */
   def q132SkippingScan(s: SparkSession, dir: String): DataFrame =
-    Sinks.readSkipping(s, manifestOrders(s, dir), "o_orderkey", 4000L, 4999L)
+    Sinks.readSkipping(s, manifestOrders(s, dir), Seq(("o_orderkey", 4000L, 4999L)))
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"),
         min(col("o_orderkey")).as("min_key"), max(col("o_orderkey")).as("max_key"))
@@ -859,7 +859,7 @@ object ScaleQueries {
     * zeroes a column and breaks the hash. Oracle: the same range over the
     * original un-split table. */
   def q138ManifestAppend(s: SparkSession, dir: String): DataFrame =
-    Sinks.readSkipping(s, appendedOrders(s, dir), "o_orderkey", 6000L, 7499L)
+    Sinks.readSkipping(s, appendedOrders(s, dir), Seq(("o_orderkey", 6000L, 7499L)))
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"),
         sum(when(col("o_orderkey") % 10 === 0, 1L).otherwise(0L)).as("n_appended"),

@@ -28,12 +28,7 @@ import graft.operators.{Warc, WarcShard}
   * never scanned whole. The lookup url set is driver-held by
   * construction (a fetch API call), which is what makes the
   * shard-pruning `isin` and the broadcast join bounded. */
-object CdxIndex {
-
-  /** Fixture-scale bucket knob (persisted in `meta/`, the TextIndex
-    * convention — readers and future appends probe with the written
-    * count; production sizes this to keep bucket dirs listable). */
-  val Buckets = 16
+object CdxIndex extends Md5Buckets {
 
   def buildFrom(s: SparkSession, shards: org.apache.spark.sql.Dataset[WarcShard],
                 out: String, buckets: Int = Buckets,
@@ -103,21 +98,6 @@ object CdxIndex {
       }
       .toDF()
   }
-
-  private def bucketCol(url: org.apache.spark.sql.Column, buckets: Int) =
-    conv(substring(md5(url), 1, 8), 16, 10).cast("long") % buckets
-
-  /** Driver-side twin of [[bucketCol]] for probe planning. */
-  private[graft] def bucketOf(url: String, buckets: Int): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(url.getBytes("UTF-8"))
-    val hex = d.take(4).map(b => f"$b%02x").mkString
-    java.lang.Long.parseLong(hex, 16) % buckets
-  }
-
-  private[graft] def bucketsOf(s: SparkSession, root: String): Int =
-    if (!Sinks.exists(s, s"$root/meta")) Buckets
-    else s.read.parquet(s"$root/meta").head().getAs[Int]("n_buckets")
 
   // ------------------------------------------------- fixture memoization
 

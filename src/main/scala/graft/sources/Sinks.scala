@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, element_at, input_file_name, lit, max, min, split}
 import graft.operators.Upsert
@@ -13,42 +13,79 @@ import graft.operators.Upsert
   * genuinely incremental facts, but replace blind overwrite with a
   * write-to-temp-then-swap commit, and provide a keyed upsert so re-running a
   * week is a no-op on keyed tables (SURVEY.md §7.5 #1).
+  *
+  * One commit path: a table is replaced only by [[replaceTable]], its
+  * partitions only by [[replacePartitions]], and staged files enter it
+  * only through [[moveIn]]. Recovery rule ([[recover]], run first by every
+  * operation): an absent `path` gets its `path.__old` backup back, a
+  * backup next to a live `path` is deleted, and a partition backed up in
+  * `path.__old_parts/` whose live dir is missing is moved back — so a
+  * crash leaves each table and partition fully old or fully new.
   */
 object Sinks {
 
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+  /** The file system holding `path`, after [[recover]] ran there. */
+  private def fs(spark: SparkSession, path: String): FileSystem = {
+    val f = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    rollBack(f, new Path(path))
+    f
+  }
+
+  /** Apply the recovery rule at `path` (it renames: single writer, reads
+    * included). Call it before a plain `spark.read` of a table. */
+  def recover(spark: SparkSession, path: String): Unit = fs(spark, path)
+
+  private def backup(dst: Path): Path = new Path(dst.toString + ".__old")
+
+  /** A sibling of the table root, so partition discovery never lists it. */
+  private def partsBackup(dst: Path): Path = new Path(dst.toString + ".__old_parts")
+
+  private def rollBack(f: FileSystem, dst: Path): Unit = {
+    val old = backup(dst)
+    if (f.exists(old)) {
+      if (f.exists(dst)) f.delete(old, true) else move(f, old, dst)
+    }
+    val parts = partsBackup(dst)
+    if (f.exists(parts)) {
+      f.listStatus(parts).foreach { s =>
+        val live = new Path(dst, s.getPath.getName)
+        if (!f.exists(live)) move(f, s.getPath, live)
+      }
+      f.delete(parts, true)
+    }
+  }
+
+  private def move(f: FileSystem, src: Path, dst: Path): Unit =
+    if (!f.rename(src, dst)) throw new java.io.IOException(s"rename failed: $src -> $dst")
 
   /** The swap commit: `dst` → `dst.__old`, `tmp` → `dst`, drop `__old`.
-    * Properties a plain overwrite lacks: (1) readers never observe a
-    * HALF-WRITTEN table — each rename is atomic, so `dst` is always either
-    * the complete old or the complete new table (there is a brief window
-    * between the two renames where the path is ABSENT — a reader can miss,
-    * but can never read a torn table); (2) no crash point loses data — a
-    * crash mid-write leaves `dst` untouched, and a crash between the
-    * renames leaves the previous table recoverable at `dst.__old` (rename
-    * it back by hand, or just re-run the job: the next swap clears it). */
-  private def swapCommit(f: org.apache.hadoop.fs.FileSystem, tmp: Path, dst: Path): Unit = {
-    val old = new Path(dst.toString + ".__old")
-    f.delete(old, true) // leftover from a crashed swap of a PREVIOUS run
-    if (f.exists(dst) && !f.rename(dst, old))
-      throw new java.io.IOException(s"swap-commit backup rename failed: $dst -> $old")
-    if (!f.rename(tmp, dst))
-      throw new java.io.IOException(s"swap-commit rename failed: $tmp -> $dst")
-    f.delete(old, true)
+    * Readers never observe a HALF-WRITTEN table: each rename is atomic
+    * (between the two the path is ABSENT — a reader can miss, but never
+    * read a torn table). A crash mid-write leaves `dst` untouched; a
+    * crash between the renames leaves the old table at `dst.__old`, which
+    * [[recover]] renames back — a merge re-run against the absent table
+    * would drop every committed row. */
+  private def swapCommit(f: FileSystem, tmp: Path, dst: Path): Unit = {
+    if (f.exists(dst)) move(f, dst, backup(dst))
+    move(f, tmp, dst)
+    f.delete(backup(dst), true)
+  }
+
+  /** The one whole-table replace: `write` the new table to the path it is
+    * given (`<path>.__tmp`), then [[swapCommit]]. */
+  private def replaceTable(spark: SparkSession, path: String)(write: String => Unit): Unit = {
+    val f = fs(spark, path)
+    val tmp = new Path(path + ".__tmp")
+    f.delete(tmp, true)
+    write(tmp.toString)
+    swapCommit(f, tmp, new Path(path))
   }
 
   /** S5 made safe: materialize to `<path>.__tmp`, then swap-commit (see
     * [[swapCommit]] for the exact crash/visibility guarantees). Renames are
     * metadata-only on HDFS-likes. */
-  def overwriteSwap(df: DataFrame, path: String): Unit = {
-    val spark = df.sparkSession
-    val f = fs(spark, path)
-    val tmp = new Path(path + ".__tmp")
-    f.delete(tmp, true)
-    df.write.mode("overwrite").parquet(tmp.toString)
-    swapCommit(f, tmp, new Path(path))
-  }
+  def overwriteSwap(df: DataFrame, path: String): Unit =
+    replaceTable(df.sparkSession, path)(df.write.mode("overwrite").parquet(_))
 
   /** How many writes [[inParallel]] runs at once: enough for the next
     * write's tasks to back-fill the executor tail of the current one, not
@@ -69,7 +106,7 @@ object Sinks {
     * call returns only once every action thread has stopped — then it
     * rethrows the failed action's own exception. No write of an aborted
     * batch outlives the exception, so a caller that commits after this
-    * call (a ledger append) never commits a batch with a failed write. */
+    * call (a ledger commit) never commits a batch with a failed write. */
   def inParallel(spark: SparkSession)(actions: (() => Unit)*): Unit = {
     import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
     val sc = spark.sparkContext
@@ -140,32 +177,26 @@ object Sinks {
     val w = df.write.mode("overwrite")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(stage.toString)
-    // move data files (recursively — partition dirs), tag in the name;
+    moveIn(f, stage, path, s"b-$tag-")
+    f.delete(stage, true)
+    spark.catalog.refreshByPath(path)
+  }
+
+  /** The one move into a table: each data file under `stage` moves to its
+    * relative dir under `path` (partition dirs kept) as `prefix` + name,
+    * one atomic rename each, planned from one listing. */
+  private def moveIn(f: FileSystem, stage: Path, path: String, prefix: String): Unit = {
     // listFiles returns QUALIFIED paths (file:/...), so strip against the
     // qualified stage prefix
     val stagePrefix = f.makeQualified(stage).toString
-    val it = f.listFiles(stage, true)
-    val moves = scala.collection.mutable.ArrayBuffer.empty[(Path, Path)]
-    while (it.hasNext) {
-      val p = it.next().getPath
-      if (p.getName.endsWith(".parquet") && !p.getName.startsWith("_")) {
-        val rel = f.makeQualified(p).toString
-          .stripPrefix(stagePrefix).stripPrefix("/")
-        val relDir = rel.lastIndexOf('/') match {
-          case -1 => ""
-          case i  => rel.substring(0, i)
-        }
-        val dstDir = if (relDir.isEmpty) new Path(path) else new Path(path, relDir)
-        moves += ((p, new Path(dstDir, s"b-$tag-${p.getName}")))
-      }
-    }
-    moves.foreach { case (src, dst) =>
+    dataFiles(f, stage).foreach { p =>
+      val relDir = f.makeQualified(p.getParent).toString
+        .stripPrefix(stagePrefix).stripPrefix("/")
+      val dst = new Path(if (relDir.isEmpty) new Path(path) else new Path(path, relDir),
+        prefix + p.getName)
       f.mkdirs(dst.getParent)
-      if (!f.rename(src, dst))
-        throw new java.io.IOException(s"tagged append move failed: $src -> $dst")
+      move(f, p, dst)
     }
-    f.delete(stage, true)
-    spark.catalog.refreshByPath(path)
   }
 
   /** Revoke uncommitted appends: delete every `b-<tag>-` data file under
@@ -188,15 +219,8 @@ object Sinks {
         if (!committedTags.contains(tag)) { f.delete(st.getPath, true); purged += 1 }
       }
     }
-    val it = f.listFiles(root, true)
-    val doomed = scala.collection.mutable.ArrayBuffer.empty[Path]
-    while (it.hasNext) {
-      val p = it.next().getPath
-      TaggedName.findFirstMatchIn(p.getName).foreach { m =>
-        if (!committedTags.contains(m.group(1))) doomed += p
-      }
-    }
-    doomed.foreach { p => f.delete(p, false); purged += 1 }
+    dataFiles(f, root).filter(uncommitted(_, committedTags))
+      .foreach { p => f.delete(p, false); purged += 1 }
     if (purged > 0) spark.catalog.refreshByPath(path)
     purged
   }
@@ -213,33 +237,52 @@ object Sinks {
     * identical plan, partition discovery intact. */
   def readCommitted(spark: SparkSession, path: String,
                     committedTags: Set[String]): DataFrame = {
-    val f = fs(spark, path)
-    val root = new Path(path)
-    val keep = scala.collection.mutable.ArrayBuffer.empty[String]
-    var dirty = false
+    val (dirty, keep) = dataFiles(fs(spark, path), new Path(path))
+      .partition(uncommitted(_, committedTags))
+    if (dirty.isEmpty) spark.read.parquet(path)
+    else if (keep.isEmpty) spark.read.parquet(path).limit(0) // schema only
+    else spark.read.option("basePath", path).parquet(keep.map(_.toString): _*)
+  }
+
+  private def uncommitted(file: Path, committedTags: Set[String]): Boolean =
+    TaggedName.findFirstMatchIn(file.getName).exists(m => !committedTags(m.group(1)))
+
+  /** The parquet data files under `root`, recursively (one listing;
+    * `_`/`.` metadata files excluded). */
+  private def dataFiles(f: FileSystem, root: Path): Seq[Path] = {
     val it = f.listFiles(root, true)
+    val files = scala.collection.mutable.ArrayBuffer.empty[Path]
     while (it.hasNext) {
       val p = it.next().getPath
       val n = p.getName
-      if (n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")) {
-        TaggedName.findFirstMatchIn(n) match {
-          case Some(m) if !committedTags.contains(m.group(1)) => dirty = true
-          case _ => keep += p.toString
-        }
-      }
+      if (n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")) files += p
     }
-    if (!dirty) spark.read.parquet(path)
-    else if (keep.isEmpty) spark.read.parquet(path).limit(0) // schema only
-    else spark.read.option("basePath", path).parquet(keep.toSeq: _*)
+    files.toSeq
   }
 
-  /** Does a table exist at `path`? (One namenode call.) */
+  // ------------------------------------------------------------- ledgers
+
+  /** The batch ledger at `path` (empty when absent): committed batch ids,
+    * each with a count `n` its app defines. Read driver-side. */
+  def ledger(spark: SparkSession, path: String): Map[String, Long] =
+    if (!exists(spark, path)) Map.empty
+    else spark.read.parquet(path).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  /** Commit the caller's FULL ledger (its [[ledger]] read plus new
+    * batches) as one `(batch_id, n)` file: one [[overwriteSwap]], the
+    * atomic commit point of the batches it adds, then a refresh. */
+  def commitLedger(spark: SparkSession, path: String, entries: Map[String, Long]): Unit = {
+    import spark.implicits._
+    overwriteSwap(entries.toSeq.sortBy(_._1).toDF("batch_id", "n").coalesce(1), path)
+    spark.catalog.refreshByPath(path)
+  }
+
+  /** Does a table exist at `path`, after [[recover]]? (Namenode calls only.) */
   def exists(spark: SparkSession, path: String): Boolean =
     fs(spark, path).exists(new Path(path))
 
   /** The `col=value` partition directories of a partitioned table (one
-    * listing) — the unit [[compact]] runs over so only fragmented
-    * partitions pay a rewrite. */
+    * listing) — how [[compactPartitioned]] finds the partition column. */
   def partitionDirs(spark: SparkSession, path: String): Seq[String] = {
     val f = fs(spark, path)
     val root = new Path(path)
@@ -254,28 +297,21 @@ object Sinks {
   def dataFileCount(spark: SparkSession, path: String): Int = {
     val f = fs(spark, path)
     val root = new Path(path)
-    if (!f.exists(root)) return 0
-    var n = 0
-    val it = f.listFiles(root, true)
-    while (it.hasNext) {
-      val name = it.next().getPath.getName
-      if (name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")) n += 1
-    }
-    n
+    if (!f.exists(root)) 0 else dataFiles(f, root).size
   }
 
-  /** Small-file compaction: rewrite a table (or ONE partition directory of
-    * a partitioned table) into `ceil(rows / targetRowsPerFile)` files, with
-    * [[swapCommit]]'s crash guarantees. Incremental appends and streaming
-    * upserts fragment a table into per-batch files; at scale the resulting
-    * footer/open overhead dominates scans long before data volume does, so
-    * compaction is a scheduled maintenance pass, not an afterthought. The
-    * row count comes from parquet footers (no data scan); the rewrite is
-    * one round-robin repartition — no key shuffle, rows unchanged. Run it
-    * per PARTITION directory on partitioned tables so only fragmented
-    * partitions pay the rewrite. */
+  /** Small-file compaction: rewrite a table into
+    * `ceil(rows / targetRowsPerFile)` files, with [[swapCommit]]'s crash
+    * guarantees (partitioned tables: [[compactPartitioned]]). Incremental
+    * appends and streaming upserts fragment a table into per-batch files;
+    * at scale the resulting footer/open overhead dominates scans long
+    * before data volume does, so compaction is a scheduled maintenance
+    * pass, not an afterthought. The row count comes from parquet footers
+    * (no data scan); the rewrite is one round-robin repartition — no key
+    * shuffle, rows unchanged. */
   def compact(spark: SparkSession, path: String, targetRowsPerFile: Long): Unit = {
     require(targetRowsPerFile > 0, "targetRowsPerFile must be positive")
+    recover(spark, path)
     val df = spark.read.parquet(path)
     val rows = df.count()
     val nFiles = math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
@@ -284,30 +320,24 @@ object Sinks {
   }
 
   /** Compact a Hive-partitioned table in ONE pass (r17 — guide §6 "small
-    * files"): the per-partition-directory loop planned, counted, rewrote
-    * and swap-committed each `col=value` directory separately (~2 Spark
-    * jobs + a listing + a rename per directory — for a postings table
-    * with dozens of buckets that is the dominant cost of `maintain()`),
-    * where one partitioned read + `partitionBy` rewrite folds every
-    * directory in a single job and ONE atomic root swap. The hash
-    * repartition on the partition column lands each value in exactly one
-    * task, so each directory compacts to one file; directories whose row
-    * count exceeds `targetRowsPerFile` fall back to the per-directory
-    * path so the file-size contract holds (the per-partition row counts
-    * are one bounded aggregate over footer metadata). Structure — and
-    * therefore partition pruning — is preserved either way. */
+    * files"): one partitioned read, one `partitionBy` rewrite and ONE
+    * atomic root swap fold every `col=value` directory, where a
+    * per-directory loop would plan, count, rewrite and swap each one
+    * (~2 Spark jobs + a listing + a rename per directory — for a postings
+    * table with dozens of buckets the dominant cost of `maintain()`). The
+    * hash repartition on the partition column lands each value in exactly
+    * one task, and `maxRecordsPerFile` splits that task's output, so each
+    * directory compacts to `ceil(rows / targetRowsPerFile)` files.
+    * Structure — and therefore partition pruning — is preserved. */
   def compactPartitioned(spark: SparkSession, path: String,
                          targetRowsPerFile: Long): Unit = {
     require(targetRowsPerFile > 0, "targetRowsPerFile must be positive")
     val dirs = partitionDirs(spark, path)
     if (dirs.isEmpty) return
     val partCol = new Path(dirs.head).getName.split("=")(0)
-    val df = spark.read.parquet(path)
-    val oversized = df.groupBy(partCol).count()
-      .filter(col("count") > targetRowsPerFile).limit(1).count() > 0
-    if (!oversized) overwriteSwapPartitioned(
-      df.repartition(col(partCol)), path, partCol)
-    else dirs.foreach(d => compact(spark, d, targetRowsPerFile))
+    val df = spark.read.parquet(path).repartition(col(partCol))
+    replaceTable(spark, path)(df.write.mode("overwrite")
+      .option("maxRecordsPerFile", targetRowsPerFile).partitionBy(partCol).parquet(_))
     spark.catalog.refreshByPath(path)
   }
 
@@ -321,27 +351,20 @@ object Sinks {
     * (stations/weather/datetime); for a fact table partitioned on a date key
     * use [[upsertPartitioned]], which only rewrites touched partitions.
     */
-  def upsert(spark: SparkSession, path: String, updates: DataFrame, keys: Seq[String]): Unit = {
-    val f = fs(spark, path)
-    val merged =
-      if (f.exists(new Path(path))) Upsert.merge(spark.read.parquet(path), updates, keys)
-      else updates
-    overwriteSwap(merged, path)
-  }
+  def upsert(spark: SparkSession, path: String, updates: DataFrame, keys: Seq[String]): Unit =
+    overwriteSwap(
+      if (exists(spark, path)) Upsert.merge(spark.read.parquet(path), updates, keys)
+      else updates,
+      path)
 
   /** Hive-style partitioned overwrite: `<path>/<partCol>=<value>/...` via
     * `partitionBy`, with the same temp-write + swap commit as
     * [[overwriteSwap]]. The layout mirrors the reference's monthly raw-zone
     * folders (proc_0_ingestion_to_s3_dag.py:17) and is what makes
     * [[upsertPartitioned]] and partition-pruned reads possible. */
-  def overwriteSwapPartitioned(df: DataFrame, path: String, partCol: String): Unit = {
-    val spark = df.sparkSession
-    val f = fs(spark, path)
-    val tmp = new Path(path + ".__tmp")
-    f.delete(tmp, true)
-    df.write.mode("overwrite").partitionBy(partCol).parquet(tmp.toString)
-    swapCommit(f, tmp, new Path(path))
-  }
+  def overwriteSwapPartitioned(df: DataFrame, path: String, partCol: String): Unit =
+    replaceTable(df.sparkSession, path)(
+      df.write.mode("overwrite").partitionBy(partCol).parquet(_))
 
   /** Bucketed table write: pre-shuffle ONCE at write time into
     * `numBuckets` hash buckets on `bucketCol` (sorted within buckets), so
@@ -401,15 +424,6 @@ object Sinks {
     writeClusteredWithManifest(
       df.repartitionByRange(numFiles, col(statsCol)), path, Seq(statsCol))
 
-  /** Write an ALREADY-CLUSTERED frame with a min/max manifest over any
-    * set of stats columns. The caller picks the layout — range
-    * partitioning for 1-D predicates ([[writeWithManifest]]), a Z-order
-    * curve for multi-dimensional boxes
-    * ([[graft.operators.ZOrder.zOrdered]]) — and the manifest records
-    * `lo_<col>`/`hi_<col>` per data file for every stats column, so
-    * [[readSkipping]] can prune on any conjunction of ranges. How tight
-    * the per-file spans are (and so how much skipping buys) is exactly
-    * the quality of the chosen clustering. */
   /** Per-data-file min/max stats rows for a parquet dir — one scan, one
     * row per file (file identity is the basename, so the rows survive a
     * directory rename). */
@@ -423,17 +437,24 @@ object Sinks {
       .agg(aggs.head, aggs.tail: _*)
   }
 
+  /** Write an ALREADY-CLUSTERED frame with a min/max manifest over any
+    * set of stats columns. The caller picks the layout — range
+    * partitioning for 1-D predicates ([[writeWithManifest]]), a Z-order
+    * curve for multi-dimensional boxes
+    * ([[graft.operators.ZOrder.zOrdered]]) — and the manifest records
+    * `lo_<col>`/`hi_<col>` per data file for every stats column, so
+    * [[readSkipping]] can prune on any conjunction of ranges. How tight
+    * the per-file spans are (and so how much skipping buys) is exactly
+    * the quality of the chosen clustering. */
   def writeClusteredWithManifest(clustered: DataFrame, path: String,
                                  statsCols: Seq[String]): Unit = {
     require(statsCols.nonEmpty, "need at least one stats column")
     val spark = clustered.sparkSession
-    val f = fs(spark, path)
-    val tmp = new Path(path + ".__tmp")
-    f.delete(tmp, true)
-    clustered.write.mode("overwrite").parquet(tmp.toString)
-    fileStats(spark, tmp.toString, statsCols).coalesce(1)
-      .write.mode("overwrite").parquet(new Path(tmp, "_manifest").toString)
-    swapCommit(f, tmp, new Path(path))
+    replaceTable(spark, path) { tmp =>
+      clustered.write.mode("overwrite").parquet(tmp)
+      fileStats(spark, tmp, statsCols).coalesce(1)
+        .write.mode("overwrite").parquet(s"$tmp/_manifest")
+    }
   }
 
   /** Append a batch to a manifest-carrying table with SNAPSHOT semantics
@@ -452,7 +473,7 @@ object Sinks {
                          statsCols: Seq[String]): Unit = {
     val spark = batch.sparkSession
     val f = fs(spark, path)
-    require(f.exists(new Path(path, "_manifest")),
+    require(exists(spark, s"$path/_manifest"),
       s"$path has no _manifest — write it with writeWithManifest first")
     val stage = new Path(path + ".__stage")
     f.delete(stage, true)
@@ -462,13 +483,7 @@ object Sinks {
       // lineage still points at it via the union — materialize first
       .unionByName(spark.read.parquet(s"$path/_manifest"))
       .localCheckpoint(true)
-    val parts = f.listStatus(stage).map(_.getPath)
-      .filter(p => p.getName.endsWith(".parquet"))
-    parts.foreach { p =>
-      val dst = new Path(path, p.getName) // UUID part names: collision-free
-      if (!f.rename(p, dst))
-        throw new java.io.IOException(s"manifest append move failed: $p -> $dst")
-    }
+    moveIn(f, stage, path, prefix = "") // UUID part names: collision-free
     overwriteSwap(newStats.coalesce(1), s"$path/_manifest")
     f.delete(stage, true)
     spark.catalog.refreshByPath(path)
@@ -478,8 +493,10 @@ object Sinks {
     * repair/maintenance path after any operation that rewrote files
     * without manifest bookkeeping (e.g. [[compact]]). */
   def rebuildManifest(spark: SparkSession, path: String,
-                      statsCols: Seq[String]): Unit =
+                      statsCols: Seq[String]): Unit = {
+    recover(spark, path)
     overwriteSwap(fileStats(spark, path, statsCols).coalesce(1), s"$path/_manifest")
+  }
 
   /** Data-skipping range read over a manifest-carrying table: reads the
     * manifest (one row per data file — the ONLY driver-side
@@ -502,25 +519,17 @@ object Sinks {
     } else spark.read.parquet(files: _*).filter(pred)
   }
 
-  /** 1-D convenience overload. */
-  def readSkipping(spark: SparkSession, path: String, statsCol: String,
-                   lo: Any, hi: Any): DataFrame =
-    readSkipping(spark, path, Seq((statsCol, lo, hi)))
-
   /** The surviving file paths for a skipping read — split out so tests
     * (and curious operators) can assert how much was pruned. */
   def skippingFiles(spark: SparkSession, path: String,
-                    ranges: Seq[(String, Any, Any)]): Seq[String] =
+                    ranges: Seq[(String, Any, Any)]): Seq[String] = {
+    recover(spark, s"$path/_manifest")
     spark.read.parquet(s"$path/_manifest")
       .filter(ranges.map { case (c, lo, hi) =>
         col(s"hi_$c") >= lit(lo) && col(s"lo_$c") <= lit(hi)
       }.reduce(_ && _))
       .select(col("file")).collect().map(r => s"$path/${r.getString(0)}").toSeq
-
-  /** 1-D convenience overload. */
-  def skippingFiles(spark: SparkSession, path: String,
-                    lo: Any, hi: Any, statsCol: String): Seq[String] =
-    skippingFiles(spark, path, Seq((statsCol, lo, hi)))
+  }
 
   /** S7 at scale: keyed UPSERT into a table partitioned on `partCol`, that
     * rewrites ONLY the partitions the update batch touches. A weekly merge
@@ -534,52 +543,67 @@ object Sinks {
     * the old partition would survive; that needs a key→partition index and
     * is out of scope for a date-partitioned fact.
     *
-    * Mechanics: (1) partition-pruned read of the target restricted to the
-    * touched partition values (the pruning predicate is `partCol IN
-    * (<touched>)`, pushed to the directory listing — untouched partitions
-    * are never even read); (2) keyed merge of just those rows with the
-    * batch; (3) write the merged touched partitions to a temp dir with
-    * `partitionBy`; (4) swap each written `partCol=value` directory into the
-    * target individually. Commit is atomic PER PARTITION (two renames), the
+    * Mechanics ([[replacePartitions]]): a partition-pruned read of just the
+    * touched partitions (untouched partitions are never even listed), a
+    * keyed merge of those rows with the batch, a `partitionBy` write to a
+    * temp dir, and a swap of each rewritten partition. Commit is atomic
+    * PER PARTITION (two renames: the live dir aside, the rewrite in), the
     * same granularity Hive/Spark dynamic partition overwrite provides; a
     * mid-loop crash leaves each partition either fully old or fully new,
-    * and re-running the batch converges (the merge is idempotent).
-    *
-    * The touched-partition value list is collected driver-side: it is
-    * bounded by the number of DISTINCT partition values in one batch (days
-    * in a week), not by data size. */
+    * [[recover]] puts back a partition whose swap was cut between its two
+    * renames, and re-running the batch converges (the merge is
+    * idempotent). A ledger recording the batch afterwards
+    * ([[commitLedger]]) is itself a whole-table swap. */
   def upsertPartitioned(spark: SparkSession, path: String, updates: DataFrame,
-                        keys: Seq[String], partCol: String): Unit = {
+                        keys: Seq[String], partCol: String): Unit =
+    if (!exists(spark, path)) overwriteSwapPartitioned(updates, path, partCol)
+    else replacePartitions(spark, path, partCol, updates)(existing =>
+      // partition col read-reordered to the end
+      Upsert.merge(existing.select(updates.columns.map(col): _*), updates, keys))
+
+  /** The one partition replace: `rewrite` the partitions `batch` touches
+    * (a pruned read) into `<path>.__tmp`, then per dir the rewrite produced
+    * or the batch touched, move the live dir to `<path>.__old_parts/` and
+    * the rewrite (if any) in — a touched partition left empty is dropped.
+    * The touched values are collected driver-side: bounded by the
+    * DISTINCT partition values of one batch (days in a week). */
+  private def replacePartitions(spark: SparkSession, path: String, partCol: String,
+                                batch: DataFrame)(rewrite: DataFrame => DataFrame): Unit = {
     val f = fs(spark, path)
-    val dst = new Path(path)
-    if (!f.exists(dst)) { overwriteSwapPartitioned(updates, path, partCol); return }
-    // bounded: distinct partition values of ONE batch (e.g. 7 days/week)
-    val touched = updates.select(partCol).distinct().collect().map(_.get(0))
+    val touched = batch.select(partCol).distinct().collect().map(_.get(0))
+    if (touched.isEmpty) return
     // NULL partition values land in the default partition dir; `isin` never
-    // matches NULL, so without the explicit isNull arm a batch touching the
-    // null partition would fail to read its existing rows and the swap
-    // would silently drop them
-    val (nullTouched, nonNull) = touched.partition(_ == null)
+    // matches NULL, so without the isNull arm the null partition's existing
+    // rows would not be read and its swap would drop them
+    val (nulls, values) = touched.partition(_ == null)
     val pruning =
-      if (nullTouched.isEmpty) col(partCol).isin(nonNull: _*)
-      else if (nonNull.isEmpty) col(partCol).isNull
-      else col(partCol).isin(nonNull: _*) || col(partCol).isNull
-    val existing = spark.read.parquet(path)
-      .filter(pruning)
-      .select(updates.columns.map(col): _*) // partition col read-reordered to the end
-    val merged = Upsert.merge(existing, updates, keys)
+      if (nulls.isEmpty) col(partCol).isin(values: _*)
+      else col(partCol).isin(values: _*) || col(partCol).isNull
     val tmp = new Path(path + ".__tmp")
     f.delete(tmp, true)
-    merged.write.mode("overwrite").partitionBy(partCol).parquet(tmp.toString)
-    // swap exactly the partition dirs the merged write produced
-    f.listStatus(tmp).filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol="))
-      .foreach { s =>
-        val target = new Path(dst, s.getPath.getName)
-        f.delete(target, true)
-        if (!f.rename(s.getPath, target))
-          throw new java.io.IOException(s"partition swap failed: ${s.getPath} -> $target")
-      }
+    rewrite(spark.read.parquet(path).filter(pruning))
+      .write.mode("overwrite").partitionBy(partCol).parquet(tmp.toString)
+    val produced = f.listStatus(tmp)
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol="))
+      .map(_.getPath.getName).toSet
+    val touchedDirs = touched.map { v =>
+      // the exact escaping Spark's file committer uses for partition dirs
+      val enc = if (v == null) "__HIVE_DEFAULT_PARTITION__"
+                else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+                  .escapePathName(v.toString)
+      s"$partCol=$enc"
+    }
+    val dst = new Path(path)
+    val parts = partsBackup(dst)
+    f.mkdirs(parts)
+    (produced ++ touchedDirs).foreach { name =>
+      val live = new Path(dst, name)
+      if (f.exists(live)) move(f, live, new Path(parts, name))
+      if (produced(name)) move(f, new Path(tmp, name), live)
+    }
+    f.delete(parts, true)
     f.delete(tmp, true)
+    spark.catalog.refreshByPath(path)
   }
 
   /** Versioned snapshot write — time travel for a parquet table, the
@@ -605,18 +629,27 @@ object Sinks {
     val tmp = new Path(path + s".__tmp_v$next")
     f.delete(tmp, true)
     df.write.mode("overwrite").parquet(tmp.toString)
-    val vdir = new Path(dst, f"v=$next%05d")
-    if (!f.rename(tmp, vdir))
-      throw new java.io.IOException(s"snapshot commit failed: $tmp -> $vdir")
+    move(f, tmp, new Path(dst, f"v=$next%05d"))
     val mTmp = new Path(dst, "_latest.__tmp")
     val out = f.create(mTmp, true)
     out.write(next.toString.getBytes("UTF-8"))
     out.close()
     val marker = new Path(dst, "_latest")
     f.delete(marker, false)
-    if (!f.rename(mTmp, marker))
-      throw new java.io.IOException(s"snapshot marker commit failed: $marker")
+    move(f, mTmp, marker)
     next
+  }
+
+  /** The version a snapshot table's `_latest` marker names, if it has one. */
+  private def latestMarker(f: FileSystem, dst: Path): Option[Int] = {
+    val marker = new Path(dst, "_latest")
+    if (!f.exists(marker)) None
+    else {
+      val in = f.open(marker)
+      try Some(new String(
+        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8").trim.toInt)
+      finally in.close()
+    }
   }
 
   /** Committed snapshot versions at `path`, ascending (directory listing —
@@ -652,16 +685,7 @@ object Sinks {
     val dst = new Path(path)
     if (!f.exists(dst)) return Seq.empty
     val versions = snapshotVersions(spark, path)
-    val marker = new Path(dst, "_latest")
-    val latestRef: Option[Int] =
-      if (!f.exists(marker)) None
-      else {
-        val in = f.open(marker)
-        try Some(new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8").trim.toInt)
-        finally in.close()
-      }
-    val keepSet = versions.takeRight(keep).toSet ++ latestRef
+    val keepSet = versions.takeRight(keep).toSet ++ latestMarker(f, dst)
     val expired = versions.filterNot(keepSet)
     expired.foreach(v => f.delete(new Path(dst, f"v=$v%05d"), true))
     val parent = dst.getParent
@@ -677,18 +701,11 @@ object Sinks {
     * highest version directory when the marker is missing, e.g. a table
     * mid-first-commit). */
   def readSnapshot(spark: SparkSession, path: String, version: Int = 0): DataFrame = {
-    val f = fs(spark, path)
     val v =
       if (version > 0) version
-      else {
-        val marker = new Path(path, "_latest")
-        if (f.exists(marker)) {
-          val in = f.open(marker)
-          try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8").trim.toInt
-          finally in.close()
-        } else snapshotVersions(spark, path).lastOption.getOrElse(
-          throw new java.io.FileNotFoundException(s"no committed snapshot at $path"))
-      }
+      else latestMarker(fs(spark, path), new Path(path))
+        .orElse(snapshotVersions(spark, path).lastOption)
+        .getOrElse(throw new java.io.FileNotFoundException(s"no committed snapshot at $path"))
     spark.read.parquet(new Path(path, f"v=$v%05d").toString)
   }
 
@@ -701,6 +718,7 @@ object Sinks {
     * rewrite. For date-partitioned facts prefer [[deletePartitioned]]. */
   def deleteByKey(spark: SparkSession, path: String, victims: DataFrame,
                   keys: Seq[String]): Unit = {
+    recover(spark, path)
     val remaining = spark.read.parquet(path)
       .join(victims.select(keys.map(col): _*).distinct(), keys, "left_anti")
     overwriteSwap(remaining, path)
@@ -709,48 +727,14 @@ object Sinks {
 
   /** [[deleteByKey]] at fact scale: the victim batch carries the partition
     * column, so only TOUCHED partitions are read, anti-joined, and swapped
-    * — a deletion request against a 100 TB date-partitioned fact costs a
-    * handful of partition rewrites. Same per-partition atomic-swap commit
-    * and same bounded driver-side touched-value list as
-    * [[upsertPartitioned]]; a partition whose rows are ALL deleted is
-    * removed rather than left as an empty directory. */
+    * ([[replacePartitions]]) — a deletion request against a 100 TB
+    * date-partitioned fact costs a handful of partition rewrites, with
+    * [[upsertPartitioned]]'s per-partition atomic swap. A partition whose
+    * rows are ALL deleted is removed rather than left as an empty
+    * directory. */
   def deletePartitioned(spark: SparkSession, path: String, victims: DataFrame,
-                        keys: Seq[String], partCol: String): Unit = {
-    val f = fs(spark, path)
-    val dst = new Path(path)
-    if (!f.exists(dst)) return
-    val touched = victims.select(partCol).distinct().collect().map(_.get(0))
-    if (touched.isEmpty) return
-    val (nullTouched, nonNull) = touched.partition(_ == null)
-    val pruning =
-      if (nullTouched.isEmpty) col(partCol).isin(nonNull: _*)
-      else if (nonNull.isEmpty) col(partCol).isNull
-      else col(partCol).isin(nonNull: _*) || col(partCol).isNull
-    val remaining = spark.read.parquet(path).filter(pruning)
-      .join(victims.select(keys.map(col): _*).distinct(), keys, "left_anti")
-    val tmp = new Path(path + ".__tmp")
-    f.delete(tmp, true)
-    remaining.write.mode("overwrite").partitionBy(partCol).parquet(tmp.toString)
-    val rewritten = f.listStatus(tmp)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol="))
-      .map(_.getPath.getName).toSet
-    // every touched partition is replaced by its rewrite, or dropped when
-    // nothing survived (the rewrite produced no dir for it)
-    val touchedDirs = touched.map { v =>
-      // the exact escaping Spark's file committer uses for partition dirs
-      val enc = if (v == null) "__HIVE_DEFAULT_PARTITION__"
-                else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-                  .escapePathName(v.toString)
-      s"$partCol=$enc"
-    }.toSet
-    touchedDirs.foreach { name =>
-      val target = new Path(dst, name)
-      f.delete(target, true)
-      if (rewritten.contains(name) &&
-          !f.rename(new Path(tmp, name), target))
-        throw new java.io.IOException(s"partition swap failed: $name")
-    }
-    f.delete(tmp, true)
-    spark.catalog.refreshByPath(path)
-  }
+                        keys: Seq[String], partCol: String): Unit =
+    if (exists(spark, path))
+      replacePartitions(spark, path, partCol, victims)(
+        _.join(victims.select(keys.map(col): _*).distinct(), keys, "left_anti"))
 }

@@ -31,14 +31,7 @@ import org.apache.spark.sql.functions._
   * batches, an incrementally-built index serves BIT-IDENTICAL scores
   * to a from-scratch build — there is no drift caveat here, unlike the
   * ANN quantizers. */
-object TextIndex {
-
-  /** Default postings-bucket count. A FIXTURE-SCALE pin: production
-    * sizes this so one bucket directory holds ~a few GB of postings
-    * (vocab and corpus dependent). [[buildFrom]] takes it as a knob and
-    * persists the chosen value in `meta/`, so readers always probe with
-    * the count the index was WRITTEN with. */
-  private[graft] val Buckets = 16
+object TextIndex extends Md5Buckets {
 
   /** Root of the FULL-corpus index for `dir`, building on first use. */
   def path(s: SparkSession, dir: String): String =
@@ -53,25 +46,6 @@ object TextIndex {
       build(s, docs.filter(col("doc_id") % 5 =!= 2), out)
       append(s, out, docs.filter(col("doc_id") % 5 === 2))
     }
-
-  /** The term's partition bucket — first 8 md5 hex chars as a long,
-    * mod the index's bucket count; [[bucketOf]] is the identical
-    * driver-side form. */
-  private def bucketCol(tok: org.apache.spark.sql.Column, buckets: Int) =
-    conv(substring(md5(tok), 1, 8), 16, 10).cast("long") % buckets
-
-  /** Driver-side twin of [[bucketCol]] for probe planning. */
-  private[graft] def bucketOf(term: String, buckets: Int = Buckets): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(term.getBytes("UTF-8"))
-    val hex = d.take(4).map(b => f"$b%02x").mkString
-    java.lang.Long.parseLong(hex, 16) % buckets
-  }
-
-  /** The bucket count the index at `root` was written with. */
-  private[graft] def bucketsOf(s: SparkSession, root: String): Int =
-    if (!Sinks.exists(s, s"$root/meta")) Buckets
-    else s.read.parquet(s"$root/meta").head().getAs[Int]("n_buckets")
 
   private def postingsOf(docs: DataFrame): DataFrame = {
     val toks = split(lower(col("text")), " ")

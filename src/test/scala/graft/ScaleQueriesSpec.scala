@@ -176,19 +176,19 @@ class ScaleQueriesSpec extends AnyFunSuite with SharedSpark {
       .count(f => f.getName.endsWith(".parquet"))
     assert(total >= 8, s"range clustering produced too few files: $total")
     // a ~1/15th key range must touch at most 2 of the range-disjoint files
-    val narrow = Sinks.skippingFiles(spark, dir, 400L, 499L, "o_orderkey")
+    val narrow = Sinks.skippingFiles(spark, dir, Seq(("o_orderkey", 400L, 499L)))
     assert(narrow.nonEmpty && narrow.size <= 2,
       s"narrow range read ${narrow.size} of $total files")
     // the skipping read returns exactly the full-scan answer
-    val got = Sinks.readSkipping(spark, dir, "o_orderkey", 400L, 499L)
+    val got = Sinks.readSkipping(spark, dir, Seq(("o_orderkey", 400L, 499L)))
       .orderBy("o_orderkey").collect().toSeq
     val want = spark.read.parquet(s"$sf/orders.parquet")
       .filter(col("o_orderkey").between(400L, 499L))
       .orderBy("o_orderkey").collect().toSeq
     assert(got == want)
     // a range outside the table prunes everything and still answers
-    assert(Sinks.skippingFiles(spark, dir, -100L, -1L, "o_orderkey").isEmpty)
-    assert(Sinks.readSkipping(spark, dir, "o_orderkey", -100L, -1L).count() == 0)
+    assert(Sinks.skippingFiles(spark, dir, Seq(("o_orderkey", -100L, -1L))).isEmpty)
+    assert(Sinks.readSkipping(spark, dir, Seq(("o_orderkey", -100L, -1L))).count() == 0)
   }
 
   test("q136: z-order + multi-column manifest prunes on BOTH dimensions") {

@@ -34,6 +34,21 @@ class SinksSpec extends AnyFunSuite with SharedSpark {
     assert(!new java.io.File(path + ".__old").exists())
   }
 
+  test("upsert: a crash between the swap's two renames loses no committed row") {
+    val path = s"$tmpDir/t"
+    Sinks.upsert(spark, path, Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v"), Seq("k"))
+    val batch = Seq((4, "d")).toDF("k", "v")
+    // the tmp -> path rename fails: path is gone, its backup is at .__old
+    CrashingFs.around(spark, failAt = Some(path)) {
+      intercept[java.io.IOException](Sinks.upsert(spark, path, batch, Seq("k")))
+    }
+    assert(!new java.io.File(path).exists() && new java.io.File(path + ".__old").exists())
+    Sinks.upsert(spark, path, batch, Seq("k"))
+    assert(spark.read.parquet(path).sort("k").as[(Int, String)].collect().toSeq ==
+      Seq((1, "a"), (2, "b"), (3, "c"), (4, "d")))
+    assert(!new java.io.File(path + ".__old").exists())
+  }
+
   test("compact shrinks the file count without changing a row") {
     val path = s"$tmpDir/t"
     // 8 one-row appends -> at least 8 part files (fragmented table)
@@ -158,7 +173,7 @@ class SinksSpec extends AnyFunSuite with SharedSpark {
     val after = Sinks.skippingFiles(spark, path, Seq(("k", 1L, 2000L))).size
     assert(after > before, s"manifest did not grow: $before -> $after")
     // rows from BOTH vintages come back, exactly
-    val got = Sinks.readSkipping(spark, path, "k", 850L, 950L)
+    val got = Sinks.readSkipping(spark, path, Seq(("k", 850L, 950L)))
       .orderBy("k").as[(Long, String)].collect().toSeq
     assert(got == (850L to 950L).map(i => (i, s"v$i")))
     // the appended range alone is served from the new files only
@@ -169,7 +184,7 @@ class SinksSpec extends AnyFunSuite with SharedSpark {
     // swap drops the old _manifest with the rest of the dir)
     Sinks.compact(spark, path, targetRowsPerFile = 400L)
     Sinks.rebuildManifest(spark, path, Seq("k"))
-    val all = Sinks.readSkipping(spark, path, "k", 1L, 1000L).count()
+    val all = Sinks.readSkipping(spark, path, Seq(("k", 1L, 1000L))).count()
     assert(all == 1000L)
   }
 
@@ -208,6 +223,24 @@ class SinksSpec extends AnyFunSuite with SharedSpark {
     val rows = spark.read.parquet(path).select("rid", "v").sort("rid")
       .as[(Long, Int)].collect().toSeq
     assert(rows == Seq((1L, 10), (2L, 20), (3L, 30)))
+  }
+
+  test("upsertPartitioned: a crash inside one partition's swap loses no committed row") {
+    val path = s"$tmpDir/fact"
+    def batch(rows: (Long, String, Int)*) =
+      rows.toDF("rid", "d", "v").withColumn("d", col("d").cast("date"))
+    Sinks.upsertPartitioned(spark, path,
+      batch((1L, "2021-01-04", 10), (2L, "2021-01-05", 20), (3L, "2021-01-05", 30)),
+      Seq("rid"), "d")
+    // the next batch touches Jan 5, which the first one wrote; the rename
+    // of its rewrite into the table fails
+    val next = batch((4L, "2021-01-05", 40))
+    CrashingFs.around(spark, failAt = Some(s"$path/d=2021-01-05")) {
+      intercept[java.io.IOException](Sinks.upsertPartitioned(spark, path, next, Seq("rid"), "d"))
+    }
+    Sinks.upsertPartitioned(spark, path, next, Seq("rid"), "d")
+    assert(spark.read.parquet(path).select("rid").sort("rid").as[Long].collect().toSeq ==
+      Seq(1L, 2L, 3L, 4L))
   }
 
   test("upsertPartitioned: rerunning the same batch is a no-op (idempotence)") {

@@ -30,6 +30,10 @@ class StarSchemaSpec extends AnyFunSuite with SharedSpark {
     w
   }
 
+  /** Every table's rows, keyed by its path under the warehouse. */
+  private def byTable(w: String): Map[String, Set[String]] =
+    tableRows(w).map { case (p, rows) => p.stripPrefix(w) -> rows }
+
   private def tableRows(w: String): Map[String, Set[String]] =
     Seq(StarSchema.factJourney(w), StarSchema.dimStation(w),
       StarSchema.dimWeather(w), StarSchema.dimDatetime(w)).map { p =>
@@ -214,5 +218,43 @@ class StarSchemaSpec extends AnyFunSuite with SharedSpark {
     assert(StarSchema.catchup(spark, w, raw) == Seq("2021-01-18"))
     def byTable(wh: String) = tableRows(wh).map { case (p, rows) => p.stripPrefix(wh) -> rows }
     assert(byTable(w) == byTable(clean))
+  }
+
+  test("crash matrix: a crash at any commit rename of a catchup week converges on re-run") {
+    val t0 = System.nanoTime()
+    val body = fixtureLines.tail
+    // week 2 re-delivers two rows of week 1 (Jan 22-23) and adds two new
+    // days, so its fact merge both replaces and adds partitions
+    val week1 = "2021-01-18" -> body.take(12)
+    val week2 = "2021-01-25" -> body.slice(10, 14)
+    val base = initWarehouse()
+    assert(StarSchema.catchup(spark, base, rawZone(week1)) == Seq(week1._1))
+    val raw = rawZone(week1, week2)
+    def copyOfBase(): String = {
+      val w = Files.createTempDirectory("graft-star").toString
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(base), new java.io.File(w))
+      w
+    }
+    val clean = copyOfBase()
+    val renames = CrashingFs.around(spark, failAt = None) {
+      assert(StarSchema.catchup(spark, clean, raw) == Seq(week2._1))
+    }.map(_.stripPrefix(clean))
+    renames.foreach { at =>
+      val w = copyOfBase()
+      CrashingFs.around(spark, failAt = Some(w + at)) {
+        intercept[java.io.IOException](StarSchema.catchup(spark, w, raw))
+      }
+      assert(StarSchema.catchup(spark, w, raw) == Seq(week2._1), s"crash at $at")
+      assert(byTable(w) == byTable(clean), s"tables diverged after a crash at $at")
+      assert(StarSchema.ingestedDates(spark, w) == Set(week1._1, week2._1), s"crash at $at")
+      val r = StarSchema.integrityReport(spark, w).collect().head
+      (0 until r.length).foreach { i =>
+        assert(r.getLong(i) == 0L, s"${r.schema.fieldNames(i)} nonzero after a crash at $at")
+      }
+    }
+    // dim_station, dim_datetime and the ledger: backup + swap-in each;
+    // the fact: backup + swap-in per replaced day, swap-in per new day
+    assert(renames.size == 12, renames.mkString("\n"))
+    info(f"${renames.size} crash points in ${(System.nanoTime() - t0) / 1e9}%.1f s")
   }
 }
