@@ -19,7 +19,7 @@ object StarSchemaApp {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: StarSchemaApp <warehouseDir> [rawWeeklyDir]")
     val warehouse = args(0)
-    val fx = "/root/repo/fixtures"
+    val fx = graft.sources.Tables.fixtureDir
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
       .config("spark.sql.shuffle.partitions",

@@ -59,10 +59,11 @@ import org.apache.spark.sql.functions._
   *    its own compressed interlaced output) and [[bmpGray]] walks the
   *    aligned BGR rows; both emit integer BT.601 luma rasters that feed
   *    the perceptual-hash dedup stage ([[imagePhash]] /
-  *    [[imageNearDupPairs]]). [[jpegGray]] runs a baseline-sequential
-  *    JPEG decoder (Huffman entropy decode, dequantization and a PINNED
-  *    integer IDCT — lossy decoders may round differently, so the
-  *    oracle replays exactly this IDCT, [[IdctK]]). Payloads that are
+  *    [[imageNearDupPairs]]). [[jpegGray]] runs one JPEG decoder for
+  *    baseline and progressive frames (Huffman entropy decode,
+  *    dequantization and a PINNED integer IDCT — lossy decoders may
+  *    round differently, so the oracle replays exactly this IDCT,
+  *    [[IdctK]]). Payloads that are
   *    no recognized container at all route
   *    to a FIXTURE codec (u16-BE dims header + byte checksum) standing
   *    in for an ffmpeg/ImageIO call so the byte-level path is still
@@ -1018,11 +1019,16 @@ object Multimodal {
       pos += 2
       m
     }
-    /** Current byte offset — where the NEXT byte would be read. After a
-      * scan's last block the entropy stream has stopped at (or just
-      * before) the next marker; the progressive multi-scan walk resumes
-      * its segment parse from here. */
-    def bytePos: Int = pos
+    /** Offset of the next marker (an FF not followed by a stuffed 00) at
+      * or after the reader position, -1 if none: after a scan's last
+      * block the progressive multi-scan walk resumes its segment parse
+      * there, past any padding bits. */
+    def nextMarker(): Int = {
+      var j = pos
+      while (j + 1 < p.length &&
+        !((p(j) & 0xff) == 0xff && (p(j + 1) & 0xff) != 0x00)) j += 1
+      if (j + 1 >= p.length) -1 else j
+    }
     /** `size` raw bits MSB-first (the RECEIVE of F.2.2.4); -1 when the
       * stream ends. size = 0 returns 0. */
     def receive(size: Int): Int = {
@@ -1035,26 +1041,20 @@ object Multimodal {
     }
   }
 
-  /** REAL baseline-sequential JPEG decode to a grayscale raster:
-    * marker-segment walk (SOI, DQT, SOF0, DHT, DRI, SOS), Huffman
-    * entropy decode (DC difference coding with RECEIVE/EXTEND, AC
-    * run-length with EOB and ZRL, byte stuffing, restart markers),
-    * dequantization, de-zigzag, and the PINNED integer IDCT above.
-    * Supported layouts: 8-bit precision, non-progressive, grayscale
-    * (one component) or interleaved YCbCr with luma sampling factors in
-    * {1,2} per axis — 4:4:4 (1×1), 4:2:0 (2×2, four Y blocks per MCU),
-    * 4:2:2 (2×1), 4:4:0 (1×2) — chroma always 1×1: the real-world
-    * shapes. Color decodes take the FAST-LUMA path: chroma blocks are
-    * entropy-decoded (the interleaved stream cannot be advanced
-    * otherwise — per-component Huffman/quant selectors honored) but
-    * never dequantized or IDCT'd, because luma is the only plane the
-    * perceptual stack consumes; the decoded raster IS the Y plane.
-    * SOF2/other samplings/anything malformed yields None (never
-    * garbage pixels). Huffman and quantization
-    * tables are read from the FILE's DHT/DQT segments, not assumed.
-    * Same allocation guards as the other decoders: declared dims are
-    * bounded by the pixel cap and by the entropy payload (a block costs
-    * ≥ 2 bits, so a stream of L bytes bounds blocks by 4L). */
+  /** EXTEND (ISO/IEC 10918-1 F.2.2.1): the `size`-bit RECEIVE value `v`
+    * as a signed coefficient. */
+  @inline private def extend(v: Int, size: Int): Int =
+    if (v < (1 << (size - 1))) v - (1 << size) + 1 else v
+
+  /** REAL JPEG decode to a grayscale raster in display orientation:
+    * [[jpegDecode]] (baseline SOF0 and progressive SOF2 frames, grayscale,
+    * YCbCr at 4:4:4/4:2:0/4:2:2/4:4:0 or Adobe CMYK/YCCK) on its
+    * FAST-LUMA path — chroma is entropy-decoded but never dequantized or
+    * IDCT'd, so for YCbCr the decoded raster IS the Y plane — then the
+    * EXIF orientation fold. Other frame types, samplings and anything
+    * malformed yield None (never garbage pixels); declared dims are
+    * bounded by the pixel cap, and baseline dims also by the entropy
+    * payload (a block costs ≥ 2 bits, so L bytes bound blocks by 4L). */
   private[graft] def jpegGray(p: Array[Byte]): Option[(Int, Int, Array[Int])] =
     jpegDecode(p, wantChroma = false).map { d =>
       orientRaster(d.w, d.h, d.y, jpegExifOrientation(p))
@@ -1178,219 +1178,116 @@ object Multimodal {
       // upsample machinery does not apply to 4-component Adobe files
       r: Array[Int] = null, g: Array[Int] = null, b: Array[Int] = null)
 
+  /** The one JPEG frame decoder behind [[jpegGray]] and [[jpegRgb]]: one
+    * marker-segment walk (SOI, DQT, DHT, DRI, APP14, SOF0/SOF2, SOS,
+    * EOI; APPn/COM skipped), Huffman entropy decode per scan kind,
+    * dequantization + de-zigzag and the PINNED integer IDCT ([[IdctK]])
+    * per block. Huffman and quantization tables are read from the FILE's
+    * DHT/DQT segments, not assumed. Malformed anything yields None, never
+    * garbage pixels.
+    *
+    * Frames: 8-bit precision, luma sampling factors in {1,2} per axis —
+    * 4:4:4 (1×1), 4:2:0 (2×2), 4:2:2 (2×1), 4:4:0 (1×2) — chroma always
+    * 1×1, grayscale 1×1. Every other SOFn (extended, lossless,
+    * arithmetic) yields None.
+    *  - SOF0 (baseline sequential): 1, 3 or 4 components in exactly one
+    *    full-spectrum interleaved scan, its components taken in frame
+    *    order. Each block is dequantized and IDCT'd as soon as it is
+    *    decoded (no coefficient buffer), and the frame is complete at the
+    *    end of that scan — EOI is not required. A 4-component file is
+    *    Adobe CMYK (APP14 transform 0) or YCCK (transform 2), 1×1
+    *    everywhere; any other transform is refused (never guessed ink
+    *    semantics). Allocation guards: declared dims are bounded by
+    *    [[GrayPixelCap]] and by the entropy payload (a block costs ≥ 2
+    *    bits, so a stream of L bytes bounds blocks by 4L).
+    *  - SOF2 (progressive, ISO/IEC 10918-1 Annex G): 1 or 3 components,
+    *    spectral selection + successive approximation (DC first/refine,
+    *    AC first/refine with EOBRUN and the correction-bit protocol).
+    *    Coefficients accumulate per component in zigzag order across
+    *    scans and are dequantized + IDCT'd once at EOI (required) — so
+    *    progressive pixels are BIT-IDENTICAL to a baseline encoding of
+    *    the same quantized coefficients.
+    *
+    * Interleaved scans (Ns > 1) walk the frame MCU grid — h×v blocks per
+    * component per MCU including the right/bottom PADDING blocks
+    * (entropy-coded, they advance the DC predictors, cropped on output);
+    * one-component scans walk that component's REAL block raster
+    * (ISO 10918-1 A.2). Restart intervals count these same units; an RSTn
+    * resets the DC predictors and the EOB run. FAST LUMA: chroma is always
+    * entropy-decoded (the stream cannot be advanced otherwise) but only
+    * dequantized/IDCT'd under `wantChroma` — luma is the only plane the
+    * perceptual stack consumes. A 4-component file reconstructs every
+    * plane regardless: its luma needs the full ink transform. */
   private[graft] def jpegDecode(p: Array[Byte],
                                 wantChroma: Boolean): Option[JpegPlanes] = {
     if (p.length < 4 || (p(0) & 0xff) != 0xff || (p(1) & 0xff) != 0xd8) return None
     val qt = new Array[Array[Int]](4)
     val dcTabs = new Array[JpegHuff](4)
     val acTabs = new Array[JpegHuff](4)
-    var w = -1; var h = -1
-    var nf = 0
-    val compHV = new Array[Int](4)
+    var sof = -1 // frame marker: 0xc0 sequential, 0xc2 progressive
+    var w = -1; var h = -1; var nf = 0
+    val compId = new Array[Int](4)
+    val compH = new Array[Int](4) // horizontal sampling factor
+    val compV = new Array[Int](4) // vertical sampling factor
     val compTq = new Array[Int](4)
     val compDc = new Array[Int](4)
     val compAc = new Array[Int](4)
     var adobeTransform = -1 // APP14 color-transform byte; -1 = absent
     var restartInterval = 0
-    var dataStart = -1
-    var i = 2
-    while (dataStart < 0) {
-      if (i + 1 >= p.length || (p(i) & 0xff) != 0xff) return None
-      var j = i + 1
-      while (j < p.length && (p(j) & 0xff) == 0xff) j += 1
-      if (j >= p.length) return None
-      val marker = p(j) & 0xff
-      if (marker == 0x01 || (marker >= 0xd0 && marker <= 0xd7)) i = j + 1
-      else if (marker == 0xd9) return None // EOI before SOS
-      else {
-        if (j + 2 >= p.length) return None
-        val len = u16be(p, j + 1)
-        if (len < 2 || j + 1 + len > p.length) return None
-        val s = j + 3 // segment body start
-        val e = j + 1 + len
-        marker match {
-          case 0xdb => // DQT: one or more (Pq<<4|Tq, 64 entries)
-            var o = s
-            while (o < e) {
-              val pq = (p(o) & 0xff) >> 4; val tq = (p(o) & 0xff) & 15
-              if (pq != 0 || tq > 3 || o + 65 > e) return None
-              qt(tq) = Array.tabulate(64)(z => p(o + 1 + z) & 0xff)
-              o += 65
-            }
-          case 0xc4 => // DHT: one or more (Tc<<4|Th, bits[16], vals)
-            var o = s
-            while (o < e) {
-              val tc = (p(o) & 0xff) >> 4; val th = (p(o) & 0xff) & 15
-              if (tc > 1 || th > 3 || o + 17 > e) return None
-              val bits = Array.tabulate(16)(l => p(o + 1 + l) & 0xff)
-              val n = bits.sum
-              if (n == 0 || n > 256 || o + 17 + n > e) return None
-              // canonicity: the running code counter must never overflow
-              // its length (an overfull table would decode garbage symbols)
-              var cc = 0; var l = 0
-              while (l < 16) {
-                cc += bits(l)
-                if (cc > (1 << (l + 1))) return None
-                cc <<= 1
-                l += 1
-              }
-              val vals = Array.tabulate(n)(k => p(o + 17 + k) & 0xff)
-              val tab = new JpegHuff(bits, vals)
-              if (tc == 0) dcTabs(th) = tab else acTabs(th) = tab
-              o += 17 + n
-            }
-          case 0xc0 => // SOF0 baseline
-            if (e - s < 6) return None
-            if ((p(s) & 0xff) != 8) return None // precision
-            h = u16be(p, s + 1); w = u16be(p, s + 3)
-            nf = p(s + 5) & 0xff
-            // grayscale, YCbCr, or 4-component Adobe CMYK/YCCK (r17)
-            if (nf != 1 && nf != 3 && nf != 4) return None
-            if (e - s < 6 + 3 * nf) return None
-            var c = 0
-            while (c < nf) {
-              compHV(c) = p(s + 7 + 3 * c) & 0xff
-              compTq(c) = p(s + 8 + 3 * c) & 0xff
-              if (compTq(c) > 3) return None
-              c += 1
-            }
-            // supported sampling: luma factors in {1,2} per axis — 4:4:4
-            // (1×1), 4:2:0 (2×2), 4:2:2 (2×1), 4:4:0 (1×2); chroma
-            // always 1×1; grayscale is a single full-resolution grid.
-            // The MCU walk below is generic in (yH, yV), so the r15
-            // verdict's 4:2:2 item is exactly this relaxed guard.
-            // 4-component files: 1×1 everywhere (the Adobe-CMYK norm).
-            if (nf == 1 && compHV(0) != 0x11) return None
-            if (nf == 3) {
-              val yHf = compHV(0) >> 4; val yVf = compHV(0) & 15
-              if (yHf < 1 || yHf > 2 || yVf < 1 || yVf > 2) return None
-              if (compHV(1) != 0x11 || compHV(2) != 0x11) return None
-            }
-            if (nf == 4 && (0 until 4).exists(compHV(_) != 0x11)) return None
-          case 0xee => // APP14 Adobe: the color-transform declaration
-            // layout: 'Adobe' ver(2) flags0(2) flags1(2) transform(1)
-            if (e - s >= 12 && p(s) == 'A' && p(s + 1) == 'd' &&
-                p(s + 2) == 'o' && p(s + 3) == 'b' && p(s + 4) == 'e')
-              adobeTransform = p(s + 11) & 0xff
-          case 0xc2 => // SOF2: the progressive path (r14 verdict #3)
-            return jpegDecodeProgressive(p, wantChroma)
-          case m if m >= 0xc1 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc =>
-            return None // extended/arithmetic: out of scope
-          case 0xdd => // DRI
-            if (e - s < 2) return None
-            restartInterval = u16be(p, s)
-          case 0xda => // SOS
-            if (nf == 0 || e - s < 4 + 2 * nf) return None
-            if ((p(s) & 0xff) != nf) return None // one full interleaved scan
-            var c = 0
-            while (c < nf) {
-              val sel = p(s + 2 + 2 * c) & 0xff
-              compDc(c) = sel >> 4; compAc(c) = sel & 15
-              if (compDc(c) > 3 || compAc(c) > 3) return None
-              c += 1
-            }
-            // full-spectral sequential scan only
-            val sp = s + 1 + 2 * nf
-            if ((p(sp) & 0xff) != 0 || (p(sp + 1) & 0xff) != 63 ||
-                (p(sp + 2) & 0xff) != 0) return None
-            dataStart = e
-          case _ => () // APPn / COM / others: skip
-        }
-        if (dataStart < 0) i = j + 1 + len
-      }
-    }
-    if (w <= 0 || h <= 0 || nf == 0) return None
-    // a 4-component file is uninterpretable without the Adobe transform
-    // declaration: T=0 (inverted CMYK) and T=2 (YCCK) are the pinned
-    // vocabulary; anything else refuses (never guessed ink semantics)
-    if (nf == 4 && adobeTransform != 0 && adobeTransform != 2) return None
-    var ci = 0
-    while (ci < nf) {
-      if (qt(compTq(ci)) == null || dcTabs(compDc(ci)) == null ||
-          acTabs(compAc(ci)) == null) return None
-      ci += 1
-    }
-    val yH = compHV(0) >> 4; val yV = compHV(0) & 15
-    val mcuW = (w + 8 * yH - 1) / (8 * yH)
-    val mcuH = (h + 8 * yV - 1) / (8 * yV)
-    val nMcus = mcuW.toLong * mcuH
-    val blocksPerMcu = yH * yV + (nf - 1)
-    // allocation guard: pixel cap + entropy-payload bound (each 8×8 block
-    // costs at least one DC code ≥ 1 bit and one AC code ≥ 1 bit)
-    if (w.toLong * h > GrayPixelCap ||
-        nMcus * blocksPerMcu > 4L * (p.length - dataStart)) return None
-    val gray = new Array[Int](w * h)
-    // chroma planes at their natural resolution (ceil(w/sx) x ceil(h/sy));
-    // same pixel-cap regime as luma (cw*ch <= w*h). A 4-component file
-    // reconstructs ALL planes regardless of wantChroma: its gray needs
-    // the full ink transform (there is no fast-luma shortcut in CMYK).
-    val emitChroma = (wantChroma && nf == 3) || nf == 4
-    val cw = (w + yH - 1) / yH
-    val chh = (h + yV - 1) / yV
-    val cbP = if (emitChroma) new Array[Int](cw * chh) else null
-    val crP = if (emitChroma) new Array[Int](cw * chh) else null
-    val kP = if (nf == 4) new Array[Int](cw * chh) else null
-    val deq = new Array[Long](64) // dequantized, de-zigzagged: deq(v*8+u)
-    val br = new JpegBits(p, dataStart)
+    // frame geometry: the MCU grid (hmax/vmax-sized), each component's
+    // plane dims, its real block raster and its padded block stride
+    var mcusX = 0; var mcusY = 0
+    val compW = new Array[Int](4); val compHt = new Array[Int](4)
+    val realBw = new Array[Int](4); val realBh = new Array[Int](4)
+    val padBw = new Array[Int](4) // padded blocks per row = mcusX * h_c
+    // decoded planes: luma always, the others only when emitted
+    val planes = new Array[Array[Int]](4)
+    // SOF2 only: per-component coefficients, ZIGZAG order, 64 per block,
+    // on the PADDED (MCU-complete) grid — interleaved scans write padding
+    // blocks there, one-component scans and the output walk index real
+    // blocks through the padded stride
+    var coefs: Array[Array[Int]] = null
     val preds = new Array[Int](4)
-    var m = 0L
-    var sinceRestart = 0
-    // one entropy-coded block of component `c`. `emit = false` is the
-    // FAST-LUMA path for chroma: the bitstream must still be walked (DC
-    // diff + AC run-length advance it), but no dequant/IDCT — luma is
-    // the only plane the perceptual stack consumes. Returns false on a
-    // malformed stream.
-    def block(c: Int, emit: Boolean): Boolean = {
-      val dcTab = dcTabs(compDc(c)); val acTab = acTabs(compAc(c))
-      val q = qt(compTq(c))
-      if (emit) java.util.Arrays.fill(deq, 0L)
-      val dcSize = dcTab.decode(br)
-      if (dcSize < 0 || dcSize > 11) return false
-      var diff = 0
-      if (dcSize > 0) {
-        var r = 0; var k = 0
-        while (k < dcSize) { val bit = br.bit(); if (bit < 0) return false; r = (r << 1) | bit; k += 1 }
-        diff = if (r < (1 << (dcSize - 1))) r - (1 << dcSize) + 1 else r // EXTEND
+    var eobrun = 0
+    var br: JpegBits = null // the current scan's reader
+    var ss = 0; var se = 63; var ah = 0; var al = 0 // the current scan's band
+    val zz = new Array[Int](64) // SOF0: the block being decoded, zigzag
+    val deq = new Array[Long](64) // dequantized, de-zigzagged: deq(v*8+u)
+
+    def layFrame(): Unit = {
+      val hmax = compH.take(nf).max; val vmax = compV.take(nf).max
+      mcusX = (w + 8 * hmax - 1) / (8 * hmax)
+      mcusY = (h + 8 * vmax - 1) / (8 * vmax)
+      var c = 0
+      while (c < nf) {
+        compW(c) = (w * compH(c) + hmax - 1) / hmax
+        compHt(c) = (h * compV(c) + vmax - 1) / vmax
+        realBw(c) = (compW(c) + 7) / 8
+        realBh(c) = (compHt(c) + 7) / 8
+        padBw(c) = mcusX * compH(c)
+        c += 1
       }
-      preds(c) += diff
-      if (emit) deq(0) = preds(c).toLong * q(0)
-      var z = 1
-      var eob = false
-      while (z < 64 && !eob) {
-        val sym = acTab.decode(br)
-        if (sym < 0) return false
-        if (sym == 0x00) eob = true
-        else if (sym == 0xf0) {
-          z += 16
-          // a ZRL that skips past the block end is malformed — reject
-          // here (matching the run/size branch's z > 63 strictness)
-          // instead of silently exiting the loop bit-misaligned, which
-          // would only surface when a LATER block fails to decode
-          if (z > 64) return false
-        }
-        else {
-          val run = sym >> 4; val size = sym & 15
-          z += run
-          if (z > 63 || size == 0 || size > 10) return false
-          var r = 0; var k = 0
-          while (k < size) { val bit = br.bit(); if (bit < 0) return false; r = (r << 1) | bit; k += 1 }
-          val v = if (r < (1 << (size - 1))) r - (1 << size) + 1 else r
-          if (emit) deq(ZigV(z) * 8 + ZigU(z)) = v.toLong * q(z)
-          z += 1
-        }
-      }
-      true
     }
-    // pinned integer IDCT of the current `deq` into raster `t` of
-    // dims (tw, th) at (blockX, blockY), cropped
-    def idctInto(t: Array[Int], tw: Int, th: Int, blockX: Int, blockY: Int): Unit = {
+
+    // dequantize + de-zigzag the 64 coefficients at blk(off), then the
+    // pinned integer IDCT into plane c at block (row, col), cropped
+    def idctBlock(blk: Array[Int], off: Int, c: Int, row: Int, col: Int): Unit = {
+      val q = qt(compTq(c)); val t = planes(c)
+      val tw = compW(c); val th = compHt(c)
+      java.util.Arrays.fill(deq, 0L)
+      var z = 0
+      while (z < 64) {
+        val v = blk(off + z)
+        if (v != 0) deq(ZigV(z) * 8 + ZigU(z)) = v.toLong * q(z)
+        z += 1
+      }
       var y = 0
       while (y < 8) {
-        val py = blockY + y
+        val py = row * 8 + y
         if (py < th) {
           var x = 0
           while (x < 8) {
-            val px = blockX + x
+            val px = col * 8 + x
             if (px < tw) {
               var sum = 0L
               var v = 0
@@ -1415,135 +1312,48 @@ object Multimodal {
         y += 1
       }
     }
-    while (m < nMcus) {
-      if (restartInterval > 0 && sinceRestart == restartInterval) {
-        // byte-aligned RSTn marker between restart intervals; resets
-        // every component's DC predictor
-        val mk = br.syncMarker()
-        if (mk < 0xd0 || mk > 0xd7) return None
-        java.util.Arrays.fill(preds, 0)
-        sinceRestart = 0
-      }
-      // Y blocks of this MCU, raster order within the MCU
-      var sub = 0
-      while (sub < yH * yV) {
-        if (!block(0, emit = true)) return None
-        idctInto(gray, w, h,
-          ((m % mcuW) * yH + sub % yH).toInt * 8,
-          ((m / mcuW) * yV + sub / yH).toInt * 8)
-        sub += 1
-      }
-      // chroma blocks: entropy-decoded always (the interleaved stream
-      // demands it); pixels reconstructed only when the caller asked for
-      // chroma — otherwise this stays the fast-luma path
-      var c = 1
-      while (c < nf) {
-        if (!block(c, emit = emitChroma)) return None
-        if (emitChroma)
-          idctInto(if (c == 1) cbP else if (c == 2) crP else kP, cw, chh,
-            (m % mcuW).toInt * 8, (m / mcuW).toInt * 8)
-        c += 1
-      }
-      m += 1
-      sinceRestart += 1
-    }
-    if (nf == 4) {
-      // PINNED Adobe ink reconstruction (r17; the fixture's Python twin
-      // replays it integer-for-integer). Adobe writers store INVERTED
-      // ink values, so:
-      //  T=0 (CMYK): ink C = 255 - s0, M = 255 - s1, Y = 255 - s2,
-      //              K = 255 - s3;
-      //  T=2 (YCCK): (R0,G0,B0) = the pinned 16-bit YCbCr→RGB over
-      //              (s0, s1, s2); C = 255 - R0, M = 255 - G0,
-      //              Y = 255 - B0; K = 255 - s3.
-      //  RGB: R = (255-C)·(255-K) div 255 (integer), same for G/B;
-      //  the luma raster is the pinned BT.601 integer luma over RGB.
-      def clamp(v: Int): Int = if (v < 0) 0 else if (v > 255) 255 else v
-      val n = w * h
-      val rP = new Array[Int](n); val gP = new Array[Int](n)
-      val bP = new Array[Int](n); val g2 = new Array[Int](n)
-      var i2 = 0
-      while (i2 < n) {
-        val s0 = gray(i2); val s1 = cbP(i2); val s2 = crP(i2); val s3 = kP(i2)
-        val (r0, g0, b0) =
-          if (adobeTransform == 0) (s0, s1, s2)
-          else {
-            val cb = s1 - 128; val cr = s2 - 128
-            (clamp(s0 + ((91881 * cr + 32768) >> 16)),
-             clamp(s0 - ((22554 * cb + 46802 * cr + 32768) >> 16)),
-             clamp(s0 + ((116130 * cb + 32768) >> 16)))
-          }
-        // inks are Adobe-inverted: 255 - C == r0, 255 - K == s3
-        rP(i2) = r0 * s3 / 255
-        gP(i2) = g0 * s3 / 255
-        bP(i2) = b0 * s3 / 255
-        g2(i2) = lumaOf(rP(i2), gP(i2), bP(i2))
-        i2 += 1
-      }
-      Some(JpegPlanes(w, h, g2, null, null, cw, chh, 1, 1, rP, gP, bP))
-    } else
-      Some(JpegPlanes(w, h, gray, cbP, crP, cw, chh, yH, yV))
-  }
 
-  /** PROGRESSIVE (SOF2) JPEG decode (r14 verdict #3) — the second most
-    * common real-web JPEG layout; without it a large slice of crawled
-    * images is invisible to the near-dup screens. Full spectral
-    * selection + successive approximation per ISO/IEC 10918-1 Annex G:
-    * coefficients accumulate across scans in per-component zigzag
-    * buffers (DC first/refine, AC first/refine with EOBRUN run-length
-    * coding and the correction-bit protocol), then dequantize +
-    * [[IdctK]] once at EOI — so progressive pixels are BIT-IDENTICAL
-    * to a baseline encoding of the same quantized coefficients, and
-    * the oracle's coefficient-formula replay needs no new arithmetic.
-    *
-    * Supported layout: 8-bit precision, 1 or 3 components, luma
-    * sampling factors in {1,2} per axis (4:4:4, 4:2:0, 4:2:2, 4:4:0 —
-    * the r15 verdict's majority class, real-web progressive photos are
-    * overwhelmingly 4:2:0), chroma always 1×1. Interleaved scans (DC,
-    * Ns>1) walk the FRAME MCU grid — hc×vc blocks per component per
-    * MCU including the spec's right/bottom PADDING blocks (entropy-
-    * coded, they advance the DC predictors, discarded on output);
-    * non-interleaved scans (every AC scan, and DC scans with Ns=1)
-    * walk the component's REAL block raster with no padding, per
-    * ISO 10918-1 A.2. Restart intervals count MCUs when interleaved,
-    * data units when not — the same `unit` counter here. Fast-luma
-    * contract preserved: chroma scans are entropy-walked (the next
-    * scan's offset demands it) but chroma only dequantizes/IDCTs under
-    * `wantChroma`. Restart markers reset DC predictors AND the EOB
-    * run. Malformed anything yields None, never garbage pixels. */
-  private[graft] def jpegDecodeProgressive(p: Array[Byte],
-                                           wantChroma: Boolean): Option[JpegPlanes] = {
-    if (p.length < 4 || (p(0) & 0xff) != 0xff || (p(1) & 0xff) != 0xd8) return None
-    val qt = new Array[Array[Int]](4)
-    val dcTabs = new Array[JpegHuff](4)
-    val acTabs = new Array[JpegHuff](4)
-    var w = -1; var h = -1; var nf = 0
-    val compId = new Array[Int](3)
-    val compTq = new Array[Int](3)
-    val compDc = new Array[Int](3)
-    val compAc = new Array[Int](3)
-    val compH = new Array[Int](3) // horizontal sampling factor
-    val compV = new Array[Int](3) // vertical sampling factor
-    var restartInterval = 0
-    // per-component coefficient accumulators, ZIGZAG order, 64 per
-    // block, laid out on the PADDED (MCU-complete) grid — interleaved
-    // scans write padding blocks there, non-interleaved scans and the
-    // output walk index real blocks through the padded stride
-    var coefs: Array[Array[Int]] = null
-    var mcusX = 0; var mcusY = 0 // frame MCU grid (hmax/vmax-sized)
-    val padBw = new Array[Int](3) // padded blocks per row = mcusX * h_c
-    val realBw = new Array[Int](3) // ceil(comp width / 8)
-    val realBh = new Array[Int](3) // ceil(comp height / 8)
-    val compW = new Array[Int](3) // component plane dims
-    val compHt = new Array[Int](3)
-    var sawScan = false
-    val preds = new Array[Int](3)
-    var eobrun = 0
+    // DC difference (F.2.2.1) added to component c's predictor
+    def dcDiff(c: Int): Boolean = {
+      val dcSize = dcTabs(compDc(c)).decode(br)
+      if (dcSize < 0 || dcSize > 11) return false
+      if (dcSize > 0) {
+        val bits = br.receive(dcSize); if (bits < 0) return false
+        preds(c) += extend(bits, dcSize)
+      }
+      true
+    }
+
+    // one sequential block into zz: DC, then AC run/size symbols with EOB
+    // and ZRL. A ZRL past the block end is malformed here (matching the
+    // run/size branch's z > 63 strictness) instead of leaving the reader
+    // bit-misaligned for a LATER block to trip over.
+    def seqBlock(c: Int): Boolean = {
+      java.util.Arrays.fill(zz, 0)
+      if (!dcDiff(c)) return false
+      zz(0) = preds(c)
+      val acTab = acTabs(compAc(c))
+      var z = 1
+      while (z < 64) {
+        val sym = acTab.decode(br)
+        if (sym < 0) return false
+        if (sym == 0x00) return true // EOB
+        if (sym == 0xf0) { z += 16; if (z > 64) return false } // ZRL
+        else {
+          val size = sym & 15
+          z += sym >> 4
+          if (z > 63 || size == 0 || size > 10) return false
+          val bits = br.receive(size); if (bits < 0) return false
+          zz(z) = extend(bits, size)
+          z += 1
+        }
+      }
+      true
+    }
 
     // one AC-first-scan block (G.1.2.2): runs/sizes with the value
     // point-transformed (<< Al on decode), EOBn starting an EOB run
-    def acFirst(blk: Array[Int], off: Int, tab: JpegHuff,
-                ss: Int, se: Int, al: Int, br: JpegBits): Boolean = {
+    def acFirst(blk: Array[Int], off: Int, tab: JpegHuff): Boolean = {
       if (eobrun > 0) { eobrun -= 1; return true }
       var k = ss
       while (k <= se) {
@@ -1563,8 +1373,7 @@ object Multimodal {
           k += r
           if (k > se || s > 10) return false
           val bits = br.receive(s); if (bits < 0) return false
-          val v = if (bits < (1 << (s - 1))) bits - (1 << s) + 1 else bits
-          blk(off + k) = v << al
+          blk(off + k) = extend(bits, s) << al
           k += 1
         }
       }
@@ -1575,8 +1384,7 @@ object Multimodal {
     // coefficients placed after `r` ZERO-HISTORY positions, correction
     // bits read at every nonzero-history position crossed, EOB runs
     // correcting the band tail
-    def acRefine(blk: Array[Int], off: Int, tab: JpegHuff,
-                 ss: Int, se: Int, al: Int, br: JpegBits): Boolean = {
+    def acRefine(blk: Array[Int], off: Int, tab: JpegHuff): Boolean = {
       val p1 = 1 << al; val m1 = -1 << al
       var k = ss
       if (eobrun == 0) {
@@ -1639,98 +1447,119 @@ object Multimodal {
       true
     }
 
-    // one component's DC entry at coefficient offset `off`: first scan
-    // (ah == 0) is Huffman diff coding point-transformed << al; refine
-    // appends one raw bit at weight 1 << al
-    def dcOne(c: Int, off: Int, ah: Int, al: Int, br: JpegBits): Boolean = {
-      val blk = coefs(c)
-      if (ah == 0) {
-        val dcSize = dcTabs(compDc(c)).decode(br)
-        if (dcSize < 0 || dcSize > 11) return false
-        var diff = 0
-        if (dcSize > 0) {
-          val bits = br.receive(dcSize)
-          if (bits < 0) return false
-          diff = if (bits < (1 << (dcSize - 1))) bits - (1 << dcSize) + 1 else bits
-        }
-        preds(c) += diff
-        blk(off) = preds(c) << al
+    // one block of component c at (row, col) of its block grid, decoded
+    // by the current scan's kind: a SOF0 block goes straight through
+    // the IDCT when its plane is emitted; a SOF2 block lands in `coefs`
+    def block(c: Int, row: Int, col: Int): Boolean =
+      if (sof == 0xc0) {
+        if (!seqBlock(c)) false
+        else { if (planes(c) != null) idctBlock(zz, 0, c, row, col); true }
       } else {
-        val bit = br.bit()
-        if (bit < 0) return false
-        if (bit == 1) blk(off) |= (1 << al)
+        val blk = coefs(c)
+        val off = (row * padBw(c) + col) * 64
+        if (ss > 0) {
+          if (ah == 0) acFirst(blk, off, acTabs(compAc(c)))
+          else acRefine(blk, off, acTabs(compAc(c)))
+        } else if (ah == 0) {
+          // DC first: the diff-coded value point-transformed << Al
+          if (!dcDiff(c)) false else { blk(off) = preds(c) << al; true }
+        } else {
+          // DC refine: one raw bit at weight 1 << Al
+          val bit = br.bit()
+          if (bit == 1) blk(off) |= (1 << al)
+          bit >= 0
+        }
       }
-      true
-    }
 
-    // decode one scan's entropy data; returns the byte offset just past
-    // it (the next marker's 0xFF), or -1 on a malformed stream. The
-    // walk unit is an MCU when the scan is interleaved (Ns > 1), a
-    // single data unit of the scan's one component otherwise — restart
-    // intervals count these same units (ISO 10918-1 A.2).
-    def decodeScan(scomps: Array[Int], ss: Int, se: Int, ah: Int, al: Int,
-                   dataStart: Int): Int = {
-      val br = new JpegBits(p, dataStart)
+    // one scan's entropy-coded data from `start`; false on a malformed
+    // stream. The walk unit is an MCU when the scan is interleaved, one
+    // block of its component otherwise.
+    def scan(scomps: Array[Int], start: Int): Boolean = {
+      br = new JpegBits(p, start)
       java.util.Arrays.fill(preds, 0)
       eobrun = 0
       var sinceRestart = 0
+      val c0 = scomps(0)
       val interleaved = scomps.length > 1
-      val nUnits: Long =
-        if (interleaved) mcusX.toLong * mcusY
-        else realBw(scomps(0)).toLong * realBh(scomps(0))
+      val nUnits =
+        if (interleaved) mcusX.toLong * mcusY else realBw(c0).toLong * realBh(c0)
       var u = 0L
-      var ok = true
-      while (u < nUnits && ok) {
+      while (u < nUnits) {
         if (restartInterval > 0 && sinceRestart == restartInterval) {
+          // byte-aligned RSTn marker between restart intervals
           val mk = br.syncMarker()
-          if (mk < 0xd0 || mk > 0xd7) return -1
+          if (mk < 0xd0 || mk > 0xd7) return false
           java.util.Arrays.fill(preds, 0)
           eobrun = 0
           sinceRestart = 0
         }
         if (interleaved) {
-          // MCU walk (DC scans only: AC scans are Ns=1 by construction):
-          // each component contributes its h×v block patch, raster order
-          // within the MCU, padding blocks included
           val mx = (u % mcusX).toInt; val my = (u / mcusX).toInt
           var i = 0
-          while (i < scomps.length && ok) {
+          while (i < scomps.length) {
             val c = scomps(i)
             var v = 0
-            while (v < compV(c) && ok) {
+            while (v < compV(c)) {
               var hh = 0
-              while (hh < compH(c) && ok) {
-                val row = my * compV(c) + v; val colB = mx * compH(c) + hh
-                ok = dcOne(c, (row * padBw(c) + colB) * 64, ah, al, br)
+              while (hh < compH(c)) {
+                if (!block(c, my * compV(c) + v, mx * compH(c) + hh)) return false
                 hh += 1
               }
               v += 1
             }
             i += 1
           }
-        } else {
-          // single-component scan: the component's REAL block raster,
-          // indexed through the padded stride
-          val c = scomps(0)
-          val row = (u / realBw(c)).toInt; val colB = (u % realBw(c)).toInt
-          val off = (row * padBw(c) + colB) * 64
-          ok =
-            if (ss == 0) dcOne(c, off, ah, al, br)
-            else if (ah == 0) acFirst(coefs(c), off, acTabs(compAc(c)), ss, se, al, br)
-            else acRefine(coefs(c), off, acTabs(compAc(c)), ss, se, al, br)
-        }
+        } else if (!block(c0, (u / realBw(c0)).toInt, (u % realBw(c0)).toInt))
+          return false
         u += 1
         sinceRestart += 1
       }
-      if (!ok) return -1
-      // skip any padding bits: the next marker starts at the first
-      // FF-non-stuffing byte at or after the reader position
-      var j = br.bytePos
-      while (j + 1 < p.length &&
-        !((p(j) & 0xff) == 0xff && (p(j + 1) & 0xff) != 0x00)) j += 1
-      if (j + 1 >= p.length) -1 else j
+      true
     }
 
+    def assemble(): Option[JpegPlanes] =
+      if (nf == 4) {
+        // PINNED Adobe ink reconstruction (r17; the fixture's Python twin
+        // replays it integer-for-integer). Adobe writers store INVERTED
+        // ink values, so:
+        //  T=0 (CMYK): ink C = 255 - s0, M = 255 - s1, Y = 255 - s2,
+        //              K = 255 - s3;
+        //  T=2 (YCCK): (R0,G0,B0) = the pinned 16-bit YCbCr→RGB over
+        //              (s0, s1, s2); C = 255 - R0, M = 255 - G0,
+        //              Y = 255 - B0; K = 255 - s3.
+        //  RGB: R = (255-C)·(255-K) div 255 (integer), same for G/B;
+        //  the luma raster is the pinned BT.601 integer luma over RGB.
+        def clamp(v: Int): Int = if (v < 0) 0 else if (v > 255) 255 else v
+        val n = w * h
+        val rP = new Array[Int](n); val gP = new Array[Int](n)
+        val bP = new Array[Int](n); val g2 = new Array[Int](n)
+        var i2 = 0
+        while (i2 < n) {
+          val s0 = planes(0)(i2); val s1 = planes(1)(i2)
+          val s2 = planes(2)(i2); val s3 = planes(3)(i2)
+          val (r0, g0, b0) =
+            if (adobeTransform == 0) (s0, s1, s2)
+            else {
+              val cb = s1 - 128; val cr = s2 - 128
+              (clamp(s0 + ((91881 * cr + 32768) >> 16)),
+               clamp(s0 - ((22554 * cb + 46802 * cr + 32768) >> 16)),
+               clamp(s0 + ((116130 * cb + 32768) >> 16)))
+            }
+          // inks are Adobe-inverted: 255 - C == r0, 255 - K == s3
+          rP(i2) = r0 * s3 / 255
+          gP(i2) = g0 * s3 / 255
+          bP(i2) = b0 * s3 / 255
+          g2(i2) = lumaOf(rP(i2), gP(i2), bP(i2))
+          i2 += 1
+        }
+        Some(JpegPlanes(w, h, g2, null, null, w, h, 1, 1, rP, gP, bP))
+      } else {
+        val yH = compH(0); val yV = compV(0)
+        Some(JpegPlanes(w, h, planes(0), planes(1), planes(2),
+          (w + yH - 1) / yH, (h + yV - 1) / yV, yH, yV))
+      }
+
+    var sawScan = false
     var i = 2
     var done = false
     while (!done) {
@@ -1740,16 +1569,18 @@ object Multimodal {
       if (j >= p.length) return None
       val marker = p(j) & 0xff
       if (marker == 0x01 || (marker >= 0xd0 && marker <= 0xd7)) i = j + 1
-      else if (marker == 0xd9) done = true // EOI
-      else {
+      else if (marker == 0xd9) { // EOI: the end of a progressive frame only
+        if (sof != 0xc2 || !sawScan) return None
+        done = true
+      } else {
         if (j + 2 >= p.length) return None
         val len = u16be(p, j + 1)
         if (len < 2 || j + 1 + len > p.length) return None
-        val s = j + 3
+        val s = j + 3 // segment body start
         val e = j + 1 + len
         var next = e
         marker match {
-          case 0xdb =>
+          case 0xdb => // DQT: one or more (Pq<<4|Tq, 64 entries)
             var o = s
             while (o < e) {
               val pq = (p(o) & 0xff) >> 4; val tq = (p(o) & 0xff) & 15
@@ -1757,7 +1588,7 @@ object Multimodal {
               qt(tq) = Array.tabulate(64)(z => p(o + 1 + z) & 0xff)
               o += 65
             }
-          case 0xc4 =>
+          case 0xc4 => // DHT: one or more (Tc<<4|Th, bits[16], vals)
             var o = s
             while (o < e) {
               val tc = (p(o) & 0xff) >> 4; val th = (p(o) & 0xff) & 15
@@ -1765,6 +1596,8 @@ object Multimodal {
               val bits = Array.tabulate(16)(l => p(o + 1 + l) & 0xff)
               val n = bits.sum
               if (n == 0 || n > 256 || o + 17 + n > e) return None
+              // canonicity: the running code counter must never overflow
+              // its length (an overfull table would decode garbage symbols)
               var cc = 0; var l = 0
               while (l < 16) {
                 cc += bits(l)
@@ -1777,12 +1610,15 @@ object Multimodal {
               if (tc == 0) dcTabs(th) = tab else acTabs(th) = tab
               o += 17 + n
             }
-          case 0xc2 => // SOF2 frame header
-            if (w >= 0) return None // second frame: malformed
-            if (e - s < 6 || (p(s) & 0xff) != 8) return None
+          case 0xc0 | 0xc2 => // SOF0 baseline / SOF2 progressive
+            // nothing follows a SOF2 header and it follows no frame
+            // header; a repeated SOF0 header replaces the earlier one
+            if (sof == 0xc2 || (marker == 0xc2 && sof >= 0)) return None
+            if (e - s < 6 || (p(s) & 0xff) != 8) return None // precision
             h = u16be(p, s + 1); w = u16be(p, s + 3)
             nf = p(s + 5) & 0xff
-            if (nf != 1 && nf != 3) return None
+            // grayscale or YCbCr; baseline also 4-component Adobe (r17)
+            if (nf != 1 && nf != 3 && !(nf == 4 && marker == 0xc0)) return None
             if (e - s < 6 + 3 * nf) return None
             var c = 0
             while (c < nf) {
@@ -1793,146 +1629,107 @@ object Multimodal {
               if (compTq(c) > 3) return None
               c += 1
             }
-            // supported sampling: the baseline decoder's subset — luma
-            // factors in {1,2} per axis, chroma 1×1, grayscale 1×1
-            if (nf == 1 && (compH(0) != 1 || compV(0) != 1)) return None
+            // sampling: luma factors in {1,2} per axis for YCbCr, 1×1
+            // for grayscale and 4-component files; chroma always 1×1
+            if ((1 until nf).exists(c => compH(c) != 1 || compV(c) != 1)) return None
             if (nf == 3) {
               if (compH(0) < 1 || compH(0) > 2 || compV(0) < 1 || compV(0) > 2)
                 return None
-              if (compH(1) != 1 || compV(1) != 1 ||
-                  compH(2) != 1 || compV(2) != 1) return None
+            } else if (compH(0) != 1 || compV(0) != 1) return None
+            sof = marker
+            if (sof == 0xc2) {
+              if (w <= 0 || h <= 0 || w.toLong * h > GrayPixelCap) return None
+              layFrame()
+              coefs = Array.tabulate(nf)(c => new Array[Int](padBw(c) * (mcusY * compV(c)) * 64))
             }
-            if (w <= 0 || h <= 0 || w.toLong * h > GrayPixelCap) return None
-            val hmax = compH.take(nf).max; val vmax = compV.take(nf).max
-            mcusX = (w + 8 * hmax - 1) / (8 * hmax)
-            mcusY = (h + 8 * vmax - 1) / (8 * vmax)
-            coefs = new Array[Array[Int]](nf)
-            c = 0
-            while (c < nf) {
-              compW(c) = (w * compH(c) + hmax - 1) / hmax
-              compHt(c) = (h * compV(c) + vmax - 1) / vmax
-              realBw(c) = (compW(c) + 7) / 8
-              realBh(c) = (compHt(c) + 7) / 8
-              padBw(c) = mcusX * compH(c)
-              coefs(c) = new Array[Int](padBw(c) * (mcusY * compV(c)) * 64)
-              c += 1
-            }
-          case m if m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc =>
-            return None // a non-progressive frame in this walk: bail
-          case 0xdd =>
+          case 0xee => // APP14 Adobe: the color-transform declaration
+            // layout: 'Adobe' ver(2) flags0(2) flags1(2) transform(1)
+            if (e - s >= 12 && p(s) == 'A' && p(s + 1) == 'd' &&
+                p(s + 2) == 'o' && p(s + 3) == 'b' && p(s + 4) == 'e')
+              adobeTransform = p(s + 11) & 0xff
+          case m if m >= 0xc1 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc =>
+            return None // extended/lossless/arithmetic: out of scope
+          case 0xdd => // DRI
             if (e - s < 2) return None
             restartInterval = u16be(p, s)
-          case 0xda => // SOS: one scan of the progression
-            if (coefs == null) return None
+          case 0xda => // SOS
+            if (sof < 0 || e - s < 1) return None
             val ns = p(s) & 0xff
-            if (ns < 1 || ns > nf || e - s < 1 + 2 * ns + 3) return None
+            // SOF0: one full interleaved scan; SOF2: 1..nf components
+            if (ns < 1 || ns > nf || (sof == 0xc0 && ns != nf) || e - s < 4 + 2 * ns)
+              return None
             val scomps = new Array[Int](ns)
             var k = 0
             while (k < ns) {
-              val cs = p(s + 1 + 2 * k) & 0xff
+              // SOF0 takes its components in frame order, SOF2 by id
+              val c =
+                if (sof == 0xc0) k
+                else compId.indexOf(p(s + 1 + 2 * k) & 0xff)
+              if (c < 0 || c >= nf) return None
+              scomps(k) = c
               val sel = p(s + 2 + 2 * k) & 0xff
-              val idx = compId.indexOf(cs)
-              if (idx < 0 || idx >= nf) return None
-              scomps(k) = idx
-              compDc(idx) = sel >> 4; compAc(idx) = sel & 15
-              if (compDc(idx) > 3 || compAc(idx) > 3) return None
+              compDc(c) = sel >> 4; compAc(c) = sel & 15
+              if (compDc(c) > 3 || compAc(c) > 3) return None
               k += 1
             }
             val sp = s + 1 + 2 * ns
-            val ss = p(sp) & 0xff; val se = p(sp + 1) & 0xff
-            val ah = (p(sp + 2) & 0xff) >> 4; val al = (p(sp + 2) & 0xff) & 15
+            ss = p(sp) & 0xff; se = p(sp + 1) & 0xff
+            ah = (p(sp + 2) & 0xff) >> 4; al = (p(sp + 2) & 0xff) & 15
+            if (sof == 0xc0) {
+              if (ss != 0 || se != 63 || ah != 0 || al != 0) return None
+              if (w <= 0 || h <= 0) return None
+              if (nf == 4 && adobeTransform != 0 && adobeTransform != 2) return None
+              if ((0 until nf).exists(c => qt(compTq(c)) == null ||
+                  dcTabs(compDc(c)) == null || acTabs(compAc(c)) == null)) return None
+              layFrame()
+              val blocks = mcusX.toLong * mcusY * (compH(0) * compV(0) + nf - 1)
+              if (w.toLong * h > GrayPixelCap || blocks > 4L * (p.length - e)) return None
+              val emitChroma = (wantChroma && nf == 3) || nf == 4
+              var c = 0
+              while (c < nf) {
+                if (c == 0 || emitChroma) planes(c) = new Array[Int](compW(c) * compHt(c))
+                c += 1
+              }
+              return if (scan(scomps, e)) assemble() else None
+            }
             if (ss > 63 || se > 63 || se < ss || ah > 13 || al > 13) return None
             if (ss == 0 && se != 0) return None // DC scan is exactly Ss=Se=0
             if (ss > 0 && ns != 1) return None // AC scans: one component
             // table presence for exactly what this scan reads
-            var t = 0
-            while (t < ns) {
-              val c = scomps(t)
-              if (ss == 0 && ah == 0 && dcTabs(compDc(c)) == null) return None
-              if (ss > 0 && acTabs(compAc(c)) == null) return None
-              t += 1
-            }
-            val after = decodeScan(scomps, ss, se, ah, al, e)
-            if (after < 0) return None
+            if (scomps.exists(c => (ss == 0 && ah == 0 && dcTabs(compDc(c)) == null) ||
+                (ss > 0 && acTabs(compAc(c)) == null))) return None
+            if (!scan(scomps, e)) return None
             sawScan = true
-            next = after
-          case _ => () // APPn / COM
+            next = br.nextMarker()
+            if (next < 0) return None
+          case _ => () // APPn / COM / others: skip
         }
         i = next
       }
     }
-    if (coefs == null || !sawScan) return None
-    var ci = 0
-    while (ci < nf) { if (qt(compTq(ci)) == null) return None; ci += 1 }
-    // dequantize + pinned IDCT, per component: REAL blocks only, indexed
-    // through the padded stride (interleaved padding blocks discarded)
-    val deq = new Array[Long](64)
-    def plane(c: Int): Array[Int] = {
-      val tw = compW(c); val th = compHt(c)
-      val out = new Array[Int](tw * th)
-      val q = qt(compTq(c))
-      val blk = coefs(c)
-      val nReal = realBw(c) * realBh(c)
-      var b = 0
-      while (b < nReal) {
-        val bRow = b / realBw(c); val bCol = b % realBw(c)
-        val base = (bRow * padBw(c) + bCol) * 64
-        java.util.Arrays.fill(deq, 0L)
-        var z = 0
-        while (z < 64) {
-          val v = blk(base + z)
-          if (v != 0) deq(ZigV(z) * 8 + ZigU(z)) = v.toLong * q(z)
-          z += 1
+    if ((0 until nf).exists(c => qt(compTq(c)) == null)) return None
+    // dequantize + IDCT the REAL blocks, indexed through the padded
+    // stride (interleaved padding blocks are discarded)
+    var c = 0
+    while (c < nf) {
+      if (c == 0 || (wantChroma && nf == 3)) {
+        planes(c) = new Array[Int](compW(c) * compHt(c))
+        var b = 0
+        while (b < realBw(c) * realBh(c)) {
+          val row = b / realBw(c); val col = b % realBw(c)
+          idctBlock(coefs(c), (row * padBw(c) + col) * 64, c, row, col)
+          b += 1
         }
-        val bx = bCol * 8; val by = bRow * 8
-        var y = 0
-        while (y < 8) {
-          val py = by + y
-          if (py < th) {
-            var x = 0
-            while (x < 8) {
-              val px = bx + x
-              if (px < tw) {
-                var sum = 0L
-                var v = 0
-                while (v < 8) {
-                  val kvy = IdctK(v * 8 + y)
-                  if (kvy != 0) {
-                    var u = 0
-                    while (u < 8) {
-                      val f = deq(v * 8 + u)
-                      if (f != 0L) sum += f * IdctK(u * 8 + x) * kvy
-                      u += 1
-                    }
-                  }
-                  v += 1
-                }
-                val pix = ((sum + (1L << 19)) >> 20).toInt + 128
-                out(py * tw + px) = if (pix < 0) 0 else if (pix > 255) 255 else pix
-              }
-              x += 1
-            }
-          }
-          y += 1
-        }
-        b += 1
       }
-      out
+      c += 1
     }
-    val gray = plane(0)
-    val emitChroma = wantChroma && nf == 3
-    if (emitChroma)
-      Some(JpegPlanes(w, h, gray, plane(1), plane(2),
-        compW(1), compHt(1), compH(0), compV(0)))
-    else Some(JpegPlanes(w, h, gray, null, null,
-      if (nf == 3) compW(1) else w, if (nf == 3) compHt(1) else h,
-      compH(0), compV(0)))
+    assemble()
   }
 
   /** Grayscale raster from REAL container bytes (GIF, 24-bpp BMP, 8-bit
-    * PNG, or baseline grayscale JPEG — the formats whose pixel encodings
-    * this library decodes without an image library); None for everything
-    * else. */
+    * PNG, or baseline/progressive JPEG via [[jpegGray]] — the formats
+    * whose pixel encodings this library decodes without an image
+    * library); None for everything else. */
   def imageGray(payload: Array[Byte]): Option[(Int, Int, Array[Int])] =
     if (payload.length >= 2 && payload(0) == 'G') gifGray(payload)
     else if (payload.length >= 1 && (payload(0) & 0xff) == 0x89) pngGray(payload)

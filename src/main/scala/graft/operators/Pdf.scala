@@ -1,7 +1,6 @@
 package graft.operators
 
 import java.nio.charset.StandardCharsets
-import java.util.zip.Inflater
 
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.SparkSession
@@ -274,36 +273,9 @@ object Pdf {
     val raw = java.util.Arrays.copyOfRange(p, o.streamStart, end)
     val filter = attr(o.dict, "Filter")
     if (filter.isEmpty) Some(raw)
-    else if (filter.contains("FlateDecode")) inflate(raw)
+    else if (filter.contains("FlateDecode"))
+      Warc.inflateCapped(raw, nowrap = false, cap = 1L << 28) // bomb cap
     else None // DCTDecode etc.: not a text stream
-  }
-
-  private def inflate(data: Array[Byte]): Option[Array[Byte]] = {
-    // end() in finally: the native zlib state must be released on the
-    // bomb/truncation early returns and the DataFormatException path too,
-    // not just on success (r13 advice — a scan over many malformed PDFs
-    // would otherwise accumulate off-heap inflater memory until GC).
-    val inf = new Inflater()
-    try {
-      inf.setInput(data)
-      // long math: *4 overflows Int for >=512 MB slices reached via the
-      // endstream-scan path, and a negative ctor arg throws past the
-      // DataFormatException catch
-      val out = new java.io.ByteArrayOutputStream(
-        math.min(data.length.toLong * 4L, 1L << 20).toInt)
-      val buf = new Array[Byte](1 << 14)
-      var guard = 0L
-      while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        if (n == 0 && (inf.needsInput() || inf.needsDictionary()))
-          return None // truncated or preset-dictionary stream
-        out.write(buf, 0, n)
-        guard += n
-        if (guard > (1L << 28)) return None // decompression bomb
-      }
-      Some(out.toByteArray)
-    } catch { case _: java.util.zip.DataFormatException => None }
-    finally inf.end()
   }
 
   // ---- content-stream text tokenizer ----

@@ -640,14 +640,21 @@ object Warc {
     * meaning), raw-deflate fallback (the historic-server bug browsers
     * accept). Shares the bomb cap; None on failure. */
   private[graft] def inflateDeflate(p: Array[Byte]): Option[Array[Byte]] =
-    inflateWith(p, nowrap = false).orElse(inflateWith(p, nowrap = true))
+    inflateCapped(p, nowrap = false, MaxInflatedBytes)
+      .orElse(inflateCapped(p, nowrap = true, MaxInflatedBytes))
 
-  private def inflateWith(p: Array[Byte], nowrap: Boolean): Option[Array[Byte]] = {
+  /** One zlib (or, with `nowrap`, raw DEFLATE) stream inflated whole:
+    * None on a truncated, preset-dictionary or corrupt stream, or once
+    * the output passes `cap` bytes (the caller's bomb cap: 2^30 for HTTP
+    * bodies here, 2^28 for PDF streams). The native zlib state is
+    * released on every path. */
+  private[graft] def inflateCapped(p: Array[Byte], nowrap: Boolean,
+                                   cap: Long): Option[Array[Byte]] = {
     val inf = new java.util.zip.Inflater(nowrap)
     try {
       inf.setInput(p)
-      // NOT p.length * 2: a >=1 GiB framed body overflows Int to negative
-      // and ByteArrayOutputStream(negative) throws — the clamp to 64 KiB
+      // NOT p.length * 2: a >=1 GiB input overflows Int to negative and
+      // ByteArrayOutputStream(negative) throws — the clamp to 64 KiB
       // makes the multiply pointless anyway (the stream grows on demand)
       val bos = new ByteArrayOutputStream(math.min(p.length, 1 << 16))
       val buf = new Array[Byte](1 << 16)
@@ -656,7 +663,7 @@ object Warc {
         val n = inf.inflate(buf)
         if (n == 0 && (inf.needsInput() || inf.needsDictionary())) return None
         total += n
-        if (total > MaxInflatedBytes) return None
+        if (total > cap) return None
         bos.write(buf, 0, n)
       }
       Some(bos.toByteArray)

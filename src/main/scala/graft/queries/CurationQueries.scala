@@ -630,7 +630,7 @@ object CurationQueries {
     * delimiter and quoting DISABLED — proving the engine's text source
     * does no CSV interpretation (embedded quotes and commas survive). */
   def q194TextLines(s: SparkSession, dir: String): DataFrame =
-    s.read.text("/root/repo/fixtures/journey.csv")
+    s.read.text(s"${Tables.fixtureDir}/journey.csv")
       .select(md5(col("value")).as("fp"),
         length(col("value")).cast("long").as("n_chars"))
 
@@ -4355,8 +4355,8 @@ object CurationQueries {
         |       AS BIGINT) AS mod_moved
         |FROM oldp o JOIN newp n USING (doc_id)""".stripMargin,
     "q194_text_lines" ->
-      """SELECT md5(line) AS fp, CAST(length(line) AS BIGINT) AS n_chars
-        |FROM read_csv('/root/repo/fixtures/journey.csv',
+      s"""SELECT md5(line) AS fp, CAST(length(line) AS BIGINT) AS n_chars
+        |FROM read_csv('${Tables.fixtureDir}/journey.csv',
         |  columns={'line': 'VARCHAR'}, delim='', quote='', header=false)"""
         .stripMargin,
     "q192_k_anonymity" ->

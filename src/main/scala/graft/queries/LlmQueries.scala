@@ -24,21 +24,21 @@ import graft.sources.{CdxIndex, Materialized, Tables}
   */
 object LlmQueries {
 
-  private val media = "/root/repo/fixtures/media.parquet"
-  private val htmlDocs = "/root/repo/fixtures/html_docs.parquet"
-  private val warcShards = "/root/repo/fixtures/warc_shards.parquet"
-  private val pdfDocs = "/root/repo/fixtures/pdf_docs.parquet"
-  private val robotsFx = "/root/repo/fixtures/robots.parquet"
-  private val sitemapsFx = "/root/repo/fixtures/sitemaps.parquet"
-  private val warcCharsetShards = "/root/repo/fixtures/warc_charset_shards.parquet"
-  private val warcCharsetPages = "/root/repo/fixtures/warc_charset_pages.parquet"
-  private val pslFx = "/root/repo/fixtures/psl.parquet"
-  private val linkPagesFx = "/root/repo/fixtures/link_pages.parquet"
-  private val warcHttpShards = "/root/repo/fixtures/warc_http_shards.parquet"
-  private val warcHttpPages = "/root/repo/fixtures/warc_http_pages.parquet"
-  private val redirectShards = "/root/repo/fixtures/redirect_shards.parquet"
-  private val redirectExpected = "/root/repo/fixtures/redirect_expected.parquet"
-  private val brotliVectors = "/root/repo/fixtures/brotli_vectors.parquet"
+  private def media = s"${Tables.fixtureDir}/media.parquet"
+  private def htmlDocs = s"${Tables.fixtureDir}/html_docs.parquet"
+  private def warcShards = s"${Tables.fixtureDir}/warc_shards.parquet"
+  private def pdfDocs = s"${Tables.fixtureDir}/pdf_docs.parquet"
+  private def robotsFx = s"${Tables.fixtureDir}/robots.parquet"
+  private def sitemapsFx = s"${Tables.fixtureDir}/sitemaps.parquet"
+  private def warcCharsetShards = s"${Tables.fixtureDir}/warc_charset_shards.parquet"
+  private def warcCharsetPages = s"${Tables.fixtureDir}/warc_charset_pages.parquet"
+  private def pslFx = s"${Tables.fixtureDir}/psl.parquet"
+  private def linkPagesFx = s"${Tables.fixtureDir}/link_pages.parquet"
+  private def warcHttpShards = s"${Tables.fixtureDir}/warc_http_shards.parquet"
+  private def warcHttpPages = s"${Tables.fixtureDir}/warc_http_pages.parquet"
+  private def redirectShards = s"${Tables.fixtureDir}/redirect_shards.parquet"
+  private def redirectExpected = s"${Tables.fixtureDir}/redirect_expected.parquet"
+  private def brotliVectors = s"${Tables.fixtureDir}/brotli_vectors.parquet"
 
   // ---------------------------------------------------------------- dedup
 

@@ -12,7 +12,7 @@ import graft.pipeline.{JourneyJob, Schemas, StationsJob, WeatherJob}
   * scans. */
 object PipelineQueries {
 
-  private val fx = "/root/repo/fixtures"
+  private def fx = graft.sources.Tables.fixtureDir
 
   /** Day-struct fields the oracle needs, as a DuckDB STRUCT type string. */
   private def dayStruct(fields: (String, String)*): String =

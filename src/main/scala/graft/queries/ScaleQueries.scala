@@ -191,8 +191,9 @@ object ScaleQueries {
 
   /** BM25 over the WRITTEN postings — bm25TopK's arithmetic verbatim,
     * with corpus stats and df read from the index tables instead of
-    * recomputed from text. */
-  private def indexedBm25(s: SparkSession, root: String,
+    * recomputed from text. The one scorer over a written text index:
+    * q309/q310 here and q316 over the web corpus's index. */
+  private[queries] def indexedBm25(s: SparkSession, root: String,
                           terms: Seq[String], k: Int): DataFrame = {
     import graft.sources.TextIndex
     val (n, total) = TextIndex.readStats(s, root)
@@ -358,7 +359,7 @@ object ScaleQueries {
     * surface (the reference's default read mode) as an explicit
     * exploration entry point. */
   def q108InferredCsv(s: SparkSession, dir: String): DataFrame =
-    graft.sources.InferredRead.csv(s, "/root/repo/fixtures/journey.csv")
+    graft.sources.InferredRead.csv(s, s"${Tables.fixtureDir}/journey.csv")
       .agg(count(lit(1)).as("n_rows"),
         countDistinct(col("Bike Id")).as("n_bikes"),
         sum(col("Duration")).cast("long").as("total_duration"))
@@ -1162,7 +1163,7 @@ object ScaleQueries {
     * identical either way. */
   def q129GzipCsv(s: SparkSession, dir: String): DataFrame =
     graft.pipeline.JourneyJob
-      .transform(s, "/root/repo/fixtures/journey.csv.gz")
+      .transform(s, s"${Tables.fixtureDir}/journey.csv.gz")
       .agg(count(lit(1)).as("n_rows"),
         countDistinct(col("bike_id")).as("n_bikes"),
         sum(col("Duration")).cast("long").as("total_duration"))
@@ -1340,7 +1341,7 @@ object ScaleQueries {
     s.read.schema(schema)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt")
-      .json("/root/repo/fixtures/events_dirty.jsonl")
+      .json(s"${Tables.fixtureDir}/events_dirty.jsonl")
       .agg(count(lit(1)).as("n_lines"),
         sum(when(col("_corrupt").isNull, 1L).otherwise(0L)).as("n_valid"),
         sum(when(col("_corrupt").isNotNull, 1L).otherwise(0L))
@@ -1741,16 +1742,16 @@ object ScaleQueries {
         |               AS BIGINT)) AS BIGINT) AS rev_cents
         |FROM orders GROUP BY 1 ORDER BY priority""".stripMargin,
     "q256_corrupt_quarantine" ->
-      """WITH raw AS (
+      s"""WITH raw AS (
         |  SELECT line FROM (
         |    SELECT unnest(string_split(content, chr(10))) AS line
-        |    FROM read_text('/root/repo/fixtures/events_dirty.jsonl'))
+        |    FROM read_text('${Tables.fixtureDir}/events_dirty.jsonl'))
         |  WHERE length(line) > 0),
         |cls AS (
         |  SELECT line, json_valid(line) AS ok FROM raw),
         |good AS (
-        |  SELECT CAST(json_extract(line, '$.v') AS BIGINT) AS v,
-        |    json_extract_string(line, '$.kind') AS kind
+        |  SELECT CAST(json_extract(line, '$$.v') AS BIGINT) AS v,
+        |    json_extract_string(line, '$$.kind') AS kind
         |  FROM cls WHERE ok)
         |SELECT (SELECT CAST(count(*) AS BIGINT) FROM cls) AS n_lines,
         |  (SELECT CAST(count(*) AS BIGINT) FROM cls WHERE ok) AS n_valid,
@@ -2034,10 +2035,10 @@ object ScaleQueries {
          |LIMIT 10""".stripMargin
     },
     "q129_gzip_csv" ->
-      """SELECT count(*) AS n_rows,
+      s"""SELECT count(*) AS n_rows,
         |  count(DISTINCT "Bike Id") AS n_bikes,
         |  CAST(sum("Duration") AS BIGINT) AS total_duration
-        |FROM read_csv('/root/repo/fixtures/journey.csv.gz', header=true,
+        |FROM read_csv('${Tables.fixtureDir}/journey.csv.gz', header=true,
         |  columns={'Rental Id':'INTEGER','Duration':'INTEGER','Bike Id':'INTEGER',
         |    'End Date':'VARCHAR','EndStation Id':'INTEGER','EndStation Name':'VARCHAR',
         |    'Start Date':'VARCHAR','StartStation Id':'INTEGER','StartStation Name':'VARCHAR'})""".stripMargin,
@@ -2222,10 +2223,10 @@ object ScaleQueries {
     // The oracle reads the same CSV with EXPLICIT types: matching sums
     // prove inference landed on integral types that parse identically.
     "q108_inferred_csv" ->
-      """SELECT count(*) AS n_rows,
+      s"""SELECT count(*) AS n_rows,
         |  count(DISTINCT "Bike Id") AS n_bikes,
         |  CAST(sum("Duration") AS BIGINT) AS total_duration
-        |FROM read_csv('/root/repo/fixtures/journey.csv', header=true,
+        |FROM read_csv('${Tables.fixtureDir}/journey.csv', header=true,
         |  columns={'Rental Id':'INTEGER','Duration':'INTEGER','Bike Id':'INTEGER',
         |    'End Date':'VARCHAR','EndStation Id':'INTEGER','EndStation Name':'VARCHAR',
         |    'Start Date':'VARCHAR','StartStation Id':'INTEGER','StartStation Name':'VARCHAR'})""".stripMargin,

@@ -16,7 +16,7 @@ import graft.sources.Materialized
   * schema drift) breaks the hash match. */
 object StarQueries {
 
-  private val fx = "/root/repo/fixtures"
+  private def fx = graft.sources.Tables.fixtureDir
 
   /** Build the fixture warehouse once per JVM: init (stations + weather
     * vintage A), then the journey fixture as TWO weekly batches split at

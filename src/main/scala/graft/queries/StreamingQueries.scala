@@ -60,7 +60,7 @@ object StreamingQueries {
     * the final table, so arrival order and batching must not change a
     * parsed byte. */
   def q311WarcStream(s: SparkSession, dir: String): DataFrame =
-    Streams.warcStreamOnce(s, "/root/repo/fixtures/warc_shards.parquet")
+    Streams.warcStreamOnce(s, s"${graft.sources.Tables.fixtureDir}/warc_shards.parquet")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q311_warc_stream" -> (q311WarcStream _),
@@ -76,11 +76,11 @@ object StreamingQueries {
     // the q295 pack-and-recover formulas over the packed source — the
     // stream's final table must equal the batch walk byte-for-byte
     "q311_warc_stream" ->
-      """SELECT url,
+      s"""SELECT url,
         |  CAST(CASE WHEN doc_id % 53 = 7 THEN 404
         |            WHEN doc_id % 53 = 21 THEN 301 ELSE 200 END AS INT) AS http_status,
         |  md5(CASE WHEN doc_id % 53 = 21 THEN '' ELSE html END) AS body_md5
-        |FROM read_parquet('/root/repo/fixtures/html_docs.parquet')""".stripMargin,
+        |FROM read_parquet('${graft.sources.Tables.fixtureDir}/html_docs.parquet')""".stripMargin,
     "q172_stream_enrich" ->
       """WITH tiers AS (
         |  SELECT user_id,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.app.WebCorpusApp
 import graft.operators.Robots
-import graft.sources.Materialized
+import graft.sources.{Materialized, Tables}
 
 /** End-to-end WEB-corpus-app queries: [[graft.app.WebCorpusApp]] BUILDS
   * the corpus from raw WARC fixture shards (full crawl pipeline + real
@@ -25,11 +25,11 @@ import graft.sources.Materialized
   * SCALE_EVIDENCE.md. */
 object WebCorpusQueries {
 
-  private val htmlDocs = "/root/repo/fixtures/html_docs.parquet"
-  private val warcShards = "/root/repo/fixtures/warc_shards.parquet"
-  private val robotsFx = "/root/repo/fixtures/robots.parquet"
-  private val pslFx = "/root/repo/fixtures/psl.parquet"
-  private val crawlSitemapsFx = "/root/repo/fixtures/crawl_sitemaps.parquet"
+  private def htmlDocs = s"${Tables.fixtureDir}/html_docs.parquet"
+  private def warcShards = s"${Tables.fixtureDir}/warc_shards.parquet"
+  private def robotsFx = s"${Tables.fixtureDir}/robots.parquet"
+  private def pslFx = s"${Tables.fixtureDir}/psl.parquet"
+  private def crawlSitemapsFx = s"${Tables.fixtureDir}/crawl_sitemaps.parquet"
   private val Doc0Url = "https://example.com/doc0"
 
   // ------------------------------------------------------ materialization
@@ -120,7 +120,7 @@ object WebCorpusQueries {
     * urls through the written corpus table. */
   def q316WebcorpusSearch(s: SparkSession, dir: String): DataFrame = {
     val out = built(s)
-    val hits = indexedBm25(s, s"$out/text_index", Seq("training", "quality"), 10)
+    val hits = ScaleQueries.indexedBm25(s, s"$out/text_index", Seq("training", "quality"), 10)
     hits.join(WebCorpusApp.readCommitted(s, out, "corpus").select(col("pos"), col("url")),
         hits("doc_id") === col("pos"))
       .select(col("url"), col("score"))
@@ -205,34 +205,6 @@ object WebCorpusQueries {
       .select(col("url"), (dot / (sqrt(col("__m2")) * sqrt(lit(n2.toDouble)))).as("cos"))
       .orderBy(col("cos").desc, col("url"))
       .limit(10)
-  }
-
-  /** BM25 over written postings — the q309 arithmetic verbatim (k1=1.2,
-    * b=0.75, the (N−df+0.5)/(df+0.5) idf), stats/df summed from the
-    * index tables, postings partition-pruned to the query terms. */
-  private def indexedBm25(s: SparkSession, root: String,
-                          terms: Seq[String], k: Int): DataFrame = {
-    import graft.sources.TextIndex
-    val (n, total) = TextIndex.readStats(s, root)
-    val avgdl = total.toDouble / n.toDouble
-    val hits = TextIndex.readPostings(s, root, terms)
-    val dfs = TextIndex.readDf(s, root, terms)
-    val scored = hits.join(broadcast(dfs), "tok")
-      .withColumn("idf",
-        ((lit(n) - col("df")).cast("double") + lit(0.5)) / (col("df").cast("double") + lit(0.5)))
-      .withColumn("sc",
-        col("idf") * (col("tf").cast("double") * lit(2.2)) /
-          (col("tf").cast("double") + lit(1.2) *
-            (lit(0.25) + lit(0.75) * (col("dl").cast("double") / lit(avgdl)))))
-    val perTerm = terms.zipWithIndex.map { case (t, i) =>
-      sum(when(col("tok") === lit(t), col("sc"))).as(s"s$i")
-    }
-    scored.groupBy("doc_id").agg(perTerm.head, perTerm.tail: _*)
-      .select(col("doc_id"),
-        terms.indices.map(i => coalesce(col(s"s$i"), lit(0.0)))
-          .reduce(_ + _).as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
   }
 
   /** q340: the WRITTEN LINK TABLE — the crawl's link graph as a build

@@ -18,6 +18,19 @@ import scala.jdk.CollectionConverters._
   */
 object Tables {
 
+  /** The checkout's committed `fixtures/` directory: the nearest ancestor
+    * of this library's compiled classes (`<checkout>/target/...` under
+    * sbt) that holds one, so a second checkout reads its own fixtures.
+    * Resolved once, on first use; fails loudly when no ancestor has one. */
+  lazy val fixtureDir: String = {
+    val classes = java.nio.file.Paths.get(
+      getClass.getProtectionDomain.getCodeSource.getLocation.toURI).toAbsolutePath
+    Iterator.iterate(classes)(_.getParent).takeWhile(_ != null)
+      .map(_.resolve("fixtures")).find(java.nio.file.Files.isDirectory(_))
+      .map(_.toString)
+      .getOrElse(sys.error(s"no fixtures/ directory in any ancestor of $classes"))
+  }
+
   /** Columns the parquet footer declares as TIMESTAMP(NANOS), which Spark's
     * vectorized reader rejects. Discovered by inspecting the footer of one
     * file (a metadata-only read), NOT hardcoded per table — any nano-precision

@@ -154,26 +154,33 @@ object Streams {
       }
   }
 
+  /** Run `df` as an AvailableNow stream into the memory sink `name`
+    * (checkpoint: a fresh temp root unless given), record its final
+    * micro-batch plan for PlanGuard and return the sink's table — the
+    * runner every oracle-checked `*Once` query below shares. */
+  private def memorySink(spark: SparkSession, name: String, mode: OutputMode,
+                         checkpoint: String = Materialized.tempRoot("graft-ckpt-"))(
+                         df: DataFrame): DataFrame = {
+    val q = df.writeStream
+      .format("memory")
+      .queryName(name)
+      .outputMode(mode)
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpoint)
+      .start()
+    q.awaitTermination()
+    recordMicroBatchPlan(name, q)
+    spark.table(name)
+  }
+
   /** Run the hourly-count aggregate over `dir/events.parquet` as a
     * complete-mode AvailableNow stream into a memory sink and return the
     * final table — lets the batch oracle verify the streaming path. The
     * nano-timestamp column is truncated to micros exactly as the batch
     * loader does (graft.sources.Tables.load). */
-  def hourlyCountsOnce(spark: SparkSession, dir: String): DataFrame = {
-    val stream = graft.sources.Tables.loadStream(spark, dir, "events")
-    val checkpoint = Materialized.tempRoot("graft-ckpt-")
-    val q = hourlyCounts(stream, "ts")
-      .writeStream
-      .format("memory")
-      .queryName("graft_stream_hourly")
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.awaitTermination()
-    recordMicroBatchPlan("graft_stream_hourly", q)
-    spark.table("graft_stream_hourly")
-  }
+  def hourlyCountsOnce(spark: SparkSession, dir: String): DataFrame =
+    memorySink(spark, "graft_stream_hourly", OutputMode.Complete)(
+      hourlyCounts(graft.sources.Tables.loadStream(spark, dir, "events"), "ts"))
 
   /** Gap-based session windows (`session_window`, 30-minute gap) per user
     * over `dir/events.parquet`, run as a complete-mode AvailableNow stream
@@ -183,37 +190,13 @@ object Streams {
     * computes the same islands with a lag window); the batch oracle
     * (islands SQL with a >= gap cut, matching session_window's
     * close-at-exactly-gap rule) verifies the unification. */
-  def sessionCountsOnce(spark: SparkSession, dir: String): DataFrame = {
-    val stream = graft.sources.Tables.loadStream(spark, dir, "events")
-    val checkpoint = Materialized.tempRoot("graft-ckpt-")
-    val q = stream
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("sw.start").as("session_start"), col("n_events"))
-      .writeStream
-      .format("memory")
-      .queryName("graft_stream_sessions")
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.awaitTermination()
-    recordMicroBatchPlan("graft_stream_sessions", q)
-    spark.table("graft_stream_sessions")
-  }
+  def sessionCountsOnce(spark: SparkSession, dir: String): DataFrame =
+    memorySink(spark, "graft_stream_sessions", OutputMode.Complete)(
+      graft.sources.Tables.loadStream(spark, dir, "events")
+        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
+        .agg(count(lit(1)).as("n_events"))
+        .select(col("user_id"), col("sw.start").as("session_start"), col("n_events")))
 
-  /** STREAMING distinct-count sketch: HyperLogLog register vectors
-    * ([[graft.expressions.HllRegisters]], 64 one-byte registers) as the
-    * aggregation state of a streaming groupBy — per event type, the
-    * distinct-user estimate is maintained in 64 bytes of state per group
-    * no matter how many events or users flow through. Exact streaming
-    * `count(DISTINCT ...)` is unsupported by Spark (unbounded state and
-    * non-mergeable retraction); the sketch is the scale-correct
-    * replacement, and its merge-by-max is exactly the state-store merge a
-    * micro-batch needs. The final registers are summarized to
-    * zeros/harmonic-sum/estimate with integer ops so the batch oracle
-    * reproduces them bit-for-bit from the raw table (same derivation as
-    * the batch q131). */
   /** STREAMING WARC ingestion — the crawl front door running
     * continuously: shard files land, the file source discovers them
     * (rate-limited to 2 per micro-batch, so the fixture's 6 shards
@@ -252,46 +235,39 @@ object Streams {
       .parquet(src)
       .selectExpr("shard_id", "gz", "payload")
       .as[graft.operators.WarcShard]
-    val recs = graft.operators.Warc.records(shards)
-      .filter(col("warc_type") === "response")
-      .select(col("target_uri").as("url"), col("http_status"),
-        md5(col("body")).as("body_md5"))
-    val q = recs.writeStream
-      .format("memory")
-      .queryName("graft_warc_stream")
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .start()
-    q.awaitTermination()
-    recordMicroBatchPlan("graft_warc_stream", q)
-    spark.table("graft_warc_stream")
+    memorySink(spark, "graft_warc_stream", OutputMode.Append, s"$tmp/ckpt")(
+      graft.operators.Warc.records(shards)
+        .filter(col("warc_type") === "response")
+        .select(col("target_uri").as("url"), col("http_status"),
+          md5(col("body")).as("body_md5")))
   }
 
+  /** STREAMING distinct-count sketch: HyperLogLog register vectors
+    * ([[graft.expressions.HllRegisters]], 64 one-byte registers) as the
+    * aggregation state of a streaming groupBy — per event type, the
+    * distinct-user estimate is maintained in 64 bytes of state per group
+    * no matter how many events or users flow through. Exact streaming
+    * `count(DISTINCT ...)` is unsupported by Spark (unbounded state and
+    * non-mergeable retraction); the sketch is the scale-correct
+    * replacement, and its merge-by-max is exactly the state-store merge a
+    * micro-batch needs. The final registers are summarized to
+    * zeros/harmonic-sum/estimate with integer ops so the batch oracle
+    * reproduces them bit-for-bit from the raw table (same derivation as
+    * the batch q131). */
   def hllDistinctOnce(spark: SparkSession, dir: String): DataFrame = {
-    val stream = graft.sources.Tables.loadStream(spark, dir, "events")
     val maxRho = 55 // 60-bit hash, b=6 -> 64 registers, rho in [1, 55]
-    val q = stream
-      .select(col("event_type"),
-        graft.functions.TextFunctions.md5Long(col("user_id").cast("string")).as("h"))
-      .groupBy("event_type")
-      .agg(graft.expressions.GraftFunctions.hllRegisters(col("h"), 6).as("regs"))
-      .select(col("event_type"),
-        expr("CAST(size(filter(regs, x -> x = 0)) AS INT)").as("zeros"),
-        expr(s"aggregate(regs, CAST(0 AS BIGINT), " +
-          s"(acc, x) -> acc + shiftleft(CAST(1 AS BIGINT), $maxRho - x))").as("hsum"))
-      .withColumn("est",
-        lit(0.709 * 4096.0 * 36028797018963968.0) / col("hsum").cast("double"))
-      .writeStream
-      .format("memory")
-      .queryName("graft_stream_distinct")
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Materialized.tempRoot("graft-ckpt-"))
-      .start()
-    q.awaitTermination()
-    recordMicroBatchPlan("graft_stream_distinct", q)
-    spark.table("graft_stream_distinct")
+    memorySink(spark, "graft_stream_distinct", OutputMode.Complete)(
+      graft.sources.Tables.loadStream(spark, dir, "events")
+        .select(col("event_type"),
+          graft.functions.TextFunctions.md5Long(col("user_id").cast("string")).as("h"))
+        .groupBy("event_type")
+        .agg(graft.expressions.GraftFunctions.hllRegisters(col("h"), 6).as("regs"))
+        .select(col("event_type"),
+          expr("CAST(size(filter(regs, x -> x = 0)) AS INT)").as("zeros"),
+          expr(s"aggregate(regs, CAST(0 AS BIGINT), " +
+            s"(acc, x) -> acc + shiftleft(CAST(1 AS BIGINT), $maxRho - x))").as("hsum"))
+        .withColumn("est",
+          lit(0.709 * 4096.0 * 36028797018963968.0) / col("hsum").cast("double")))
   }
 
   /** STREAMING per-window top-K: the hour's K highest-value events,
@@ -305,30 +281,19 @@ object Streams {
     * engine-portable; the array is exploded to ranks AFTER the stream
     * completes (a generator after a streaming aggregation is unsupported
     * in-stream). */
-  def topKPerHourOnce(spark: SparkSession, dir: String): DataFrame = {
-    val stream = graft.sources.Tables.loadStream(spark, dir, "events")
-    val q = stream
-      .select(col("ts"), col("event_id"),
-        expr("CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)").as("score"))
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(graft.expressions.GraftFunctions
-        .topKByScore(col("score"), col("event_id"), 3).as("top"))
-      .select(col("w.start").as("hour_start"), col("top"))
-      .writeStream
-      .format("memory")
-      .queryName("graft_stream_topk")
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Materialized.tempRoot("graft-ckpt-"))
-      .start()
-    q.awaitTermination()
-    recordMicroBatchPlan("graft_stream_topk", q)
-    spark.table("graft_stream_topk")
+  def topKPerHourOnce(spark: SparkSession, dir: String): DataFrame =
+    memorySink(spark, "graft_stream_topk", OutputMode.Complete)(
+      graft.sources.Tables.loadStream(spark, dir, "events")
+        .select(col("ts"), col("event_id"),
+          expr("CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)").as("score"))
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "1 hour").as("w"))
+        .agg(graft.expressions.GraftFunctions
+          .topKByScore(col("score"), col("event_id"), 3).as("top"))
+        .select(col("w.start").as("hour_start"), col("top")))
       .select(col("hour_start"), posexplode(col("top")))
       .select(col("hour_start"), (col("pos") + 1).cast("long").as("rank"),
         col("col.id").as("event_id"), col("col.score").as("score"))
-  }
 
   /** The stream-STREAM interval join as an oracle-checked query: view →
     * purchase attribution over the events table, each view matched to the
@@ -348,19 +313,10 @@ object Streams {
     val purchases = src().filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
         col("ts").as("p_ts"))
-    val q = intervalJoinStream(views, purchases, "v_user", "p_user",
-        "v_ts", "p_ts", watermark = "1 hour", horizon = "2 hours")
-      .select(col("v_user").as("user_id"), col("view_id"), col("purchase_id"))
-      .writeStream
-      .format("memory")
-      .queryName("graft_stream_join")
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Materialized.tempRoot("graft-ckpt-"))
-      .start()
-    q.awaitTermination()
-    recordMicroBatchPlan("graft_stream_join", q)
-    spark.table("graft_stream_join")
+    memorySink(spark, "graft_stream_join", OutputMode.Append)(
+      intervalJoinStream(views, purchases, "v_user", "p_user",
+          "v_ts", "p_ts", watermark = "1 hour", horizon = "2 hours")
+        .select(col("v_user").as("user_id"), col("view_id"), col("purchase_id")))
   }
 
   /** Stream-STATIC enrichment join: the event stream joined per
@@ -379,21 +335,11 @@ object Streams {
       .groupBy("user_id").agg(count(lit(1)).as("total"))
       .select(col("user_id"),
         (length(bin(col("total"))) - 1).cast("long").as("tier"))
-    val stream = graft.sources.Tables.loadStream(spark, dir, "events")
-    val q = stream
-      .join(broadcast(tiers), "user_id")
-      .groupBy("tier", "event_type")
-      .agg(count(lit(1)).as("cnt"), sum(floor(col("value").cast("double") * 1000000d).cast("long")).as("value_micros"))
-      .writeStream
-      .format("memory")
-      .queryName("graft_stream_enrich")
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Materialized.tempRoot("graft-ckpt-"))
-      .start()
-    q.awaitTermination()
-    recordMicroBatchPlan("graft_stream_enrich", q)
-    spark.table("graft_stream_enrich")
+    memorySink(spark, "graft_stream_enrich", OutputMode.Complete)(
+      graft.sources.Tables.loadStream(spark, dir, "events")
+        .join(broadcast(tiers), "user_id")
+        .groupBy("tier", "event_type")
+        .agg(count(lit(1)).as("cnt"), sum(floor(col("value").cast("double") * 1000000d).cast("long")).as("value_micros")))
   }
 
   /** Watermarked HOPPING-window counts (2-hour window sliding by 1 hour):
@@ -403,24 +349,13 @@ object Streams {
     * watermark passes each window end; the overlap factor, not the
     * stream length, is the multiplier, which is why hopping windows
     * survive scale where arbitrary self-joins would not. */
-  def hoppingCountsOnce(spark: SparkSession, dir: String): DataFrame = {
-    val stream = graft.sources.Tables.loadStream(spark, dir, "events")
-    val q = stream
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "2 hours", "1 hour").as("w"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("w.start").as("window_start"), col("cnt"))
-      .writeStream
-      .format("memory")
-      .queryName("graft_stream_hopping")
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Materialized.tempRoot("graft-ckpt-"))
-      .start()
-    q.awaitTermination()
-    recordMicroBatchPlan("graft_stream_hopping", q)
-    spark.table("graft_stream_hopping")
-  }
+  def hoppingCountsOnce(spark: SparkSession, dir: String): DataFrame =
+    memorySink(spark, "graft_stream_hopping", OutputMode.Complete)(
+      graft.sources.Tables.loadStream(spark, dir, "events")
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "2 hours", "1 hour").as("w"))
+        .agg(count(lit(1)).as("cnt"))
+        .select(col("w.start").as("window_start"), col("cnt")))
 
   /** STREAMING corpus ingest: raw document micro-batches drive
     * [[graft.app.CorpusApp.appendBatch]] through `foreachBatch` — each

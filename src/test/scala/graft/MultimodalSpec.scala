@@ -671,6 +671,54 @@ class MultimodalSpec extends AnyFunSuite with SharedSpark {
     assert(Multimodal.jpegGray(bomb).isEmpty)
   }
 
+  test("JPEG frame contract: EOI, trailing bytes, frame kinds, Adobe transform, scan shape") {
+    def payload(id: Long): Array[Byte] = spark.read.parquet(fixture)
+      .filter(col("media_id") === id).select("payload").head().getAs[Array[Byte]](0)
+    def at(p: Array[Byte], marker: Int): Int =
+      p.indexOfSlice(Array(0xFF.toByte, marker.toByte))
+    def sameRaster(p: Array[Byte], like: Array[Byte]): Boolean =
+      (Multimodal.imageGray(p), Multimodal.imageGray(like)) match {
+        case (Some((w, h, a)), Some((w2, h2, b))) => w == w2 && h == h2 && a.sameElements(b)
+        case _ => false
+      }
+    // 105 baseline gray, 125 progressive gray, 136 baseline Adobe CMYK
+    val base = payload(105); val prog = payload(125); val cmyk = payload(136)
+    Seq(base, prog, cmyk).foreach(p => assert(Multimodal.imageGray(p).isDefined))
+    // a baseline frame is complete at the end of its one scan: no EOI
+    // needed; a progressive frame is complete only at EOI
+    assert(sameRaster(base.dropRight(2), base))
+    assert(Multimodal.imageGray(prog.dropRight(2)).isEmpty)
+    // bytes after EOI are never read
+    val junk = Array[Byte](1, 2, 3)
+    assert(sameRaster(base ++ junk, base))
+    assert(sameRaster(prog ++ junk, prog))
+    // SOF0 and SOF2 are the only frame kinds
+    val sof1 = base.clone(); sof1(at(base, 0xC0) + 1) = 0xC1.toByte
+    assert(Multimodal.imageGray(sof1).isEmpty)
+    // a 4-component frame needs Adobe transform 0 (CMYK) or 2 (YCCK)
+    val adobe = cmyk.indexOfSlice("Adobe".getBytes("US-ASCII")) + 11
+    assert(cmyk(adobe) == 0)
+    val t1 = cmyk.clone(); t1(adobe) = 1
+    assert(Multimodal.imageGray(t1).isEmpty)
+    val t2 = cmyk.clone(); t2(adobe) = 2
+    assert(Multimodal.imageGray(t2).isDefined)
+    // a baseline scan carries every frame component (Ns = nf)
+    val ns3 = cmyk.clone(); ns3(at(cmyk, 0xDA) + 4) = 3
+    assert(Multimodal.imageGray(ns3).isEmpty)
+    // a progressive frame has 1 or 3 components, never 4
+    val prog4 = cmyk.clone(); prog4(at(cmyk, 0xC0) + 1) = 0xC2.toByte
+    assert(Multimodal.imageGray(prog4).isEmpty)
+  }
+
+  test("a progressive SOS segment too short for its header yields None, not an exception") {
+    val prog = spark.read.parquet(fixture)
+      .filter(col("media_id") === 125).select("payload").head().getAs[Array[Byte]](0)
+    // the file ends in an SOS marker whose length (2) leaves no byte for Ns
+    val cut = prog.take(prog.indexOfSlice(Array(0xFF.toByte, 0xDA.toByte))) ++
+      Array(0xFF, 0xDA, 0x00, 0x02).map(_.toByte)
+    assert(Multimodal.imageGray(cut).isEmpty)
+  }
+
   test("decoders refuse decompression bombs: huge declared dims from tiny payloads") {
     // header-declared dims are untrusted: a sub-KB payload claiming a
     // 65535×65535 (GIF) or 2^31-scale (PNG) raster must yield None, not
