@@ -35,28 +35,11 @@ object Bfs {
                    seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = {
     // validated before the eager adjacency build, not after it
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
-    hopDistancesOver(prepareAdjacency(edges, aCol, bCol), seeds, seedCol, maxHops)
+    hopDistancesOver(Graph.adjacency(Graph.undirected(edges, aCol, bCol).distinct()),
+      seeds, seedCol, maxHops)
   }
 
-  /** The severed, src-keyed directed adjacency of an undirected edge
-    * list — both directions once, partitioned by the join key at the cut
-    * with the layout DECLARED on the checkpoint scan (r18 — the
-    * LabelProp convention: AQE degrades the capture to unknown
-    * otherwise). Exposed so a caller running SEVERAL sweeps over the
-    * same graph (q233's double sweep) materializes it once. */
-  def prepareAdjacency(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val parts = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val und = edges
-      .select(least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-    und.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(und.select(col("b").as("src"), col("a").as("dst")))
-      .severKeyed(Seq("src"), parts)
-  }
-
-  /** [[hopDistances]] over a [[prepareAdjacency]]-built frame. Every
+  /** [[hopDistances]] over a [[Graph.adjacency]]-built frame. Every
     * round's frontier join reads the adjacency in place; only the
     * frontier side ever moves. */
   def hopDistancesOver(adj: DataFrame, seeds: DataFrame, seedCol: String,
@@ -113,15 +96,7 @@ object Bfs {
                           maxHops: Int): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
     val parts = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val und = edges
-      .select(least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-    // partitioned at the cut, layout declared — see [[hopDistances]] (r18)
-    val adj = und.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(und.select(col("b").as("src"), col("a").as("dst")))
-      .severKeyed(Seq("src"), parts)
+    val adj = Graph.adjacency(Graph.undirected(edges, aCol, bCol).distinct())
     var visited = seeds
       .select(col(labelCol).cast("long").as("lm"), col(seedCol).cast("long").as("node"))
       .distinct()

@@ -72,10 +72,7 @@ object KCore {
                        maxRounds: Int = 12): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val orig = edges
-      .select(least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
+    val orig = Graph.undirected(edges, aCol, bCol)
       .distinct()
       .sever() // materialized ONCE; every round reads, none rewrites
     var deg = orig.select(col("a").as("node"))

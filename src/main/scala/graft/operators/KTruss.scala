@@ -95,10 +95,7 @@ object KTruss {
              maxRounds: Int = 8): DataFrame = {
     require(k >= 3, s"k must be >= 3 (k-2 triangle witnesses), got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    var cur = edges
-      .select(least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
+    var cur = Graph.undirected(edges, aCol, bCol)
       // support() packs ids into the low 32 bits of the deg·2³²+id order
       // key; out-of-range ids would silently mis-credit wing edges. Guard
       // the contract per-edge, LinkPredict-style — a ≥ 0 ∧ b < 2³¹ covers

@@ -69,18 +69,7 @@ object LabelProp {
                   rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val parts = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val und = edges
-      .select(least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-    // both directions once, partitioned by the join key at the cut —
-    // severKeyed re-declares the layout on the checkpoint scan (AQE
-    // makes the capture degrade to unknown otherwise), so every round's
-    // join reads it in place
-    val adj = und.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(und.select(col("b").as("src"), col("a").as("dst")))
-      .severKeyed(Seq("src"), parts)
+    val adj = Graph.adjacency(Graph.undirected(edges, aCol, bCol).distinct())
     // the distinct reuses adj's declared layout (complete aggregate, no
     // exchange) and the projection preserves it through the alias
     var labels = adj.select(col("src").as("node")).distinct()

@@ -60,28 +60,30 @@ object LinkPredict {
     * skew bench's candidate-volume gate. `und` must be distinct
     * undirected edges as (pa, pb) with pa < pb.
     *
-    * `mapParallelism` (0 = default): explicit partition count for the
-    * self-join's stream side. The self-join EXPLODES its input
-    * ~deg-fold (12M adjacency rows → 1.47B candidates at sf1), and AQE
-    * sizes the join's partitioning from the INPUT bytes — at sf1 it
-    * coalesced the join to 35 tasks that each generated+sorted ~390 MB
-    * of shuffle output (12 GB spill, 122 s max task). MEASURED REACH
-    * of this knob (SCALE_EVIDENCE.md §q153): it governs the
+    * The self-join's stream side is repartitioned by src into
+    * max(default parallelism, `spark.sql.shuffle.partitions`) before the
+    * join. The self-join EXPLODES its input ~deg-fold (12M adjacency rows
+    * → 1.47B candidates at sf1), and a written edge table arrives as a
+    * ~10-partition parquet scan that flows in through a broadcast join
+    * with no exchange, so without the repartition the explosion runs on
+    * scan granularity (measured 78 s at sf0.1; repartitioned: 14 s).
+    * MEASURED REACH (SCALE_EVIDENCE.md §q153): the count governs the
     * broadcast-hash regime (small build side), but in the sort-merge
-    * regime EnsureRequirements normalizes the explicit count back to
-    * the session partition number — there the working lever is
-    * session-level `coalescePartitions.minPartitionNum` set beside
+    * regime EnsureRequirements normalizes it back to the session
+    * partition number — there the working lever is session-level
+    * `coalescePartitions.minPartitionNum` set beside
     * `shuffle.partitions` (≈ |candidates| / 8M), which makes every
     * stage uniform and spill-free. */
-  def raCandidates(und: DataFrame, hubCap: Int,
-                   mapParallelism: Int = 0): DataFrame = {
+  def raCandidates(und: DataFrame, hubCap: Int): DataFrame = {
+    val s = und.sparkSession
+    val parallelism = math.max(s.sparkContext.defaultParallelism,
+      s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
     val adj = und.select(col("pa").as("src"), col("pb").as("dst"))
       .union(und.select(col("pb").as("src"), col("pa").as("dst")))
     val deg = adj.groupBy("src").agg(count(lit(1)).as("deg"))
-    val viaZ0 = adj.join(deg.filter(col("deg") <= hubCap), "src")
+    val viaZ = adj.join(deg.filter(col("deg") <= hubCap), "src")
       .withColumn("w", expr(s"CAST($WeightScale DIV deg AS BIGINT)"))
-    val viaZ = if (mapParallelism > 0)
-      viaZ0.repartition(mapParallelism, col("src")) else viaZ0
+      .repartition(parallelism, col("src"))
     // The self-join MUST stay in the shuffled (sort-merge) regime (r17,
     // guide §3.1 "pick the strategy deliberately"): viaZ materializes
     // near Spark's 10 MB broadcast threshold, so AQE flipped this join
@@ -130,15 +132,14 @@ object LinkPredict {
     * `assert_true` (a filter over |E| rows, negligible next to the
     * candidate stream; fails LOUDLY, never corrupts). Ids wider than 31
     * bits (e.g. synthetic 64-bit hashes) must be densified first. */
-  def topPredictions(und: DataFrame, hubCap: Int, k: Int,
-                     mapParallelism: Int = 0): DataFrame = {
+  def topPredictions(und: DataFrame, hubCap: Int, k: Int): DataFrame = {
     val idBound = 1L << 31
     val guarded = und.filter(assert_true(
       col("pa") >= 0 && col("pa") < idBound && col("pb") >= 0 && col("pb") < idBound,
       lit("LinkPredict packed keys require node ids in [0, 2^31); " +
         "densify ids first")).isNull)
     def pack(a: Column, b: Column): Column = shiftleft(a, 32) + b
-    val packedPairs = raCandidates(guarded, hubCap, mapParallelism)
+    val packedPairs = raCandidates(guarded, hubCap)
       .select(pack(col("a"), col("b")).as("ab"), col("w"))
       .repartition(col("ab"))
       .groupBy("ab")

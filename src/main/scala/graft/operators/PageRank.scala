@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.Sever.SeverOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,68 +30,45 @@ object PageRank {
 
   val RankScale: Long = 1000000000000L // 1e12: rank 1.0 in micro-units
   val ProbScale: Long = 1000000L       // 1e6: transition probabilities
+  private val DampNum: Long = 85L      // damping d = DampNum/100
 
-  /** `iters` rounds of damped PageRank over `edges` (src, dst, w) for the
-    * node universe `nodes` (one column `node`). Damping is the rational
-    * d = dampNum/100. Returns (node, rank) with rank in RankScale units.
-    *
-    * The normalized edge table is persisted — it is reused every
-    * iteration, and at scale it is the single large sortable asset (the
-    * rank vector is |V| rows, edges |E| rows; each iteration shuffles by
-    * src then dst). */
+  /** `iters` rounds of damped PageRank (d = 0.85) over `edges` (src, dst, w)
+    * for the node universe `nodes` (one column `node`, distinct). Returns
+    * (node, rank) with rank in RankScale units: [[personalizedRanks]] with
+    * every node a seed, so teleport mass spreads uniformly. */
   def ranks(spark: SparkSession, nodes: DataFrame, edges: DataFrame,
-            iters: Int, dampNum: Long = 85L): DataFrame = {
-    require(iters >= 1 && dampNum >= 0 && dampNum <= 100)
-    val outW = edges.groupBy("src").agg(sum(col("w")).as("out_w"))
-    val p = edges.join(outW, "src")
-      .select(col("src"), col("dst"),
-        expr(s"CAST((w * $ProbScale) DIV out_w AS BIGINT)").as("p"))
-      .persist()
-    val n = nodes.count() // bounded driver read: one scalar
-    // empty node universe: the answer is the empty rank vector, not a
-    // divide-by-zero deep in the base-share arithmetic
-    if (n == 0) return nodes.select(col("node"), lit(0L).as("rank"))
-    val base = RankScale / n
-    val teleport = ((100L - dampNum) * base) / 100L
-    var r = nodes.select(col("node"), lit(base).as("rank"))
-    for (_ <- 1 to iters) {
-      val contrib = p.join(r, p("src") === r("node"))
-        .select(col("dst"),
-          expr(s"CAST((rank * p) DIV $ProbScale AS BIGINT)").as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("in_rank"))
-      r = nodes.join(contrib, nodes("node") === contrib("dst"), "left")
-        .select(col("node"),
-          (lit(teleport) +
-            expr(s"CAST(($dampNum * COALESCE(in_rank, 0)) DIV 100 AS BIGINT)")).as("rank"))
-    }
-    r
-  }
+            iters: Int): DataFrame =
+    personalizedRanks(spark, nodes, edges, nodes, iters)
 
-  /** PERSONALIZED PageRank: same fixed-point iteration, but all teleport
-    * mass returns to the seed set `seeds` (one column `node`, assumed a
-    * subset of `nodes`) instead of spreading uniformly — the standard
-    * seed-set-expansion measure (rank ≙ stationary probability of a walk
-    * that restarts at a random seed), used for "find more data like this
-    * trusted slice" curation. Initial mass RankScale/|seeds| on each seed,
-    * zero elsewhere; the per-node teleport table is computed once and
-    * reused across iterations. Arithmetic is the same order-free integer
-    * fixed point as [[ranks]] (same overflow bound: seed ranks start at
-    * RankScale/|seeds| ≤ RankScale and mass only shrinks), so results are
-    * bit-identical on any engine. */
+  /** PERSONALIZED PageRank: all teleport mass returns to the seed set
+    * `seeds` (one column `node`, distinct, a subset of `nodes`) instead of
+    * spreading uniformly — the standard seed-set-expansion measure (rank
+    * ≙ stationary probability of a walk that restarts at a random seed),
+    * used for "find more data like this trusted slice" curation. Initial
+    * mass RankScale/|seeds| on each seed, zero elsewhere. Overflow bound:
+    * seed ranks start at RankScale/|seeds| ≤ RankScale and mass only
+    * shrinks.
+    *
+    * The normalized edge table and the per-node teleport table are reused
+    * every iteration, so both are severed (eager, no session-lifetime
+    * cache entry); each iteration shuffles the |E|-row edge side by src
+    * then dst against the |V|-row rank vector. */
   def personalizedRanks(spark: SparkSession, nodes: DataFrame,
                         edges: DataFrame, seeds: DataFrame,
-                        iters: Int, dampNum: Long = 85L): DataFrame = {
-    require(iters >= 1 && dampNum >= 0 && dampNum <= 100)
+                        iters: Int): DataFrame = {
+    require(iters >= 1, s"iters must be >= 1, got $iters")
+    val nSeeds = seeds.count() // bounded driver read: one scalar
+    // empty seed set (or node universe): the answer is the all-zero rank
+    // vector, not a divide-by-zero deep in the base-share arithmetic
+    if (nSeeds == 0) return nodes.select(col("node"), lit(0L).as("rank"))
+    val seedBase = RankScale / nSeeds
+    val teleport = ((100L - DampNum) * seedBase) / 100L
     val outW = edges.groupBy("src").agg(sum(col("w")).as("out_w"))
     val p = edges.join(outW, "src")
       .select(col("src"), col("dst"),
         expr(s"CAST((w * $ProbScale) DIV out_w AS BIGINT)").as("p"))
-      .persist()
-    val nSeeds = seeds.count() // bounded driver read: one scalar
-    if (nSeeds == 0) return nodes.select(col("node"), lit(0L).as("rank"))
-    val seedBase = RankScale / nSeeds
-    val teleport = ((100L - dampNum) * seedBase) / 100L
-    // (node, is_seed teleport mass) — joined every iteration, so persist
+      .sever()
+    // (node, teleport mass, initial rank)
     val tele = nodes.join(
         seeds.select(col("node").as("seed_node")),
         nodes("node") === col("seed_node"), "left")
@@ -99,7 +77,7 @@ object PageRank {
           .as("tele"),
         when(col("seed_node").isNotNull, lit(seedBase)).otherwise(lit(0L))
           .as("r0"))
-      .persist()
+      .sever()
     var r = tele.select(col("node"), col("r0").as("rank"))
     for (_ <- 1 to iters) {
       val contrib = p.join(r, p("src") === r("node"))
@@ -109,7 +87,7 @@ object PageRank {
       r = tele.join(contrib, tele("node") === contrib("dst"), "left")
         .select(tele("node"),
           (col("tele") +
-            expr(s"CAST(($dampNum * COALESCE(in_rank, 0)) DIV 100 AS BIGINT)")).as("rank"))
+            expr(s"CAST(($DampNum * COALESCE(in_rank, 0)) DIV 100 AS BIGINT)")).as("rank"))
     }
     r
   }

@@ -71,10 +71,7 @@ object Triangles {
     // round-9 fixtures: 7.02 s persisted vs 7.04 s recomputed; an earlier
     // "17 s → 4 s" reading predated that reuse and the current fixtures)
     // while squatting executor storage for the session.
-    val canon = edges
-      .select(least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
+    val canon = Graph.undirected(edges, aCol, bCol)
       // the deg·2³²+id order key packs ids into the low 32 bits; an
       // out-of-range id would silently corrupt orientation. Enforce the
       // documented contract per-edge (canonical rows: 0 ≤ a < b < 2³¹).

@@ -51,16 +51,8 @@ object AnalyticsQueries {
     * [[graft.operators.LinkPredict]]; top 50 by (score, pa, pb) is a
     * deterministic TakeOrderedAndProject. */
   def q153LinkPredict(s: SparkSession, dir: String): DataFrame =
-    // mapParallelism pins the exploding candidate self-join's input
-    // partitioning: the shared edge TABLE arrives as a ~10-partition
-    // parquet scan and flows into raCandidates through a broadcast join
-    // with NO exchange, so without the pin the deg-fold explosion runs
-    // on scan granularity (measured 78 s at sf0.1; pinned: 14 s — also
-    // ahead of the 23 s pay-the-derivation shape this replaced)
     graft.operators.LinkPredict.topPredictions(
-      coPurchaseDistinct(s, dir), hubCap = 200, k = 50,
-      mapParallelism = math.max(s.sparkContext.defaultParallelism,
-        s.conf.get("spark.sql.shuffle.partitions", "32").toInt))
+      coPurchaseDistinct(s, dir), hubCap = 200, k = 50)
 
   /** q154: peak supplier backlog by sweep line — each lineitem is "open"
     * from its order date to its ship date; exploding intervals into

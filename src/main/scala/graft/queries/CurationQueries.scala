@@ -1794,7 +1794,8 @@ object CurationQueries {
     // and BOTH sweeps (r18 — each hopDistances call was re-deriving and
     // re-materializing the 2·|E| adjacency; the degree aggregate also
     // reads the cut in place now)
-    val adj = graft.operators.Bfs.prepareAdjacency(und, "pa", "pb")
+    val adj = graft.operators.Graph.adjacency(
+      graft.operators.Graph.undirected(und, "pa", "pb").distinct())
     val seed1 = adj.groupBy("src").agg(count(lit(1)).as("d"))
       .orderBy(col("d").desc, col("src")).limit(1)
       .select(col("src")).as[Long].head()

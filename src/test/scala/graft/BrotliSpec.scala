@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * output cap. */
 class BrotliSpec extends AnyFunSuite with SharedSpark {
 
-  private val fixture = "/root/repo/fixtures/brotli_vectors.parquet"
+  private val fixture = s"${graft.sources.Tables.fixtureDir}/brotli_vectors.parquet"
   private val Cap = 64L * 1024 * 1024
 
   private lazy val vectors: Array[(Long, String, Int, Int, Array[Byte], Array[Byte])] =

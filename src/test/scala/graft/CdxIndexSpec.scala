@@ -12,7 +12,7 @@ import graft.sources.CdxIndex
   * pruning real at the file level, malformed slices harmless. */
 class CdxIndexSpec extends AnyFunSuite with SharedSpark {
 
-  private val fixture = "/root/repo/fixtures/warc_shards.parquet"
+  private val fixture = s"${graft.sources.Tables.fixtureDir}/warc_shards.parquet"
   private lazy val root = CdxIndex.path(spark, fixture)
 
   private lazy val walkTruth =

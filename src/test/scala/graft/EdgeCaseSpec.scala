@@ -116,8 +116,8 @@ class EdgeCaseSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("gzip and plain CSV of the same content transform identically") {
-    val plain = graft.pipeline.JourneyJob.transform(spark, "/root/repo/fixtures/journey.csv")
-    val gz = graft.pipeline.JourneyJob.transform(spark, "/root/repo/fixtures/journey.csv.gz")
+    val plain = graft.pipeline.JourneyJob.transform(spark, s"${graft.sources.Tables.fixtureDir}/journey.csv")
+    val gz = graft.pipeline.JourneyJob.transform(spark, s"${graft.sources.Tables.fixtureDir}/journey.csv.gz")
     assert(plain.exceptAll(gz).isEmpty && gz.exceptAll(plain).isEmpty)
   }
 

@@ -6,7 +6,7 @@ import graft.operators.Html
 
 class HtmlSpec extends AnyFunSuite with SharedSpark {
 
-  private val fixture = "/root/repo/fixtures/html_docs.parquet"
+  private val fixture = s"${graft.sources.Tables.fixtureDir}/html_docs.parquet"
 
   private def extractOne(html: String): String = {
     import spark.implicits._

@@ -6,7 +6,7 @@ import graft.operators.Multimodal
 
 class MultimodalSpec extends AnyFunSuite with SharedSpark {
 
-  private val fixture = "/root/repo/fixtures/media.parquet"
+  private val fixture = s"${graft.sources.Tables.fixtureDir}/media.parquet"
 
   test("byte-level decode reproduces the independently stored metadata for every row") {
     // image rows run the dims codec; audio rows are REAL WAV containers

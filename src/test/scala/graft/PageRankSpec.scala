@@ -157,6 +157,18 @@ class PageRankSpec extends AnyFunSuite with SharedSpark {
       "distributed personalized ranks diverge from the naive evaluator")
   }
 
+  private def cacheManager =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+
+  test("both variants leave no cache entry in the session") {
+    spark.catalog.clearCache() // the session is shared with earlier suites
+    val e = Seq((1L, 2L, 1L), (2L, 3L, 2L), (3L, 1L, 3L)).toDF("src", "dst", "w")
+    PageRank.ranks(spark, nodes(1L, 2L, 3L), e, iters = 2).collect()
+    assert(cacheManager.isEmpty)
+    PageRank.personalizedRanks(spark, nodes(1L, 2L, 3L), e, nodes(1L), iters = 2).collect()
+    assert(cacheManager.isEmpty)
+  }
+
   test("total mass is conserved to within the documented floor loss") {
     val e = Seq((1L, 2L, 1L), (2L, 3L, 2L), (3L, 1L, 3L), (1L, 3L, 1L)).toDF("src", "dst", "w")
     val r = PageRank.ranks(spark, nodes(1L, 2L, 3L), e, iters = 3)

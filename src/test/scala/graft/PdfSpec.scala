@@ -6,7 +6,7 @@ import graft.operators.Pdf
 
 class PdfSpec extends AnyFunSuite with SharedSpark {
 
-  private val fixture = "/root/repo/fixtures/pdf_docs.parquet"
+  private val fixture = s"${graft.sources.Tables.fixtureDir}/pdf_docs.parquet"
 
   private def extracted = Pdf.extract(Pdf.readPdfs(spark, fixture)).toDF()
 

@@ -9,7 +9,7 @@ import graft.pipeline._
   * headers, schema drift, late stations with 0.0 coords, minute-precision
   * seconds=0. */
 class PipelineSpec extends AnyFunSuite with SharedSpark {
-  private val fx = "/root/repo/fixtures"
+  private val fx = graft.sources.Tables.fixtureDir
 
   test("journey CSV scan keeps the messy space-named headers") {
     val raw = JourneyJob.read(spark, s"$fx/journey.csv")

@@ -7,7 +7,7 @@ import graft.operators.Robots
 class RobotsSpec extends AnyFunSuite with SharedSpark {
   import spark.implicits._
 
-  private val fixture = "/root/repo/fixtures/robots.parquet"
+  private val fixture = s"${graft.sources.Tables.fixtureDir}/robots.parquet"
 
   test("fixture parse recovers the stored expected rules exactly, per site") {
     val got = Robots.rules(Robots.readRobots(spark, fixture), "graftbot")
@@ -139,7 +139,7 @@ class RobotsSpec extends AnyFunSuite with SharedSpark {
     assert(got == Map("a.com" -> 2, "b.com" -> 7, "e.com" -> 5), s"got $got")
     // the fixture's stored expectations round-trip
     val fx = Robots.crawlDelays(
-      Robots.readRobots(spark, "/root/repo/fixtures/robots.parquet"), "graftbot")
+      Robots.readRobots(spark, s"${graft.sources.Tables.fixtureDir}/robots.parquet"), "graftbot")
       .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(fx == Map("www.example.com" -> 10, "example.com" -> 2,
       "api.news.example.co.uk" -> 3), s"got $fx")

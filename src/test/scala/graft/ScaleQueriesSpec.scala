@@ -101,7 +101,7 @@ class ScaleQueriesSpec extends AnyFunSuite with SharedSpark {
 
   test("q108: inference recovers the explicit journey schema; drifted files still read") {
     import org.apache.spark.sql.types._
-    val inferred = graft.sources.InferredRead.csv(spark, "/root/repo/fixtures/journey.csv")
+    val inferred = graft.sources.InferredRead.csv(spark, s"${graft.sources.Tables.fixtureDir}/journey.csv")
     val byName = inferred.schema.fields.map(f => f.name -> f.dataType).toMap
     assert(byName("Rental Id") == IntegerType && byName("Duration") == IntegerType &&
       byName("Bike Id") == IntegerType && byName("EndStation Name") == StringType,

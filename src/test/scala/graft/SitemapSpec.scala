@@ -6,7 +6,7 @@ import graft.operators.Sitemap
 
 class SitemapSpec extends AnyFunSuite with SharedSpark {
 
-  private val fixture = "/root/repo/fixtures/sitemaps.parquet"
+  private val fixture = s"${graft.sources.Tables.fixtureDir}/sitemaps.parquet"
 
   private def files = Sitemap.readSitemaps(spark, fixture)
 

@@ -12,7 +12,7 @@ import graft.pipeline.{JourneyJob, Schemas}
   * tables, and weekly-rerun idempotence. */
 class StarSchemaSpec extends AnyFunSuite with SharedSpark {
 
-  private val fx = "/root/repo/fixtures"
+  private val fx = graft.sources.Tables.fixtureDir
 
   private def initWarehouse(): String = {
     val w = Files.createTempDirectory("graft-star").toString

@@ -263,7 +263,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     // batch container walk with zero duplicates (_spark_metadata commits
     // make partially-written batches invisible to readers).
     import graft.operators.{Warc, WarcShard}
-    val fixture = "/root/repo/fixtures/warc_shards.parquet"
+    val fixture = s"${graft.sources.Tables.fixtureDir}/warc_shards.parquet"
     val tmp = Files.createTempDirectory("graft-warc-file-sink").toString
     val src = s"$tmp/shards"
     Files.createDirectories(java.nio.file.Paths.get(src))

@@ -6,8 +6,8 @@ import graft.operators.{Html, Warc, WarcShard}
 
 class WarcSpec extends AnyFunSuite with SharedSpark {
 
-  private val fixture = "/root/repo/fixtures/warc_shards.parquet"
-  private val htmlDocs = "/root/repo/fixtures/html_docs.parquet"
+  private val fixture = s"${graft.sources.Tables.fixtureDir}/warc_shards.parquet"
+  private val htmlDocs = s"${graft.sources.Tables.fixtureDir}/html_docs.parquet"
 
   private def shards = Warc.readShards(spark, fixture)
 
@@ -172,11 +172,11 @@ class WarcSpec extends AnyFunSuite with SharedSpark {
 
   test("chunked/gzip/deflate HTTP bodies decode through the walk (r14 verdict #2)") {
     val httpShards = Warc.readShards(spark,
-      "/root/repo/fixtures/warc_http_shards.parquet")
+      s"${graft.sources.Tables.fixtureDir}/warc_http_shards.parquet")
     val got = Warc.decodedResponses(httpShards)
       .select("url", "charset", "text").collect()
       .map(r => r.getString(0) -> ((r.getString(1), r.getString(2)))).toMap
-    val want = spark.read.parquet("/root/repo/fixtures/warc_http_pages.parquet")
+    val want = spark.read.parquet(s"${graft.sources.Tables.fixtureDir}/warc_http_pages.parquet")
       .collect().map(r => r.getString(0) -> ((r.getString(1), r.getString(2)))).toMap
     assert(got.keySet == want.keySet)
     want.foreach { case (url, exp) =>

@@ -14,8 +14,8 @@ import graft.app.WebCorpusApp
   * exact baseline, and plan hygiene. */
 class WebCorpusAppSpec extends AnyFunSuite with SharedSpark {
 
-  private val shards = "/root/repo/fixtures/warc_shards.parquet"
-  private val robots = "/root/repo/fixtures/robots.parquet"
+  private val shards = s"${graft.sources.Tables.fixtureDir}/warc_shards.parquet"
+  private val robots = s"${graft.sources.Tables.fixtureDir}/robots.parquet"
 
   private def freshDir(): String =
     Files.createTempDirectory("graft-webcorpus-spec").toString
