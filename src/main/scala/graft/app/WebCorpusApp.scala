@@ -570,10 +570,8 @@ object WebCorpusApp {
     //    paragraph are the boilerplate/exact-copy rejects.
     // severed: the dedup's groupBy+join output feeds the paragraph_dup
     // rejects, the doc reassembly AND (via scored) every later stage
-    val pd = labeled(spark, "paragraph dedup sever")((histParHashes match {
-      case None => Dedup.paragraphDedup(blocks, idCol = "url")
-      case Some(h) => Dedup.paragraphDedupWithHistory(blocks, h, idCol = "url")
-    }).sever())
+    val pd = labeled(spark, "paragraph dedup sever")(
+      Dedup.paragraphDedup(blocks, "url", histParHashes).sever())
     val rejParDup = pd.filter(col("n_kept") === 0)
       .select(col("url"), lit("paragraph_dup").as("stage"))
     val docs = pd.filter(col("n_kept") > 0)

@@ -75,71 +75,52 @@ object Dedup {
   }
 
   /** PARAGRAPH-level dedup (the CCNet line-dedup step): over a paragraph
-    * table (id, pos, text) — e.g. [[Html.blocks]] output, where blocks
-    * ARE the paragraphs — keep each distinct paragraph's FIRST corpus
-    * occurrence (minimum (id, pos)) and drop every other copy, then
-    * reassemble the surviving text per document in document order. This
-    * is how real crawl pipelines remove boilerplate: the repeated
+    * table (idCol, pos, text) — e.g. [[Html.blocks]] output, where blocks
+    * ARE the paragraphs — keep each distinct paragraph's FIRST occurrence
+    * (minimum (idCol, pos)) and drop every other copy, then reassemble
+    * the surviving text per document in document order. This is how
+    * real crawl pipelines remove boilerplate: the repeated
     * nav/footer/cookie lines collapse to one corpus-wide survivor
     * without any per-page density heuristic, and whole-page duplicates
     * lose ALL their paragraphs to the earlier copy.
     *
+    * With a `history` (one 128-bit paragraph hash per row, first column
+    * — the written `paragraph_hashes` table of
+    * [[graft.app.WebCorpusApp.append]], the CCNet INCREMENTAL ingest
+    * shape) a paragraph is kept only if its hash is ALSO absent from the
+    * history; the corpus text behind it is never re-read. `n_pars`
+    * counts ALL of a doc's paragraphs either way, so the kept/total
+    * ratio is comparable across build and append.
+    *
     * Scale shape: one groupBy on the 128-bit paragraph hash (map-side
     * partial min — duplicate-heavy corpora combine before the shuffle)
-    * plus one equi-join back on the hash; paragraph state is ~50 B per
-    * DISTINCT paragraph regardless of copy count. Never doc×doc.
-    * Returns (idCol, n_pars, n_kept, clean_text). */
-  def paragraphDedup(pars: DataFrame, idCol: String = "doc_id",
-                     posCol: String = "pos", textCol: String = "text"): DataFrame = {
-    val hashed = pars.select(col(idCol), col(posCol), col(textCol),
-      md5(col(textCol)).as("__h"))
+    * plus one equi-join back on the hash (two with a history); paragraph
+    * state is ~50 B per DISTINCT paragraph regardless of copy count.
+    * Never doc×doc. Returns (idCol, n_pars, n_kept, clean_text). */
+  def paragraphDedup(pars: DataFrame, idCol: String,
+                     history: Option[DataFrame]): DataFrame = {
+    val hashed = pars.select(col(idCol), col("pos"), col("text"),
+      md5(col("text")).as("__h"))
     val firsts = hashed.groupBy(col("__h"))
-      .agg(min(struct(col(idCol), col(posCol))).as("__first"))
-    hashed.join(firsts, "__h")
-      .withColumn("__kept",
-        col(idCol) === col(s"__first.$idCol") && col(posCol) === col(s"__first.$posCol"))
+      .agg(min(struct(col(idCol), col("pos"))).as("__first"))
+    val seen = history.map(h => h.select(col(h.columns.head).as("__h"))
+      .distinct().withColumn("__seen", lit(1L)))
+    val joined = hashed.join(firsts, "__h")
+    val first = col(idCol) === col(s"__first.$idCol") && col("pos") === col("__first.pos")
+    seen.fold(joined.withColumn("__kept", first))(h =>
+        joined.join(h, Seq("__h"), "left").withColumn("__kept", col("__seen").isNull && first))
       .groupBy(col(idCol))
       .agg(
         count(lit(1)).as("n_pars"),
         sum(col("__kept").cast("long")).as("n_kept"),
         array_join(transform(
           array_sort(collect_list(when(col("__kept"),
-            struct(col(posCol), col(textCol))))),
-          x => x.getField(textCol)), " ").as("clean_text"))
+            struct(col("pos"), col("text"))))),
+          x => x.getField("text")), " ").as("clean_text"))
   }
 
-  /** [[paragraphDedup]] composed with the batch-vs-history screen — the
-    * CCNet INCREMENTAL ingest shape ([[graft.app.WebCorpusApp.append]]):
-    * a batch paragraph is kept iff its hash is NOT in the accumulated
-    * history (one 128-bit hash per distinct paragraph ever seen — the
-    * written `paragraph_hashes` table, the corpus text never re-read)
-    * AND it is the batch's own first occurrence (min (idCol, posCol)).
-    * Returns the same (idCol, n_pars, n_kept, clean_text) shape as the
-    * one-shot dedup; `n_pars` counts ALL of the doc's paragraphs, so
-    * the kept/total ratio is comparable across build and append. */
-  def paragraphDedupWithHistory(pars: DataFrame, histHashes: DataFrame,
-                                idCol: String = "doc_id",
-                                posCol: String = "pos",
-                                textCol: String = "text"): DataFrame = {
-    val hashed = pars.select(col(idCol), col(posCol), col(textCol),
-      md5(col(textCol)).as("__h"))
-    val hist = histHashes.select(col(histHashes.columns.head).as("__h"))
-      .distinct().withColumn("__seen", lit(1L))
-    val firsts = hashed.groupBy(col("__h"))
-      .agg(min(struct(col(idCol), col(posCol))).as("__first"))
-    hashed.join(firsts, "__h").join(hist, Seq("__h"), "left")
-      .withColumn("__kept",
-        col("__seen").isNull &&
-          col(idCol) === col(s"__first.$idCol") && col(posCol) === col(s"__first.$posCol"))
-      .groupBy(col(idCol))
-      .agg(
-        count(lit(1)).as("n_pars"),
-        sum(col("__kept").cast("long")).as("n_kept"),
-        array_join(transform(
-          array_sort(collect_list(when(col("__kept"),
-            struct(col(posCol), col(textCol))))),
-          x => x.getField(textCol)), " ").as("clean_text"))
-  }
+  /** [[paragraphDedup]] over a (doc_id, pos, text) table with no history. */
+  def paragraphDedup(pars: DataFrame): DataFrame = paragraphDedup(pars, "doc_id", None)
 
   /** INCREMENTAL paragraph screen — the batch-vs-history convention: each
     * batch document's paragraphs are tested against the accumulated
@@ -179,52 +160,72 @@ object Dedup {
   def minhashSignature(shingles: Column, numHashes: Int): Column =
     graft.expressions.GraftFunctions.minhashNative(shingles, numHashes)
 
-  /** Banded LSH candidate pairs: signature → (band, bucketKey) → equi
-    * self-join. Returns distinct (id_a < id_b) candidate pairs. */
-  /** Exact pre-join candidate volume of any banded LSH layout: each
-    * bucket of n colliding rows yields C(n,2) candidate pairs, so
-    * Σ n·(n−1)/2 over bucket occupancies IS the join's output size —
-    * one narrow aggregate over the banded (key → id) table, folded in
+  /** CANDIDATE BUDGET, the one check behind every guarded near-dup
+    * surface: `est` candidate pairs against `maxCandidateFactor` ×
+    * `postings`. The healthy regime is candidates ≈ O(postings); the
+    * regime that trips it is DUPLICATE MULTIPLICITY — m literal copies of
+    * a document share every band bucket and every prefix shingle, m²
+    * candidates per distinct text, invisible to any banding or prefix
+    * filter because the collisions are genuine (measured: ×30
+    * replication → wall ratio 49 for containment, SCALE_EVIDENCE).
+    * Nothing is dropped: recall is unchanged whenever the check passes;
+    * when it trips, the message names the mitigation. The estimates are
     * DECIMAL(38,0) because the pathological case this guards against is
-    * exactly the one that overflows a Long. EAGER by design, the q96
-    * containment-guard convention: two real Spark jobs run at plan-BUILD
-    * time and a breach throws before a caller can own a plan whose first
-    * action detonates the quadratic join. The regime that trips it is
-    * DUPLICATE MULTIPLICITY — m literal copies of a document share every
-    * band bucket, m² candidates per distinct text, invisible to any
-    * banding because the collisions are genuine. Nothing is dropped:
-    * recall is unchanged whenever the guard passes. */
-  private[graft] def enforceBandBudget(banded: DataFrame, keyCols: Seq[String],
-                                       maxCandidateFactor: Int, surface: String): Unit = {
-    val postings = banded.count()
-    val twiceEst = banded.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).cast("decimal(38,0)").as("n"))
-      .agg(coalesce(sum(expr("n * (n - 1)")),
-        lit(0).cast("decimal(38,0)")).as("c2"))
-      .first().getDecimal(0)
-    val est = twiceEst.divide(java.math.BigDecimal.valueOf(2))
+    * exactly the one that overflows a Long. */
+  private def requireBudget(est: java.math.BigDecimal, postings: Long,
+                            maxCandidateFactor: Int, surface: String): Unit = {
     val bound = java.math.BigDecimal.valueOf(maxCandidateFactor)
       .multiply(java.math.BigDecimal.valueOf(postings))
     require(est.compareTo(bound) <= 0,
       s"$surface candidate budget exceeded: $est candidate pairs > " +
-        s"$maxCandidateFactor x $postings banded postings. This regime is " +
+        s"$maxCandidateFactor x $postings postings. This regime is " +
         "duplicate multiplicity (m copies of one document collide in every " +
-        "band - m^2 candidates per distinct text, which no banding can see " +
-        "because the collisions are genuine). Run the exact-dedup rung first " +
-        "(Dedup.exactClusters, the q264 ladder) and re-run near-dup on the " +
-        "survivors; raising the factor instead buys a quadratic join.")
+        "band and share every prefix shingle - m^2 candidates per distinct " +
+        "text, which no banding or prefix filter can see because the " +
+        "collisions are genuine). Run the exact-dedup rung first " +
+        s"(Dedup.exactClusters, the q264 ladder) and re-run $surface on the " +
+        "survivors; raising maxCandidateFactor instead buys a quadratic join.")
   }
 
+  /** A banded (key → id) table under the candidate budget
+    * (`maxCandidateFactor` > 0; 0 returns `banded` untouched and
+    * materializes nothing). The banding is materialized once — eager
+    * localCheckpoint, NOT persist: Dataset.persist would register a
+    * CacheManager entry that outlives the call, while checkpoint blocks
+    * are reclaimed by the ContextCleaner once the returned plan is GC'd
+    * — then its exact pre-join candidate volume is measured (each bucket
+    * of n colliding rows yields C(n,2) pairs, so Σ n·(n−1)/2 over the
+    * `keyCols` groups IS the self-join's output size) and
+    * [[requireBudget]] throws here, at plan-BUILD time, before a caller
+    * can own a plan whose first action detonates the quadratic join. The
+    * same materialized banding is returned to feed the join. */
+  private[graft] def bandBudget(banded: DataFrame, keyCols: Seq[String],
+                                maxCandidateFactor: Int, surface: String): DataFrame =
+    if (maxCandidateFactor <= 0) banded
+    else {
+      val b = banded.localCheckpoint(true)
+      val postings = b.count()
+      val twiceEst = b.groupBy(keyCols.map(col): _*)
+        .agg(count(lit(1)).cast("decimal(38,0)").as("n"))
+        .agg(coalesce(sum(expr("n * (n - 1)")),
+          lit(0).cast("decimal(38,0)")).as("c2"))
+        .first().getDecimal(0)
+      requireBudget(twiceEst.divide(java.math.BigDecimal.valueOf(2)), postings,
+        maxCandidateFactor, surface)
+      b
+    }
+
   /** (doc_id, band, bucket): the banded MinHash layout behind
-    * [[lshCandidates]], exposed so guarded callers can budget-check and
-    * join from ONE materialized banding. */
-  private[graft] def bandedMinhash(sigs: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
+    * [[lshCandidates]]. */
+  private def bandedMinhash(sigs: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
     sigs.select(
       col("doc_id"),
       posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
         hash(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))))))
       .toDF("doc_id", "band", "bucket")
 
+  /** Banded LSH candidate pairs: equi self-join on (band, bucket).
+    * Returns distinct (id_a < id_b) candidate pairs. */
   private def lshCandidatesFromBanded(banded: DataFrame): DataFrame = {
     val a = banded.select(col("band"), col("bucket"), col("doc_id").as("id_a"))
     val b = banded.select(col("band"), col("bucket"), col("doc_id").as("id_b"))
@@ -237,16 +238,34 @@ object Dedup {
   def lshCandidates(sigs: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
     lshCandidatesFromBanded(bandedMinhash(sigs, bands, rowsPerBand))
 
-  /** Near-duplicate pairs: banded-LSH candidates, exactly verified.
-    * `threshold` is a rational num/den (e.g. 4/5 = 0.8) so the comparison
-    * is pure integer arithmetic. Emits (id_a, id_b, n_common, n_union).
-    *
-    * `maxCandidateFactor` > 0 arms the CANDIDATE BUDGET
-    * ([[enforceBandBudget]]): the banding is materialized once, its exact
-    * pre-join pair volume Σ C(bucket, 2) is measured (EAGER — two Spark
-    * jobs at plan-build time, a breach throws here, not mid-join), and
-    * the same materialized banding then feeds the candidate join. 0
-    * disables the guard and nothing is materialized. */
+  /** EXACT set verify, the one behind [[nearDupPairs]],
+    * [[jaccardPairsExactOnSets]] and [[containmentPairsExact]]: join the
+    * (id_a, id_b) candidates to the (doc_id, shingles) table twice — two
+    * shuffle equi-joins on doc id — count the common shingles, and keep
+    * the pair iff `n_common·den >= bound·num` — INTEGER arithmetic, so no
+    * float boundary can disagree between engines and candidate false
+    * positives never escape. `bound` is the threshold's denominator
+    * (|A∪B| for Jaccard, |A| for containment), emitted as `boundName`.
+    * Returns (id_a, id_b, n_common, boundName). */
+  private def verifySets(cands: DataFrame, sets: DataFrame,
+                         thresholdNum: Int, thresholdDen: Int,
+                         boundName: String, bound: Column): DataFrame = {
+    val sa = sets.select(col("doc_id").as("id_a"), col("shingles").as("sh_a"))
+    val sb = sets.select(col("doc_id").as("id_b"), col("shingles").as("sh_b"))
+    cands.join(sa, "id_a").join(sb, "id_b")
+      .select(col("id_a"), col("id_b"),
+        size(array_intersect(col("sh_a"), col("sh_b"))).cast("long").as("n_common"),
+        bound.cast("long").as(boundName))
+      .filter(col("n_common") * thresholdDen >= col(boundName) * thresholdNum)
+  }
+
+  private def unionSize: Column = size(array_union(col("sh_a"), col("sh_b")))
+
+  /** Near-duplicate pairs: banded-LSH candidates, exactly verified
+    * ([[verifySets]]). `threshold` is a rational num/den (e.g. 4/5 =
+    * 0.8). Emits (id_a, id_b, n_common, n_union). `maxCandidateFactor`
+    * > 0 arms the candidate budget ([[bandBudget]]) over the banding;
+    * 0 disables it. */
   def nearDupPairs(docs: DataFrame, idCol: String, textCol: String,
                    shingleK: Int = 3, numHashes: Int = 64,
                    bands: Int = 16, thresholdNum: Int = 4, thresholdDen: Int = 5,
@@ -254,26 +273,9 @@ object Dedup {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val sets = shingleSets(docs, idCol, textCol, shingleK)
     val sigs = sets.select(col("doc_id"), minhashSignature(col("shingles"), numHashes).as("sig"))
-    val cands =
-      if (maxCandidateFactor > 0) {
-        // localCheckpoint (eager), NOT persist: the budget jobs need the
-        // banding materialized once, but Dataset.persist registers a
-        // CacheManager entry that outlives this call (a storage leak for
-        // long-running drivers). Checkpoint blocks are reclaimed by the
-        // ContextCleaner once the returned plan is GC'd — no caller-owned
-        // cache lifetime.
-        val banded = bandedMinhash(sigs, bands, numHashes / bands).localCheckpoint(true)
-        enforceBandBudget(banded, Seq("band", "bucket"), maxCandidateFactor,
-          "minhash near-dup")
-        lshCandidatesFromBanded(banded)
-      } else lshCandidates(sigs, bands, numHashes / bands)
-    val sa = sets.select(col("doc_id").as("id_a"), col("shingles").as("sh_a"))
-    val sb = sets.select(col("doc_id").as("id_b"), col("shingles").as("sh_b"))
-    cands.join(sa, "id_a").join(sb, "id_b")
-      .select(col("id_a"), col("id_b"),
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("long").as("n_common"),
-        size(array_union(col("sh_a"), col("sh_b"))).cast("long").as("n_union"))
-      .filter(col("n_common") * thresholdDen >= col("n_union") * thresholdNum)
+    val cands = lshCandidatesFromBanded(bandBudget(bandedMinhash(sigs, bands, numHashes / bands),
+      Seq("band", "bucket"), maxCandidateFactor, "minhash near-dup"))
+    verifySets(cands, sets, thresholdNum, thresholdDen, "n_union", unionSize)
   }
 
   /** Connected components of an undirected pair graph by iterative
@@ -407,60 +409,79 @@ object Dedup {
     array_min(transform(shingles, sh =>
       substring(md5(concat(lit(s"$seed:"), sh)), 1, 16)))
 
-  /** SimHash near-dup pairs at Hamming distance ≤ `maxHamming`, found by
-    * banding: the 60-bit signature splits into 4 exact 15-bit bands and
-    * candidates equi-join per band. By pigeonhole this is EXHAUSTIVE for
-    * maxHamming ≤ 3 (4 bands can't all contain one of ≤3 flipped bits), so
-    * unlike probabilistic MinHash-LSH the recall here is provably 1.0 —
-    * while the join still shuffles on (band, value), never all-pairs.
-    * Exact Hamming (`bit_count(xor)`) filters band collisions.
+  /** PIGEONHOLE HAMMING BANDS — the one candidate layout behind every
+    * Hamming near-dup operator (SimHash text, image aHash, audio
+    * envelope, per-slot video aHash): the signature `sig` (a long whose
+    * low 4·`width` bits are the hash) is cut into 4 exact `width`-bit
+    * bands, band b = (sig >> b·width) & (2^width − 1). Two signatures at
+    * Hamming ≤ 3 cannot differ in all 4 bands, so they share a (band,
+    * value) — recall is provably 1.0 for Hamming ≤ 3, unlike
+    * probabilistic MinHash-LSH, while the join in [[hammingPairs]] still
+    * shuffles on (band, value), never all-pairs.
     *
-    * Scale: 15-bit bands give 2¹⁵ = 32,768 buckets per band, so expected
-    * bucket occupancy is n/32,768 and the per-band self-join cost is
-    * ~n²/2¹⁵ ONLY for genuinely colliding signatures — for a corpus whose
-    * signatures are near-uniform (they are: 60 independent md5-derived bit
-    * sums) the candidate count stays near-linear far beyond 10⁹ docs. The
-    * earlier 32-bit/8-bit-band scheme capped at 256 buckets per band
-    * (quadratic blowup past ~10⁵ docs) and collided at random for any
-    * corpus over 2¹⁶ docs; 60 bits keeps random hamming≤3 collisions
-    * negligible to ~2³⁰ docs. 60 (not 64) bits because the signature must
-    * stay oracle-portable: 15 md5 hex chars decode into a signed BIGINT in
-    * both engines with no unsigned/hugeint edge cases. */
-  /** (doc_id, simhash, band, value): the 60-bit signature cut into 4 exact
-    * 15-bit bands — the shared candidate-generation layout for both the
-    * self-join and the incremental (batch-vs-history) variants. */
-  private def bandedSimhash(sigs: DataFrame): DataFrame =
-    sigs.select(col("doc_id"), col("simhash"),
+    * `sigs` carries `id` and `sig`, plus the extra equi-join `keys`
+    * (video's slot `t`) and the `carry` columns the verify needs on both
+    * sides. Returns (keys…, band, value, id, sig, carry…). */
+  private[graft] def hammingBands(sigs: DataFrame, width: Int,
+                                  keys: Seq[String], carry: Seq[String]): DataFrame =
+    sigs.select((keys ++ Seq("id", "sig") ++ carry).map(col) :+
       posexplode(array((0 until 4).map(b =>
-        shiftright(col("simhash"), b * 15).bitwiseAND(32767)): _*)))
-      .toDF("doc_id", "simhash", "band", "value")
+        shiftright(col("sig"), b * width).bitwiseAND((1L << width) - 1)): _*)): _*)
+      .toDF(keys ++ Seq("id", "sig") ++ carry ++ Seq("band", "value"): _*)
 
+  /** The band join over [[hammingBands]] tables: equi-join on (keys…,
+    * band, value), then the exact Hamming distance `bit_count(xor)` of
+    * the two signatures. Self form (`right` None): one table against
+    * itself, (id_a < id_b). Batch form: an ingestion batch against the
+    * signature HISTORY, (new_id, hist_id) — the history side of the
+    * shuffle carries 4 band rows per historical item (~100 bytes plus
+    * the carried verify vector), joinable long after the corpus itself
+    * is not. Returns (ids, carry_a…, carry_b…, hamming), one row per
+    * shared band ([[hammingWithin]] cuts and dedups). */
+  private[graft] def hammingPairs(left: DataFrame, right: Option[DataFrame],
+                                  keys: Seq[String], carry: Seq[String]): DataFrame = {
+    val (idA, idB) = if (right.isEmpty) ("id_a", "id_b") else ("new_id", "hist_id")
+    def side(banded: DataFrame, id: String, sfx: String): DataFrame =
+      banded.select((keys ++ Seq("band", "value")).map(col) ++
+        Seq(col("id").as(id), col("sig").as(s"sig_$sfx")) ++
+        carry.map(c => col(c).as(s"${c}_$sfx")): _*)
+    val joined = side(left, idA, "a")
+      .join(side(right.getOrElse(left), idB, "b"), keys ++ Seq("band", "value"))
+    (if (right.isEmpty) joined.filter(col("id_a") < col("id_b")) else joined)
+      .select((Seq(idA, idB) ++ carry.map(_ + "_a") ++ carry.map(_ + "_b")).map(col) :+
+        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long").as("hamming"): _*)
+  }
+
+  /** [[hammingPairs]] rows at Hamming ≤ `maxHamming`, one per pair. The
+    * cut runs BEFORE the distinct: it is per-row, so the distinct's
+    * shuffle carries only the matching pairs. */
+  private[graft] def hammingWithin(pairs: DataFrame, maxHamming: Int): DataFrame = {
+    require(maxHamming <= 3, "4-band pigeonhole only guarantees recall for maxHamming <= 3")
+    pairs.filter(col("hamming") <= maxHamming).distinct()
+  }
+
+  /** [[simhash]] output as a [[hammingBands]] table: 4 exact 15-bit
+    * bands of the 60-bit signature. 15-bit bands give 2¹⁵ = 32,768
+    * buckets per band, so the per-band self-join cost is ~n²/2¹⁵ ONLY for
+    * genuinely colliding signatures — for near-uniform signatures (60
+    * independent md5-derived bit sums) the candidate count stays
+    * near-linear far beyond 10⁹ docs, and random Hamming ≤ 3 collisions
+    * stay negligible to ~2³⁰ docs. 60 (not 64) bits because the
+    * signature must stay oracle-portable: 15 md5 hex chars decode into a
+    * signed BIGINT in both engines with no unsigned/hugeint edge cases. */
+  private def simhashBands(sigs: DataFrame): DataFrame =
+    hammingBands(sigs.select(col("doc_id").as("id"), col("simhash").as("sig")), 15, Nil, Nil)
+
+  /** SimHash near-dup pairs at Hamming distance ≤ `maxHamming` (≤ 3),
+    * by the pigeonhole band join ([[hammingBands]]). `maxCandidateFactor`
+    * > 0 arms the candidate budget ([[bandBudget]]) over the banding.
+    * Returns (id_a, id_b, hamming). */
   def simhashNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
                           maxHamming: Int = 3,
                           maxCandidateFactor: Int = 0): DataFrame = {
-    require(maxHamming <= 3, "4-band pigeonhole only guarantees recall for maxHamming <= 3")
-    val sigs = simhash(docs, idCol, textCol)
-    // maxCandidateFactor > 0: the [[enforceBandBudget]] guard (eager, the
-    // q96 convention) over the persisted banding, which then feeds the join
-    val banded0 = bandedSimhash(sigs)
-    val banded = if (maxCandidateFactor > 0) {
-      // eager localCheckpoint, not persist — see nearDupPairs: no
-      // session-lifetime CacheManager entry, ContextCleaner reclaims.
-      val b = banded0.localCheckpoint(true)
-      enforceBandBudget(b, Seq("band", "value"), maxCandidateFactor, "simhash near-dup")
-      b
-    } else banded0
-    val a = banded.select(col("band"), col("value"), col("doc_id").as("id_a"), col("simhash").as("sig_a"))
-    val b = banded.select(col("band"), col("value"), col("doc_id").as("id_b"), col("simhash").as("sig_b"))
-    a.join(b, Seq("band", "value"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long").as("hamming"))
-      // filter BEFORE distinct: the hamming cut is per-row, so applying it
-      // first shrinks the distinct's shuffle to just the matching pairs —
-      // identical output, strictly less data moved
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
+    val banded = bandBudget(simhashBands(simhash(docs, idCol, textCol)),
+      Seq("band", "value"), maxCandidateFactor, "simhash near-dup")
+    hammingWithin(hammingPairs(banded, None, Nil, Nil), maxHamming)
   }
 
   /** Incremental near-dup check of an ingestion BATCH against the signature
@@ -468,26 +489,12 @@ object Dedup {
     * everything ever ingested while touching only (batch × history-index),
     * never the accumulated corpus text. `batchSigs`/`histSigs` are
     * (doc_id, simhash) tables ([[simhash]] output; the history is exactly
-    * what a signature table persists). Same 4×15-bit banding as
-    * [[simhashNearDupPairs]] — candidates equi-join on (band, value), recall
-    * provably 1.0 for hamming ≤ 3 by pigeonhole, and the history side of
-    * the shuffle carries 4 band rows per historical doc (~100 bytes),
-    * ~10⁹ docs per TB of shuffle — joinable long after the corpus itself
-    * is not. Returns (new_id, hist_id, hamming) matches. */
+    * what a signature table persists); the band join's batch form, recall
+    * provably 1.0 for Hamming ≤ 3. Returns (new_id, hist_id, hamming). */
   def simhashNearDupAgainst(batchSigs: DataFrame, histSigs: DataFrame,
-                            maxHamming: Int = 3): DataFrame = {
-    require(maxHamming <= 3, "4-band pigeonhole only guarantees recall for maxHamming <= 3")
-    val n = bandedSimhash(batchSigs)
-      .select(col("band"), col("value"), col("doc_id").as("new_id"), col("simhash").as("sig_n"))
-    val h = bandedSimhash(histSigs)
-      .select(col("band"), col("value"), col("doc_id").as("hist_id"), col("simhash").as("sig_h"))
-    n.join(h, Seq("band", "value"))
-      .select(col("new_id"), col("hist_id"),
-        bit_count(col("sig_n").bitwiseXOR(col("sig_h"))).cast("long").as("hamming"))
-      // same filter-before-distinct ordering as simhashNearDupPairs
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-  }
+                            maxHamming: Int = 3): DataFrame =
+    hammingWithin(hammingPairs(simhashBands(batchSigs), Some(simhashBands(histSigs)), Nil, Nil),
+      maxHamming)
 
   /** EXACT n-gram-Jaccard near-dup pairs via a frequency-ordered
     * prefix-filtered inverted index (AllPairs/PPJoin) — no signatures, no
@@ -530,23 +537,13 @@ object Dedup {
     * shingling scan once. */
   def jaccardPairsExactOnSets(sets: DataFrame,
                               thresholdNum: Int, thresholdDen: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val inv = sets.select(col("doc_id"), size(col("shingles")).as("sz"),
-      explode(col("shingles")).as("sh"))
-    val dfCounts = inv.groupBy("sh").agg(count(lit(1)).as("df"))
-    // prefix length = |X| - ceil(t|X|) + 1, ceil in integer arithmetic
-    val plen = (col("sz") -
-      floor((col("sz") * thresholdNum + (thresholdDen - 1)) / thresholdDen).cast("int") + 1)
-    val w = Window.partitionBy("doc_id").orderBy(col("df").asc, col("sh").asc)
     // persisted: the prefix table feeds BOTH sides of the candidate
     // self-join, and Spark does not reuse the exchange across the two
     // occurrences (verified: zero ReusedExchange in the executed plan) —
     // without this the df-join + per-doc ranking window runs twice. The
     // table is a prefix-filtered SUBSET of the inverted index (~1/5 of it
     // at t = 4/5), so caching it is strictly cheaper than recomputing it.
-    val prefixes = inv.join(dfCounts, "sh")
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= plen)
+    val prefixes = dfPrefix(shingleIndex(sets), thresholdNum, thresholdDen)
       .select(col("sh"), col("doc_id"), col("sz"))
       .persist()
     val a = prefixes.select(col("sh"), col("doc_id").as("id_a"), col("sz").as("sz_a"))
@@ -558,13 +555,30 @@ object Dedup {
         col("sz_b") * thresholdDen >= col("sz_a") * thresholdNum)
       .select(col("id_a"), col("id_b"))
       .distinct()
-    val sa = sets.select(col("doc_id").as("id_a"), col("shingles").as("sh_a"))
-    val sb = sets.select(col("doc_id").as("id_b"), col("shingles").as("sh_b"))
-    cands.join(sa, "id_a").join(sb, "id_b")
-      .select(col("id_a"), col("id_b"),
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("long").as("n_common"),
-        size(array_union(col("sh_a"), col("sh_b"))).cast("long").as("n_union"))
-      .filter(col("n_common") * thresholdDen >= col("n_union") * thresholdNum)
+    verifySets(cands, sets, thresholdNum, thresholdDen, "n_union", unionSize)
+  }
+
+  /** The exploded inverted index (doc_id, sz, sh) of a (doc_id,
+    * shingles) table: one row per (doc, shingle), with the doc's set
+    * size. */
+  private def shingleIndex(sets: DataFrame): DataFrame =
+    sets.select(col("doc_id"), size(col("shingles")).as("sz"),
+      explode(col("shingles")).as("sh"))
+
+  /** The AllPairs PREFIX of every doc in a [[shingleIndex]]: its
+    * shingles ranked by ascending (df, shingle) — df the global document
+    * frequency, one shingle-keyed groupBy — and the first
+    * |X| − ceil(t·|X|) + 1 kept (the ceil in integer arithmetic).
+    * Returns (sh, doc_id, sz, df, __rn). */
+  private def dfPrefix(inv: DataFrame, thresholdNum: Int, thresholdDen: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val dfCounts = inv.groupBy("sh").agg(count(lit(1)).as("df"))
+    val plen = (col("sz") -
+      floor((col("sz") * thresholdNum + (thresholdDen - 1)) / thresholdDen).cast("int") + 1)
+    val w = Window.partitionBy("doc_id").orderBy(col("df").asc, col("sh").asc)
+    inv.join(dfCounts, "sh")
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") <= plen)
   }
 
   /** Asymmetric EXACT containment pairs — C(A→B) = |A∩B| / |A| ≥ t — the
@@ -587,17 +601,9 @@ object Dedup {
     * CANDIDATE BUDGET (`maxCandidateFactor` > 0): before the candidate
     * join runs, the exact candidate volume Σ_sh probe(sh)·df(sh) is
     * computed from the posting counts (two small aggregates over the
-    * already-persisted index — never the join itself) and the operator
-    * THROWS if it exceeds `maxCandidateFactor` × total postings. The
-    * healthy regime is candidates ≈ O(postings) — rare-first probe
-    * prefixes land on near-unique shingles. The measured pathology (×30
-    * replication → wall ratio 49 at ×30, SCALE_EVIDENCE) is DUPLICATE
-    * MULTIPLICITY: m literal copies of a doc turn each of its candidate
-    * pairs into m², which no prefix filter can see because the copies'
-    * shingles are genuinely shared. Nothing is dropped, so recall stays
-    * 1.0 whenever the guard passes; when it trips, the loud message
-    * names the mitigation (exact-dedup rung FIRST — the q264 ladder —
-    * then containment over survivors). 0 disables the guard.
+    * already-persisted index — never the join itself) and checked by
+    * [[requireBudget]] against `maxCandidateFactor` × total postings. 0
+    * disables the guard.
     *
     * EAGER when the guard is on: the postings count and the Σ probe·df
     * aggregate are two real Spark jobs run DURING DataFrame
@@ -610,20 +616,13 @@ object Dedup {
   def containmentPairsExact(sets: DataFrame,
                             thresholdNum: Int, thresholdDen: Int,
                             maxCandidateFactor: Int = 0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // persisted: the exploded inverted index feeds THREE subtrees (the df
     // table, the probe-prefix build, and the full index side) and Spark
     // recomputes each occurrence from the cached sets otherwise — the
     // same no-exchange-reuse fact jaccardPairsExactOnSets documents. At
     // cluster scale this is a MEMORY_AND_DISK cache of the corpus shingle
     // volume — the operator's working set either way, paid once not 3x.
-    val inv = sets.select(col("doc_id"), size(col("shingles")).as("sz"),
-      explode(col("shingles")).as("sh"))
-      .persist()
-    val dfCounts = inv.groupBy("sh").agg(count(lit(1)).as("df"))
-    val plen = (col("sz") -
-      floor((col("sz") * thresholdNum + (thresholdDen - 1)) / thresholdDen).cast("int") + 1)
-    val w = Window.partitionBy("doc_id").orderBy(col("df").asc, col("sh").asc)
+    val inv = shingleIndex(sets).persist()
     // NOT persisted: the probe prefix feeds exactly one consumer (the
     // candidate join), so caching it would be a full materialization with
     // zero reuse — measured ~15% slower on a cold run (and persisting it
@@ -631,49 +630,28 @@ object Dedup {
     // the narrow window subtree twice: the prefix build reads inv from
     // cache either way, and the stats pass aggregates to one row).
     // Single-use subtrees pipeline; only multi-consumer ones (inv) cache.
-    val probe = inv.join(dfCounts, "sh")
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= plen)
-      .select(col("sh"), col("doc_id").as("id_a"), col("sz").as("sz_a"))
+    val prefix = dfPrefix(inv, thresholdNum, thresholdDen)
     if (maxCandidateFactor > 0) {
       // Exact pre-join candidate volume: each probe ROW (one posting of
       // one doc's prefix) meets df(sh) index rows, so Σ df over probe
       // rows IS Σ_sh probe(sh)·df(sh) — one narrow aggregate over the
       // prefix-build subtree, collapsing to a single row before the
-      // driver. DECIMAL(38,0) because the pathological case this guards
-      // against is precisely the one that overflows a Long product.
+      // driver.
       val postings = inv.count()
-      val est = inv.join(dfCounts, "sh")
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= plen)
+      val est = prefix
         .agg(coalesce(sum(col("df").cast("decimal(38,0)")),
           lit(0).cast("decimal(38,0)")).as("est"))
         .first().getDecimal(0)
-      val bound = java.math.BigDecimal.valueOf(maxCandidateFactor)
-        .multiply(java.math.BigDecimal.valueOf(postings))
-      require(est.compareTo(bound) <= 0,
-        s"containment candidate budget exceeded: $est candidate pairs > " +
-          s"$maxCandidateFactor x $postings postings. This regime is " +
-          "duplicate multiplicity (many literal/near-literal copies of " +
-          "the same shingle sets) — the prefix index is provably linear " +
-          "only per distinct content. Run the exact-dedup rung first " +
-          "(Dedup.exactClusters, the q264 ladder) and re-run containment " +
-          "on the survivors; raising maxCandidateFactor instead buys a " +
-          "quadratic join.")
+      requireBudget(est, postings, maxCandidateFactor, "containment")
     }
+    val probe = prefix.select(col("sh"), col("doc_id").as("id_a"), col("sz").as("sz_a"))
     val index = inv.select(col("sh"), col("doc_id").as("id_b"), col("sz").as("sz_b"))
     val cands = probe.join(index, Seq("sh"))
       .filter(col("id_a") =!= col("id_b"))
       .filter(col("sz_b") * thresholdDen >= col("sz_a") * thresholdNum)
       .select(col("id_a"), col("id_b"), col("sz_a"))
       .distinct()
-    val sa = sets.select(col("doc_id").as("id_a"), col("shingles").as("sh_a"))
-    val sb = sets.select(col("doc_id").as("id_b"), col("shingles").as("sh_b"))
-    cands.join(sa, "id_a").join(sb, "id_b")
-      .select(col("id_a"), col("id_b"),
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("long").as("n_common"),
-        col("sz_a").cast("long").as("sz_a"))
-      .filter(col("n_common") * thresholdDen >= col("sz_a") * thresholdNum)
+    verifySets(cands, sets, thresholdNum, thresholdDen, "sz_a", col("sz_a"))
   }
 
   /** EXACT duplicated-substring SPANS — the token-level formulation of

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal columns: image/audio/video payloads as opaque `binary`
@@ -1640,6 +1640,11 @@ object Multimodal {
             if (sof == 0xc2) {
               if (w <= 0 || h <= 0 || w.toLong * h > GrayPixelCap) return None
               layFrame()
+              // the first DC scan codes every block in at least one bit,
+              // so a frame with more blocks than 8× the bytes left cannot
+              // be complete: refuse it before allocating its coefficients
+              val blocks = (0 until nf).map(c => padBw(c).toLong * mcusY * compV(c)).sum
+              if (blocks > 8L * (p.length - e)) return None
               coefs = Array.tabulate(nf)(c => new Array[Int](padBw(c) * (mcusY * compV(c)) * 64))
             }
           case 0xee => // APP14 Adobe: the color-transform declaration
@@ -1955,87 +1960,71 @@ object Multimodal {
     }
   }
 
-  /** Banded near-dup candidate pairs over a (id, hi, lo, vector) hash
-    * table: the 64-bit signature cut into 4 exact 16-bit bands →
-    * equi self-join on (band, value) — by pigeonhole EXHAUSTIVE for
-    * Hamming ≤ 3 (the [[Dedup.simhashNearDupPairs]] argument) — then
-    * exact Hamming via bit_count(xor) on each half, then the exact
-    * L1 verify over the bounded sample vectors. Never all-pairs: the
-    * shuffle is keyed on (band, value) with 2¹⁶ buckets per band. */
-  private def bandedHashPairs(hashed0: DataFrame, vecCol: String,
-                              maxHamming: Int): DataFrame = {
-    require(maxHamming <= 3, "4-band pigeonhole only guarantees recall for maxHamming <= 3")
-    // materialize the hash table ONCE (eager, ContextCleaner-reclaimed):
-    // both self-join sides consume it, and without this each consumer
-    // re-runs the upstream payload DECODE — at corpus scale that is a
-    // second full pass over the media bytes to rebuild ~300 B/item of
-    // signature (the r12 sever-the-loop-invariant lesson, applied to a
-    // DAG with two readers instead of a loop). Trade-off: localCheckpoint
-    // truncates lineage, so a lost executor aborts instead of recomputing
-    // — on a cluster, point this at a reliable checkpoint dir.
-    val hashed = hashed0.localCheckpoint(true)
-    val banded = hashed.select(col("media_id"), col("hi"), col("lo"), col(vecCol),
-      posexplode(array(
-        col("lo").bitwiseAND(65535),
-        shiftright(col("lo"), 16).bitwiseAND(65535),
-        col("hi").bitwiseAND(65535),
-        shiftright(col("hi"), 16).bitwiseAND(65535))))
-      .toDF("media_id", "hi", "lo", vecCol, "band", "value")
-    val a = banded.select(col("band"), col("value"), col("media_id").as("id_a"),
-      col("hi").as("hi_a"), col("lo").as("lo_a"), col(vecCol).as("vec_a"))
-    val b = banded.select(col("band"), col("value"), col("media_id").as("id_b"),
-      col("hi").as("hi_b"), col("lo").as("lo_b"), col(vecCol).as("vec_b"))
-    a.join(b, Seq("band", "value"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), col("vec_a"), col("vec_b"),
-        (bit_count(col("hi_a").bitwiseXOR(col("hi_b"))) +
-          bit_count(col("lo_a").bitwiseXOR(col("lo_b")))).cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-  }
+  /** The (hi, lo) unsigned 32-bit hash halves as one 64-bit signature,
+    * so the 4 bands of [[Dedup.hammingBands]] at width 16 are lo's low
+    * and high halves, then hi's, and `bit_count(xor)` of the packed longs
+    * is the Hamming distance over all 64 bits. */
+  private def packed(hi: Column, lo: Column): Column = shiftleft(hi, 32).bitwiseOR(lo)
 
-  /** Batch-vs-HISTORY variant of [[bandedHashPairs]]: candidates
-    * equi-join on (band, value) across the two tables (no canonical
-    * ordering filter — the sides are distinct), so an ingestion batch
-    * screens against everything ever ingested while the history side of
-    * the shuffle carries 4 band rows + one bounded verify vector per
-    * historical item — the [[Dedup.simhashNearDupAgainst]] production
-    * shape, for media content. */
-  private def bandedHashPairsAgainst(batch: DataFrame, hist: DataFrame,
-                                     vecCol: String, maxHamming: Int): DataFrame = {
-    require(maxHamming <= 3, "4-band pigeonhole only guarantees recall for maxHamming <= 3")
-    // each side has ONE consumer here (the cross-table join), so no
-    // materialization — a production history side is a WRITTEN signature
-    // table already (the operator's documented contract)
-    def banded(df: DataFrame): DataFrame =
-      df.select(col("media_id"), col("hi"), col("lo"), col(vecCol),
-        posexplode(array(
-          col("lo").bitwiseAND(65535),
-          shiftright(col("lo"), 16).bitwiseAND(65535),
-          col("hi").bitwiseAND(65535),
-          shiftright(col("hi"), 16).bitwiseAND(65535))))
-        .toDF("media_id", "hi", "lo", vecCol, "band", "value")
-    val n = banded(batch).select(col("band"), col("value"), col("media_id").as("new_id"),
-      col("hi").as("hi_n"), col("lo").as("lo_n"), col(vecCol).as("vec_a"))
-    val h = banded(hist).select(col("band"), col("value"), col("media_id").as("hist_id"),
-      col("hi").as("hi_h"), col("lo").as("lo_h"), col(vecCol).as("vec_b"))
-    n.join(h, Seq("band", "value"))
-      .select(col("new_id"), col("hist_id"), col("vec_a"), col("vec_b"),
-        (bit_count(col("hi_n").bitwiseXOR(col("hi_h"))) +
-          bit_count(col("lo_n").bitwiseXOR(col("lo_h")))).cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
+  /** Σ|a_i − b_i| over two equal-length sample vectors, as a long. */
+  private def l1(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => abs(x - y)), lit(0L), (acc, v) => acc + v)
+
+  /** Near-dup pairs over an (id, sig, vec) hash table at Hamming ≤
+    * `maxHamming`: the pigeonhole band join ([[Dedup.hammingPairs]],
+    * 4 exact 16-bit bands, 2¹⁶ buckets per band — never all-pairs) with
+    * the sample vectors carried as (vec_a, vec_b) for the exact verify.
+    * Self form (`hist` None) or batch-vs-HISTORY form — the
+    * [[Dedup.simhashNearDupAgainst]] production shape for media content:
+    * the history side carries 4 band rows + one bounded verify vector per
+    * historical item. */
+  private def hashPairs(batch: DataFrame, hist: Option[DataFrame],
+                        maxHamming: Int): DataFrame = {
+    // self form: materialize the hash table ONCE (eager,
+    // ContextCleaner-reclaimed): both join sides consume it, and without
+    // this each consumer re-runs the upstream payload DECODE — at corpus
+    // scale a second full pass over the media bytes to rebuild ~300 B/item
+    // of signature. Trade-off: localCheckpoint truncates lineage, so a
+    // lost executor aborts instead of recomputing — on a cluster, point
+    // this at a reliable checkpoint dir. The batch form's sides have one
+    // consumer each; a production history is a WRITTEN signature table.
+    val self = if (hist.isEmpty) batch.localCheckpoint(true) else batch
+    def bands(df: DataFrame) = Dedup.hammingBands(df, 16, Nil, Seq("vec"))
+    Dedup.hammingWithin(Dedup.hammingPairs(bands(self), hist.map(bands), Nil, Seq("vec")),
+      maxHamming)
   }
 
   private def imageHashed(media: Dataset[MediaRow]): DataFrame =
     imagePhash(media).toDF()
-      .select(col("media_id"), col("phash_hi").as("hi"), col("phash_lo").as("lo"),
-        col("gray64"))
+      .select(col("media_id").as("id"), packed(col("phash_hi"), col("phash_lo")).as("sig"),
+        col("gray64").as("vec"))
 
   private def audioHashed(media: Dataset[MediaRow]): DataFrame =
     audioFingerprint(media).toDF()
-      .select(col("media_id"), col("fp_hi").as("hi"), col("fp_lo").as("lo"),
-        col("energy64"))
+      .select(col("media_id").as("id"), packed(col("fp_hi"), col("fp_lo")).as("sig"),
+        col("energy64").as("vec"))
+
+  /** The IMAGE exact pixel verify: the L1 distance over the 8×8 gray
+    * samples must stay ≤ `maxSampleL1`, so two images that happen to
+    * share a coarse bit pattern but differ in actual levels are rejected
+    * on real pixel values. (ids, hamming, sample_l1). */
+  private def sampleL1Verified(pairs: DataFrame, maxSampleL1: Long): DataFrame =
+    pairs.withColumn("sample_l1", l1(col("vec_a"), col("vec_b")))
+      .filter(col("sample_l1") <= maxSampleL1)
+      .drop("vec_a", "vec_b")
+
+  /** The AUDIO exact envelope verify: the relative L1 distance
+    * Σ|Ea−Eb| over the window energies must stay within
+    * `maxRelL1Permille` of Σ(Ea+Eb), in pure integer arithmetic
+    * (1000·L1 ≤ permille·(ΣEa+ΣEb)). (ids, hamming, rel_l1_permille). */
+  private def relL1Verified(pairs: DataFrame, maxRelL1Permille: Long): DataFrame =
+    pairs.withColumn("l1", l1(col("vec_a"), col("vec_b")))
+      .withColumn("tot",
+        aggregate(col("vec_a"), lit(0L), (acc, v) => acc + v) +
+          aggregate(col("vec_b"), lit(0L), (acc, v) => acc + v))
+      .filter(col("l1") * 1000 <= col("tot") * maxRelL1Permille)
+      .withColumn("rel_l1_permille", expr("l1 * 1000 div greatest(1L, tot)"))
+      .drop("vec_a", "vec_b", "l1", "tot")
 
   /** Incremental IMAGE content dedup: screen an ingestion BATCH against
     * the hash HISTORY — same banding, Hamming cut, and exact pixel-L1
@@ -2046,28 +2035,16 @@ object Multimodal {
     * history, never re-reading historical payloads. */
   def imageNearDupAgainst(batch: Dataset[MediaRow], hist: Dataset[MediaRow],
                           maxHamming: Int = 3, maxSampleL1: Long = 1024L): DataFrame =
-    bandedHashPairsAgainst(imageHashed(batch), imageHashed(hist), "gray64", maxHamming)
-      .withColumn("sample_l1",
-        aggregate(zip_with(col("vec_a"), col("vec_b"),
-          (x, y) => abs(x - y)), lit(0L), (acc, v) => acc + v))
-      .filter(col("sample_l1") <= maxSampleL1)
-      .select(col("new_id"), col("hist_id"), col("hamming"), col("sample_l1"))
+    sampleL1Verified(hashPairs(imageHashed(batch), Some(imageHashed(hist)), maxHamming),
+      maxSampleL1)
 
   /** Incremental AUDIO content dedup: batch-vs-history form of
     * [[audioNearDupPairs]] (banded fingerprint candidates + exact
     * relative-L1 envelope verify). */
   def audioNearDupAgainst(batch: Dataset[MediaRow], hist: Dataset[MediaRow],
                           maxHamming: Int = 3, maxRelL1Permille: Long = 100L): DataFrame =
-    bandedHashPairsAgainst(audioHashed(batch), audioHashed(hist), "energy64", maxHamming)
-      .withColumn("l1",
-        aggregate(zip_with(col("vec_a"), col("vec_b"),
-          (x, y) => abs(x - y)), lit(0L), (acc, v) => acc + v))
-      .withColumn("tot",
-        aggregate(col("vec_a"), lit(0L), (acc, v) => acc + v) +
-          aggregate(col("vec_b"), lit(0L), (acc, v) => acc + v))
-      .filter(col("l1") * 1000 <= col("tot") * maxRelL1Permille)
-      .select(col("new_id"), col("hist_id"), col("hamming"),
-        expr("l1 * 1000 div greatest(1L, tot)").as("rel_l1_permille"))
+    relL1Verified(hashPairs(audioHashed(batch), Some(audioHashed(hist)), maxHamming),
+      maxRelL1Permille)
 
   /** GAIN-INVARIANT audio near-dup pairs: the envelope fingerprint is
     * volume-invariant by construction (its bit test 64·E_t > ΣE scales
@@ -2083,7 +2060,7 @@ object Multimodal {
     * sibling at 72, nearest unrelated at 912. */
   def audioNearDupPairsGainInvariant(media: Dataset[MediaRow], maxHamming: Int = 3,
                                      maxProfileL1: Long = 200L): DataFrame =
-    bandedHashPairs(audioHashed(media), "energy64", maxHamming)
+    hashPairs(audioHashed(media), None, maxHamming)
       // `div` (SQL integer division) keeps the profile exact and
       // engine-portable; the inner sum re-evaluates per element — 64
       // longs, negligible
@@ -2096,40 +2073,19 @@ object Multimodal {
       .select(col("id_a"), col("id_b"), col("hamming"), col("profile_l1"))
 
   /** IMAGE perceptual near-dup pairs: banded aHash candidates at
-    * Hamming ≤ `maxHamming`, then an exact pixel verify — the L1
-    * distance over the 8×8 gray samples must stay ≤ `maxSampleL1`
-    * (so two images that happen to share a coarse bit pattern but
-    * differ in actual levels are rejected on real pixel values).
-    * Output (id_a, id_b, hamming, sample_l1). */
+    * Hamming ≤ `maxHamming`, then the exact pixel verify
+    * ([[sampleL1Verified]]). Output (id_a, id_b, hamming, sample_l1). */
   def imageNearDupPairs(media: Dataset[MediaRow], maxHamming: Int = 3,
-                        maxSampleL1: Long = 1024L): DataFrame = {
-    bandedHashPairs(imageHashed(media), "gray64", maxHamming)
-      .withColumn("sample_l1",
-        aggregate(zip_with(col("vec_a"), col("vec_b"),
-          (x, y) => abs(x - y)), lit(0L), (acc, v) => acc + v))
-      .filter(col("sample_l1") <= maxSampleL1)
-      .select(col("id_a"), col("id_b"), col("hamming"), col("sample_l1"))
-  }
+                        maxSampleL1: Long = 1024L): DataFrame =
+    sampleL1Verified(hashPairs(imageHashed(media), None, maxHamming), maxSampleL1)
 
   /** AUDIO fingerprint near-dup pairs: banded energy-envelope hash at
-    * Hamming ≤ `maxHamming`, then the exact envelope verify — the
-    * relative L1 distance Σ|Ea−Eb| over the window energies must stay
-    * within `maxRelL1Permille` of Σ(Ea+Eb), in pure integer arithmetic
-    * (1000·L1 ≤ permille·(ΣEa+ΣEb)). Output (id_a, id_b, hamming,
+    * Hamming ≤ `maxHamming`, then the exact envelope verify
+    * ([[relL1Verified]]). Output (id_a, id_b, hamming,
     * rel_l1_permille). */
   def audioNearDupPairs(media: Dataset[MediaRow], maxHamming: Int = 3,
-                        maxRelL1Permille: Long = 100L): DataFrame = {
-    bandedHashPairs(audioHashed(media), "energy64", maxHamming)
-      .withColumn("l1",
-        aggregate(zip_with(col("vec_a"), col("vec_b"),
-          (x, y) => abs(x - y)), lit(0L), (acc, v) => acc + v))
-      .withColumn("tot",
-        aggregate(col("vec_a"), lit(0L), (acc, v) => acc + v) +
-          aggregate(col("vec_b"), lit(0L), (acc, v) => acc + v))
-      .filter(col("l1") * 1000 <= col("tot") * maxRelL1Permille)
-      .select(col("id_a"), col("id_b"), col("hamming"),
-        expr("l1 * 1000 div greatest(1L, tot)").as("rel_l1_permille"))
-  }
+                        maxRelL1Permille: Long = 100L): DataFrame =
+    relL1Verified(hashPairs(audioHashed(media), None, maxHamming), maxRelL1Permille)
 
   // --------------------------------------------- video content near-dup
 
@@ -2250,15 +2206,9 @@ object Multimodal {
                         maxTotalL1: Long = 8192L): DataFrame = {
     // FOUR consumers (two banding sides + two verify sides) read the
     // fingerprints: materialize once or pay 4× the payload demux+decode
-    // (the bandedHashPairs rationale)
+    // (the hashPairs rationale)
     val fp = videoFingerprint(media, slots).toDF().localCheckpoint(true)
-    val banded = videoBanded(fp)
-    val a = banded.select(col("t"), col("band"), col("value"), col("media_id").as("id_a"))
-    val b = banded.select(col("t"), col("band"), col("value"), col("media_id").as("id_b"))
-    val cands = a.join(b, Seq("t", "band", "value"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    videoVerify(cands, fp, fp, "id_a", "id_b", maxTotalHamming, maxTotalL1)
+    videoVerify(videoCandidates(fp, None), fp, fp, "id_a", "id_b", maxTotalHamming, maxTotalL1)
   }
 
   /** Incremental VIDEO content dedup: an ingestion batch screens against
@@ -2271,22 +2221,20 @@ object Multimodal {
     // two consumers per side (banding + verify): materialize once each
     val fb = videoFingerprint(batch, slots).toDF().localCheckpoint(true)
     val fh = videoFingerprint(hist, slots).toDF().localCheckpoint(true)
-    val n = videoBanded(fb).select(col("t"), col("band"), col("value"),
-      col("media_id").as("new_id"))
-    val h = videoBanded(fh).select(col("t"), col("band"), col("value"),
-      col("media_id").as("hist_id"))
-    val cands = n.join(h, Seq("t", "band", "value"))
-      .select("new_id", "hist_id").distinct()
-    videoVerify(cands, fb, fh, "new_id", "hist_id", maxTotalHamming, maxTotalL1)
+    videoVerify(videoCandidates(fb, Some(fh)), fb, fh, "new_id", "hist_id",
+      maxTotalHamming, maxTotalL1)
   }
 
-  private def videoBanded(fp: DataFrame): DataFrame =
-    fp.select(col("media_id"), col("t"), posexplode(array(
-      col("fp_lo").bitwiseAND(65535),
-      shiftright(col("fp_lo"), 16).bitwiseAND(65535),
-      col("fp_hi").bitwiseAND(65535),
-      shiftright(col("fp_hi"), 16).bitwiseAND(65535))))
-      .toDF("media_id", "t", "band", "value")
+  /** Distinct candidate pairs sharing a (slot, band, value): the band
+    * join with the slot `t` as an extra key, uncut — the verify judges
+    * the total over all slots. */
+  private def videoCandidates(fp: DataFrame, hist: Option[DataFrame]): DataFrame = {
+    def bands(f: DataFrame) = Dedup.hammingBands(
+      f.select(col("media_id").as("id"), col("t"), packed(col("fp_hi"), col("fp_lo")).as("sig")),
+      16, Seq("t"), Nil)
+    val pairs = Dedup.hammingPairs(bands(fp), hist.map(bands), Seq("t"), Nil)
+    pairs.select(pairs.columns.take(2).map(col): _*).distinct()
+  }
 
   /** Slot-aligned exact verify: join both sides' per-slot fingerprints
     * to the candidate pairs, fold Hamming + sample L1 over the slots. */
@@ -2301,8 +2249,7 @@ object Multimodal {
       .select(col(aCol), col(bCol),
         (bit_count(col("hi_a").bitwiseXOR(col("hi_b"))) +
           bit_count(col("lo_a").bitwiseXOR(col("lo_b")))).cast("long").as("ham"),
-        aggregate(zip_with(col("vec_a"), col("vec_b"),
-          (x, y) => abs(x - y)), lit(0L), (acc, v) => acc + v).as("l1"))
+        l1(col("vec_a"), col("vec_b")).as("l1"))
       .groupBy(col(aCol), col(bCol))
       .agg(sum(col("ham")).as("total_hamming"), sum(col("l1")).as("total_l1"))
       .filter(col("total_hamming") <= maxTotalHamming && col("total_l1") <= maxTotalL1)

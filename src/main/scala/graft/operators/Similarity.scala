@@ -129,22 +129,15 @@ object Similarity {
                          thresholdNum: Long, thresholdDen: Long,
                          maxCandidateFactor: Int = 0): DataFrame = {
     val dim = emb.select(size(col(vecCol))).first().getInt(0)
-    val banded0 = emb.select(
+    // maxCandidateFactor > 0: the shared candidate budget (eager, the q96
+    // convention — see Dedup.bandBudget) over the banding, which then
+    // feeds the table self-join
+    val banded = Dedup.bandBudget(emb.select(
       col(idCol),
       explode(array((0 until tables).map(t =>
         struct(lit(t).as("t"),
-          lshBucket(col(vecCol), planes, dim, planeOffset = t * planes).as("b"))): _*)).as("__tb"))
-    // maxCandidateFactor > 0: the shared candidate budget (eager, the q96
-    // convention — see Dedup.enforceBandBudget) over the persisted banding,
-    // which then feeds the table self-join
-    val banded = if (maxCandidateFactor > 0) {
-      // eager localCheckpoint, not persist — see Dedup.nearDupPairs: no
-      // session-lifetime CacheManager entry, ContextCleaner reclaims.
-      val b = banded0.localCheckpoint(true)
-      graft.operators.Dedup.enforceBandBudget(b, Seq("__tb"), maxCandidateFactor,
-        "cosine near-dup")
-      b
-    } else banded0
+          lshBucket(col(vecCol), planes, dim, planeOffset = t * planes).as("b"))): _*)).as("__tb")),
+      Seq("__tb"), maxCandidateFactor, "cosine near-dup")
     val a = banded.select(col("__tb"), col(idCol).as("id_a"))
     val b = banded.select(col("__tb"), col(idCol).as("id_b"))
     val cands = a.join(b, Seq("__tb"))

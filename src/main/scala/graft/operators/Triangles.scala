@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.Sever.SeverOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -91,20 +92,18 @@ object Triangles {
       .select(col("a"), col("b"),
         (col("da") * lit(4294967296L) + col("a")).as("ka"),
         (col("db") * lit(4294967296L) + col("b")).as("kb"))
-    // persisted: the oriented edge list feeds the adjacency build AND the
-    // per-edge probe — two consumers of one subtree. Repartitioned by src
-    // BEFORE the persist (r18, §2.4): an InMemoryRelation preserves its
-    // child's partitioning, so the adjacency groupBy(src) AND the probe's
-    // src-side join both read the cache in place instead of each paying
-    // an exchange of the full oriented table (the exact REPARTITION_BY_NUM
-    // count keeps AQE from re-coalescing one consumer's view of it).
-    val parts = edges.sparkSession.sessionState.conf.numShufflePartitions
+    // severed, keyed by src: the oriented edge list feeds the adjacency
+    // build AND the per-edge probe — two consumers of one subtree. The cut
+    // hash-partitions it by src and declares that layout, so the adjacency
+    // groupBy(src) AND the probe's src-side join both read it in place
+    // instead of each paying an exchange of the full oriented table; and
+    // unlike a persist it leaves no session-lifetime cache entry (the
+    // checkpoint blocks go with the plan, reclaimed by the ContextCleaner).
     val oriented = keyed.select(
       when(col("ka") < col("kb"), col("a")).otherwise(col("b")).as("src"),
       when(col("ka") < col("kb"), col("b")).otherwise(col("a")).as("dst"),
       greatest(col("ka"), col("kb")).as("dst_k"))
-      .repartition(parts, col("src"))
-      .persist()
+      .severKeyed(Seq("src"), edges.sparkSession.sessionState.conf.numShufflePartitions)
     // Compact-forward: instead of materializing every open wedge through a
     // shuffle (ΣC(d⁺,2) rows — 41M on the sf0.1 co-purchase graph, of
     // which only 1.9M close), carry each node's out-neighbor KEY LIST to

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{col, isnan}
 import org.apache.spark.sql.types._
 
 /** Explicit StructType constants for the three raw inputs (SURVEY.md §1.3).
@@ -12,6 +14,15 @@ import org.apache.spark.sql.types._
   * alone pays for the boilerplate.
   */
 object Schemas {
+
+  /** The missing-value predicate of column `c` of `df`, behind both
+    * missing-value profiles ([[StationsJob.missingProfile]],
+    * [[WeatherJob.missingRatios]]): NULL, or NaN too for a floating
+    * column (`isnan` is undefined elsewhere). */
+  def missing(df: DataFrame, c: String): Column = df.schema(c).dataType match {
+    case DoubleType | FloatType => isnan(col(c)) || col(c).isNull
+    case _ => col(c).isNull
+  }
 
   /** Journey CSV: 9 columns, header names contain SPACES (kept verbatim here;
     * JourneyJob.rename normalizes them). Dates are `dd/MM/yyyy HH:mm` strings.

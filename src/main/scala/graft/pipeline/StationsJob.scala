@@ -2,7 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, FloatType}
 
 /** The init pipeline's stations leg: CSV scan → bulk rename → missing-value
   * profile → parquet overwrite.
@@ -31,14 +30,10 @@ object StationsJob {
     * `isnan` is restricted to floating columns (it is undefined elsewhere);
     * the counted expression is `lit(1)` so NULLs are actually counted
     * (reference has the count(NULL-column) bug at init-data-transformation.py:41). */
-  def missingProfile(df: DataFrame): DataFrame = {
-    val floating = df.schema.fields
-      .collect { case f if f.dataType == DoubleType || f.dataType == FloatType => f.name }.toSet
+  def missingProfile(df: DataFrame): DataFrame =
     df.select(df.columns.toSeq.map { c =>
-      val miss = if (floating(c)) isnan(col(c)) || col(c).isNull else col(c).isNull
-      count(when(miss, lit(1))).as(s"${c}_missing")
+      count(when(Schemas.missing(df, c), lit(1))).as(s"${c}_missing")
     } :+ count(lit(1)).as("total"): _*)
-  }
 
   /** The full leg (read → rename), ready for a sink. */
   def run(spark: SparkSession, path: String): DataFrame = rename(read(spark, path))

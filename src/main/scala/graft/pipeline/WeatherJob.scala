@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DateType, DoubleType, FloatType, StructType}
+import org.apache.spark.sql.types.{DateType, StructType}
 
 /** The init pipeline's weather leg: nested-JSON scan → in-engine flatten →
   * fixed column drops → date cast → missing profile → sparse-column drop →
@@ -37,15 +37,10 @@ object WeatherJob {
 
   /** A2: per-column missing-value RATIO (count(miss)/count(*)) in one pass,
     * excluding the key column. Reference: init-data-transformation.py:76. */
-  def missingRatios(df: DataFrame, exclude: Set[String] = Set("weather_date")): DataFrame = {
-    val floating = df.schema.fields
-      .collect { case f if f.dataType == DoubleType || f.dataType == FloatType => f.name }.toSet
-    val cols = df.columns.toSeq.filterNot(exclude)
-    df.select(cols.map { c =>
-      val miss = if (floating(c)) isnan(col(c)) || col(c).isNull else col(c).isNull
-      (count(when(miss, lit(1))) / count(lit(1))).as(s"${c}_missing_ratio")
+  def missingRatios(df: DataFrame, exclude: Set[String] = Set("weather_date")): DataFrame =
+    df.select(df.columns.toSeq.filterNot(exclude).map { c =>
+      (count(when(Schemas.missing(df, c), lit(1))) / count(lit(1))).as(s"${c}_missing_ratio")
     }: _*)
-  }
 
   /** P2 (data-driven variant): drop every column whose missing ratio exceeds
     * `threshold`. The reference eyeballs the profile and hardcodes the drop

@@ -25,9 +25,11 @@ object PipelineQueries {
   private val stationsCsvCols =
     """{'Station.Id':'INTEGER','StationName':'VARCHAR','longitude':'DOUBLE',
       |'latitude':'DOUBLE','Easting':'DOUBLE','Northing':'DOUBLE'}""".stripMargin
-  private def readJourney =
+  /** The DuckDB readers of the raw journey and stations CSVs, typed by
+    * the maps above; the star-schema oracles read the same inputs. */
+  private[queries] def readJourney =
     s"read_csv('$fx/journey.csv', header=true, columns=$journeyCsvCols)"
-  private def readStations =
+  private[queries] def readStations =
     s"read_csv('$fx/stations.csv', header=true, columns=$stationsCsvCols)"
 
   /** S1+P1+P3+P4+P2: the journey trunk → fact projection. */

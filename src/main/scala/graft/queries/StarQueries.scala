@@ -68,20 +68,12 @@ object StarQueries {
 
   // ------------------------------------------------------------- oracles
 
-  private val journeyCsvCols =
-    """{'Rental Id':'INTEGER','Duration':'INTEGER','Bike Id':'INTEGER',
-      |'End Date':'VARCHAR','EndStation Id':'INTEGER','EndStation Name':'VARCHAR',
-      |'Start Date':'VARCHAR','StartStation Id':'INTEGER','StartStation Name':'VARCHAR'}""".stripMargin
-  private val stationsCsvCols =
-    """{'Station.Id':'INTEGER','StationName':'VARCHAR','longitude':'DOUBLE',
-      |'latitude':'DOUBLE','Easting':'DOUBLE','Northing':'DOUBLE'}""".stripMargin
-
   /** CTEs reconstructing the warehouse tables from the raw fixtures —
     * mirrors of what init + the weekly merges MATERIALIZE. `new_stations`
     * mirrors JourneyJob.newStations incl. its deterministic name-dedup. */
   private val warehouseCtes =
     s"""journey AS (
-       |  SELECT * FROM read_csv('$fx/journey.csv', header=true, columns=$journeyCsvCols)),
+       |  SELECT * FROM ${PipelineQueries.readJourney}),
        |fact AS (
        |  SELECT "Rental Id" AS rental_id,
        |    strptime("Start Date", '%d/%m/%Y %H:%M') AS start_date,
@@ -91,7 +83,7 @@ object StarQueries {
        |  FROM journey),
        |stations AS (
        |  SELECT "Station.Id" AS station_id, "StationName" AS station_name
-       |  FROM read_csv('$fx/stations.csv', header=true, columns=$stationsCsvCols)),
+       |  FROM ${PipelineQueries.readStations}),
        |new_stations AS (
        |  SELECT station_id, station_name FROM (
        |    SELECT DISTINCT "StartStation Id" AS station_id,

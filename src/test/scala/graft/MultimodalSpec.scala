@@ -719,6 +719,24 @@ class MultimodalSpec extends AnyFunSuite with SharedSpark {
     assert(Multimodal.imageGray(cut).isEmpty)
   }
 
+  test("a progressive frame with more blocks than its payload can code is refused unallocated") {
+    val prog = spark.read.parquet(fixture)
+      .filter(col("media_id") === 125).select("payload").head().getAs[Array[Byte]](0)
+    // SOF2 height/width (u16 BE at marker + 5 / + 7) set to 4096x4096, the
+    // pixel cap: 262,144 blocks from a sub-KB stream
+    val sof = prog.indexOfSlice(Array(0xFF.toByte, 0xC2.toByte))
+    val big = prog.clone()
+    big(sof + 5) = 0x10; big(sof + 6) = 0; big(sof + 7) = 0x10; big(sof + 8) = 0
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread().getId
+    assert(Multimodal.imageGray(big).isEmpty) // warm: class loading is not the decoder's
+    val before = mx.getThreadAllocatedBytes(tid)
+    assert(Multimodal.imageGray(big).isEmpty)
+    val allocated = mx.getThreadAllocatedBytes(tid) - before
+    assert(allocated < (1L << 20), s"allocated $allocated bytes before refusing the frame")
+  }
+
   test("decoders refuse decompression bombs: huge declared dims from tiny payloads") {
     // header-declared dims are untrusted: a sub-KB payload claiming a
     // 65535×65535 (GIF) or 2^31-scale (PNG) raster must yield None, not

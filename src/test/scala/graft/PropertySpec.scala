@@ -368,6 +368,53 @@ class PropertySpec extends AnyFunSuite with SharedSpark {
     }, n = 6)
   }
 
+  // ---------------------------------------------------- Hamming band join
+
+  test("Hamming band join: self form equals brute force at Hamming <= 3, batch form on (x, x) equals it") {
+    import graft.operators.Dedup
+    // every layout the join serves: SimHash (4 x 15-bit bands of a 60-bit
+    // signature), image/audio (4 x 16 bits of 64, a carried verify
+    // vector), video (4 x 16 bits, the slot t as an extra key)
+    case class Layout(width: Int, keys: Seq[String], carry: Seq[String])
+    val layouts = Seq(Layout(15, Nil, Nil), Layout(16, Nil, Seq("vec")), Layout(16, Seq("t"), Nil))
+    for (layout <- layouts; seed <- 1 to 3) {
+      val rnd = new scala.util.Random(seed)
+      val bits = 4 * layout.width
+      val mask = if (bits == 64) -1L else (1L << bits) - 1
+      def flip(sig: Long, positions: Seq[Int]): Long = positions.foldLeft(sig)((s, b) => s ^ (1L << b))
+      // planted pairs at Hamming 0-4, plus band-confined edits at 5-8
+      // (they share 3 of 4 bands, so the cut, not the banding, rejects them)
+      val sigs = (0 until 12).flatMap { _ =>
+        val base = rnd.nextLong() & mask
+        val near = (0 to 4).map(d => flip(base, rnd.shuffle((0 until bits).toList).take(d)))
+        val band = rnd.nextInt(4) * layout.width
+        val far = (5 to 8).map(d =>
+          flip(base, rnd.shuffle((band until band + layout.width).toList).take(d)))
+        (base +: near) ++ far
+      } ++ Seq.fill(20)(rnd.nextLong() & mask)
+      val rows = sigs.zipWithIndex.map { case (sig, i) => (i.toLong, rnd.nextInt(2), sig) }
+      val df = rows.toDF("id", "t", "sig").withColumn("vec", col("id") * 7)
+      val bands = Dedup.hammingBands(df, layout.width, layout.keys, layout.carry)
+      val keyed = layout.keys.nonEmpty
+      val want = (for {
+        (ia, ta, sa) <- rows; (ib, tb, sb) <- rows
+        if ia < ib && (!keyed || ta == tb) && java.lang.Long.bitCount(sa ^ sb) <= 3
+      } yield (ia, ib, java.lang.Long.bitCount(sa ^ sb).toLong)).toSet
+      val self = Dedup.hammingWithin(Dedup.hammingPairs(bands, None, layout.keys, layout.carry), 3)
+      val got = self.select("id_a", "id_b", "hamming").as[(Long, Long, Long)].collect().toSet
+      assert(want.exists(_._3 == 3L), s"layout $layout seed $seed planted no Hamming-3 pair")
+      assert(got == want, s"self form, layout $layout seed $seed")
+      if (layout.carry.nonEmpty)
+        assert(self.filter(col("vec_a") =!= col("id_a") * 7 || col("vec_b") =!= col("id_b") * 7)
+          .isEmpty, s"carried columns, layout $layout seed $seed")
+      val batch = Dedup.hammingWithin(
+        Dedup.hammingPairs(bands, Some(bands), layout.keys, layout.carry), 3)
+        .filter(col("new_id") < col("hist_id"))
+        .select("new_id", "hist_id", "hamming").as[(Long, Long, Long)].collect().toSet
+      assert(batch == got, s"batch form on (x, x), layout $layout seed $seed")
+    }
+  }
+
   // ------------------------------------------------------------- dup spans
 
   /** Random tiny corpora over a 3-word vocabulary — repeats are near

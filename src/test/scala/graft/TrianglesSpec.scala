@@ -65,4 +65,16 @@ class TrianglesSpec extends AnyFunSuite with SharedSpark {
     val hub = (1L to 20L).map(i => (0L, i)) :+ (1L, 2L)
     assert(count(hub) == Map(0L -> 1L, 1L -> 1L, 2L -> 1L))
   }
+
+  private def cacheManager =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+
+  test("perNodeCounts and perNodeStats leave no cache entry in the session") {
+    spark.catalog.clearCache() // the session is shared with earlier suites
+    val e = Seq((0L, 1L), (1L, 2L), (0L, 2L)).toDF("a", "b")
+    Triangles.perNodeCounts(e, "a", "b").collect()
+    assert(cacheManager.isEmpty)
+    Triangles.perNodeStats(e, "a", "b").collect()
+    assert(cacheManager.isEmpty)
+  }
 }
