@@ -51,6 +51,11 @@ object CorpusApp {
         size(tokens(col("text"))).cast("long").as("n_tokens"),
         md5Long(col("doc_id").cast("string")).as("__h"))
 
+  /** Per-source doc/token counts of a corpus frame. */
+  private def statsOf(corpus: DataFrame): DataFrame =
+    corpus.groupBy("source")
+      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).cast("long").as("n_tokens"))
+
   /** Recompute the derived tables from the WRITTEN corpus — the AUDIT
     * path (any write damage surfaces against the oracle) and the [[build]]
     * init path, where the corpus IS the batch so full-scan cost is batch
@@ -62,10 +67,7 @@ object CorpusApp {
   def auditDerived(spark: SparkSession, outDir: String): Unit = {
     val nRaw = Sinks.ledger(spark, s"$outDir/ledger").values.sum
     val written = spark.read.parquet(s"$outDir/corpus")
-    Sinks.overwriteSwap(
-      written.groupBy("source")
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).cast("long").as("n_tokens")),
-      s"$outDir/corpus_stats")
+    Sinks.overwriteSwap(statsOf(written), s"$outDir/corpus_stats")
     Sinks.overwriteSwap(
       written.agg(
         lit(nRaw).as("n_raw"),
@@ -76,28 +78,23 @@ object CorpusApp {
     spark.catalog.refreshByPath(s"$outDir/manifest")
   }
 
-  /** Incrementally fold ONE appended batch into the derived tables: old
-    * stats ⊎ batch delta (a ≤#sources-row union-aggregate — the batch rows
-    * are already in memory as the append's checkpoint), manifest counters
-    * from the ledger and position arithmetic. Nothing here reads the
-    * written corpus; positions are contiguous 1..n (CorpusAppSpec), so
-    * `n_shards = ceil(n_clean / ShardSize)` exactly equals the audit
-    * path's `countDistinct(shard)`. */
-  private def mergeDerived(spark: SparkSession, outDir: String, delta: DataFrame,
-                           nRaw: Long, nClean: Long): Unit = {
+  /** Incrementally fold ONE appended batch into the derived tables:
+    * `base` stats ⊎ batch delta (a ≤#sources-row union-aggregate — the
+    * batch rows are already in memory as the append's checkpoint),
+    * manifest counters from the ledger and position arithmetic. Nothing
+    * here reads the written corpus; positions are contiguous 1..n
+    * (CorpusAppSpec), so `n_shards = ceil(n_clean / ShardSize)` exactly
+    * equals the audit path's `countDistinct(shard)`. */
+  private def mergeDerived(spark: SparkSession, outDir: String, base: Option[DataFrame],
+                           delta: DataFrame, nRaw: Long, nClean: Long): Unit = {
     import spark.implicits._
-    val deltaStats = delta.groupBy("source")
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).cast("long").as("n_tokens"))
     val statsPath = s"$outDir/corpus_stats"
-    val merged =
-      (if (Sinks.exists(spark, statsPath))
-        spark.read.parquet(statsPath).unionByName(deltaStats)
-      else deltaStats)
-        .groupBy("source")
-        .agg(sum(col("n_docs")).cast("long").as("n_docs"),
-          sum(col("n_tokens")).cast("long").as("n_tokens"))
-        // sever lineage from the path being overwritten (tiny: ≤#sources rows)
-        .sever()
+    val merged = base.fold(statsOf(delta))(_.unionByName(statsOf(delta)))
+      .groupBy("source")
+      .agg(sum(col("n_docs")).cast("long").as("n_docs"),
+        sum(col("n_tokens")).cast("long").as("n_tokens"))
+      // sever lineage from the path being overwritten (tiny: ≤#sources rows)
+      .sever()
     Sinks.overwriteSwap(merged, statsPath)
     val nShards = (nClean + ShardSize - 1) / ShardSize
     Sinks.overwriteSwap(
@@ -159,40 +156,52 @@ object CorpusApp {
     * [[graft.streaming.Streams.corpusIngest]]): Structured Streaming
     * replays a failed micro-batch with the same batch id, and the ledger
     * gate turns that at-least-once delivery into exactly-once corpus
-    * growth. The first batch creates the corpus (positions from 1). */
+    * growth. The first batch creates the corpus (positions from 1).
+    *
+    * Crash-safe through [[Sinks.ingestBatch]]: a tagged corpus append,
+    * then `corpus_stats` and `manifest`, then the ledger commit. A crashed
+    * attempt may already have folded the batch into `corpus_stats`, so a
+    * replay whose purge deleted anything folds onto stats recomputed from
+    * the committed corpus (a full scan, paid only on recovery). */
   def appendBatch(spark: SparkSession, outDir: String, batchId: String,
                   batch: DataFrame): Unit = {
-    val applied = Sinks.ledger(spark, s"$outDir/ledger")
-    if (applied.contains(batchId)) return
-    val hasCorpus = Sinks.exists(spark, s"$outDir/corpus")
-    // bounded driver read: current max position
-    val maxPos =
-      if (!hasCorpus) 0L
-      else spark.read.parquet(s"$outDir/corpus")
-        .agg(coalesce(max(col("pos")), lit(0L))).head().getLong(0)
-    val cleaned = cleanBatch(batch)
-    // persisted for rank's two passes, same as build — otherwise the
-    // batch clean + fp anti-join both run twice
-    val fresh =
-      (if (!hasCorpus) cleaned
-      else cleaned.join(
-        spark.read.parquet(s"$outDir/corpus").select("fp"), Seq("fp"), "left_anti"))
-        .persist()
-    // sever lineage BEFORE the append: the delta-stats fold below re-reads
-    // these rows, and a recompute after refreshByPath would re-run the fp
-    // anti-join against a corpus that now CONTAINS them (the same self-read
-    // trap incrementalExactDedup documents). Batch-sized, never corpus-sized.
-    val ranked = GlobalOrder.rank(fresh, "__h", "doc_id", out = "pos0")
-      .withColumn("pos", col("pos0") + maxPos)
-      .withColumn("shard", expr(s"(pos - 1) div $ShardSize"))
-      .select("doc_id", "source", "lang", "fp", "n_tokens", "pos", "shard")
-      .sever()
-    fresh.unpersist() // the eager checkpoint owns the rows now
-    Sinks.append(ranked, s"$outDir/corpus")
-    spark.catalog.refreshByPath(s"$outDir/corpus")
-    val entries = applied + (batchId -> batch.count())
-    Sinks.commitLedger(spark, s"$outDir/ledger", entries)
-    mergeDerived(spark, outDir, delta = ranked,
-      nRaw = entries.values.sum, nClean = maxPos + ranked.count())
+    val corpusPath = s"$outDir/corpus"
+    Sinks.ingestBatch(spark, s"$outDir/ledger", batchId, Seq(corpusPath)) { ingest =>
+      // a listing, never a data read: a first batch's crashed attempt can
+      // leave the corpus directory behind with every file purged
+      val hasCorpus = Sinks.dataFileCount(spark, corpusPath) > 0
+      // bounded driver read: current max position
+      val maxPos =
+        if (!hasCorpus) 0L
+        else spark.read.parquet(corpusPath)
+          .agg(coalesce(max(col("pos")), lit(0L))).head().getLong(0)
+      val cleaned = cleanBatch(batch)
+      // persisted for rank's two passes, same as build — otherwise the
+      // batch clean + fp anti-join both run twice
+      val fresh =
+        (if (!hasCorpus) cleaned
+        else cleaned.join(
+          spark.read.parquet(corpusPath).select("fp"), Seq("fp"), "left_anti"))
+          .persist()
+      // sever lineage BEFORE the append: the delta-stats fold below
+      // re-reads these rows, and a recompute after refreshByPath would
+      // re-run the fp anti-join against a corpus that now CONTAINS them.
+      // Batch-sized, never corpus-sized.
+      val ranked = GlobalOrder.rank(fresh, "__h", "doc_id", out = "pos0")
+        .withColumn("pos", col("pos0") + maxPos)
+        .withColumn("shard", expr(s"(pos - 1) div $ShardSize"))
+        .select("doc_id", "source", "lang", "fp", "n_tokens", "pos", "shard")
+        .sever()
+      fresh.unpersist() // the eager checkpoint owns the rows now
+      val base =
+        if (!hasCorpus) None
+        else if (ingest.purged) Some(statsOf(spark.read.parquet(corpusPath)).sever())
+        else Some(spark.read.parquet(s"$outDir/corpus_stats"))
+      Sinks.appendTagged(ranked, corpusPath, batchId)
+      val nRaw = batch.count()
+      mergeDerived(spark, outDir, base, delta = ranked,
+        nRaw = ingest.applied.values.sum + nRaw, nClean = maxPos + ranked.count())
+      Some(nRaw)
+    }
   }
 }

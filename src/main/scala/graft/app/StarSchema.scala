@@ -158,47 +158,36 @@ object StarSchema {
       .limit(k)
   }
 
-  /** The dashboard's rides-per-hour chart (README.md:35) the way the
-    * warehouse actually serves it: fact ⋈ dim_datetime on the START-date
-    * role (CyclingERD.sql:60-61), grouped by the dim's hour attribute.
-    * dim_datetime is calendar-bounded, so AQE sizes the join; the
-    * aggregate partial-combines into 24 groups. */
-  def ridesPerHour(spark: SparkSession, warehouse: String): DataFrame = {
+  /** Rides per value of the `parts` attributes of the START-date role:
+    * fact ⋈ dim_datetime on `start_date` (CyclingERD.sql:60-61), grouped
+    * by the dim's parts. dim_datetime is calendar-bounded, so AQE sizes
+    * the join and the aggregate partial-combines into one row per group.
+    * The dim's parts are load-bearing: a shortcut scan of `start_date`
+    * would not notice a corrupt dim. */
+  private def ridesByStartParts(spark: SparkSession, warehouse: String,
+                                parts: String*): DataFrame = {
     val fact = spark.read.parquet(factJourney(warehouse))
     val dim = spark.read.parquet(dimDatetime(warehouse))
-      .select(col("datetime_id"), col("hour"))
+      .select(col("datetime_id") +: parts.map(col): _*)
     fact.join(dim, fact("start_date") === dim("datetime_id"))
-      .groupBy("hour")
+      .groupBy(parts.head, parts.tail: _*)
       .agg(count(lit(1)).as("n_rides"))
   }
 
-  /** The dashboard's rides-per-weekday chart (README.md:35-41) over the
-    * WRITTEN star: fact ⋈ dim_datetime on the START-date role, grouped by
-    * the dim's `week_day` attribute (Spark dayofweek numbering, 1=Sunday —
-    * SURVEY.md §7.5 #3). Same AQE-sized join shape as [[ridesPerHour]];
-    * the aggregate partial-combines into 7 groups. */
-  def ridesPerWeekday(spark: SparkSession, warehouse: String): DataFrame = {
-    val fact = spark.read.parquet(factJourney(warehouse))
-    val dim = spark.read.parquet(dimDatetime(warehouse))
-      .select(col("datetime_id"), col("week_day"))
-    fact.join(dim, fact("start_date") === dim("datetime_id"))
-      .groupBy("week_day")
-      .agg(count(lit(1)).as("n_rides"))
-  }
+  /** The dashboard's rides-per-hour chart (README.md:35): 24 groups. */
+  def ridesPerHour(spark: SparkSession, warehouse: String): DataFrame =
+    ridesByStartParts(spark, warehouse, "hour")
 
-  /** The dashboard's daily-trend line (README.md:35-41) over the WRITTEN
-    * star: fact ⋈ dim_datetime on the START-date role, grouped by the dim's
-    * (year, month, day) attributes — the dim's date parts are load-bearing
-    * (a shortcut `to_date(start_date)` scan would not notice a corrupt
-    * dim). Calendar-bounded output (one row/day). */
-  def ridesDailyTrend(spark: SparkSession, warehouse: String): DataFrame = {
-    val fact = spark.read.parquet(factJourney(warehouse))
-    val dim = spark.read.parquet(dimDatetime(warehouse))
-      .select(col("datetime_id"), col("year"), col("month"), col("day"))
-    fact.join(dim, fact("start_date") === dim("datetime_id"))
-      .groupBy("year", "month", "day")
-      .agg(count(lit(1)).as("n_rides"))
-  }
+  /** The dashboard's rides-per-weekday chart (README.md:35-41): 7 groups
+    * of the dim's `week_day` (Spark dayofweek numbering, 1=Sunday —
+    * SURVEY.md §7.5 #3). */
+  def ridesPerWeekday(spark: SparkSession, warehouse: String): DataFrame =
+    ridesByStartParts(spark, warehouse, "week_day")
+
+  /** The dashboard's daily-trend line (README.md:35-41): one row per
+    * (year, month, day). */
+  def ridesDailyTrend(spark: SparkSession, warehouse: String): DataFrame =
+    ridesByStartParts(spark, warehouse, "year", "month", "day")
 
   /** PK/FK validation over the written star schema (SURVEY.md §7.2 item 4):
     * Spark cannot DECLARE the constraints CyclingERD.sql:6-68 declares, so

@@ -115,7 +115,7 @@ object WebCorpusApp {
     // (corpus, rejects, paragraph state, links, redirects) consumes the
     // pipeline — without the cut each would re-walk the crawl bytes
     // (the multi-consumer-recompute trap; same rationale as
-    // TextIndex.writeAll)
+    // TextIndex.tablesOf)
     val recs = labeled(spark, "decode+sever")(decodeRecs(
       Warc.readShards(spark, shardsPath).filter(shardPred).toDF()).sever())
     val pages = pagesOf(recs)
@@ -158,12 +158,13 @@ object WebCorpusApp {
       robotsPath, outDir, batchId)
 
   /** [[append]] over an in-hand shard frame (the [[streamIngest]]
-    * micro-batch entry). EXACTLY-ONCE under crash at ANY point:
+    * micro-batch entry). EXACTLY-ONCE under crash at ANY point, through
+    * the one ledgered batch step ([[Sinks.ingestBatch]]):
     *
     *  1. every table/index append is a REVOCABLE tagged file move
     *     ([[Sinks.appendTagged]] — file names carry the batch tag);
     *  2. the LEDGER swap-commit is the single atomic commit point,
-    *     written only after every append landed;
+    *     written only after every append and the manifest landed;
     *  3. on entry, files whose tag is not in the ledger are PURGED
     *     ([[Sinks.purgeTagged]] — a file listing, never a data read),
     *     so a crashed attempt's partial writes vanish before the
@@ -176,14 +177,20 @@ object WebCorpusApp {
     * append's uncommitted files are indistinguishable from a crashed
     * attempt's and would be purged; serialize appends per corpus. */
   def appendBatch(spark: SparkSession, shards: DataFrame, robotsPath: String,
-                  outDir: String, batchId: String): Unit = {
-    val applied = Sinks.ledger(spark, s"$outDir/ledger")
-    if (applied.contains(batchId)) return
-    // recovery: revoke every uncommitted tag before touching state —
+                  outDir: String, batchId: String): Unit =
+    Sinks.ingestBatch(spark, s"$outDir/ledger", batchId,
+      appendedTables.map(t => s"$outDir/$t"))(
+      applyBatch(spark, shards, robotsPath, outDir, batchId, _))
+
+  /** [[appendBatch]]'s body, run after the purge: every append of the
+    * batch and the manifest. Returns the batch's page count for the
+    * ledger, or `None` when the batch leaves no trace. */
+  private def applyBatch(spark: SparkSession, shards: DataFrame, robotsPath: String,
+                         outDir: String, batchId: String,
+                         ingest: Sinks.Ingest): Option[Long] = {
     // the build's overwriteSwap tables carry no tags, so the committed
     // set is exactly the ledger's
-    val committed = applied.keySet.map(Sinks.tagOf)
-    appendedTables.foreach(t => Sinks.purgeTagged(spark, s"$outDir/$t", committed))
+    val committed = ingest.committedTags
     refresh(spark, outDir)
     val recs = labeled(spark, "decode+sever")(
       decodeRecs(shards).sever()) // the build's recompute cut
@@ -225,11 +232,9 @@ object WebCorpusApp {
       // trace at all: re-delivery recomputes the same no-op, so
       // idempotence holds either way.
       val nr = newRedirects.sever() // isEmpty probe + append: two consumers
-      if (nr.isEmpty) return
+      if (nr.isEmpty) return None
       Sinks.appendTagged(nr, s"$outDir/redirects", batchId)
-      spark.catalog.refreshByPath(s"$outDir/redirects")
-      Sinks.commitLedger(spark, s"$outDir/ledger", applied + (batchId -> 0L))
-      return
+      return Some(0L)
     }
     val written = spark.read.parquet(s"$outDir/corpus")
     val maxPos = labeled(spark, "max pos")(
@@ -280,7 +285,6 @@ object WebCorpusApp {
           .join(committedCanonicals.select(col("src")), Seq("src"), "left_anti"),
         s"$outDir/canonicals", batchId)))
     refresh(spark, outDir)
-    failpoint("table_append")
     // index maintenance BEFORE the commit (a crash here must revoke the
     // batch, not strand the indexes behind the corpus): append-only —
     // postings/df/stat DELTAS for the text index, assign+encode against
@@ -291,25 +295,23 @@ object WebCorpusApp {
     Sinks.inParallel(spark)(
       () => labeled(spark, "text index append")(
         TextIndex.append(spark, s"$outDir/text_index",
-          ranked.select(col("pos").as("doc_id"), col("text")), Some(batchId))),
+          ranked.select(col("pos").as("doc_id"), col("text")), batchId)),
       () => labeled(spark, "embeddings + ann append") {
         val emb = embeddingsOf(ranked).sever()
         Sinks.appendTagged(emb, s"$outDir/embeddings", batchId)
-        spark.catalog.refreshByPath(s"$outDir/embeddings")
         AnnIndex.append(spark, s"$outDir/ann_index",
-          emb.select(col("vec_id"), col("embedding")), Some(batchId))
+          emb.select(col("vec_id"), col("embedding")), batchId)
       })
-    failpoint("index_append")
     // manifest BEFORE the commit: a crash after the ledger swap must
     // leave nothing stale (replay of a committed batch is a no-op and
     // would never repair it); a crash after the manifest but before the
     // commit is converged by the replay, which purges and rewrites
-    val entries = applied + (batchId -> nPages)
-    labeled(spark, "manifest audit")(
-      auditDerived(spark, outDir, nPagesOverride = Some(entries.values.sum)))
-    // THE commit point (atomic swap): before this line the batch never
-    // happened (next call purges its files); after it, replay is a no-op
-    labeled(spark, "ledger")(Sinks.commitLedger(spark, s"$outDir/ledger", entries))
+    labeled(spark, "manifest audit")(auditDerived(spark, outDir,
+      nPagesOverride = Some(ingest.applied.values.sum + nPages)))
+    // the caller's ledger swap is THE commit point: before it the batch
+    // never happened (the next call purges its files); after it, replay
+    // is a no-op
+    Some(nPages)
   }
 
   /** The crawl's LINK TABLE from one decoded page set — the artifact a
@@ -363,14 +365,6 @@ object WebCorpusApp {
   private val appendedTables = Seq("corpus", "rejects", "paragraph_hashes",
     "links", "redirects", "canonicals", "embeddings", "text_index/postings",
     "text_index/lexicon", "text_index/stats", "ann_index/postings")
-
-  /** Test-only crash injection: when set, [[appendBatch]] throws after
-    * the named step ("table_append" | "index_append") — BEFORE its
-    * ledger commit — so specs can prove crash recovery end to end. */
-  @volatile private[graft] var crashAfter: Option[String] = None
-  private def failpoint(step: String): Unit =
-    if (crashAfter.contains(step))
-      throw new IllegalStateException(s"injected crash after $step")
 
   /** STREAMING incremental ingest — the crawl front door running
     * continuously against the WRITTEN corpus: WARC shard files land in
@@ -623,7 +617,7 @@ object WebCorpusApp {
     val sets = labeled(pages.sparkSession, "neardup shingles checkpoint")(
       Dedup.shingleSets(
         exact.select(col("url").as("doc_id"), col("text")), "doc_id", "text", 3)
-        .localCheckpoint(true)) // feeds both sides of the candidate self-join
+        .sever()) // feeds both sides of the candidate self-join
     // severed (r17): the PPJoin candidate self-join is the pipeline's
     // most expensive join and BOTH the near-dup rejects and the survivor
     // anti-join consume its output — without the cut the candidate join
@@ -709,8 +703,8 @@ object WebCorpusApp {
     * append converges. Single writer, as always. */
   def maintain(spark: SparkSession, outDir: String,
                targetRowsPerFile: Long = 1L << 20): Unit = {
-    val committed = Sinks.ledger(spark, s"$outDir/ledger").keySet.map(Sinks.tagOf)
-    appendedTables.foreach(t => Sinks.purgeTagged(spark, s"$outDir/$t", committed))
+    Sinks.purgeUncommitted(spark, appendedTables.map(t => s"$outDir/$t"),
+      Sinks.ledger(spark, s"$outDir/ledger"))
     refresh(spark, outDir)
     // every compaction rewrites its own table directory (atomic swap of
     // content-identical rows) — independent maintenance units, overlapped

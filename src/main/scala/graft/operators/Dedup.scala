@@ -39,41 +39,6 @@ object Dedup {
     docs.groupBy(md5(col(textCol)).as("fp"))
       .agg(count(lit(1)).as("n_copies"), min(col(idCol)).as("keeper_id"))
 
-  /** Incremental exact dedup against HISTORY: drop new docs whose content
-    * hash is already in the fingerprint table, then append the survivors'
-    * fingerprints — so each ingestion batch dedups against everything ever
-    * seen while touching only (batch × fingerprint-index), never the
-    * accumulated corpus text. The fingerprint table is one 32-char hash +
-    * id per historical doc (~50 bytes/doc — a 10¹⁰-doc history is ~500 GB,
-    * join-able; the corpus it stands in for is the 100 TB). In-batch
-    * duplicates collapse first (min id wins), so the table stays unique.
-    * Returns the surviving rows; idempotent — re-ingesting a batch yields
-    * zero survivors. */
-  def incrementalExactDedup(spark: org.apache.spark.sql.SparkSession,
-                            newDocs: DataFrame, idCol: String, textCol: String,
-                            fpTablePath: String): DataFrame = {
-    import graft.sources.Sinks
-    val hashed = newDocs.withColumn("__fp", md5(col(textCol)))
-    val inBatch = Upsert.dedupByKey(hashed, Seq("__fp"), Seq(idCol))
-    val fs = new org.apache.hadoop.fs.Path(fpTablePath)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val survivors =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(fpTablePath))) inBatch
-      else inBatch.join(
-        spark.read.parquet(fpTablePath).select(col("fp").as("__fp")),
-        Seq("__fp"), "left_anti")
-    // sever lineage BEFORE appending: a cache is not enough — the append's
-    // refreshByPath(fpTablePath) invalidates any cached plan referencing
-    // the table, and a recompute after the append would see its own output
-    // and drop everything. localCheckpoint materializes the survivors as
-    // RDD blocks with no plan back to the path. (On a cluster, prefer a
-    // reliable checkpoint dir for fault tolerance; semantics identical.)
-    val kept = survivors.sever()
-    if (!kept.isEmpty)
-      Sinks.append(kept.select(col("__fp").as("fp"), col(idCol).as("doc_id")), fpTablePath)
-    kept.drop("__fp")
-  }
-
   /** PARAGRAPH-level dedup (the CCNet line-dedup step): over a paragraph
     * table (idCol, pos, text) — e.g. [[Html.blocks]] output, where blocks
     * ARE the paragraphs — keep each distinct paragraph's FIRST occurrence
@@ -189,8 +154,8 @@ object Dedup {
 
   /** A banded (key → id) table under the candidate budget
     * (`maxCandidateFactor` > 0; 0 returns `banded` untouched and
-    * materializes nothing). The banding is materialized once — eager
-    * localCheckpoint, NOT persist: Dataset.persist would register a
+    * materializes nothing). The banding is materialized once — an eager
+    * sever, NOT persist: Dataset.persist would register a
     * CacheManager entry that outlives the call, while checkpoint blocks
     * are reclaimed by the ContextCleaner once the returned plan is GC'd
     * — then its exact pre-join candidate volume is measured (each bucket
@@ -203,7 +168,7 @@ object Dedup {
                                 maxCandidateFactor: Int, surface: String): DataFrame =
     if (maxCandidateFactor <= 0) banded
     else {
-      val b = banded.localCheckpoint(true)
+      val b = banded.sever()
       val postings = b.count()
       val twiceEst = b.groupBy(keyCols.map(col): _*)
         .agg(count(lit(1)).cast("decimal(38,0)").as("n"))

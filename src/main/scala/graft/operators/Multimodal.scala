@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Sever.SeverOps
+
 /** Multimodal columns: image/audio/video payloads as opaque `binary`
   * columns with typed metadata, plus the decode / feature-extract stage of
   * a training-data pipeline.
@@ -1984,11 +1986,11 @@ object Multimodal {
     // ContextCleaner-reclaimed): both join sides consume it, and without
     // this each consumer re-runs the upstream payload DECODE — at corpus
     // scale a second full pass over the media bytes to rebuild ~300 B/item
-    // of signature. Trade-off: localCheckpoint truncates lineage, so a
-    // lost executor aborts instead of recomputing — on a cluster, point
-    // this at a reliable checkpoint dir. The batch form's sides have one
-    // consumer each; a production history is a WRITTEN signature table.
-    val self = if (hist.isEmpty) batch.localCheckpoint(true) else batch
+    // of signature. The sever follows `spark.graft.checkpoint.reliable`
+    // (a lost executor aborts a local cut instead of recomputing). The
+    // batch form's sides have one consumer each; a production history is
+    // a WRITTEN signature table.
+    val self = if (hist.isEmpty) batch.sever() else batch
     def bands(df: DataFrame) = Dedup.hammingBands(df, 16, Nil, Seq("vec"))
     Dedup.hammingWithin(Dedup.hammingPairs(bands(self), hist.map(bands), Nil, Seq("vec")),
       maxHamming)
@@ -2207,7 +2209,7 @@ object Multimodal {
     // FOUR consumers (two banding sides + two verify sides) read the
     // fingerprints: materialize once or pay 4× the payload demux+decode
     // (the hashPairs rationale)
-    val fp = videoFingerprint(media, slots).toDF().localCheckpoint(true)
+    val fp = videoFingerprint(media, slots).toDF().sever()
     videoVerify(videoCandidates(fp, None), fp, fp, "id_a", "id_b", maxTotalHamming, maxTotalL1)
   }
 
@@ -2219,8 +2221,8 @@ object Multimodal {
                           slots: Int = 8, maxTotalHamming: Long = 24L,
                           maxTotalL1: Long = 8192L): DataFrame = {
     // two consumers per side (banding + verify): materialize once each
-    val fb = videoFingerprint(batch, slots).toDF().localCheckpoint(true)
-    val fh = videoFingerprint(hist, slots).toDF().localCheckpoint(true)
+    val fb = videoFingerprint(batch, slots).toDF().sever()
+    val fh = videoFingerprint(hist, slots).toDF().sever()
     videoVerify(videoCandidates(fb, Some(fh)), fb, fh, "new_id", "hist_id",
       maxTotalHamming, maxTotalL1)
   }

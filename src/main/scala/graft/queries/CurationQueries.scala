@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Sever.SeverOps
 import graft.sources.Tables
 
 /** Corpus-health and signal-quality analytics a large-scale training-data
@@ -428,7 +429,7 @@ object CurationQueries {
         col("embedding"))
       .orderBy(col("rel").desc, col("vec_id"))
       .limit(50)
-      .localCheckpoint()
+      .sever()
     val rels: Seq[(Long, Double)] = cand.select("vec_id", "rel").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toSeq
     val sims: Map[(Long, Long), Double] = cand.as("a")
@@ -2391,7 +2392,7 @@ object CurationQueries {
         " div 5)").as("x3"),
       expr("least(20L, length(text) div greatest(1," +
         " size(split(trim(text), '\\\\s+'))))").as("x4"))
-      .localCheckpoint()
+      .sever()
     val w = Array(0L, 0L, 0L, 0L)
     val out = (1 to 3).map { ep =>
       val r = feats

@@ -1754,7 +1754,7 @@ object LlmQueries {
   }
 
   /** Incremental NEAR-dup ingestion gate — the counterpart to the exact
-    * incremental dedup ([[Dedup.incrementalExactDedup]]): each new batch
+    * fingerprint gate of [[graft.app.CorpusApp.appendBatch]]: each new batch
     * screens against the signature HISTORY of everything ever ingested,
     * touching (batch × history-index) only, never the accumulated corpus.
     * SimHash (not MinHash-LSH) because its 4×15-bit banding has PROVABLE
@@ -1861,13 +1861,13 @@ object LlmQueries {
     val k = 16
     val hashes = Tables.documents(s, dir)
       .select(col("source"), md5Long(col("text")).as("h")).distinct()
-    // ≤ #sources rows of k longs; localCheckpoint severs the lineage so the
+    // ≤ #sources rows of k longs; the sever cuts the lineage so the
     // self-join below reads the materialized sketch instead of scanning the
-    // corpus once per side (same pattern as Dedup.incrementalExactDedup)
+    // corpus once per side
     val sk = hashes.groupBy("source")
       .agg(topKByScore(-col("h"), col("h"), k).as("top"))
       .select(col("source"), expr("transform(top, x -> x.id)").as("hs"))
-      .localCheckpoint()
+      .sever()
     val pairs = sk.select(col("source").as("source_a"), col("hs").as("ha"))
       .crossJoin(sk.select(col("source").as("source_b"), col("hs").as("hb")))
       .filter(col("source_a") < col("source_b"))

@@ -73,7 +73,7 @@ object AnnIndex {
     Materialized.dir(s"annindex:incr:$dir", perPass = false) { out =>
       val emb = Tables.embeddings(s, dir)
       build(s, emb.filter(col("vec_id") % 7 =!= 3), out)
-      append(s, out, emb.filter(col("vec_id") % 7 === 3))
+      append(s, out, emb.filter(col("vec_id") % 7 === 3), batchId = "incr")
     }
 
   private def build(s: SparkSession, emb: DataFrame, out: String): Unit = {
@@ -90,7 +90,8 @@ object AnnIndex {
       cb.zipWithIndex.map { case (c, j) => (sub, j, c.toSeq) }
     }.toDF("s", "j", "c").coalesce(1)
       .write.mode("overwrite").parquet(s"$out/codebooks")
-    writePostings(e, out, centroids, codebooks, "overwrite")
+    coded(e, centroids, codebooks)
+      .write.mode("overwrite").partitionBy("cell").parquet(s"$out/postings")
   }
 
   /** Build an index at a caller-managed root over an arbitrary
@@ -102,28 +103,22 @@ object AnnIndex {
 
   /** Ingest a batch into an EXISTING index: read the written quantizers
     * (bounded metadata reads), assign + encode the batch only, append
-    * its postings. The history is never re-read or re-encoded. With
-    * `batchTag` the append is a revocable tagged file move
+    * its postings. The history is never re-read or re-encoded. The
+    * append is a revocable tagged file move under `batchId`
     * ([[Sinks.appendTagged]]) for crash-atomic callers. */
-  def append(s: SparkSession, root: String, batch: DataFrame,
-             batchTag: Option[String] = None): Unit =
-    writePostings(batch.select(col("vec_id"), col("embedding")), root,
-      readCentroids(s, root), readCodebooks(s, root), "append", batchTag)
+  def append(s: SparkSession, root: String, batch: DataFrame, batchId: String): Unit =
+    Sinks.appendTagged(
+      coded(batch.select(col("vec_id"), col("embedding")), readCentroids(s, root),
+        readCodebooks(s, root)),
+      s"$root/postings", batchId, Seq("cell"))
 
-  private def writePostings(e: DataFrame, out: String,
-                            centroids: Seq[Seq[Double]],
-                            codebooks: Seq[IndexedSeq[Array[Double]]],
-                            mode: String,
-                            batchTag: Option[String] = None): Unit = {
+  /** Every vector's posting row: (vec_id, cell, c0..c3). */
+  private def coded(e: DataFrame, centroids: Seq[Seq[Double]],
+                    codebooks: Seq[IndexedSeq[Array[Double]]]): DataFrame = {
     val subLen = centroids.head.length / PqM
-    val coded = e.select(col("vec_id").cast("long").as("vec_id") +:
+    e.select(col("vec_id").cast("long").as("vec_id") +:
       Similarity.ivfAssign(col("embedding"), centroids).as("cell") +:
       Pq.codeCols(col("embedding"), codebooks, subLen): _*)
-    batchTag match {
-      case Some(b) => Sinks.appendTagged(coded, s"$out/postings", b, Seq("cell"))
-      case None =>
-        coded.write.mode(mode).partitionBy("cell").parquet(s"$out/postings")
-    }
   }
 
   /** The written coarse quantizer, ordered by cell — ~k rows. */

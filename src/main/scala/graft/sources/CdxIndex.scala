@@ -43,22 +43,15 @@ object CdxIndex extends Md5Buckets {
 
   /** Ingest new shards into an EXISTING index: locate the BATCH only
     * (one task per new shard — the history is never re-walked) and
-    * append its rows under their buckets. With `batchTag` the append is
-    * a revocable tagged file move ([[Sinks.appendTagged]], the
-    * crash-atomic convention the corpus apps commit via their ledger). */
+    * append its rows under their buckets, as a revocable tagged file
+    * move under `batchId` ([[Sinks.appendTagged]], the crash-atomic
+    * convention the corpus apps commit via their ledger). */
   def append(s: SparkSession, root: String,
-             shards: org.apache.spark.sql.Dataset[WarcShard],
-             batchTag: Option[String] = None): Unit = {
-    val locs = Warc.recordLocations(shards).toDF()
-      .withColumn("url_bucket", bucketCol(col("url"), bucketsOf(s, root)))
-    batchTag match {
-      case Some(b) => Sinks.appendTagged(locs, s"$root/locations", b,
-        Seq("url_bucket"))
-      case None => locs.write.mode("append").partitionBy("url_bucket")
-        .parquet(s"$root/locations")
-    }
-    s.catalog.refreshByPath(s"$root/locations")
-  }
+             shards: org.apache.spark.sql.Dataset[WarcShard], batchId: String): Unit =
+    Sinks.appendTagged(
+      Warc.recordLocations(shards).toDF()
+        .withColumn("url_bucket", bucketCol(col("url"), bucketsOf(s, root))),
+      s"$root/locations", batchId, Seq("url_bucket"))
 
   /** Serve url → location rows from the WRITTEN index: only the urls'
     * bucket directories are read (partition pruning), then the in-bucket
@@ -116,6 +109,6 @@ object CdxIndex extends Md5Buckets {
       val all = Warc.readShards(s, shardsPath)
       val last = all.agg(max(col("shard_id"))).head().getLong(0)
       buildFrom(s, all.filter(col("shard_id") =!= last), out)
-      append(s, out, all.filter(col("shard_id") === last))
+      append(s, out, all.filter(col("shard_id") === last), batchId = "incr")
     }
 }

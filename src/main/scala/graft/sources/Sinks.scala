@@ -4,15 +4,17 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, element_at, input_file_name, lit, max, min, split}
 import graft.operators.Upsert
+import graft.operators.Sever.SeverOps
 
 /** Parquet sinks as engine operations (SURVEY.md §2.1 S5/S6/S7).
   *
   * The reference writes with plain `mode('overwrite')` / `mode('append')`
   * (journey-data-transformation.py:106,156,160; init-data-transformation.py:43,92)
-  * and delegates idempotence to Redshift's UPSERT load. We keep append for
-  * genuinely incremental facts, but replace blind overwrite with a
-  * write-to-temp-then-swap commit, and provide a keyed upsert so re-running a
-  * week is a no-op on keyed tables (SURVEY.md §7.5 #1).
+  * and delegates idempotence to Redshift's UPSERT load. We replace blind
+  * overwrite with a write-to-temp-then-swap commit, blind append with a
+  * tagged move that a ledger commit makes atomic ([[ingestBatch]]), and
+  * provide a keyed upsert so re-running a week is a no-op on keyed tables
+  * (SURVEY.md §7.5 #1).
   *
   * One commit path: a table is replaced only by [[replaceTable]], its
   * partitions only by [[replacePartitions]], and staged files enter it
@@ -140,10 +142,6 @@ object Sinks {
       threads.forEach(_.join())
     }
   }
-
-  /** S6: incremental append (the fact-table write). */
-  def append(df: DataFrame, path: String): Unit =
-    df.write.mode("append").parquet(path)
 
   // --------------------------------------------------- revocable appends
 
@@ -275,6 +273,36 @@ object Sinks {
     import spark.implicits._
     overwriteSwap(entries.toSeq.sortBy(_._1).toDF("batch_id", "n").coalesce(1), path)
     spark.catalog.refreshByPath(path)
+  }
+
+  /** What [[ingestBatch]] hands its body: the committed ledger, and
+    * whether the entry purge deleted files of a crashed attempt. */
+  final case class Ingest(applied: Map[String, Long], purged: Boolean) {
+    def committedTags: Set[String] = applied.keySet.map(tagOf)
+  }
+
+  /** The one ledgered batch step. A `batchId` already in the ledger at
+    * `ledgerPath` is a no-op. Otherwise every uncommitted tagged file
+    * under `tables` (what the caller appends to) is purged, `body` runs
+    * its [[appendTagged]] moves and derived-table writes and returns the
+    * batch's ledger count (`None`: the batch leaves no trace, nothing is
+    * committed), and the ledger swap commits it last — a crash anywhere
+    * before replays in full, and nothing runs after. Single writer: a
+    * concurrent append's files look like a crashed attempt's. */
+  def ingestBatch(spark: SparkSession, ledgerPath: String, batchId: String,
+                  tables: Seq[String])(body: Ingest => Option[Long]): Unit = {
+    val applied = ledger(spark, ledgerPath)
+    if (!applied.contains(batchId))
+      body(Ingest(applied, purgeUncommitted(spark, tables, applied)))
+        .foreach(n => commitLedger(spark, ledgerPath, applied + (batchId -> n)))
+  }
+
+  /** [[ingestBatch]]'s purge: revoke every tagged file under `tables`
+    * whose batch is not in `applied`. Returns whether it deleted any. */
+  def purgeUncommitted(spark: SparkSession, tables: Seq[String],
+                       applied: Map[String, Long]): Boolean = {
+    val committed = applied.keySet.map(tagOf)
+    tables.map(purgeTagged(spark, _, committed)).sum > 0
   }
 
   /** Does a table exist at `path`, after [[recover]]? (Namenode calls only.) */
@@ -482,7 +510,7 @@ object Sinks {
       // the manifest swap below rewrites _manifest while this frame's
       // lineage still points at it via the union — materialize first
       .unionByName(spark.read.parquet(s"$path/_manifest"))
-      .localCheckpoint(true)
+      .sever()
     moveIn(f, stage, path, prefix = "") // UUID part names: collision-free
     overwriteSwap(newStats.coalesce(1), s"$path/_manifest")
     f.delete(stage, true)

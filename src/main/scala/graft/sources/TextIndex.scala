@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Sever.SeverOps
+
 /** The PERSISTED INVERTED INDEX — the lexical twin of [[AnnIndex]]: the
   * in-plan BM25 query (q105) tokenizes and aggregates the WHOLE corpus
   * inside every search plan (correct, and the right shape for a
@@ -44,7 +46,7 @@ object TextIndex extends Md5Buckets {
     Materialized.dir(s"textindex:incr:$dir", perPass = false) { out =>
       val docs = Tables.documents(s, dir)
       build(s, docs.filter(col("doc_id") % 5 =!= 2), out)
-      append(s, out, docs.filter(col("doc_id") % 5 === 2))
+      append(s, out, docs.filter(col("doc_id") % 5 === 2), batchId = "incr")
     }
 
   private def postingsOf(docs: DataFrame): DataFrame = {
@@ -55,33 +57,21 @@ object TextIndex extends Md5Buckets {
       .agg(count(lit(1)).as("tf"))
   }
 
-  private def writeAll(docs: DataFrame, out: String, mode: String,
-                       buckets: Int, tag: Option[String] = None): Unit = {
-    // materialize the tokenize+aggregate ONCE: three writers consume it
-    // (postings, lexicon, stats) and without this each would re-run the
-    // full corpus tokenization — the multi-consumer-recompute trap.
-    // (On a cluster, prefer a reliable checkpoint for fault tolerance.)
-    val tf = postingsOf(docs).localCheckpoint(true)
-    // when a batch id is supplied, appends are REVOCABLE tagged file
-    // moves ([[Sinks.appendTagged]]) so a caller's ledger commit makes
-    // the three-table append atomic under crash
-    def write(df: DataFrame, path: String, parts: Seq[String]): Unit =
-      tag match {
-        case Some(b) => Sinks.appendTagged(df, path, b, parts)
-        case None =>
-          val w = df.write.mode(mode)
-          (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(path)
-      }
-    write(tf.select(col("tok"), col("doc_id"), col("tf"), col("dl"),
-        bucketCol(col("tok"), buckets).as("term_bucket")),
-      s"$out/postings", Seq("term_bucket"))
-    write(tf.groupBy("tok").agg(count(lit(1)).as("df")), s"$out/lexicon", Nil)
-    // stats derive from tf too (dl repeats per posting; one row per doc
-    // via the distinct) — no third corpus scan
-    write(tf.select(col("doc_id"), col("dl")).distinct()
+  /** The three index tables of `docs` as (frame, sub-table, partition
+    * columns), all derived from ONE materialized tokenize+aggregate:
+    * three writers consume it, and without the cut each would re-run
+    * the full corpus tokenization — the multi-consumer-recompute trap. */
+  private def tablesOf(docs: DataFrame, buckets: Int): Seq[(DataFrame, String, Seq[String])] = {
+    val tf = postingsOf(docs.select(col("doc_id"), col("text"))).sever()
+    Seq(
+      (tf.select(col("tok"), col("doc_id"), col("tf"), col("dl"),
+        bucketCol(col("tok"), buckets).as("term_bucket")), "postings", Seq("term_bucket")),
+      (tf.groupBy("tok").agg(count(lit(1)).as("df")), "lexicon", Nil),
+      // stats derive from tf too (dl repeats per posting; one row per doc
+      // via the distinct) — no third corpus scan
+      (tf.select(col("doc_id"), col("dl")).distinct()
         .agg(count(lit(1)).as("n_docs"),
-          sum(col("dl")).cast("long").as("total_tokens")),
-      s"$out/stats", Nil)
+          sum(col("dl")).cast("long").as("total_tokens")), "stats", Nil))
   }
 
   private def build(s: SparkSession, docs: DataFrame, out: String): Unit =
@@ -96,7 +86,10 @@ object TextIndex extends Md5Buckets {
   def buildFrom(s: SparkSession, docs: DataFrame, out: String,
                 buckets: Int = Buckets): Unit = {
     import s.implicits._
-    writeAll(docs.select(col("doc_id"), col("text")), out, "overwrite", buckets)
+    tablesOf(docs, buckets).foreach { case (df, t, parts) =>
+      val w = df.write.mode("overwrite")
+      (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(s"$out/$t")
+    }
     Seq(buckets).toDF("n_buckets").coalesce(1)
       .write.mode("overwrite").parquet(s"$out/meta")
   }
@@ -112,7 +105,6 @@ object TextIndex extends Md5Buckets {
     * (TextIndexSpec pins it). Postings need no compaction: batches
     * write disjoint (doc, term) rows. */
   def compact(s: SparkSession, root: String): Unit = {
-    import graft.operators.Sever.SeverOps
     val lex = s.read.parquet(s"$root/lexicon")
       .groupBy("tok").agg(sum(col("df")).as("df"))
       .sever() // materialized BEFORE the path it came from is replaced
@@ -126,15 +118,15 @@ object TextIndex extends Md5Buckets {
   }
 
   /** Ingest a batch into an EXISTING index: the batch's postings, df
-    * DELTAS and stat deltas are appended; nothing else is touched.
-    * With `batchTag` the three appends are revocable tagged file moves
-    * ([[Sinks.appendTagged]]): a caller that commits the tag to a
-    * ledger afterwards gets crash-atomic index maintenance — an
-    * uncommitted tag's files are swept by [[Sinks.purgeTagged]]. */
-  def append(s: SparkSession, root: String, batch: DataFrame,
-             batchTag: Option[String] = None): Unit =
-    writeAll(batch.select(col("doc_id"), col("text")), root, "append",
-      bucketsOf(s, root), batchTag)
+    * DELTAS and stat deltas are appended; nothing else is touched. The
+    * three appends are revocable tagged file moves under `batchId`
+    * ([[Sinks.appendTagged]]): a caller that commits the batch to a
+    * ledger afterwards ([[Sinks.ingestBatch]]) gets crash-atomic index
+    * maintenance. */
+  def append(s: SparkSession, root: String, batch: DataFrame, batchId: String): Unit =
+    tablesOf(batch, bucketsOf(s, root)).foreach { case (df, t, parts) =>
+      Sinks.appendTagged(df, s"$root/$t", batchId, parts)
+    }
 
   /** Exact corpus stats from the written (append-only) stats rows. */
   def readStats(s: SparkSession, root: String): (Long, Long) = {

@@ -7,6 +7,7 @@ import org.apache.spark.sql.graft.GraftSqlBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.app.CorpusApp
+import graft.sources.Sinks
 
 /** End-to-end corpus materialization: one build over the sf0.001 documents
   * table, then structural invariants over the WRITTEN tables (shard sizing,
@@ -140,15 +141,87 @@ class CorpusAppSpec extends AnyFunSuite with SharedSpark {
     assert(snap("manifest") == incManifest, "audit recompute diverged from folded manifest")
   }
 
+  private def rows(dir: String, t: String): Set[String] = {
+    val df = spark.read.parquet(s"$dir/$t")
+    df.select(df.columns.sorted.map(col): _*).collect().map(_.toString).toSet
+  }
+
+  test("appendBatch: in-batch duplicates collapse to the min id; re-ingest under a new id appends nothing") {
+    val docs = graft.sources.Tables.documents(spark, sf)
+    val batch = docs.filter(col("doc_id") % 2 === 1)
+    val shift = docs.agg(max("doc_id")).head().getLong(0) + 1
+    // every doc of the batch twice: the copy under a larger id must lose
+    val doubled = batch.unionByName(batch.withColumn("doc_id", col("doc_id") + shift))
+    val out = Files.createTempDirectory("graft-corpus-spec").toString
+    CorpusApp.appendBatch(spark, out, "b1", doubled)
+    val single = Files.createTempDirectory("graft-corpus-spec").toString
+    CorpusApp.appendBatch(spark, single, "b1", batch)
+    val corpus = spark.read.parquet(s"$out/corpus")
+    val n = corpus.count()
+    assert(n > 0 && corpus.select("fp").distinct().count() == n)
+    assert(corpus.filter(col("doc_id") >= shift).count() == 0, "a higher-id copy survived")
+    assert(rows(out, "corpus") == rows(single, "corpus"))
+    assert(rows(out, "corpus_stats") == rows(single, "corpus_stats"))
+    // the same docs under a NEW batch id pass the ledger gate; the exact
+    // fp gate against the written corpus leaves nothing to append
+    CorpusApp.appendBatch(spark, out, "b2", batch)
+    assert(spark.read.parquet(s"$out/corpus").count() == n)
+    assert(rows(out, "corpus_stats") == rows(single, "corpus_stats"))
+    assert(Sinks.ledger(spark, s"$out/ledger").keySet == Set("b1", "b2"))
+  }
+
+  test("crash matrix: a crash at any commit rename of an append converges on replay") {
+    val t0 = System.nanoTime()
+    val base = Files.createTempDirectory("graft-corpus-spec").toString
+    CorpusApp.build(spark, sf, base, pred = col("doc_id") % 2 === 0)
+    def copyOfBase(): String = {
+      val w = Files.createTempDirectory("graft-corpus-spec").toString
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(base), new java.io.File(w))
+      w
+    }
+    def append(out: String): Unit =
+      CorpusApp.append(spark, sf, out, batchId = "b1", pred = col("doc_id") % 2 === 1)
+    val tables = Seq("corpus", "corpus_stats", "manifest", "ledger")
+    val clean = copyOfBase()
+    val renames = CrashingFs.around(spark, failAt = None)(append(clean))
+      .map(_.stripPrefix(clean))
+    // the swap renames of corpus_stats, manifest and ledger, plus the
+    // first tagged move into corpus/ (its part names carry a per-write
+    // UUID, so that point is named by directory)
+    val swaps = renames.filterNot(_.startsWith("/corpus/"))
+    assert(swaps.toSet == Set("/corpus_stats.__old", "/corpus_stats", "/manifest.__old",
+      "/manifest", "/ledger.__old", "/ledger"), renames.mkString("\n"))
+    val points = swaps.map(p => (Some(p), None)) :+ ((None, Some("/corpus")))
+    val want = tables.map(t => t -> rows(clean, t)).toMap
+    val diverged = points.flatMap { case (at, under) =>
+      val w = copyOfBase()
+      CrashingFs.around(spark, at.map(w + _), under.map(w + _)) {
+        intercept[java.io.IOException](append(w))
+      }
+      append(w)
+      // a table the crash left missing counts as diverged
+      tables.filterNot(t => scala.util.Try(rows(w, t)).toOption.contains(want(t)))
+        .map(t => s"${at.orElse(under).get}: $t")
+    }
+    assert(diverged.isEmpty, s"tables diverged from a clean append: ${diverged.mkString(", ")}")
+    // a FIRST batch (no build) crashed on its first corpus move leaves a
+    // corpus directory with no data file behind
+    val Seq(first, firstClean) =
+      Seq.fill(2)(Files.createTempDirectory("graft-corpus-spec").toString)
+    CrashingFs.around(spark, failAt = None, failUnder = Some(s"$first/corpus")) {
+      intercept[java.io.IOException](append(first))
+    }
+    append(first)
+    append(firstClean)
+    tables.foreach(t => assert(rows(first, t) == rows(firstClean, t), s"first batch: $t"))
+    info(f"${points.size + 1} crash points in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+  }
+
   test("rebuild over the same input is byte-identical (restartability contract)") {
     val a = build()
     val b = build()
-    for (t <- Seq("corpus", "corpus_stats", "manifest")) {
-      val da = spark.read.parquet(s"$a/$t")
-      val rows = (df: org.apache.spark.sql.DataFrame) =>
-        df.select(df.columns.sorted.map(col): _*).collect().map(_.toString).toSet
-      assert(rows(da) == rows(spark.read.parquet(s"$b/$t")), s"table $t differs")
-    }
+    for (t <- Seq("corpus", "corpus_stats", "manifest"))
+      assert(rows(a, t) == rows(b, t), s"table $t differs")
   }
 
   test("Materialized.resetPerPass forces a full corpus rebuild (bench honesty hook)") {

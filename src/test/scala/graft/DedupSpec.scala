@@ -275,22 +275,6 @@ class DedupSpec extends AnyFunSuite with SharedSpark {
     assert(out == expected)
   }
 
-  test("incrementalExactDedup drops cross-batch and in-batch duplicates via the fp table") {
-    val fpTable = java.nio.file.Files.createTempDirectory("graft-fp").toString + "/fps"
-    val b1 = docs(1L -> "alpha beta", 2L -> "gamma delta", 3L -> "alpha beta")
-    val s1 = Dedup.incrementalExactDedup(spark, b1, "doc_id", "text", fpTable)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(s1 == Seq(1L, 2L)) // in-batch dup 3 collapsed to min id 1
-    // batch 2: one repeat of history, one new
-    val b2 = docs(10L -> "gamma delta", 11L -> "epsilon zeta")
-    val s2 = Dedup.incrementalExactDedup(spark, b2, "doc_id", "text", fpTable)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(s2 == Seq(11L))
-    // re-ingesting batch 2 is a no-op
-    assert(Dedup.incrementalExactDedup(spark, b2, "doc_id", "text", fpTable).count() == 0)
-    assert(spark.read.parquet(fpTable).count() == 3) // fp history stays unique
-  }
-
   test("AQE splits a skewed shingle-index join when thresholds are crossed") {
     // lower the AQE skew thresholds so the hot posting list (every doc
     // shares one shingle) crosses them at test scale, then check the FINAL

@@ -69,6 +69,31 @@ class SeverSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  test("TextIndex.buildFrom follows the knob: no checkpoint dir throws, a dir leaves the index unchanged") {
+    import org.apache.spark.sql.SparkSession
+    import graft.sources.TextIndex
+    def built(s: SparkSession): Map[String, Set[String]] = {
+      val root = java.nio.file.Files.createTempDirectory("graft-sever-ti").toString + "/idx"
+      TextIndex.buildFrom(s, s.createDataFrame(Seq((1L, "a b"), (2L, "b c"), (3L, "c c d")))
+        .toDF("doc_id", "text"), root)
+      Seq("postings", "lexicon", "stats").map(t =>
+        t -> spark.read.parquet(s"$root/$t").collect().map(_.toString).toSet).toMap
+    }
+    def reliable(): SparkSession = {
+      val fresh = spark.newSession()
+      fresh.conf.set(Sever.ReliableKey, "true")
+      fresh
+    }
+    val local = built(spark)
+    withNoCheckpointDir {
+      val e = intercept[IllegalArgumentException](built(reliable()))
+      assert(e.getMessage.contains(Sever.ReliableKey))
+    }
+    spark.sparkContext.setCheckpointDir(
+      java.nio.file.Files.createTempDirectory("graft-reliable-ckpt-").toString)
+    assert(built(reliable()) == local)
+  }
+
 
   test("declareCheckpointLayout rejects a partition count the checkpoint does not have") {
     import org.apache.spark.sql.graft.GraftSqlBridge

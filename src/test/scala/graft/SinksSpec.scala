@@ -51,10 +51,10 @@ class SinksSpec extends AnyFunSuite with SharedSpark {
 
   test("compact shrinks the file count without changing a row") {
     val path = s"$tmpDir/t"
-    // 8 one-row appends -> at least 8 part files (fragmented table)
-    (1 to 8).foreach(i => Sinks.append(Seq((i, s"v$i")).toDF("k", "v"), path))
+    // 8 one-row appends -> at least 8 data files (fragmented table)
+    (1 to 8).foreach(i => Sinks.appendTagged(Seq((i, s"v$i")).toDF("k", "v"), path, s"b$i"))
     def partFiles = new java.io.File(path).listFiles()
-      .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .count(f => !f.getName.startsWith(".") && f.getName.endsWith(".parquet"))
     val before = spark.read.parquet(path).as[(Int, String)].collect().toSet
     assert(partFiles >= 8)
     Sinks.compact(spark, path, targetRowsPerFile = 4L)
@@ -98,8 +98,8 @@ class SinksSpec extends AnyFunSuite with SharedSpark {
 
   test("append grows the table") {
     val path = s"$tmpDir/t"
-    Sinks.append(Seq((1, "a")).toDF("k", "v"), path)
-    Sinks.append(Seq((2, "b")).toDF("k", "v"), path)
+    Sinks.appendTagged(Seq((1, "a")).toDF("k", "v"), path, "b1")
+    Sinks.appendTagged(Seq((2, "b")).toDF("k", "v"), path, "b2")
     assert(spark.read.parquet(path).count() == 2)
   }
 

@@ -147,6 +147,37 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     assert(spark.read.parquet(s"$out/manifest").head().getAs[Long]("n_raw") == raw.count())
   }
 
+  test("corpusIngest crash at the ledger swap: restart on the same checkpoint equals a clean streamed run") {
+    val src = Files.createTempDirectory("graft-ci-src-").toString
+    val raw = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val schema = raw.schema
+    def ingest(out: String, ckpt: String): Unit =
+      Streams.corpusIngest(spark.readStream.schema(schema).parquet(src), out, ckpt)
+    val Seq(clean, cleanCk, out, ck) = Seq("out", "ck", "out", "ck")
+      .map(p => Files.createTempDirectory(s"graft-ci-$p-").toString)
+    raw.filter(col("doc_id") % 2 === 0).write.mode("append").parquet(src)
+    ingest(clean, cleanCk)
+    ingest(out, ck)
+    raw.filter(col("doc_id") % 2 === 1).write.mode("append").parquet(src)
+    ingest(clean, cleanCk)
+    // the second micro-batch dies on the ledger swap's first rename: its
+    // corpus rows, stats and manifest landed, the commit did not
+    val e = intercept[Exception] {
+      CrashingFs.around(spark, failAt = Some(s"$out/ledger.__old"))(ingest(out, ck))
+    }
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => Option(t.getMessage).getOrElse("")).mkString(" | ")
+    assert(chain.contains("injected crash"), s"unexpected failure: $chain")
+    // restart: the checkpoint re-delivers the same files under the same id
+    ingest(out, ck)
+    def rows(dir: String, t: String) = {
+      val df = spark.read.parquet(s"$dir/$t")
+      df.select(df.columns.sorted.map(col): _*).collect().map(_.toString).toSet
+    }
+    for (t <- Seq("corpus_stats", "corpus", "manifest", "ledger"))
+      assert(rows(out, t) == rows(clean, t), s"$t diverged from the clean streamed run")
+  }
+
   test("stream-static join enriches a stream with a batch dimension per microbatch") {
     implicit val sqlCtx = spark.sqlContext
     val dim = Seq((1L, "gold"), (2L, "basic")).toDF("user_id", "tier")

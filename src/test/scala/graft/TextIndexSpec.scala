@@ -81,7 +81,7 @@ class TextIndexSpec extends AnyFunSuite with SharedSpark {
     // generations accumulate
     TextIndex.buildFrom(spark, docs.filter(col("doc_id") % 5 === 0), root)
     (1 to 4).foreach(k =>
-      TextIndex.append(spark, root, docs.filter(col("doc_id") % 5 === k)))
+      TextIndex.append(spark, root, docs.filter(col("doc_id") % 5 === k), s"b$k"))
     val terms = Seq("join", "stream", "filter")
     val statsBefore = TextIndex.readStats(spark, root)
     val dfBefore = TextIndex.readDf(spark, root, terms)
@@ -104,7 +104,7 @@ class TextIndexSpec extends AnyFunSuite with SharedSpark {
     assert(lexAfter.count() < lexRowsBefore)
     assert(lexAfter.groupBy("tok").count().filter(col("count") > 1).count() == 0)
     // and a LATER append still composes (deltas on top of the compacted rows)
-    TextIndex.append(spark, root, docs.filter(col("doc_id") % 5 === 4))
+    TextIndex.append(spark, root, docs.filter(col("doc_id") % 5 === 4), "b5")
     val (n2, tot2) = TextIndex.readStats(spark, root)
     assert(n2 > statsBefore._1 && tot2 > statsBefore._2)
   }

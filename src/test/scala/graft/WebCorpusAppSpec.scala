@@ -159,22 +159,29 @@ class WebCorpusAppSpec extends AnyFunSuite with SharedSpark {
 
   test("crash at any failpoint, then replay the batch id: bit-identical to a clean append") {
     import graft.sources.TextIndex
-    for (step <- Seq("table_append", "index_append")) {
+    // crash points, each the first rename onto a path (or into a
+    // directory) under the corpus root: the first tagged move into the
+    // ANN postings (after every table append), the first rename of the
+    // manifest swap (after every index append), and the ledger swap
+    val points = Seq((None, Some("ann_index/postings")),
+      (Some("manifest.__old"), None), (Some("ledger.__old"), None))
+    for ((at, under) <- points) {
+      val step = at.orElse(under).get
       val out = freshDir()
       WebCorpusApp.build(spark, shards, robots, out, shardPred = col("shard_id") =!= 5)
       val nBefore = spark.read.parquet(s"$out/corpus").count()
-      WebCorpusApp.crashAfter = Some(step)
-      val e = intercept[IllegalStateException] {
-        WebCorpusApp.append(spark, shards, robots, out, "shard-5", col("shard_id") === 5)
+      val e = intercept[java.io.IOException] {
+        CrashingFs.around(spark, at.map(p => s"$out/$p"), under.map(p => s"$out/$p")) {
+          WebCorpusApp.append(spark, shards, robots, out, "shard-5", col("shard_id") === 5)
+        }
       }
-      WebCorpusApp.crashAfter = None
-      assert(e.getMessage.contains(step))
+      assert(e.getMessage.contains(s"$out/$step"))
       // the crash struck AFTER the table appends: uncommitted tagged rows
       // are visible to a raw reader (the documented dirty-read window) and
       // the ledger — the commit point — still has only the build entry
       spark.catalog.refreshByPath(s"$out/corpus")
       assert(spark.read.parquet(s"$out/corpus").count() > nBefore,
-        "crashed attempt left nothing to purge — failpoint fired too early")
+        "crashed attempt left nothing to purge — the crash struck too early")
       assert(spark.read.parquet(s"$out/ledger")
         .collect().map(_.getString(0)).toSet == Set("__init"))
       // replay of the SAME batch id: purge uncommitted, apply once
@@ -524,15 +531,16 @@ class WebCorpusAppSpec extends AnyFunSuite with SharedSpark {
     WebCorpusApp.streamIngest(spark, incoming, robots, out) // stream-0: shard 4
     landShard(shards, 5, incoming)
     // crash INSIDE the shard-5 micro-batch, after the index appends but
-    // before its ledger commit — the hardest recovery point
-    WebCorpusApp.crashAfter = Some("index_append")
+    // before its ledger commit (the manifest swap's first rename) — the
+    // hardest recovery point
     val e = intercept[Exception] {
-      WebCorpusApp.streamIngest(spark, incoming, robots, out)
+      CrashingFs.around(spark, failAt = Some(s"$out/manifest.__old")) {
+        WebCorpusApp.streamIngest(spark, incoming, robots, out)
+      }
     }
-    WebCorpusApp.crashAfter = None
     val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .map(t => Option(t.getMessage).getOrElse("")).mkString(" | ")
-    assert(chain.contains("index_append"), s"unexpected failure: $chain")
+    assert(chain.contains(s"$out/manifest.__old"), s"unexpected failure: $chain")
     // restart: the checkpoint re-delivers the SAME files under the SAME
     // batch id; appendBatch purges the crashed attempt and applies once
     WebCorpusApp.streamIngest(spark, incoming, robots, out)
